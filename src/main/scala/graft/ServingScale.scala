@@ -25,18 +25,23 @@ import org.apache.spark.sql.SparkSession
  *     worker pool), requests/sec + per-request percentiles.
  *
  * Prints one JSON line (BENCH.md §"Serving-path latency floor").
+ *
+ * `ServingScale crossover [--reps N] <dir>...` instead times uncached
+ * queries of nine dashboard shapes on both execution profiles
+ * (`graft.catalog.ExecutionProfile`) over each events directory, e.g. the
+ * query-service benchmark's generator output at several row counts. Each
+ * repetition draws fresh literals, so the codegen profile compiles as a
+ * first-seen query does; both profiles must give the same answer. Prints
+ * a table and one JSON line per directory (BENCH.md §"Execution profile
+ * crossover").
  */
 object ServingScale {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("crossover")) crossover(args.tail.toList) else floor(args)
+
+  private def floor(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     import graft.engine.{DatasetSpec, QueryEngine}
     val ev = ops.Tables.events(spark, sfDir)
@@ -205,5 +210,115 @@ object ServingScale {
       server.stop()
       spark.stop()
     }
+  }
+
+  private def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+
+  /** Nine shapes covering every query family — count/sum targets with
+    * includeZero, an OR relation, 2- and 3-step (negated) sequences,
+    * counts-only and step-aggregated funnels, a per-value top-K and a
+    * timeframe — over the events schema (user_id, ts, event_type, value,
+    * props). `r` varies every literal. */
+  private def shapes(r: Int): Seq[(String, String)] = {
+    val types = Seq("view", "search", "click", "add_to_cart", "purchase", "signup")
+    def et(k: Int) = types((r + k) % types.size)
+    val v = 50 + 25 * ((r * 7) % 37)
+    val dur = Seq(2L, 6L, 24L, 72L, 240L)(r % 5) * 3600L * 1000000000L
+    val dayNs = 86400L * 1000000000L
+    val from = 1704067200L * 1000000000L + (r % 23) * dayNs
+    def step(k: Int, extra: String = "", found: Boolean = true) =
+      s"""{"filters":[["event_type","==","${et(k)}"]$extra]${if (found) "" else ""","rowFound":false"""}}"""
+    val valueGt = s""",["value",">",$v]"""
+    Seq(
+      "count_target" ->
+        s"""{"query":{"conditions":[{"filters":[["value",">",$v]],"target":["count",">=",${1 + r % 5}]}],"aggregations":[{"column":"event_type","type":"countPerValue"}]}}""",
+      "sum_include_zero" ->
+        s"""{"query":{"conditions":[{"filters":[["event_type","==","${et(0)}"]],"target":["sum","value",">",${200 + 100 * (r % 28)}]},{"filters":[["event_type","==","${et(1)}"]],"target":["count","<",${1 + r % 3}],"includeZero":true}]}}""",
+      "or_relation" ->
+        s"""{"query":{"conditions":[{"filters":[["event_type","==","${et(2)}"]],"target":["count",">=",${2 + r % 6}]},{"filters":[["event_type","==","${et(3)}"]$valueGt],"target":["count",">=",1]}],"relation":"$$0 or $$1"}}""",
+      "sequence2" ->
+        s"""{"query":{"conditions":[{"sequence":[${step(0)},${step(1, valueGt)}]}]}}""",
+      "sequence3_negated" ->
+        s"""{"query":{"conditions":[{"sequence":[${step(0)},${step(1, found = false)},${step(2)}],"maxDuration":$dur}]}}""",
+      "funnel_counts" ->
+        s"""{"funnel":{"sequence":[${step(0)},${step(1)},${step(2, valueGt)}],"maxDuration":$dur}}""",
+      "funnel_aggs" ->
+        s"""{"funnel":{"sequence":[${step(0)},${step(1)}],"stepAggregations":[{"column":"event_type","type":"countPerValue","top":5}]}}""",
+      "topk" ->
+        s"""{"query":{"aggregations":[{"column":"props","type":"sumPerValue","otherColumn":"value","top":${3 + r % 8}}]}}""",
+      "timeframe" ->
+        s"""{"query":{"conditions":[{"filters":[["props","contains","\\"k\\": ${1 + r % 9}"]],"target":["count",">=",1]}]},"timeframe":{"from":$from,"to":${from + 5 * dayNs}}}""")
+  }
+
+  private def crossover(args: List[String]): Unit = {
+    import graft.catalog.{Catalog, ExecutionProfile}
+    val (reps, dirs) = args match {
+      case "--reps" :: n :: rest => (n.toInt, rest)
+      case rest                  => (5, rest)
+    }
+    require(dirs.nonEmpty, "usage: ServingScale crossover [--reps N] <events dir>...")
+    val spark = session()
+    val profiles: Seq[ExecutionProfile] = Seq(ExecutionProfile.Codegen, ExecutionProfile.Interpreted)
+    try dirs.foreach { dir =>
+      val ds = Catalog.register(spark, "crossover", dir, "user_id", "ts")
+      // The production load path, with the recorded size overridden so
+      // each profile reads the same files (no size keeps codegen).
+      val handles = profiles.map { p =>
+        p -> Catalog.load(spark, ds.copy(totalBytes =
+          if (p == ExecutionProfile.Interpreted) Some(0L) else None))
+      }.toMap
+      val engine = graft.server.ApiServer.engine(ds, None)
+      def run(p: ExecutionProfile, json: String): (Double, String) = {
+        val t0 = System.nanoTime()
+        val parsed = graft.query.QueryParser.parse(json)
+        graft.query.SchemaValidator.validateTimeframeScale(parsed, ds.minTimestamp, ds.maxTimestamp)
+        val answer = graft.util.Caches.scoped(
+          graft.result.ResultJson.build(engine.runValidated(handles(p), parsed)))
+        ((System.nanoTime() - t0) / 1e6, answer)
+      }
+      // One warm-up repetition on literals the timed ones never draw.
+      shapes(1000).foreach { case (_, json) => profiles.foreach(run(_, json)) }
+      val ms = scala.collection.mutable.Map.empty[(String, ExecutionProfile), Seq[Double]]
+        .withDefaultValue(Seq.empty)
+      for (r <- 0 until reps; (shape, json) <- shapes(r)) {
+        // Alternate which profile goes first, so drift hits both alike.
+        val order = if (r % 2 == 0) profiles else profiles.reverse
+        val answers = order.map { p =>
+          val (t, a) = run(p, json)
+          ms((shape, p)) = ms((shape, p)) :+ t
+          a
+        }
+        require(answers.distinct.size == 1, s"profiles disagree on $shape r=$r: $answers")
+      }
+      def median(xs: Seq[Double]): Double = {
+        val s = xs.sorted
+        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+      }
+      val names = shapes(0).map(_._1)
+      val rows = names.map(n => (n, median(ms((n, ExecutionProfile.Codegen))),
+        median(ms((n, ExecutionProfile.Interpreted)))))
+      val (cg, it) = (rows.map(_._2).sum, rows.map(_._3).sum)
+      println(f"[crossover] $dir: ${ds.numRows} rows, ${ds.totalBytes.get} bytes, $reps reps")
+      rows.foreach { case (n, c, i) =>
+        println(f"[crossover]   $n%-18s codegen $c%8.1f ms  interpreted $i%8.1f ms  ${i / c}%5.2f")
+      }
+      println(f"[crossover]   sum of medians     codegen $cg%8.1f ms  interpreted $it%8.1f ms  ${it / cg}%5.2f")
+      println(s"""{"metric": "profile_crossover", "dir": "$dir", "rows": ${ds.numRows}, """ +
+        s""""bytes": ${ds.totalBytes.get}, "reps": $reps, """ +
+        f""""codegen_ms": $cg%.1f, "interpreted_ms": $it%.1f, "ratio": ${it / cg}%.3f, """ +
+        rows.map { case (n, c, i) => f""""$n": [$c%.1f, $i%.1f]""" }.mkString("\"shapes\": {", ", ", "}}"))
+      Catalog.unregister("crossover")
+    } finally spark.stop()
   }
 }

@@ -23,6 +23,10 @@ import org.apache.spark.sql.types._
  * registration validates only what still matters: group id non-null and of
  * int/string type, timestamp numeric and non-null
  * (registration_task_runner.py:79-101).
+ *
+ * Registration also records the summed part-file size, which picks the
+ * dataset's [[ExecutionProfile]]: its stats pass and every later
+ * [[load]] run in that profile's session.
  */
 object Catalog {
 
@@ -84,7 +88,17 @@ object Catalog {
         * (SurvivorShareMaxStringGroups) instead of the byte-sized budget —
         * correct, just not byte-optimal. Re-registering the dataset
         * records the stat; no migration step is needed or provided. */
-      gidMaxBytes: Option[Long] = None)
+      gidMaxBytes: Option[Long] = None,
+      /** Summed length of the part files listed at registration; picks
+        * the [[ExecutionProfile]] the dataset's queries run under. None
+        * for registrations persisted before it was recorded, which keep
+        * the codegen profile until re-registered. */
+      totalBytes: Option[Long] = None) {
+    def profile: ExecutionProfile = ExecutionProfile.forInput(totalBytes)
+  }
+
+  /** One listed part file: its qualified path and length in bytes. */
+  final case class PartFile(path: org.apache.hadoop.fs.Path, length: Long)
 
   final case class RegistrationException(msg: String) extends RuntimeException(msg)
 
@@ -134,18 +148,19 @@ object Catalog {
   /** Parquet part files under `basepath` (or the file itself), sorted
     * lexicographically — the ordering the reference's SINGLE/FIRST_LAST
     * choices are defined over (registration_job.py:104-107). Hadoop FS, so
-    * local paths and s3a list the same way. */
-  private def partFiles(spark: SparkSession, basepath: String): Seq[String] = {
+    * local paths and s3a list the same way. Names starting with `_` or `.`
+    * (`_SUCCESS`, checksum files) are not parts. */
+  def partFiles(spark: SparkSession, basepath: String): Seq[PartFile] = {
     val path = new org.apache.hadoop.fs.Path(basepath)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val files = scala.collection.mutable.ArrayBuffer.empty[PartFile]
     val it = fs.listFiles(path, true)
     while (it.hasNext) {
       val f = it.next()
       val base = f.getPath.getName
-      if (!base.startsWith("_") && !base.startsWith(".")) files += f.getPath.toString
+      if (!base.startsWith("_") && !base.startsWith(".")) files += PartFile(f.getPath, f.getLen)
     }
-    files.toSeq.sorted
+    files.toSeq.sortBy(_.path.toString)
   }
 
   /** The part files the stats/validation scan reads under `mode`: all of
@@ -178,17 +193,21 @@ object Catalog {
                mode: ValidationMode = ValidationMode.Full,
                validateGroupLocality: Boolean = false,
                dayPartitionColumn: Option[String] = None): RegisteredDataset = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC") // pins tsToNanos' NTZ reading
+    prepare(spark)
     // Schema always comes from the full basepath (parquet footers — no data
     // scan); only the stats/validation pass below is restricted to the
     // sampled files.
-    val allParts = partFiles(spark, basepath)
-    if (allParts.isEmpty)
+    val listed = partFiles(spark, basepath)
+    if (listed.isEmpty)
       throw RegistrationException(s"No part files found under $basepath")
+    val allParts = listed.map(_.path.toString)
+    val totalBytes = listed.map(_.length).sum
+    // The stats pass runs under the profile the dataset's queries will.
+    val session = prepare(ExecutionProfile.session(spark,
+      ExecutionProfile.forInput(Some(totalBytes))))
     val sampled = chooseParts(allParts, mode)
     val df = graft.ops.Tables.tsToNanos(
-      if (mode == ValidationMode.Full) spark.read.parquet(basepath)
+      if (mode == ValidationMode.Full) session.read.parquet(basepath)
       else {
         // basePath keeps hive-style partition columns visible when reading
         // leaf part files directly — without it a partitioned dataset's
@@ -200,12 +219,12 @@ object Catalog {
         val fs = new org.apache.hadoop.fs.Path(basepath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val rd = if (fs.getFileStatus(new org.apache.hadoop.fs.Path(basepath)).isDirectory)
-          spark.read.option("basePath", basepath) else spark.read
+          session.read.option("basePath", basepath) else session.read
         rd.parquet(sampled: _*)
       })
     // Schema AFTER ts normalization: registration classifies the columns the
     // engine will actually see (a TIMESTAMP-typed ts registers as Int).
-    val schema = graft.ops.Tables.tsToNanos(spark.read.parquet(basepath)).schema
+    val schema = graft.ops.Tables.tsToNanos(session.read.parquet(basepath)).schema
 
     def field(c: String): StructField =
       schema.find(_.name == c).getOrElse(
@@ -287,7 +306,7 @@ object Catalog {
       // was narrower.
       val checkDf =
         if (sampled.size > 1) df
-        else spark.read.option("basePath", basepath)
+        else session.read.option("basePath", basepath)
           .parquet(Seq(allParts.head, allParts.last): _*)
       // input_file_name() is nondeterministic, so project it before the
       // aggregate (it may not appear inside an aggregate function).
@@ -367,7 +386,7 @@ object Catalog {
     // derivation is the same GroupedWriter.dayOfTsNanos the engine's
     // bounds use. The free schema-type gate already ran before any scan.
     dayPartitionColumn.foreach { dtCol =>
-      val mismatches = spark.read.option("basePath", basepath).parquet(basepath)
+      val mismatches = session.read.option("basePath", basepath).parquet(basepath)
         .select(col(dtCol), col(timestampColumn))
         .where(col(dtCol).isNull || col(dtCol) =!=
           graft.sources.GroupedWriter.dayOfTsNanos(col(timestampColumn)))
@@ -394,7 +413,8 @@ object Catalog {
       gidMaxBytes =
         if (gidIsStr && !stats.isNullAt(stats.fieldIndex("gid_max_bytes")))
           Some(stats.getAs[Int]("gid_max_bytes").toLong)
-        else None)
+        else None,
+      totalBytes = Some(totalBytes))
     datasets.put(name, ds)
     saveStore()
     ds
@@ -440,9 +460,17 @@ object Catalog {
     * (name, registeredAt)-keyed cache above. */
   def load(spark: SparkSession, ds: RegisteredDataset): DataFrame = {
     lastUsedAt.put(ds.name, System.currentTimeMillis())
+    prepare(spark)
+    val session = prepare(ExecutionProfile.session(spark, ds.profile))
+    graft.ops.Tables.tsToNanos(session.read.parquet(ds.basepath))
+  }
+
+  /** The runtime confs every registration read needs: TIMESTAMP(NANOS)
+    * columns arrive as longs, and UTC pins tsToNanos' NTZ reading. */
+  private def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    graft.ops.Tables.tsToNanos(spark.read.parquet(ds.basepath))
+    spark
   }
 
   // ------------------------------------------------------------ persistence
@@ -517,6 +545,7 @@ object Catalog {
       ("sampledParts" -> d.sampledParts) ~ ("totalParts" -> d.totalParts) ~
       ("dayPartitionColumn" -> d.dayPartitionColumn) ~
       ("gidMaxBytes" -> d.gidMaxBytes) ~
+      ("totalBytes" -> d.totalBytes) ~
       ("dtypeNames" -> d.dtypeNames) ~
       ("columnAttrs" -> d.columnAttrs.map { case (k, a) =>
         k -> (("numericMin" -> a.numericMin) ~ ("numericMax" -> a.numericMax) ~
@@ -569,6 +598,7 @@ object Catalog {
       sampledParts = (j \ "sampledParts").extractOpt[Int].getOrElse(0),
       totalParts = (j \ "totalParts").extractOpt[Int].getOrElse(0),
       dayPartitionColumn = (j \ "dayPartitionColumn").extractOpt[String],
-      gidMaxBytes = (j \ "gidMaxBytes").extractOpt[Long])
+      gidMaxBytes = (j \ "gidMaxBytes").extractOpt[Long],
+      totalBytes = (j \ "totalBytes").extractOpt[Long])
   }
 }

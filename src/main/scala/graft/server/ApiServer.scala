@@ -37,6 +37,22 @@ import graft.result.{JobStats, ResultJson}
  * the sync path stays for small interactive queries. Repeated queries can
  * opt into the versioned result cache (`resultCacheSize` — see the field
  * scaladoc below).
+ *
+ * Execution profile: a dataset whose registered part files add up to less
+ * than `ExecutionProfile.InterpretedMaxBytes` runs its queries (and its
+ * registration stats pass) in an interpreted child session — no AQE, no
+ * whole-stage codegen, expression factory mode NO_CODEGEN — and every
+ * larger dataset in the host session as configured. The choice follows
+ * the registration (`Catalog.load` loads the per-registration handle
+ * through it) and each response's stats block names it as "profile".
+ * The reason is a measured one: an uncached small query compiled 7-22
+ * Janino classes, a third of its latency, because Spark inlines numeric
+ * literals into generated code and its static 100-entry compiled-class
+ * cache is smaller than a dashboard's mix of shapes. Raising that cache
+ * is the host process's call, not this server's; binding literals as
+ * non-inlined references was measured and rejected (shape churn still
+ * evicts). See `graft.catalog.ExecutionProfile` and BENCH.md
+ * §"Execution profile crossover". Nothing here is user-settable.
  */
 final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int = 0,
                       catalogStore: Option[String] = None,
@@ -635,23 +651,13 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
   private def parts(ex: HttpExchange, name: String): Unit = {
     val ds = Catalog.get(name).getOrElse(
       throw QueryValidationException("schema", s"Unknown dataset '$name'"))
-    // Hadoop FS listing — works for local paths and s3a alike (reference
-    // DatasetPartsInfo with naming method LIST, dataset.py:81-96).
-    val path = new org.apache.hadoop.fs.Path(ds.basepath)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val base = f.getPath.getName
-      if (!base.startsWith("_") && !base.startsWith("."))
-        files += ((f.getPath.toUri.getPath, f.getLen))
-    }
-    val sorted = files.sortBy(_._1)
+    // The registration's own listing — works for local paths and s3a alike
+    // (reference DatasetPartsInfo with naming method LIST, dataset.py:81-96).
+    val files = Catalog.partFiles(spark, ds.basepath)
     respond(ex, 200,
-      s"""{"namingMethod": "LIST", "totalParts": ${sorted.size},
-         | "totalSize": ${sorted.map(_._2).sum},
-         | "filenames": [${sorted.map(f => q(f._1)).mkString(", ")}]}""".stripMargin)
+      s"""{"namingMethod": "LIST", "totalParts": ${files.size},
+         | "totalSize": ${files.map(_.length).sum},
+         | "filenames": [${files.map(f => q(f.path.toUri.getPath)).mkString(", ")}]}""".stripMargin)
   }
 
   /** Plan + execute a query; `emptyBody` serves GET empty-query. */
@@ -678,7 +684,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       Catalog.touch(name)
       ResultJson.addTopLevelField(body, "stats",
         JobStats.Snapshot(0, 0, 0, 0, 0, 0, 0)
-          .toJsonWith("plan" -> q(firedPlan), "cached" -> "true"))
+          .toJsonWith("plan" -> q(firedPlan), "profile" -> q(ds.profile.name),
+            "cached" -> "true"))
     }
 
     def runQuery(): ((String, String), JobStats.Snapshot) = {
@@ -691,6 +698,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       // name (r16 race fix): a re-registration landing mid-request would
       // otherwise swap the basepath under this request's registeredAt —
       // a torn version that would also poison the handle cache's key.
+      // The handle lives in the registration's execution-profile session,
+      // so every query planned on it runs under that profile.
       val df = {
         val hk = (ds.name, ds.registeredAt)
         val cached = dfHandles.get(hk)
@@ -701,19 +710,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
           loaded
         }
       }
-      // The registration-validated day-partition declaration flows into
-      // the engine here — timeframe queries over partitionByDay layouts
-      // prune whole day directories on the serving path too.
-      // numGroups (+ gidMaxBytes for string gids, r16) gate the routed
-      // plan's survivor-sharing broadcast (QueryEngine.SurvivorShareMax*);
-      // passed only when the registration scanned every part — a sampled
-      // registration's approximate stats could undercount past the gate's
-      // headroom.
-      val baseEngine = new QueryEngine(DatasetSpec(ds.groupIdColumn, ds.timestampColumn,
-        dayPartitionColumn = ds.dayPartitionColumn,
-        numGroups = if (ds.statsExact) Some(ds.numGroups) else None,
-        gidMaxBytes = if (ds.statsExact) ds.gidMaxBytes else None))
-      val engine = routingMinBytes.fold(baseEngine)(baseEngine.withRoutingThreshold)
+      val engine = ApiServer.engine(ds, routingMinBytes)
       // Caches.scoped: each query owns (and on exit drains) exactly the
       // frames IT retained — async/stream queries run concurrently on
       // their own threads, and the r14 global drain-per-request let one
@@ -742,7 +739,8 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     // block, where "plan" rides as a trailing key.
     def freshResponse(body: String, firedPlan: String, stats: JobStats.Snapshot): String =
       ResultJson.addTopLevelField(body, "stats",
-        stats.toJsonWith("plan" -> q(firedPlan), "cached" -> "false"))
+        stats.toJsonWith("plan" -> q(firedPlan), "profile" -> q(ds.profile.name),
+          "cached" -> "false"))
 
     def execute(): String = {
       val hit = if (resultCacheSize > 0) resultCache.get(cacheKey) else null
@@ -1018,6 +1016,27 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+}
+
+object ApiServer {
+
+  /** The engine a query on registration `ds` runs through. The
+    * registration-validated day-partition declaration flows into the
+    * engine here — timeframe queries over partitionByDay layouts prune
+    * whole day directories on the serving path too. numGroups (+
+    * gidMaxBytes for string gids) gate the routed plan's
+    * survivor-sharing broadcast (QueryEngine.SurvivorShareMax*); passed
+    * only when the registration scanned every part — a sampled
+    * registration's approximate stats could undercount past the gate's
+    * headroom. */
+  private[graft] def engine(ds: Catalog.RegisteredDataset,
+                            routingMinBytes: Option[Long]): QueryEngine = {
+    val base = new QueryEngine(DatasetSpec(ds.groupIdColumn, ds.timestampColumn,
+      dayPartitionColumn = ds.dayPartitionColumn,
+      numGroups = if (ds.statsExact) Some(ds.numGroups) else None,
+      gidMaxBytes = if (ds.statsExact) ds.gidMaxBytes else None))
+    routingMinBytes.fold(base)(base.withRoutingThreshold)
+  }
 }
 
 /** `runMain graft.server.ApiServerMain [port]` — serve until killed. */

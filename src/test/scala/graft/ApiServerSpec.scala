@@ -1344,4 +1344,114 @@ class ApiServerSpec extends SparkSpec {
     assert(after("graft_query_errors_total") == before("graft_query_errors_total"))
     post("/datasets/evm/unregister", "{}")
   }
+
+  /** Physical plans of the queries `session` executes inside `body`. */
+  private def capturePlans(session: org.apache.spark.sql.SparkSession)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000)
+    } finally session.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  test("execution profile: a small registration's uncached query compiles no code") {
+    import graft.catalog.{Catalog, ExecutionProfile}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val dir = java.nio.file.Files.createTempDirectory("evinterp").toString
+    spark.range(2000)
+      .selectExpr("id % 50 AS user_id", "id AS ts", "CAST(id % 997 AS DOUBLE) AS value",
+        "IF(id % 3 = 0, 'view', 'click') AS event_type")
+      .write.mode("overwrite").parquet(dir)
+    val reg = post("/datasets/register",
+      s"""{"name": "evinterp", "basepath": "$dir",
+         | "groupIdColumn": "user_id", "timestampColumn": "ts"}""".stripMargin)
+    assert(reg.statusCode() == 200, reg.body())
+    try {
+      val ds = Catalog.get("evinterp").get
+      assert(ds.totalBytes.exists(b => b > 0 && b < ExecutionProfile.InterpretedMaxBytes),
+        ds.totalBytes)
+      assert(ds.profile == ExecutionProfile.Interpreted)
+      val plans = capturePlans(ExecutionProfile.session(spark, ExecutionProfile.Interpreted)) {
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        // Literals no other query uses: under codegen they would compile
+        // fresh classes (Spark inlines numeric literals).
+        val r = post("/datasets/evinterp/query",
+          """{"query": {"conditions": [{"filters": [["value", ">", 123.4567]],
+            |  "target": ["count", ">=", 3]}],
+            | "aggregations": [{"column": "event_type", "type": "countPerValue"}]}}""".stripMargin)
+        assert(r.statusCode() == 200, r.body())
+        val stats = JsonMethods.parse(r.body()) \ "stats"
+        assert((stats \ "profile") == JString("interpreted") &&
+          (stats \ "cached") == JBool(false), JsonMethods.compact(stats))
+        // If a Spark upgrade drops spark.sql.codegen.factoryMode, the
+        // query still answers but compiles again — this is the guard.
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+          "an interpreted-profile query compiled generated code")
+      }
+      assert(plans.nonEmpty, "no query ran in the interpreted session")
+      plans.foreach { p =>
+        assert(!p.isInstanceOf[AdaptiveSparkPlanExec], p.treeString)
+        assert(p.find(_.isInstanceOf[WholeStageCodegenExec]).isEmpty, p.treeString)
+      }
+    } finally Catalog.unregister("evinterp")
+  }
+
+  test("execution profile: a registration above the crossover keeps AQE and whole-stage codegen") {
+    import graft.catalog.{Catalog, ExecutionProfile}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    // Uncompressed, dictionary-free 64-char hashes: at least 64 bytes a
+    // row on disk, so this many rows clear the crossover.
+    val dir = java.nio.file.Files.createTempDirectory("evcodegen").toString
+    spark.range(ExecutionProfile.InterpretedMaxBytes / 64 + 1000)
+      .selectExpr("id % 1000 AS uid", "id AS ts",
+        "CASE WHEN id % 3 = 0 THEN 'a' ELSE 'b' END AS etype",
+        "sha2(CAST(id AS STRING), 256) AS pad")
+      .write.mode("overwrite").option("compression", "none")
+      .option("parquet.enable.dictionary", "false").parquet(dir)
+    val reg = post("/datasets/register",
+      s"""{"name": "evcodegen", "basepath": "$dir",
+         | "groupIdColumn": "uid", "timestampColumn": "ts"}""".stripMargin)
+    assert(reg.statusCode() == 200, reg.body())
+    try {
+      val ds = Catalog.get("evcodegen").get
+      assert(ds.totalBytes.exists(_ >= ExecutionProfile.InterpretedMaxBytes), ds.totalBytes)
+      assert(ds.profile == ExecutionProfile.Codegen)
+      var compiled = 0L
+      val plans = capturePlans(spark) {
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val r = post("/datasets/evcodegen/query",
+          """{"query": {"conditions": [{"filters": [["etype", "==", "a"], ["ts", ">", 987653]],
+            |  "target": ["count", ">=", 2]}]}}""".stripMargin)
+        assert(r.statusCode() == 200, r.body())
+        val stats = JsonMethods.parse(r.body()) \ "stats"
+        assert((stats \ "profile") == JString("codegen"), JsonMethods.compact(stats))
+        compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+      }
+      assert(compiled > 0, "the codegen profile compiled nothing for a fresh literal")
+      assert(plans.nonEmpty, "no query ran in the host session")
+      val helper = new AdaptiveSparkPlanHelper {}
+      plans.foreach { p =>
+        assert(p.isInstanceOf[AdaptiveSparkPlanExec], p.treeString)
+        assert(helper.find(p)(_.isInstanceOf[WholeStageCodegenExec]).nonEmpty, p.treeString)
+      }
+    } finally Catalog.unregister("evcodegen")
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.catalog.Catalog
+import graft.catalog.{Catalog, ExecutionProfile}
 import graft.engine.{DatasetSpec, QueryEngine}
 import graft.query.QueryParser
 import graft.result.ResultJson
@@ -130,8 +130,12 @@ class LibrarySpec extends SparkSpec {
     // Isolated child session: listenerManager is session-scoped, so an
     // async action from an EARLIER suite completing late (ApiServer jobs)
     // can't bleed into this count — only the registration's own actions do.
+    // The registration's scans run in the session of the dataset's
+    // execution profile (interpreted for this tiny input), so the count
+    // covers both the caller's session and its interpreted child.
     val sess = spark.newSession()
-    sess.listenerManager.register(listener)
+    val sessions = Seq(sess, ExecutionProfile.session(sess, ExecutionProfile.Interpreted))
+    sessions.foreach(_.listenerManager.register(listener))
     try {
       val ds = Catalog.register(sess, "catwide", dir, "uid", "ts")
       // all four are categorical, with full per-column top values
@@ -151,7 +155,7 @@ class LibrarySpec extends SparkSpec {
       }
       assert(actions.get() == 2,
         s"registration must cost 2 actions (stats + fused top-K), saw ${actions.get()}")
-    } finally sess.listenerManager.unregister(listener)
+    } finally sessions.foreach(_.listenerManager.unregister(listener))
   }
 
   test("catalog: sampled validation modes scan only the chosen part files") {
@@ -238,6 +242,9 @@ class LibrarySpec extends SparkSpec {
       Catalog.enablePersistence(store.toString)
       val back = Catalog.get("pers1").getOrElse(fail("pers1 not reloaded"))
       assert(back == ds) // schema, stats, attrs — bit-identical round trip
+      // The input size survives too, and with it the execution profile.
+      assert(ds.totalBytes.exists(_ > 0) && back.totalBytes == ds.totalBytes)
+      assert(back.profile == ExecutionProfile.Interpreted)
       // Unregister while attached persists the removal too.
       Catalog.unregister("pers1")
       Catalog.disablePersistence()
@@ -247,6 +254,31 @@ class LibrarySpec extends SparkSpec {
     } finally {
       Catalog.disablePersistence()
       Catalog.unregister("pers1")
+    }
+  }
+
+  test("catalog: a store written before totalBytes loads as None and keeps codegen") {
+    // A registration persisted by an older build has no "totalBytes" key.
+    val dir = tmpDir("catold")
+    spark.range(10).selectExpr("id AS user_id", "id AS ts").write.mode("overwrite").parquet(dir)
+    val store = Files.createTempDirectory("catstore_old").resolve("catalog.json")
+    Files.writeString(store,
+      s"""{"datasets": [{"name": "old1", "basepath": "$dir",
+        |  "groupIdColumn": "user_id", "timestampColumn": "ts",
+        |  "columns": {"user_id": "Int", "ts": "Int"},
+        |  "unsupportedColumns": [], "minTimestamp": 0.0, "maxTimestamp": 1.0,
+        |  "numGroups": 10, "numRows": 10, "registeredAt": 1,
+        |  "dtypeNames": {}, "columnAttrs": {}}]}""".stripMargin)
+    Catalog.enablePersistence(store.toString)
+    try {
+      val old = Catalog.get("old1").getOrElse(fail("old1 not loaded"))
+      assert(old.totalBytes.isEmpty)
+      assert(old.profile == ExecutionProfile.Codegen)
+      // Its handle stays in the host session, so queries keep codegen.
+      assert(Catalog.load(spark, old).sparkSession eq spark)
+    } finally {
+      Catalog.disablePersistence()
+      Catalog.unregister("old1")
     }
   }
 

@@ -8,6 +8,8 @@ import scala.util.Random
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.catalog.Catalog
+import graft.result.ResultJson
 import graft.server.ApiServer
 
 /**
@@ -26,6 +28,10 @@ import graft.server.ApiServer
  * cache/coalesce paths fire under contention, and correctness is
  * "bit-identical to the solo run", which FuzzSpec already ties to DuckDB
  * for this exact generator.
+ *
+ * The solo pass runs on the interpreted execution profile (the fuzz
+ * frame is small); each query is replayed on the codegen profile and must
+ * answer identically.
  *
  * Solo pass → re-register (new registeredAt = every key cold) →
  * concurrent pass. The duplicate of each query must be answered from the
@@ -101,12 +107,32 @@ class ServingFuzzSpec extends SparkSpec {
       // the structural key the server uses (r16).
       val distinctAsts = queries.map(graft.query.QueryParser.parse).distinct.size
 
-      // ---- solo pass: the twin every concurrent answer must equal.
+      // ---- solo pass: the twin every concurrent answer must equal. The
+      // fuzz frame is far below the profile crossover, so the server
+      // answers on the interpreted profile.
       register()
       val solo = queries.zipWithIndex.map { case (q, i) =>
         val r = post("/datasets/servfuzz/query", q)
         assert(r.statusCode() == 200, s"seed=$Seed q$i solo failed: ${r.body()}\n$q")
-        resultPart(JsonMethods.parse(r.body()))
+        val j = JsonMethods.parse(r.body())
+        assert((j \ "stats" \ "profile") == JString("interpreted"), s"q$i: ${r.body()}")
+        resultPart(j)
+      }
+
+      // ---- the codegen profile: the same registration loaded without a
+      // recorded size (the profile such a registration keeps) through the
+      // server's engine must answer every query identically. Exact
+      // equality holds because the fuzz frame's measures are decimals or
+      // integer-valued doubles, whose sums do not depend on the order
+      // AQE's partitioning adds them in.
+      val ds = Catalog.get("servfuzz").get
+      val codegenDf = Catalog.load(spark, ds.copy(totalBytes = None))
+      val engine = ApiServer.engine(ds, Some(0))
+      queries.zipWithIndex.foreach { case (q, i) =>
+        val codegen = graft.util.Caches.scoped(JsonMethods.parse(ResultJson.build(
+          engine.runValidated(codegenDf, graft.query.QueryParser.parse(q)))))
+        assert(codegen == solo(i),
+          s"seed=$Seed q$i: codegen and interpreted profiles disagree\nquery: $q")
       }
 
       // ---- concurrent pass: fresh registration (all keys cold), every
