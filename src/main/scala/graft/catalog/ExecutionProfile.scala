@@ -12,7 +12,12 @@ import org.apache.spark.sql.SparkSession
  *  - [[ExecutionProfile.Interpreted]]: a child session of the host
  *    (`newSession()`, same SparkContext, cache manager and listener bus)
  *    with AQE off, whole-stage codegen off and the expression factory mode
- *    `NO_CODEGEN`, so operators and expressions evaluate interpreted.
+ *    `NO_CODEGEN`, so operators and expressions evaluate interpreted, and
+ *    one shuffle partition. Its datasets, unless day-partitioned, load as
+ *    a resident copy (`Catalog.load`): one persisted partition, so
+ *    queries plan no exchange and run one task per action. The few exchanges a plan still needs
+ *    (the `Expand` behind multi-distinct counts, the routed plan's
+ *    explicit repartition) run one task each instead of one per core.
  *
  * Why a small input wants the interpreted profile: Spark inlines numeric
  * literals into generated code, so every new literal is a new class, and
@@ -27,6 +32,16 @@ import org.apache.spark.sql.SparkSession
  * shape churn still evicts (both measured: BENCH.md §"Execution profile
  * crossover").
  *
+ * Why one task: on a small input the per-stage and per-task costs
+ * (scheduling, a Parquet open and footer read per file, the hash shuffle
+ * by group id) outweigh the parallel work. Serving each small
+ * registration from a single resident partition removes them; measured
+ * alternatives were one shuffle partition over the files (fewer tasks,
+ * latency within the noise) and folding each query into one action (no
+ * gain once the copy is resident). The cost is memory: one copy per live
+ * small registration, which Spark's storage LRU spills to disk under
+ * pressure (BENCH.md §"Resident single-partition copy").
+ *
  * Input without a recorded size (a registration persisted before the size
  * was recorded) keeps the codegen profile.
  */
@@ -38,10 +53,10 @@ object ExecutionProfile {
 
   /** Inputs whose part files add up to fewer bytes than this run
     * interpreted. Measured with `graft.ServingScale crossover` (BENCH.md
-    * §"Execution profile crossover"): interpreted answered the nine
-    * dashboard shapes in 0.60× codegen's time at 1.9 MB and 1.38× at
-    * 17 MB; the constant is the two sizes' geometric mean, rounded down
-    * to whole MiB. */
+    * §"Execution profile crossover"), interpreted reading the resident
+    * copy: it answered the nine dashboard shapes in 0.83× codegen's time
+    * at 1.9 MB and 3.18× at 17 MB; the constant is the two sizes'
+    * geometric mean, rounded down to whole MiB. */
   val InterpretedMaxBytes: Long = 5L << 20
 
   def forInput(totalBytes: Option[Long]): ExecutionProfile = totalBytes match {
@@ -52,7 +67,8 @@ object ExecutionProfile {
   private val InterpretedConf = Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.shuffle.partitions" -> "1")
 
   /** One interpreted child per host session; weak keys, so a stopped
     * host's child goes with it (the child holds no reference back). */
@@ -60,7 +76,7 @@ object ExecutionProfile {
 
   /** The session `profile` runs in for a caller holding `spark`. The
     * interpreted child starts from the host's runtime SQL conf as it is at
-    * first use, then overrides the three settings above. */
+    * first use, then overrides the four settings above. */
   def session(spark: SparkSession, profile: ExecutionProfile): SparkSession = profile match {
     case Codegen => spark
     case Interpreted => children.synchronized {

@@ -204,6 +204,13 @@ object Ann {
     *    ascending group id. Float summation follows a fixed tree either
     *    way — same data, same partitioning ⇒ same bits.
     *
+    * Determinism is per regime. The two regimes add in different trees (a
+    * flat fold against a fold of group folds), so they agree bit for bit
+    * only when every partial sum is exactly representable (integer-valued
+    * doubles below 2^53, say). For general float data, a workload crossing
+    * `maxDriverBytes` gets centroids equal to the flat merge's up to
+    * rounding, not to the bit.
+    *
     * Driver memory is O(min(P, maxDriverBytes/model) × model) ≤ 64 MB of
     * partials plus the result — never O(P × model). */
   private[graft] def mergeStatPartials(

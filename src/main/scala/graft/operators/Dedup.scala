@@ -205,7 +205,18 @@ object Dedup {
     * index storage makes them shuffle-free). Pass `corpusCounts` — the
     * per-(band, bucket) size aggregate a deployment stores alongside the
     * index — to skip recomputing it, leaving the candidate join as the
-    * only index scan. */
+    * only index scan.
+    *
+    * Eager: the result is an eager `localCheckpoint`, so this call runs the
+    * candidate job before it returns; it is not a lazy plan. The pair
+    * blocks live in non-replicated executor-local storage and cannot be
+    * recomputed from lineage. On a multi-executor cluster, an executor
+    * lost before the caller's last action (a crash, or dynamic allocation
+    * scaling down) fails that action instead of recomputing the pairs,
+    * and the caller must call this again. The trade buys ~1.7 s of
+    * driver-side planning per call (see below). Code that cannot accept
+    * it can persist [[incrementalCandidatesPlan]] instead, whose blocks
+    * recompute from lineage but whose plan keeps its full size. */
   def incrementalCandidates(corpusBuckets: DataFrame, batchBuckets: DataFrame,
                             maxBucket: Int = 1000,
                             corpusCounts: Option[DataFrame] = None): DataFrame =

@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
  */
 object JobStats {
 
+  /** `rowsScanned` and `bytesScanned` are the tasks' input records and
+    * bytes: Parquet rows and bytes read, or, for a resident copy
+    * (`Catalog.load`), the rows read from its persisted blocks and those
+    * blocks' size as Spark's block manager accounts it (the estimated
+    * in-memory size of the deserialized rows, or the on-disk size if
+    * spilled), which is not the size of the part files. */
   final case class Snapshot(
       wallTimeMs: Long,
       tasks: Int,

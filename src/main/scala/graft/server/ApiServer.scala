@@ -52,7 +52,20 @@ import graft.result.{JobStats, ResultJson}
  * is the host process's call, not this server's; binding literals as
  * non-inlined references was measured and rejected (shape churn still
  * evicts). See `graft.catalog.ExecutionProfile` and BENCH.md
- * §"Execution profile crossover". Nothing here is user-settable.
+ * §"Execution profile crossover".
+ *
+ * Resident copy: such a small registration's handle is its resident copy
+ * (`Catalog.load`), the normalized scan coalesced to one partition and
+ * persisted. Its queries open no Parquet file and plan no shuffle: the
+ * window stack, group-bys and final aggregates run in one task. The
+ * catalog owns the copies, one per live small registration, spilled to
+ * disk by Spark's storage LRU under memory pressure; re-registration and
+ * unregister release them. Over a copy, the stats block's `rowsScanned`
+ * counts the rows read from it and `bytesScanned` the size of its blocks
+ * as Spark's block manager accounts it, not Parquet bytes. Measured and
+ * rejected: one shuffle partition over the files alone, and one action
+ * per query (BENCH.md §"Resident single-partition copy"). Nothing here
+ * is user-settable.
  */
 final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int = 0,
                       catalogStore: Option[String] = None,
@@ -453,9 +466,10 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     * (name, registeredAt): files never change under a registration —
     * updates re-register (dataset.py:36-53), which changes registeredAt
     * and naturally misses this cache (pinned in ApiServerSpec). Handles
-    * are plan-sized (no data pinned), so a small LRU bounds driver
-    * footprint; always on. Cache hits still mark the dataset used for
-    * the unregister safety interval. */
+    * are plan-sized: a small registration's handle is its resident copy,
+    * but the catalog, not this cache, owns and releases the copy's data.
+    * So a small LRU bounds driver footprint; always on. Cache hits still
+    * mark the dataset used for the unregister safety interval. */
   private val dfHandles: java.util.Map[(String, Long), org.apache.spark.sql.DataFrame] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[(String, Long), org.apache.spark.sql.DataFrame](16, 0.75f, true) {

@@ -7,8 +7,9 @@ import graft.operators.Ann
 
 /** Pins the r20 bounded k-means partial merge (VERDICT r19 #2): the grouped
   * two-level merge the 100 TB regime takes must produce exactly what the
-  * flat pid-order merge (the battery regime, bit-identical to r19) produces,
-  * and ivfAssign must keep the pre-r19 null-vector tolerance (r19 ADVICE). */
+  * flat pid-order merge (the battery regime, bit-identical to r19) produces
+  * on exactly representable sums, and the same up to rounding otherwise;
+  * ivfAssign must keep the pre-r19 null-vector tolerance (r19 ADVICE). */
 class AnnMergeSpec extends SparkSpec {
 
   test("mergeStatPartials: grouped two-level merge equals the flat pid-order merge") {
@@ -33,6 +34,33 @@ class AnnMergeSpec extends SparkSpec {
     val (gs2, gc2) = Ann.mergeStatPartials(partials, sumLen, cntLen,
       maxDriverBytes = tinyBudget)
     assert(gs2.toSeq == gs.toSeq && gc2.toSeq == gc.toSeq)
+  }
+
+  test("mergeStatPartials: non-integer sums agree across regimes up to rounding") {
+    val sumLen = 5
+    val cntLen = 2
+    // Non-integer doubles of mixed magnitude: the two regimes add in
+    // different trees, so bits may differ; values must still agree closely.
+    val partials = spark.sparkContext.parallelize(0 until 41, 41).map { pid =>
+      (pid,
+        Array.tabulate(sumLen)(j => math.sin(pid * 1.7 + j) * math.pow(10, j % 4) + 0.1),
+        Array.tabulate(cntLen)(j => (pid * 3 + j).toLong))
+    }
+    val (fs, fc) = Ann.mergeStatPartials(partials, sumLen, cntLen)
+    val tinyBudget = (sumLen + cntLen) * 8L * 5
+    val (gs, gc) = Ann.mergeStatPartials(partials, sumLen, cntLen,
+      maxDriverBytes = tinyBudget)
+    assert(gc.toSeq == fc.toSeq, "counts are integers and must match exactly")
+    val scale = partials.map(_._2.map(math.abs)).collect()
+      .reduce((a, b) => a.zip(b).map { case (x, y) => x + y })
+    fs.indices.foreach { j =>
+      assert(math.abs(gs(j) - fs(j)) <= 1e-12 * math.max(1.0, scale(j)),
+        s"sum $j: grouped ${gs(j)} vs flat ${fs(j)}")
+    }
+    // Each regime is still deterministic on its own.
+    val (gs2, _) = Ann.mergeStatPartials(partials, sumLen, cntLen,
+      maxDriverBytes = tinyBudget)
+    assert(gs2.toSeq == gs.toSeq)
   }
 
   test("mergeStatPartials: grouped path with more groups than occupied partitions") {

@@ -508,6 +508,14 @@ class ApiServerSpec extends SparkSpec {
     }
   }
 
+  /** Storage level of the rows under a small registration's resident
+    * copy (the DataFrame `Catalog.load` returns for it). */
+  private def residentLevel(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getStorageLevel
+      case p => fail(s"not a resident copy: $p")
+    }
+
   test("DataFrame handle cache: reused within a registration, dropped on re-register (r16)") {
     // The handle cache is always on (result cache off on the default-ish
     // server here), keyed (name, registeredAt): repeats of a registration
@@ -534,9 +542,19 @@ class ApiServerSpec extends SparkSpec {
           "query" \ "matchingGroupRows"
       assert(rows() == JInt(10))
       assert(rows() == JInt(10)) // handle-cache hit path answers identically
+      // A small registration's handle is its resident copy, and the stats
+      // block counts the copy's rows, not its cached batches.
+      val first = graft.catalog.Catalog.get("evhandle").get
+      val stats = JsonMethods.parse(post("/datasets/evhandle/query", """{"query": {}}""").body()) \
+        "stats"
+      assert((stats \ "rowsScanned") == JInt(first.numRows), JsonMethods.compact(stats))
+      val copy = graft.catalog.Catalog.load(spark, first)
+      assert(residentLevel(copy) != org.apache.spark.storage.StorageLevel.NONE)
       write(20)
       register() // new registeredAt → fresh handle over the new listing
       assert(rows() == JInt(20), "stale DataFrame handle survived re-registration")
+      assert(residentLevel(copy) == org.apache.spark.storage.StorageLevel.NONE,
+        "re-registration left the replaced registration's copy persisted")
     } finally {
       graft.catalog.Catalog.unregister("evhandle")
     }
@@ -1075,6 +1093,8 @@ class ApiServerSpec extends SparkSpec {
       assert(reg.statusCode() == 200, reg.body())
       val q1 = post14("/datasets/evsweep/query", """{"query": {}}""")
       assert(q1.statusCode() == 200, q1.body())
+      val copy = graft.catalog.Catalog.load(spark, graft.catalog.Catalog.get("evsweep").get)
+      assert(residentLevel(copy) != org.apache.spark.storage.StorageLevel.NONE)
       val warm = get14("/metrics").body()
       assert(warm.contains("graft_result_cache_entries 1"), warm)
       assert(warm.contains("graft_df_handle_entries 1"), warm)
@@ -1085,6 +1105,8 @@ class ApiServerSpec extends SparkSpec {
       val swept = get14("/metrics").body()
       assert(swept.contains("graft_result_cache_entries 0"), swept)
       assert(swept.contains("graft_df_handle_entries 0"), swept)
+      assert(residentLevel(copy) == org.apache.spark.storage.StorageLevel.NONE,
+        "unregister left the registration's copy persisted")
     } finally {
       s14.stop()
       graft.catalog.Catalog.unregister("evsweep")
@@ -1369,6 +1391,7 @@ class ApiServerSpec extends SparkSpec {
     import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.execution.WholeStageCodegenExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val dir = java.nio.file.Files.createTempDirectory("evinterp").toString
@@ -1385,6 +1408,7 @@ class ApiServerSpec extends SparkSpec {
       assert(ds.totalBytes.exists(b => b > 0 && b < ExecutionProfile.InterpretedMaxBytes),
         ds.totalBytes)
       assert(ds.profile == ExecutionProfile.Interpreted)
+      var tasks = -1
       val plans = capturePlans(ExecutionProfile.session(spark, ExecutionProfile.Interpreted)) {
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         // Literals no other query uses: under codegen they would compile
@@ -1397,6 +1421,10 @@ class ApiServerSpec extends SparkSpec {
         val stats = JsonMethods.parse(r.body()) \ "stats"
         assert((stats \ "profile") == JString("interpreted") &&
           (stats \ "cached") == JBool(false), JsonMethods.compact(stats))
+        tasks = (stats \ "tasks") match {
+          case JInt(n) => n.toInt
+          case other => fail(s"no task count: $other")
+        }
         // If a Spark upgrade drops spark.sql.codegen.factoryMode, the
         // query still answers but compiles again — this is the guard.
         assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
@@ -1406,7 +1434,11 @@ class ApiServerSpec extends SparkSpec {
       plans.foreach { p =>
         assert(!p.isInstanceOf[AdaptiveSparkPlanExec], p.treeString)
         assert(p.find(_.isInstanceOf[WholeStageCodegenExec]).isEmpty, p.treeString)
+        assert(p.find(_.isInstanceOf[ShuffleExchangeExec]).isEmpty, p.treeString)
       }
+      // Served from the resident copy: each action (the summary, then the
+      // aggregation) runs one stage of one task.
+      assert(tasks == plans.size, s"$tasks tasks for ${plans.size} actions")
     } finally Catalog.unregister("evinterp")
   }
 

@@ -227,6 +227,36 @@ class LibrarySpec extends SparkSpec {
     Seq("loc_ok", "loc_bad_ok").foreach(Catalog.unregister)
   }
 
+  test("catalog: a registration that fails validation releases its resident copy") {
+    // The copy's cached RDD is named after its plan, which names the files.
+    def cachedOver(dir: String): Boolean =
+      spark.sparkContext.getPersistentRDDs.values.exists(r =>
+        Option(r.name).exists(_.contains(dir)))
+    val schema = StructType(Seq(
+      StructField("uid", LongType), StructField("ts", LongType)))
+    val goodDir = tmpDir("catcopy_ok")
+    frame(schema, (0 until 50).map(i =>
+      Map[String, Any]("uid" -> (i % 5).toLong, "ts" -> (1000L + i))))
+      .write.mode("overwrite").parquet(goodDir)
+    // A small Full-mode registration fills its copy, and unregister drops it.
+    val ds = Catalog.register(spark, "copy_ok", goodDir, "uid", "ts")
+    assert(ds.profile == ExecutionProfile.Interpreted)
+    assert(cachedOver(goodDir), "registration built no resident copy")
+    Catalog.unregister("copy_ok")
+    assert(!cachedOver(goodDir))
+    // A null group id fails the stats pass after it filled the copy.
+    val badDir = tmpDir("catcopy_bad")
+    frame(schema, (0 until 50).map(i => Map[String, Any](
+      "uid" -> (if (i == 7) null else (i % 5).toLong), "ts" -> (1000L + i))))
+      .write.mode("overwrite").parquet(badDir)
+    val e = intercept[Catalog.RegistrationException] {
+      Catalog.register(spark, "copy_bad", badDir, "uid", "ts")
+    }
+    assert(e.getMessage.contains("contains nulls"), e.getMessage)
+    assert(Catalog.get("copy_bad").isEmpty)
+    assert(!cachedOver(badDir), "a failed registration left its copy cached")
+  }
+
   test("catalog: JSON store round-trips registrations across a restart") {
     val store = Files.createTempDirectory("catstore").resolve("catalog.json")
     Catalog.enablePersistence(store.toString)
