@@ -27,13 +27,14 @@ import org.apache.spark.sql.SparkSession
  * Prints one JSON line (BENCH.md §"Serving-path latency floor").
  *
  * `ServingScale crossover [--reps N] <dir>...` instead times uncached
- * queries of nine dashboard shapes on both execution profiles
- * (`graft.catalog.ExecutionProfile`) over each events directory, e.g. the
- * query-service benchmark's generator output at several row counts. Each
- * repetition draws fresh literals, so the codegen profile compiles as a
- * first-seen query does; both profiles must give the same answer. Prints
- * a table and one JSON line per directory (BENCH.md §"Execution profile
- * crossover").
+ * queries of nine dashboard shapes on all three execution profiles
+ * (`graft.catalog.ExecutionProfile`: codegen, interpreted over the part
+ * files in parallel, and one-task interpreted over the resident copy)
+ * over each events directory, e.g. the query-service benchmark's
+ * generator output at several row counts. Each repetition draws fresh
+ * literals, so the codegen profile compiles as a first-seen query does;
+ * every profile must give the same answer. Prints a table and one JSON
+ * line per directory (BENCH.md §"Execution profile crossover").
  */
 object ServingScale {
   def main(args: Array[String]): Unit =
@@ -269,15 +270,18 @@ object ServingScale {
     }
     require(dirs.nonEmpty, "usage: ServingScale crossover [--reps N] <events dir>...")
     val spark = session()
-    val profiles: Seq[ExecutionProfile] = Seq(ExecutionProfile.Codegen, ExecutionProfile.Interpreted)
+    import ExecutionProfile.{Codegen, Interpreted, InterpretedParallel}
+    val profiles: Seq[ExecutionProfile] = Seq(Codegen, InterpretedParallel, Interpreted)
+    // A recorded size that picks each profile (no size keeps codegen).
+    val sizeFor: Map[ExecutionProfile, Option[Long]] = Map(Codegen -> None,
+      InterpretedParallel -> Some(ExecutionProfile.ResidentMaxBytes), Interpreted -> Some(0L))
+    val label: Map[ExecutionProfile, String] =
+      Map(Codegen -> "codegen", InterpretedParallel -> "parallel", Interpreted -> "resident")
     try dirs.foreach { dir =>
       val ds = Catalog.register(spark, "crossover", dir, "user_id", "ts")
       // The production load path, with the recorded size overridden so
-      // each profile reads the same files (no size keeps codegen).
-      val handles = profiles.map { p =>
-        p -> Catalog.load(spark, ds.copy(totalBytes =
-          if (p == ExecutionProfile.Interpreted) Some(0L) else None))
-      }.toMap
+      // each profile reads the same files.
+      val handles = profiles.map(p => p -> Catalog.load(spark, ds.copy(totalBytes = sizeFor(p)))).toMap
       val engine = graft.server.ApiServer.engine(ds, None)
       def run(p: ExecutionProfile, json: String): (Double, String) = {
         val t0 = System.nanoTime()
@@ -292,8 +296,8 @@ object ServingScale {
       val ms = scala.collection.mutable.Map.empty[(String, ExecutionProfile), Seq[Double]]
         .withDefaultValue(Seq.empty)
       for (r <- 0 until reps; (shape, json) <- shapes(r)) {
-        // Alternate which profile goes first, so drift hits both alike.
-        val order = if (r % 2 == 0) profiles else profiles.reverse
+        // Rotate which profile goes first, so drift hits all alike.
+        val order = profiles.drop(r % profiles.size) ++ profiles.take(r % profiles.size)
         val answers = order.map { p =>
           val (t, a) = run(p, json)
           ms((shape, p)) = ms((shape, p)) :+ t
@@ -306,18 +310,21 @@ object ServingScale {
         if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
       val names = shapes(0).map(_._1)
-      val rows = names.map(n => (n, median(ms((n, ExecutionProfile.Codegen))),
-        median(ms((n, ExecutionProfile.Interpreted)))))
-      val (cg, it) = (rows.map(_._2).sum, rows.map(_._3).sum)
+      val rows = names.map(n => n -> profiles.map(p => median(ms((n, p)))))
+      val sums = profiles.indices.map(i => rows.map(_._2(i)).sum)
+      def line(label: String, v: Seq[Double]): String =
+        f"[crossover]   $label%-18s" + v.map(x => f"$x%12.1f").mkString +
+          f"  ${v(1) / v(0)}%5.2f ${v(2) / v(0)}%5.2f ${v(2) / v(1)}%5.2f"
       println(f"[crossover] $dir: ${ds.numRows} rows, ${ds.totalBytes.get} bytes, $reps reps")
-      rows.foreach { case (n, c, i) =>
-        println(f"[crossover]   $n%-18s codegen $c%8.1f ms  interpreted $i%8.1f ms  ${i / c}%5.2f")
-      }
-      println(f"[crossover]   sum of medians     codegen $cg%8.1f ms  interpreted $it%8.1f ms  ${it / cg}%5.2f")
+      println(f"[crossover]   ${"ms (median)"}%-18s" + profiles.map(p => f"${label(p)}%12s").mkString +
+        "  par/cg res/cg res/par")
+      rows.foreach { case (n, v) => println(line(n, v)) }
+      println(line("sum of medians", sums))
       println(s"""{"metric": "profile_crossover", "dir": "$dir", "rows": ${ds.numRows}, """ +
         s""""bytes": ${ds.totalBytes.get}, "reps": $reps, """ +
-        f""""codegen_ms": $cg%.1f, "interpreted_ms": $it%.1f, "ratio": ${it / cg}%.3f, """ +
-        rows.map { case (n, c, i) => f""""$n": [$c%.1f, $i%.1f]""" }.mkString("\"shapes\": {", ", ", "}}"))
+        f""""codegen_ms": ${sums(0)}%.1f, "parallel_ms": ${sums(1)}%.1f, "resident_ms": ${sums(2)}%.1f, """ +
+        rows.map { case (n, v) => s""""$n": ${v.map(x => f"$x%.1f").mkString("[", ", ", "]")}""" }
+          .mkString("\"shapes\": {", ", ", "}}"))
       Catalog.unregister("crossover")
     } finally spark.stop()
   }

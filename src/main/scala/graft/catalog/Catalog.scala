@@ -2,7 +2,9 @@ package graft.catalog
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,7 +28,8 @@ import org.apache.spark.sql.types._
  *
  * Registration also records the summed part-file size, which picks the
  * dataset's [[ExecutionProfile]]: its stats pass and every later
- * [[load]] run in that profile's session. A registration in the
+ * [[load]] run in that profile's session. The catalog memoises the
+ * handles [[load]] returns, and a registration in the one-task
  * interpreted profile without a declared day partition also gets a
  * resident copy (see [[load]]), which the catalog builds, serves and
  * releases.
@@ -136,58 +139,73 @@ object Catalog {
 
   private val datasets = new ConcurrentHashMap[String, RegisteredDataset]()
 
-  /** Resident copies by registration name, each with the registeredAt of
-    * the snapshot it copies; see [[load]]. Guarded by itself, and so is
-    * publishing a registration under a name (`datasets` writes), so a
-    * copy is only ever memoised for the current registration and a
-    * replaced one is released. */
-  private val copies = new java.util.HashMap[String, (Long, ResidentCopy)]()
+  /** What [[load]] has built for the current registration under each
+    * name. Guarded by itself, and so is publishing a registration under a
+    * name (`datasets` writes), so only the current registration's handles
+    * are memoised and a replaced registration's copy is released. */
+  private val loaded = new java.util.HashMap[String, Loaded]()
 
-  /** A resident copy: the DataFrame queries read, and the persisted rows
-    * under it, which releasing the copy unpersists. */
-  private final case class ResidentCopy(df: DataFrame,
-      rows: org.apache.spark.rdd.RDD[_]) {
-    def release(): Unit = rows.unpersist(blocking = false)
+  /** The handles loaded for one registration snapshot, one per host
+    * session and profile, and for a resident registration the persisted
+    * rows that all of its handles read. A handle holds its host's profile
+    * session, so both live until the registration is replaced or
+    * unregistered. */
+  private final class Loaded(val registeredAt: Long) {
+    var rows: Option[RDD[InternalRow]] = None
+    val handles = new java.util.HashMap[(SparkSession, ExecutionProfile), DataFrame]()
+    def release(): Unit = rows.foreach(_.unpersist(blocking = false))
   }
 
   /** Whether a registration is served from a resident copy: one in the
-    * interpreted profile that declares no day-partition column. A
-    * declared day partition keeps the file scan, whose queries prune whole
-    * day directories (the declaration's purpose, pinned in LibrarySpec). */
+    * one-task interpreted profile (under `ExecutionProfile.ResidentMaxBytes`)
+    * that declares no day-partition column. A declared day partition keeps
+    * the file scan, whose queries prune whole day directories (the
+    * declaration's purpose, pinned in LibrarySpec). */
   private def resident(profile: ExecutionProfile,
                        dayPartitionColumn: Option[String]): Boolean =
     profile == ExecutionProfile.Interpreted && dayPartitionColumn.isEmpty
 
-  /** `scan`'s rows as a resident copy: one partition, persisted
-    * memory-and-disk (lazily, by the first action that reads it). The
-    * copy's plan reports `SinglePartition`, so every window, group-by and
-    * final aggregate over it needs no exchange. `persist`, not
-    * `localCheckpoint`: lost blocks recompute from lineage.
+  /** The rows of `scan` (coalesced to one partition) persisted
+    * memory-and-disk, lazily: the first action that reads them fills the
+    * blocks. `persist`, not `localCheckpoint`: lost blocks recompute from
+    * lineage.
     *
     * The copy holds rows, scanned interpreted, rather than a CacheManager
     * entry (`Dataset.persist`): Spark's default cached-batch serializer
     * decodes string columns through `GenerateColumnAccessor`, generated
     * code the interpreted profile exists to avoid (two compiles on the
     * first query of a string-column dataset, measured). */
-  private def residentCopy(scan: DataFrame, name: String,
-                           basepath: String): ResidentCopy = {
-    val (df, rows) = org.apache.spark.sql.GraftResidentRows.persist(
-      scan.coalesce(1), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+  private def residentRows(scan: DataFrame, name: String,
+                           basepath: String): RDD[InternalRow] =
+    org.apache.spark.sql.GraftResidentRows.persist(scan.coalesce(1),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       s"resident copy of '$name' ($basepath)")
-    ResidentCopy(df, rows)
-  }
 
-  /** Release the copy held for `name`, if any. Call holding `copies`. */
-  private def releaseCopy(name: String): Unit =
-    Option(copies.remove(name)).foreach(_._2.release())
+  /** A handle over resident `rows` in `scan`'s session. Its plan reports
+    * `SinglePartition`, so every window, group-by and final aggregate over
+    * it needs no exchange. */
+  private def residentFrame(rows: RDD[InternalRow], scan: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftResidentRows.frame(rows, scan.coalesce(1))
 
-  /** Publish `ds` under its name, releasing the copy of the registration
-    * it replaces and memoising `copy` as its own. */
-  private def publish(ds: RegisteredDataset, copy: Option[ResidentCopy]): Unit =
-    copies.synchronized {
+  /** Release what was loaded for `name`, if anything. Call holding
+    * `loaded`. */
+  private def release(name: String): Unit =
+    Option(loaded.remove(name)).foreach(_.release())
+
+  /** Publish `ds` under its name, releasing what was loaded for the
+    * registration it replaces and memoising `first`: the registering host
+    * session's handle over resident rows. */
+  private def publish(ds: RegisteredDataset,
+                      first: Option[(SparkSession, DataFrame, RDD[InternalRow])]): Unit =
+    loaded.synchronized {
       datasets.put(ds.name, ds)
-      releaseCopy(ds.name)
-      copy.foreach(c => copies.put(ds.name, (ds.registeredAt, c)))
+      release(ds.name)
+      first.foreach { case (host, df, rows) =>
+        val l = new Loaded(ds.registeredAt)
+        l.rows = Some(rows)
+        l.handles.put((host, ds.profile), df)
+        loaded.put(ds.name, l)
+      }
     }
 
   /** Classify a Spark type into the reference's 4-type system; None =
@@ -267,11 +285,13 @@ object Catalog {
     // stats and top-K passes read it (their first action fills it): one
     // read of the part files serves registration and queries.
     val copy =
-      if (mode == ValidationMode.Full && resident(profile, dayPartitionColumn))
-        Some(residentCopy(read(session, basepath), name, basepath))
-      else None
+      if (mode == ValidationMode.Full && resident(profile, dayPartitionColumn)) {
+        val scan = read(session, basepath)
+        val rows = residentRows(scan, name, basepath)
+        Some((spark, residentFrame(rows, scan), rows))
+      } else None
     val ds = try {
-      val df = copy.map(_.df).getOrElse(graft.ops.Tables.tsToNanos(
+      val df = copy.map(_._2).getOrElse(graft.ops.Tables.tsToNanos(
         if (mode == ValidationMode.Full) session.read.parquet(basepath)
         else {
           // basePath keeps hive-style partition columns visible when reading
@@ -484,7 +504,7 @@ object Catalog {
           else None,
         totalBytes = Some(totalBytes))
     } catch { case e: Throwable =>
-      copy.foreach(_.release())
+      copy.foreach(_._3.unpersist(blocking = false))
       throw e
     }
     publish(ds, copy)
@@ -500,8 +520,8 @@ object Catalog {
     * was registered. */
   def unregister(name: String): Boolean = {
     lastUsedAt.remove(name)
-    val removed = copies.synchronized {
-      releaseCopy(name)
+    val removed = loaded.synchronized {
+      release(name)
       datasets.remove(name) != null
     }
     if (removed) saveStore()
@@ -535,46 +555,84 @@ object Catalog {
     * OLD registeredAt — a torn version that also poisons any
     * (name, registeredAt)-keyed cache above.
     *
-    * A codegen-profile registration loads as a plain scan of its part
-    * files. An interpreted-profile one (under
-    * `ExecutionProfile.InterpretedMaxBytes`) that declares no day-partition
-    * column loads as its resident copy: the rows of the normalized scan,
-    * coalesced to one partition and persisted memory-and-disk. Its queries
-    * open no Parquet file and, as the copy's plan reports
-    * `SinglePartition`, shuffle nothing: the window stack, every group-by
-    * and every final aggregate run in one task. The copy is memoised per
-    * (name, registeredAt), checked before any footer is read. Full-mode
-    * registration builds it; a registration loaded from the store or
-    * registered in a sampled mode gets it here, on its first load. A
-    * replaced snapshot gets the plain scan, not a copy nobody would
-    * release.
+    * The handle is memoised per (name, registeredAt, host session,
+    * profile) for the current registration, checked before any footer is
+    * read: the part files never change under a registration (updates
+    * re-register, reference dataset.py:36-53), so a handle is the plan
+    * over the listing captured at its first load. A replaced snapshot
+    * gets an unmemoised scan. Re-registration, [[unregister]] and
+    * [[clear]] drop the memo. The listing and footer reads of a first load
+    * run outside the memo's lock; when two loads race, the later one's
+    * copy is released and the memoised handle returned.
     *
-    * Memory: one copy per live small registration, each the rows of an
-    * input under 5 MiB of Parquet held deserialized (several times the
-    * Parquet size). Spark's storage LRU spills it to disk under pressure,
-    * and lost blocks recompute from the part files. Re-registration,
-    * [[unregister]] and a failed registration release it. Rejected
-    * alternatives, measured: one shuffle partition without the copy
-    * (fewer tasks, latency inside the noise) and one action per query
-    * (no gain on top of the copy). */
+    * A registration loads as a plain scan of its part files in its
+    * profile's session, except in the one-task `ExecutionProfile.Interpreted`
+    * profile (under `ExecutionProfile.ResidentMaxBytes`) without a declared
+    * day partition: that one loads as its resident copy, the rows of the
+    * normalized scan coalesced to one partition and persisted
+    * memory-and-disk. Its queries open no Parquet file and, as the copy's
+    * plan reports `SinglePartition`, shuffle nothing: the window stack,
+    * every group-by and every final aggregate run in one task. Full-mode
+    * registration builds the copy; a registration loaded from the store or
+    * registered in a sampled mode gets it here, on its first load. Host
+    * sessions share one copy's rows, each through a handle in its own
+    * profile session.
+    *
+    * Memory: one copy per live resident registration, each the rows of an
+    * input under `ResidentMaxBytes` of Parquet held deserialized (several
+    * times the Parquet size). Spark's storage LRU spills it to disk under
+    * pressure, and lost blocks recompute from the part files.
+    * Re-registration, [[unregister]] and a failed registration release it.
+    * Rejected alternatives, measured: one shuffle partition without the
+    * copy (fewer tasks, latency inside the noise), one action per query
+    * (no gain on top of the copy), and the copy up to
+    * `InterpretedMaxBytes` (one task loses to the parallel file scan from
+    * about a megabyte of Parquet up; BENCH.md §"Resident single-partition
+    * copy"). */
   def load(spark: SparkSession, ds: RegisteredDataset): DataFrame = {
     lastUsedAt.put(ds.name, System.currentTimeMillis())
-    prepare(spark)
-    val session = prepare(ExecutionProfile.session(spark, ds.profile))
-    if (!resident(ds.profile, ds.dayPartitionColumn)) read(session, ds.basepath)
-    else copies.synchronized {
-      Option(copies.get(ds.name)).collect {
-        case (at, c) if at == ds.registeredAt && !c.df.sparkSession.sparkContext.isStopped => c.df
-      }.getOrElse {
-        val scan = read(session, ds.basepath)
-        if (!get(ds.name).exists(_.registeredAt == ds.registeredAt)) scan
-        else {
-          val copy = residentCopy(scan, ds.name, ds.basepath)
-          copies.put(ds.name, (ds.registeredAt, copy))
-          copy.df
+    val key = (spark, ds.profile)
+    val isResident = resident(ds.profile, ds.dayPartitionColumn)
+    def snapshot: Option[Loaded] =
+      Option(loaded.get(ds.name)).filter(_.registeredAt == ds.registeredAt)
+    val (memo, rows) = loaded.synchronized {
+      (snapshot.flatMap(l => Option(l.handles.get(key))), snapshot.flatMap(_.rows))
+    }
+    memo.getOrElse {
+      prepare(spark)
+      val scan = read(prepare(ExecutionProfile.session(spark, ds.profile)), ds.basepath)
+      val built =
+        if (isResident && rows.isEmpty) Some(residentRows(scan, ds.name, ds.basepath))
+        else None
+      loaded.synchronized {
+        if (!get(ds.name).exists(_.registeredAt == ds.registeredAt)) {
+          built.foreach(_.unpersist(blocking = false))
+          scan
+        } else {
+          val l = snapshot.getOrElse {
+            val fresh = new Loaded(ds.registeredAt)
+            loaded.put(ds.name, fresh)
+            fresh
+          }
+          if (isResident && l.rows.isEmpty)
+            l.rows = built.orElse(Some(residentRows(scan, ds.name, ds.basepath)))
+          else built.foreach(_.unpersist(blocking = false)) // another load won
+          Option(l.handles.get(key)).getOrElse {
+            val df = if (isResident) residentFrame(l.rows.get, scan) else scan
+            l.handles.put(key, df)
+            df
+          }
         }
       }
     }
+  }
+
+  /** Handles [[load]] holds memoised, over every registration and host
+    * session. */
+  def loadedHandles: Int = loaded.synchronized {
+    var n = 0
+    loaded.values.forEach(l => n += l.handles.size)
+    n
   }
 
   /** The normalized scan of every part file under `basepath`. */
@@ -635,9 +693,9 @@ object Catalog {
 
   /** Drop every registration (and persist the empty state if attached). */
   def clear(): Unit = {
-    copies.synchronized {
-      copies.values.forEach(_._2.release())
-      copies.clear()
+    loaded.synchronized {
+      loaded.values.forEach(_.release())
+      loaded.clear()
       datasets.clear()
     }
     lastUsedAt.clear()

@@ -54,15 +54,20 @@ import graft.result.{JobStats, ResultJson}
  * evicts). See `graft.catalog.ExecutionProfile` and BENCH.md
  * §"Execution profile crossover".
  *
- * Resident copy: such a small registration's handle is its resident copy
+ * Resident copy: a registration under `ExecutionProfile.ResidentMaxBytes`
+ * ("profile": "interpreted") is served from a resident copy
  * (`Catalog.load`), the normalized scan coalesced to one partition and
  * persisted. Its queries open no Parquet file and plan no shuffle: the
- * window stack, group-bys and final aggregates run in one task. The
- * catalog owns the copies, one per live small registration, spilled to
- * disk by Spark's storage LRU under memory pressure; re-registration and
- * unregister release them. Over a copy, the stats block's `rowsScanned`
- * counts the rows read from it and `bytesScanned` the size of its blocks
- * as Spark's block manager accounts it, not Parquet bytes. Measured and
+ * window stack, group-bys and final aggregates run in one task. Larger
+ * interpreted registrations ("interpreted-parallel") read their part
+ * files in parallel tasks, where one task measured slower. The catalog
+ * owns the copies, one per live resident registration, spilled to disk by
+ * Spark's storage LRU under memory pressure; re-registration and
+ * unregister release them. It also memoises every handle it loads, per
+ * registration snapshot and host session, so this server keeps no handle
+ * cache of its own. Over a copy, the stats block's `rowsScanned` counts
+ * the rows read from it and `bytesScanned` the size of its blocks as
+ * Spark's block manager accounts it, not Parquet bytes. Measured and
  * rejected: one shuffle partition over the files alone, and one action
  * per query (BENCH.md §"Resident single-partition copy"). Nothing here
  * is user-settable.
@@ -456,28 +461,6 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
   private val inFlight =
     new ConcurrentHashMap[QueryKey, java.util.concurrent.CompletableFuture[(String, String)]]()
 
-  /** Per-registration DataFrame handle cache (r16, probe-first): every
-    * uncached query paid `Catalog.load` — a parquet footer/file-index
-    * read that runs a small Spark job on multi-part datasets — before
-    * its first real job (~10% of the measured ~270ms serving floor; the
-    * A/B is in BENCH.md §"Serving-path latency floor"). A DataFrame is
-    * an immutable logical plan over the listing captured at load, and
-    * the registration contract makes that listing stable for a given
-    * (name, registeredAt): files never change under a registration —
-    * updates re-register (dataset.py:36-53), which changes registeredAt
-    * and naturally misses this cache (pinned in ApiServerSpec). Handles
-    * are plan-sized: a small registration's handle is its resident copy,
-    * but the catalog, not this cache, owns and releases the copy's data.
-    * So a small LRU bounds driver footprint; always on. Cache hits still
-    * mark the dataset used for the unregister safety interval. */
-  private val dfHandles: java.util.Map[(String, Long), org.apache.spark.sql.DataFrame] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), org.apache.spark.sql.DataFrame](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), org.apache.spark.sql.DataFrame]): Boolean =
-          size() > 16
-      })
-
   private def handle(ex: HttpExchange): Unit =
     try {
       val path = ex.getRequestURI.getPath.stripSuffix("/")
@@ -601,19 +584,17 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
             s"""{"success": false, "datasetFound": true, "datasetLastUsed": ${lastUsed.get},
                | "errorMessage": "Dataset was last used ${sinceSec.get} seconds ago, which is less than safety interval $unregisterSafetySec. Use the 'force' parameter to unregister anyway."}""".stripMargin)
         else {
+          // Unregister also drops the catalog's memoised handles (and a
+          // resident copy) for the registration.
           Catalog.unregister(name)
           // Sweep the serving caches (r17). Correctness never depended on
           // this — every key is registeredAt-versioned and the name lookup
-          // fails post-unregister — but the handle LRU would otherwise pin
-          // the dead registration's logical plan + file index until churn
-          // evicted it, and its result-cache entries are unreachable
-          // driver memory. The in-flight sweep only removes the LATCH
-          // (new arrivals can't coalesce onto it); a winner mid-execution
-          // still completes its future for the waiters already holding it,
-          // and its own compare-and-remove no-ops harmlessly.
-          dfHandles.synchronized {
-            dfHandles.keySet().removeIf(k => k._1 == name)
-          }
+          // fails post-unregister — but the dead registration's
+          // result-cache entries are unreachable driver memory. The
+          // in-flight sweep only removes the LATCH (new arrivals can't
+          // coalesce onto it); a winner mid-execution still completes its
+          // future for the waiters already holding it, and its own
+          // compare-and-remove no-ops harmlessly.
           resultCache.synchronized {
             resultCache.keySet().removeIf(k => k.dataset == name)
           }
@@ -706,24 +687,17 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       // Loaded on the result-cache miss path only (a hit must not pay the
       // parquet footer/file-index read — the cache test's zero-jobs
       // assertion watches exactly this), and even misses reuse the
-      // per-registration handle (see dfHandles): the footer/index read
-      // happens once per (name, registeredAt), not once per query.
+      // catalog's memoised handle: the footer/index read happens once per
+      // (name, registeredAt), not once per query (r16, probe-first: it
+      // was ~10% of the measured ~270ms serving floor, BENCH.md
+      // §"Serving-path latency floor").
       // Load through the ds SNAPSHOT bound at request entry, never by
       // name (r16 race fix): a re-registration landing mid-request would
       // otherwise swap the basepath under this request's registeredAt —
-      // a torn version that would also poison the handle cache's key.
+      // a torn version that would also poison the handle memo's key.
       // The handle lives in the registration's execution-profile session,
       // so every query planned on it runs under that profile.
-      val df = {
-        val hk = (ds.name, ds.registeredAt)
-        val cached = dfHandles.get(hk)
-        if (cached != null) { Catalog.touch(name); cached }
-        else {
-          val loaded = Catalog.load(spark, ds)
-          dfHandles.put(hk, loaded)
-          loaded
-        }
-      }
+      val df = Catalog.load(spark, ds)
       val engine = ApiServer.engine(ds, routingMinBytes)
       // Caches.scoped: each query owns (and on exit drains) exactly the
       // frames IT retained — async/stream queries run concurrently on
@@ -992,7 +966,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       m("graft_datasets_registered", "gauge", "Currently registered datasets", Catalog.list().size.toLong) +
       m("graft_query_rejected_total", "counter", "Async submissions rejected 429 at the queue cap", mRejected.get) +
       m("graft_result_cache_entries", "gauge", "Entries currently in the versioned result cache", resultCache.size.toLong) +
-      m("graft_df_handle_entries", "gauge", "Per-registration DataFrame handles currently cached", dfHandles.size.toLong) +
+      m("graft_df_handle_entries", "gauge", "Per-registration DataFrame handles the catalog holds loaded (all host sessions)", Catalog.loadedHandles.toLong) +
       m("graft_async_jobs_pending", "gauge", "Async jobs admitted but not yet finished (QUEUED + RUNNING)", pendingAsync.get) +
       m("graft_async_result_bytes_retained", "gauge", "UTF-8 bytes of async results currently retained in the job registry", retainedResultBytes.get) +
       m("graft_inflight_coalescable_queries", "gauge", "Cold-key queries executing under the single-flight latch right now", inFlight.size.toLong)

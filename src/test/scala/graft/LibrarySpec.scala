@@ -257,6 +257,38 @@ class LibrarySpec extends SparkSpec {
     assert(!cachedOver(badDir), "a failed registration left its copy cached")
   }
 
+  test("catalog: each host session gets its own handle over one resident copy") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val dir = tmpDir("cathosts")
+    val schema = StructType(Seq(
+      StructField("uid", LongType), StructField("ts", LongType)))
+    frame(schema, (0 until 60).map(i =>
+      Map[String, Any]("uid" -> (i % 6).toLong, "ts" -> (1000L + i))))
+      .write.mode("overwrite").parquet(dir)
+    val ds = Catalog.register(spark, "hosts", dir, "uid", "ts")
+    try {
+      assert(ds.profile == ExecutionProfile.Interpreted)
+      val other = spark.newSession()
+      val (mine, theirs) = (Catalog.load(spark, ds), Catalog.load(other, ds))
+      // Memoised per host: a repeat load returns the same handle.
+      assert(Catalog.load(spark, ds) eq mine)
+      assert(Catalog.load(other, ds) eq theirs)
+      // Each handle is planned in its own host's interpreted child ...
+      assert(mine.sparkSession eq ExecutionProfile.session(spark, ExecutionProfile.Interpreted))
+      assert(theirs.sparkSession eq ExecutionProfile.session(other, ExecutionProfile.Interpreted))
+      // ... over the same persisted rows.
+      def rows(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed match {
+        case lr: LogicalRDD => lr.rdd
+        case p => fail(s"not a resident copy: $p")
+      }
+      assert(rows(mine) eq rows(theirs))
+      assert(theirs.count() == 60 && mine.groupBy("uid").count().count() == 6)
+      Catalog.unregister("hosts")
+      assert(rows(mine).getStorageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "unregister left the copy persisted")
+    } finally Catalog.unregister("hosts")
+  }
+
   test("catalog: JSON store round-trips registrations across a restart") {
     val store = Files.createTempDirectory("catstore").resolve("catalog.json")
     Catalog.enablePersistence(store.toString)
