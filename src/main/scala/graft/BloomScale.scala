@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -17,19 +16,13 @@ import org.apache.spark.sql.functions._
  * Both paths must return identical kept counts (the routing is semantics-
  * free — that is the operator's contract, oracle-pinned in the battery).
  */
-object BloomScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The regime the operator exists for: blocklist too big to broadcast.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object BloomScale extends Probe.Body {
+  // The regime the operator exists for: blocklist too big to broadcast.
+  override def confs(cpus: Int) = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(2000000L, 10000000L)
 
     sizes.foreach { n =>
       // Corpus keys k<id>; every 200th doc is blocked (n/200 true hits);
@@ -42,22 +35,18 @@ object BloomScale {
             .select(concat(lit("x"), col("id")).as("bk"))))
       corpus.count(); block.count() // materialize inputs outside the timings
 
-      val (plainKept, plainStats) = graft.result.JobStats.measure(spark) {
+      val (plainKept, plainStats) = p.measure {
         corpus.join(block, col("k") === col("bk"), "left_anti").count()
       }
-      val (bloomKept, bloomStats) = graft.result.JobStats.measure(spark) {
+      val (bloomKept, bloomStats) = p.measure {
         operators.TextAnalysis.blocklistFilter(corpus, "k", block, "bk",
           expectedItems = n / 100, fpp = 0.01).count()
       }
       require(plainKept == bloomKept,
         s"routing changed semantics: $plainKept vs $bloomKept")
       graft.util.Caches.drain()
-      println(f"BLOOMSCALE n=$n blocked=${n - plainKept} kept=$plainKept " +
-        f"plain_wall=${plainStats.wallTimeMs / 1000.0}%.1f " +
-        f"plain_shuffle_mb=${plainStats.shuffleBytesWritten / 1e6}%.1f " +
-        f"bloom_wall=${bloomStats.wallTimeMs / 1000.0}%.1f " +
-        f"bloom_shuffle_mb=${bloomStats.shuffleBytesWritten / 1e6}%.1f")
+      p.emit("plain", plainStats, "n" -> n, "blocked" -> (n - plainKept), "kept" -> plainKept)
+      p.emit("bloom", bloomStats, "n" -> n, "blocked" -> (n - bloomKept), "kept" -> bloomKept)
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -8,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
  * Scale probe for the MinHash/LSH dedup pipeline, sibling of [[Throughput]]
  * (scan path) and [[ComponentsScale]] (fixpoint): the sf0.1 battery dedups
  * 5k documents, far too small to see the corpus-linear stages dominate.
- * This main generates a synthetic corpus at real size and times each stage
+ * This probe generates a synthetic corpus at real size and times each stage
  * separately — signature (shingle explode + minhash aggregation; the
  * corpus-linear cost that dominates at 100 TB), LSH candidate join, and
  * connected components over the resulting pairs.
@@ -29,32 +28,18 @@ import org.apache.spark.storage.StorageLevel
  * configuration — see minHashSignature's scaladoc; the md5 family stays on
  * every oracle-gated battery row).
  */
-object DedupScale {
-  def main(args: Array[String]): Unit = {
-    val fastHash = args.contains("--fast")
-    val narrowBands = args.contains("--narrow")
+object DedupScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
     // Unknown flags fail loudly (r13): silently filtering every '--' token
     // meant a typo ('--narow') ran the DEFAULT banding and labeled the
     // numbers as if the pin applied.
-    val unknown = args.filter(a => a.startsWith("--") && a != "--fast" && a != "--narrow")
-    require(unknown.isEmpty, s"unknown flags: ${unknown.mkString(", ")} " +
-      "(known: --fast, --narrow)")
-    val sizeArgs = args.toSeq.filterNot(_.startsWith("--"))
-    val sizes = if (sizeArgs.nonEmpty) sizeArgs.map(_.toLong)
-                else Seq(100000L, 1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val flags = p.flags("--fast", "--narrow")
+    val fastHash = flags.contains("--fast")
+    val narrowBands = flags.contains("--narrow")
+    val sizes = p.sizes(100000L, 1000000L)
 
     val vocabSql = (0 until 1024).map(i => s"'w$i'").mkString(", ")
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
 
     sizes.foreach { n =>
       // Banding from the advisor by default (the production entry point —
@@ -70,11 +55,11 @@ object DedupScale {
           s"concat(concat_ws(' ', transform(sequence(1, 40), " +
           s"p -> element_at(array($vocabSql), " +
           s"CAST(pmod(hash(__seed, p), 1024) + 1 AS INT)))), __suffix)").as("text"))
-        .repartition(cpus * 2)
+        .repartition(p.cpus * 2)
         .persist(StorageLevel.MEMORY_AND_DISK)
       corpus.count() // materialize generation outside the timed stages
 
-      val (sig, sigSec) = timed {
+      val (sig, sigStats) = p.measure {
         val s = operators.Dedup.minHashSignature(
           operators.Dedup.charShingles(corpus, "doc_id", "text", 5), k = bandK,
           fastHash = fastHash)
@@ -82,25 +67,25 @@ object DedupScale {
         s.count()
         s
       }
-      val ((pairs, nPairs), candSec) = timed {
-        val p = operators.Dedup.lshCandidates(
+      val ((pairs, nPairs), candStats) = p.measure {
+        val c = operators.Dedup.lshCandidates(
           operators.Dedup.lshBuckets(sig, k = bandK, rowsPerBand = bandRows,
             fastHash = fastHash))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        (p, p.count())
+        (c, c.count())
       }
-      val ((nClusters, rounds), compSec) = timed {
+      val ((nClusters, rounds), compStats) = p.measure {
         val (labels, r) = operators.Dedup.componentsWithRounds(pairs)
         (labels.select("label").distinct().count(), r)
       }
-      println(f"""{"docs": $n, "hash": "${if (fastHash) "xxhash64" else "md5"}", "bands": "k=$bandK/rows=$bandRows", "sig_sec": $sigSec%.2f, """ +
-        f""""sig_docs_per_sec_core": ${n / sigSec / cpus}%.0f, """ +
-        f""""cand_sec": $candSec%.2f, "pairs": $nPairs, """ +
-        f""""comp_sec": $compSec%.2f, "clusters": $nClusters, "rounds": $rounds}""")
+      val run = Seq("docs" -> n, "hash" -> (if (fastHash) "xxhash64" else "md5"),
+        "bands" -> s"k=$bandK/rows=$bandRows")
+      p.emit("signature", sigStats, run :+
+        ("docs_per_sec_core" -> n * 1000.0 / sigStats.wallTimeMs / p.cpus): _*)
+      p.emit("candidates", candStats, run :+ ("pairs" -> nPairs): _*)
+      p.emit("components", compStats, run ++ Seq("clusters" -> nClusters, "rounds" -> rounds): _*)
       Seq(corpus, sig, pairs).foreach(_.unpersist(blocking = true))
       graft.util.Caches.drain()
-      spark.catalog.clearCache()
     }
-    spark.stop()
   }
 }

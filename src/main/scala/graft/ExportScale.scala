@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -18,18 +17,12 @@ import org.apache.spark.sql.functions._
  * estimators and order-based partitioning — the content-random pilot and
  * hash distribution must both shrug it off.
  */
-object ExportScale {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(2000000L)
+object ExportScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val n = p.args.headOption.map(_.toLong).getOrElse(2000000L)
     val target = 32L * 1024L * 1024L // 32 MB files
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val base = p.path("graft_export_scale")
 
     // Length drifts with id (30..900 words) and varies per doc.
     val corpus = graft.util.Caches.retain(spark.range(n).select(
@@ -40,69 +33,61 @@ object ExportScale {
         .as("text")))
     corpus.count()
 
-    val out = "/tmp/graft_export_scale/corpus"
-    val (st, ex) = graft.result.JobStats.measure(spark) {
+    val out = s"$base/corpus"
+    val (st, ex) = p.measure {
       graft.sources.DatasetExporter.export(corpus, "doc_id", out, target, "es")
     }
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sizes = fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sorted
-    val med = sizes(sizes.length / 2)
+    def parquetSizes(dir: String): Seq[Long] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sorted.toSeq
+    val sizes = parquetSizes(out)
     require(spark.read.parquet(out).count() == n, "round trip lost rows")
+    p.emit("export", ex, "n" -> n, "files" -> st.files, "target_mb" -> target / 1e6,
+      "median_mb" -> sizes(sizes.length / 2) / 1e6, "min_mb" -> sizes.head / 1e6,
+      "max_mb" -> sizes.last / 1e6, "pilot_bpr" -> st.pilotBytesPerRow,
+      "actual_bpr" -> sizes.map(_.toDouble).sum / n)
 
-    val (_, naive) = graft.result.JobStats.measure(spark) {
-      corpus.write.mode("overwrite").parquet("/tmp/graft_export_scale/naive")
+    val (_, naive) = p.measure {
+      corpus.write.mode("overwrite").parquet(s"$base/naive")
     }
-    val nfs = fs.listStatus(new org.apache.hadoop.fs.Path("/tmp/graft_export_scale/naive"))
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen)
+    val nfs = parquetSizes(s"$base/naive")
     graft.util.Caches.drain()
-    println(f"EXPORTSCALE n=$n files=${st.files} target_mb=${target / 1e6}%.0f " +
-      f"median_mb=${med / 1e6}%.1f min_mb=${sizes.head / 1e6}%.1f " +
-      f"max_mb=${sizes.last / 1e6}%.1f pilot_bpr=${st.pilotBytesPerRow}%.1f " +
-      f"actual_bpr=${sizes.map(_.toDouble).sum / n}%.1f " +
-      f"export_wall=${ex.wallTimeMs / 1000.0}%.1f " +
-      f"naive_wall=${naive.wallTimeMs / 1000.0}%.1f " +
-      f"naive_files=${nfs.length} naive_max_mb=${nfs.max / 1e6}%.1f " +
-      f"naive_min_mb=${nfs.min / 1e6}%.1f")
-    // Compaction leg: fragment the corpus into ~2000 tiny files (the
-    // streaming-sink / incremental-append failure mode), then re-bin with
-    // the shuffle-free compactor vs the full-shuffle exporter, and
-    // measure what fragmentation costs a scan before/after.
-    val frag = "/tmp/graft_export_scale/frag"
-    corpus.repartition(2000, col("doc_id")).write.mode("overwrite").parquet(frag)
-    def scanWall(path: String): Double = {
-      def once = graft.result.JobStats.measure(spark) {
+    p.emit("naive", naive, "n" -> n, "files" -> nfs.length,
+      "max_mb" -> nfs.last / 1e6, "min_mb" -> nfs.head / 1e6)
+    // Compaction leg: fragment the corpus into ~2000 tiny files (one per
+    // 100 docs below 200k docs; the streaming-sink / incremental-append
+    // failure mode), then re-bin with the shuffle-free compactor vs the
+    // full-shuffle exporter, and measure what fragmentation costs a scan
+    // before/after.
+    val frag = s"$base/frag"
+    corpus.repartition(math.min(2000L, math.max(1L, n / 100)).toInt, col("doc_id"))
+      .write.mode("overwrite").parquet(frag)
+    def scan(label: String, path: String): Unit = {
+      def once = p.measure {
         spark.read.parquet(path).agg(count(lit(1)), sum(length(col("text")))).head()
       }
-      // True min-of-2 over warmed runs (LayoutScale.min2 shape): a GC
-      // pause in either run no longer lands in the reported number.
+      // True min-of-2 over warmed runs: a GC pause in either run no
+      // longer lands in the reported number.
       once
-      val a = once._2.wallTimeMs; val b = once._2.wallTimeMs
-      math.min(a, b) / 1000.0
+      p.emit(label, graft.result.JobStats.minOf2(once)._2, "n" -> n)
     }
-    val scanFrag = scanWall(frag)
-    val (cst, cm) = graft.result.JobStats.measure(spark) {
-      graft.sources.DatasetExporter.compact(spark, frag,
-        "/tmp/graft_export_scale/compacted", target)
+    scan("scan_frag", frag)
+    val (cst, cm) = p.measure {
+      graft.sources.DatasetExporter.compact(spark, frag, s"$base/compacted", target)
     }
     require(cm.shuffleBytesWritten == 0L, "compaction shuffled")
-    require(spark.read.parquet("/tmp/graft_export_scale/compacted").count() == n,
+    require(spark.read.parquet(s"$base/compacted").count() == n,
       "compaction lost rows")
-    val (_, em) = graft.result.JobStats.measure(spark) {
+    p.emit("compact", cm, "files_before" -> cst.filesBefore, "files_after" -> cst.filesAfter,
+      "mb_before" -> cst.bytesBefore / 1e6, "mb_after" -> cst.bytesAfter / 1e6)
+    val (_, em) = p.measure {
       graft.sources.DatasetExporter.export(
-        spark.read.parquet(frag), "doc_id",
-        "/tmp/graft_export_scale/reexported", target, "es2")
+        spark.read.parquet(frag), "doc_id", s"$base/reexported", target, "es2")
     }
-    val scanCompact = scanWall("/tmp/graft_export_scale/compacted")
-    println(f"COMPACTSCALE files=${cst.filesBefore}->${cst.filesAfter} " +
-      f"mb=${cst.bytesBefore / 1e6}%.0f->${cst.bytesAfter / 1e6}%.0f " +
-      f"compact_wall=${cm.wallTimeMs / 1000.0}%.1f " +
-      f"compact_shuffle_b=${cm.shuffleBytesWritten} " +
-      f"export_wall=${em.wallTimeMs / 1000.0}%.1f " +
-      f"export_shuffle_b=${em.shuffleBytesWritten} " +
-      f"scan_frag=$scanFrag%.2f scan_compacted=$scanCompact%.2f")
-    fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_export_scale"), true)
-    spark.stop()
+    p.emit("reexport", em, "n" -> n)
+    scan("scan_compacted", s"$base/compacted")
+    p.delete(base)
   }
 }

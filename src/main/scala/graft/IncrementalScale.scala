@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -25,20 +24,11 @@ import org.apache.spark.storage.StorageLevel
  * Args: corpus sizes (default 200000, 1000000); batch is
  * `GRAFT_BATCH` docs (default 20000) at every corpus size.
  */
-object IncrementalScale {
-  def main(args: Array[String]): Unit = {
-    val sizeArgs = args.toSeq.filterNot(_ == "--fast")
-    val sizes = if (sizeArgs.nonEmpty) sizeArgs.map(_.toLong)
-                else Seq(200000L, 1000000L)
+object IncrementalScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = p.sizes(200000L, 1000000L)
     val batchN = sys.env.getOrElse("GRAFT_BATCH", "20000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val vocabSql = (0 until 1024).map(i => s"'w$i'").mkString(", ")
     def text(seedCol: String) =
@@ -48,14 +38,11 @@ object IncrementalScale {
     // GC before every timed stage (the Bench rule): a previous stage's
     // garbage — million-doc string frames — otherwise lands as a
     // multi-second pause inside the next stage's wall time.
-    def timed[A](f: => A): (A, Double) = {
-      System.gc()
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
+    def timed[A](f: => A) = { System.gc(); p.measure(f) }
     // --fast: the xxhash64 family (the 100 TB configuration — see
     // minHashSignature's scaladoc); default stays md5 so recorded runs
     // remain comparable across rounds.
-    val fastHash = args.contains("--fast")
+    val fastHash = p.flags("--fast").contains("--fast")
     def buckets(df: org.apache.spark.sql.DataFrame) = operators.Dedup.lshBuckets(
       operators.Dedup.minHashSignature(
         operators.Dedup.charShingles(df, "doc_id", "text", 5), k = 8,
@@ -65,7 +52,7 @@ object IncrementalScale {
     def run(n: Long, bN: Long, warmup: Boolean): Unit = {
       val corpus = spark.range(n)
         .select(col("id").as("doc_id"), text("id"))
-        .repartition(cpus * 2)
+        .repartition(p.cpus * 2)
         .persist(StorageLevel.MEMORY_AND_DISK)
       corpus.count()
       // Batch thirds: corpus dup (seed = id % n — exact text of a corpus
@@ -82,7 +69,7 @@ object IncrementalScale {
 
       // Index build: once per corpus lifetime, not per batch. The per-
       // bucket counts are stored with it (the corpusCounts contract).
-      val (ix, indexSec) = timed {
+      val (ix, indexStats) = timed {
         val b = buckets(corpus).persist(StorageLevel.MEMORY_AND_DISK)
         val c = b.groupBy(col("band"), col("bucket"))
           .agg(count(lit(1)).as("n")).persist(StorageLevel.MEMORY_AND_DISK)
@@ -91,7 +78,7 @@ object IncrementalScale {
       }
       val (index, counts) = ix
       // The increment: everything a new batch costs.
-      val (nKept, incSec) = timed {
+      val (nKept, incStats) = timed {
         val pairs = operators.Dedup.incrementalCandidates(index, buckets(batch),
           corpusCounts = Some(counts))
         operators.Dedup.incrementalKeep(batch, "doc_id", pairs,
@@ -99,21 +86,23 @@ object IncrementalScale {
       }
       graft.util.Caches.drain()
       // What a full re-dedup of corpus ∪ batch would redo instead.
-      val (nFullClusters, fullSec) = timed {
+      val (nFullClusters, fullStats) = timed {
         val pairs = operators.Dedup.lshCandidates(buckets(corpus.union(batch)))
         operators.Dedup.components(pairs).select("label").distinct().count()
       }
-      if (!warmup)
-        println(f"""{"corpus": $n, "batch": $bN, "index_sec": $indexSec%.2f, """ +
-          f""""inc_sec": $incSec%.2f, "kept": $nKept, """ +
-          f""""full_sec": $fullSec%.2f, "full_clusters": $nFullClusters}""")
+      if (!warmup) {
+        p.emit("index", indexStats, "corpus" -> n, "batch" -> bN)
+        p.emit("increment", incStats, "corpus" -> n, "batch" -> bN, "kept" -> nKept)
+        p.emit("full", fullStats, "corpus" -> n, "batch" -> bN, "full_clusters" -> nFullClusters)
+      }
       Seq(corpus, batch, index, counts).foreach(_.unpersist(blocking = true))
       graft.util.Caches.drain()
-      spark.catalog.clearCache()
     }
 
-    run(50000L, 5000L, warmup = true) // JIT/codegen warmup — untimed
+    // JIT/codegen warmup — untimed, and never larger than the smallest
+    // measured corpus.
+    val w = math.min(50000L, sizes.min)
+    run(w, w / 10, warmup = true)
     sizes.foreach(n => run(n, batchN, warmup = false))
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -9,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
  * [[DedupScale]]/[[IncrementalScale]]): the sf0.1 battery row reuses its
  * warmup's cached df-filtered shingle table, so the pair-generation change
  * (r20: sorted-posting-list explode instead of the inverted-index
- * self-join) is invisible there. This main times the operator end-to-end
+ * self-join) is invisible there. This probe times the operator end-to-end
  * on a corpus large enough that pair generation dominates, and prints the
  * pair count + jac checksum so an A/B across implementations can assert
  * bit-identical results.
@@ -20,17 +19,10 @@ import org.apache.spark.storage.StorageLevel
  *
  * Args: doc counts (default 100000).
  */
-object JaccardScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(100000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object JaccardScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(100000L)
 
     val vocabSql = (0 until 1024).map(i => s"'w$i'").mkString(", ")
     def run(n: Long, warmup: Boolean): Unit = {
@@ -41,27 +33,25 @@ object JaccardScale {
           expr(s"concat_ws(' ', transform(sequence(1, 40), " +
             s"p -> element_at(array($vocabSql), " +
             s"CAST(pmod(hash(__seed, p), 1024) + 1 AS INT))))").as("text"))
-        .repartition(cpus * 2)
+        .repartition(p.cpus * 2)
         .persist(StorageLevel.MEMORY_AND_DISK)
       corpus.count()
       System.gc()
-      val t0 = System.nanoTime()
-      val res = operators.Dedup.jaccardPairs(
-          operators.Dedup.charShingles(corpus, "doc_id", "text", 5),
-          threshold = 0.25, maxDf = 100)
-        .agg(count(lit(1)).as("pairs"),
-          sum(expr("CAST(jac * 1000000 AS BIGINT)")).as("jac_sum"))
-        .collect()(0)
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (res, stats) = p.measure {
+        operators.Dedup.jaccardPairs(
+            operators.Dedup.charShingles(corpus, "doc_id", "text", 5),
+            threshold = 0.25, maxDf = 100)
+          .agg(count(lit(1)).as("pairs"),
+            sum(expr("CAST(jac * 1000000 AS BIGINT)")).as("jac_sum"))
+          .collect()(0)
+      }
       if (!warmup)
-        println(f"""{"docs": $n, "jaccard_sec": $secs%.2f, """ +
-          f""""pairs": ${res.getLong(0)}, "jac_sum": ${res.getLong(1)}}""")
+        p.emit("jaccard", stats, "docs" -> n, "pairs" -> res.getLong(0),
+          "jac_sum" -> res.getLong(1))
       graft.util.Caches.drain()
       corpus.unpersist(blocking = true)
-      spark.catalog.clearCache()
     }
-    run(20000L, warmup = true)
+    run(math.min(20000L, sizes.min), warmup = true) // never above the smallest size
     sizes.foreach(run(_, warmup = false))
-    spark.stop()
   }
 }

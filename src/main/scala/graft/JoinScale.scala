@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
  * Scale probe for the temporal join operators (operators.AsOfJoin,
  * operators.RangeJoin), sibling of [[Throughput]]/[[ComponentsScale]]: the
  * sf0.1 battery runs them on 100k events — too small to see the shuffle
- * and sort costs that dominate at real size. This main synthesizes keyed
+ * and sort costs that dominate at real size. This probe synthesizes keyed
  * event streams with xxhash64-derived timestamps (deterministic, no
  * Date/Random) and reports wall time and matched-row counts per size.
  *
@@ -19,25 +18,12 @@ import org.apache.spark.sql.functions._
  * Args: row counts for the left/point side (default 5M, 20M); the right/
  * interval side is the same size for as-of and 1/10th for range.
  */
-object JoinScale {
-  def main(args: Array[String]): Unit = {
+object JoinScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
     val sizes =
-      if (args.nonEmpty) args.toSeq.map(_.toLong)
+      if (p.args.nonEmpty) p.args.map(_.toLong)
       else Seq(5000000L, 20000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
 
     sizes.foreach { n =>
       val nKeys = math.max(1L, n / 200) // ~200 events per key
@@ -51,28 +37,26 @@ object JoinScale {
       // --- as-of: n left rows pick up the latest prior right of n rows ---
       val left = stream(1, n, "lid", "lt")
       val right = stream(2, n, "rid", "rt")
-      val (asofMatched, asofSec) = timed {
+      val (asofMatched, asof) = p.measure {
         operators.AsOfJoin
           .backward(left, right, Seq("k"), "lt", "rt", rightVals = Seq("rt"),
             tieBreak = Seq("rid"))
           .agg(count(col("asof_rt"))).collect()(0).getLong(0)
       }
-      println(f"JOINSCALE asof rows=$n matched=$asofMatched wall=$asofSec%.1f " +
-        f"rows_per_sec_per_core=${2 * n / asofSec / cpus}%.0f")
+      p.emit("asof", asof, "rows" -> n, "matched" -> asofMatched,
+        "rows_per_sec_per_core" -> 2 * n * 1000.0 / asof.wallTimeMs / p.cpus)
 
       // --- range: n points against n/10 one-hour windows, 1h buckets ---
       val hour = 3600L * 1000000L
       val points = stream(3, n, "pid", "p")
       val intervals = stream(4, n / 10, "iid", "lo")
         .withColumn("hi", col("lo") + hour)
-      val (pairs, rangeSec) = timed {
+      val (pairs, range) = p.measure {
         operators.RangeJoin
           .join(points, intervals, Seq("k"), "p", "lo", "hi", bucketWidth = hour)
           .count()
       }
-      println(f"JOINSCALE range points=$n intervals=${n / 10} pairs=$pairs " +
-        f"wall=$rangeSec%.1f")
+      p.emit("range", range, "points" -> n, "intervals" -> n / 10, "pairs" -> pairs)
     }
-    spark.stop()
   }
 }

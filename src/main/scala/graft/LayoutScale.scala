@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.result.JobStats
 import graft.sources.ZOrder
 
 /**
@@ -29,27 +29,10 @@ import graft.sources.ZOrder
  *
  * Args: row count (default 20M).
  */
-object LayoutScale {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 20000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def min2[A](body: => A): (A, Double) = {
-      val (_, t1) = timed(body); val (a, t2) = timed(body)
-      (a, math.min(t1, t2))
-    }
+object LayoutScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val n = if (p.args.nonEmpty) p.args(0).toLong else 20000000L
 
     val dimSpan = 1L << 20
     val corpus = spark.range(n).toDF("id")
@@ -58,24 +41,20 @@ object LayoutScale {
       .withColumn("payload", md5(concat(col("id"), lit("p"))))
       .withColumn("payload", concat(col("payload"), col("payload")))
 
-    val base = Files.createTempDirectory("graft_layoutscale").toString
+    val base = Files.createTempDirectory(Paths.get(p.path("")), "graft_layoutscale").toString
     val nFiles = 64
 
-    val (_, tHash) = timed {
-      corpus.repartition(nFiles, col("id"))
-        .write.mode("overwrite").parquet(s"$base/hash")
-    }
-    val (_, tByx) = timed {
-      corpus.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
-        .write.mode("overwrite").parquet(s"$base/byx")
-    }
-    val (_, tZ) = timed {
-      ZOrder.zorderWrite(corpus, Seq("x", "y"), bits = 16,
-        path = s"$base/z", nFiles = nFiles)
-    }
-    println(f"[layoutscale] n=$n write sec: hash=$tHash%.1f byx=$tByx%.1f zorder=$tZ%.1f")
+    val writes: Seq[(String, () => Unit)] = Seq(
+      "hash" -> (() => corpus.repartition(nFiles, col("id"))
+        .write.mode("overwrite").parquet(s"$base/hash")),
+      "byx" -> (() => corpus.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
+        .write.mode("overwrite").parquet(s"$base/byx")),
+      "z" -> (() => ZOrder.zorderWrite(corpus, Seq("x", "y"), bits = 16,
+        path = s"$base/z", nFiles = nFiles)))
+    for ((layout, write) <- writes)
+      p.emit("write", p.measure(write())._2, "n" -> n, "layout" -> layout)
 
-    val layouts = Seq("hash", "byx", "z").map(l => l -> spark.read.parquet(s"$base/$l"))
+    val layouts = writes.map { case (l, _) => l -> spark.read.parquet(s"$base/$l") }
 
     // Warm page cache + JIT on every layout BEFORE measuring: the first
     // full-scan aggregates of a session read 5x slower than steady state
@@ -97,24 +76,20 @@ object LayoutScale {
 
     for ((bName, pred) <- boxes) {
       val results = for ((lName, df) <- layouts) yield {
-        val (row, t) = min2 {
+        val (row, stats) = JobStats.minOf2(p.measure {
           df.where(pred)
             .agg(count(lit(1)), sum(col("x") + col("y")),
                  sum(length(col("payload")))).head()
-        }
-        (lName, row.toSeq, t)
+        })
+        p.emit("scan", stats, "n" -> n, "box" -> bName, "layout" -> lName)
+        (lName, row.toSeq)
       }
-      val walls = results.map { case (l, _, t) => f"$l=$t%.2f" }.mkString(" ")
-      println(s"[layoutscale] scan '$bName' sec: $walls")
       val distinct = results.map(_._2).distinct
       require(distinct.size == 1,
-        s"layouts disagree on '$bName': ${results.map(r => r._1 -> r._2)}")
+        s"layouts disagree on '$bName': $results")
     }
-    // ~3 corpus-sized layouts under /tmp — delete or repeated probe runs
-    // fill the disk (30 GB per run at the 100M-row setting).
-    new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
-    spark.stop()
+    // ~3 corpus-sized layouts under the data root — delete or repeated
+    // probe runs fill the disk (30 GB per run at the 100M-row setting).
+    p.delete(base)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -15,27 +14,20 @@ import org.apache.spark.sql.functions._
  * weight share over 1%-granularity prefixes) so the documented
  * binomial-concentration trade is a number, not an adjective.
  */
-object MixScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object MixScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(2000000L, 10000000L)
     import graft.result.JobStats.minOf2
 
-    // Warmup both plans at 200k.
+    // Warmup both plans at 200k, or at the smallest size below that.
     def corpusAt(n: Long): org.apache.spark.sql.DataFrame = graft.util.Caches.retain(spark.range(n).select(
       col("id"),
       // 90% hot key, 10 cold keys with 1% each; hot gets weight 4.
       when(pmod(col("id"), lit(100)) < 90, lit("hot"))
         .otherwise(concat(lit("k"), pmod(col("id"), lit(10)))).as("src"))
       .withColumn("w", when(col("src") === "hot", lit(4L)).otherwise(lit(1L))))
-    locally { val w = corpusAt(200000L)
+    locally { val w = corpusAt(math.min(200000L, sizes.min))
       operators.Sampling.interleaveOrder(w, "src", "id", "w", "mx")
         .agg(sum(col("mix_rank"))).head()
       operators.Sampling.interleaveOrderApprox(w, "src", "id", "w", "mx")
@@ -45,11 +37,11 @@ object MixScale {
     sizes.foreach { n =>
       val corpus = corpusAt(n)
       corpus.count()
-      val (exactSum, ex) = minOf2(graft.result.JobStats.measure(spark) {
+      val (exactSum, ex) = minOf2(p.measure {
         operators.Sampling.interleaveOrder(corpus, "src", "id", "w", "mx")
           .agg(sum(col("mix_rank"))).head().getLong(0)
       })
-      val (approxSum, ap) = minOf2(graft.result.JobStats.measure(spark) {
+      val (approxSum, ap) = minOf2(p.measure {
         operators.Sampling.interleaveOrderApprox(corpus, "src", "id", "w", "mx")
           .agg(sum(col("mix_rank"))).head().getLong(0)
       })
@@ -73,11 +65,8 @@ object MixScale {
           count(lit(1))).as("share"))
         .agg(max(abs(col("share") - lit(2.0 / 7.0)))).head().getDouble(0)
       graft.util.Caches.drain()
-      println(f"MIXSCALE n=$n exact_wall=${ex.wallTimeMs / 1000.0}%.1f " +
-        f"approx_wall=${ap.wallTimeMs / 1000.0}%.1f " +
-        f"exact_ranksum=$exactSum approx_ranksum=$approxSum " +
-        f"approx_max_prefix_dev=${hotShare}%.4f")
+      p.emit("exact", ex, "n" -> n, "ranksum" -> exactSum)
+      p.emit("approx", ap, "n" -> n, "ranksum" -> approxSum, "max_prefix_dev" -> hotShare)
     }
-    spark.stop()
   }
 }

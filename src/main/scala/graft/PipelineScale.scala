@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
  * End-to-end composition probe: the components of the training-data
  * pipeline are each measured in isolation (DedupScale, SelectionScale,
- * ShardScale, ExportScale) — this main composes the REAL flow once at
+ * ShardScale, ExportScale) — this probe composes the REAL flow once at
  * corpus scale and times each stage in sequence, confirming that nothing
  * surprises at composition: no stage's driver state grows with the
  * corpus, no shuffle carries more than its own stage's documented volume,
@@ -57,32 +57,20 @@ import org.apache.spark.sql.functions._
  *
  * Args: doc counts (default 10000000).
  */
-object PipelineScale {
-  def main(args: Array[String]): Unit = {
-    val fastHash = !args.contains("--md5")
-    val doStrip = !args.contains("--nostrip")
-    val narrowBands = args.contains("--narrow")
-    val heavyBoiler = args.contains("--heavyboiler")
+object PipelineScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
     // Unknown flags fail loudly (r13, DedupScale's fix): a typo would
     // silently run the default configuration under the intended label.
-    val knownFlags = Set("--md5", "--nostrip", "--narrow", "--heavyboiler")
-    val unknown = args.filter(a => a.startsWith("--") &&
-      !knownFlags(a) && !a.startsWith("--bands="))
-    require(unknown.isEmpty, s"unknown flags: ${unknown.mkString(", ")} " +
-      "(known: --md5, --nostrip, --narrow, --heavyboiler, --bands=K,R)")
-    val sizeArgs = args.toSeq.filterNot(_.startsWith("--"))
-    val sizes = if (sizeArgs.nonEmpty) sizeArgs.map(_.toLong) else Seq(10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val flags = p.flags("--md5", "--nostrip", "--narrow", "--heavyboiler", "--bands=")
+    val fastHash = !flags.contains("--md5")
+    val doStrip = !flags.contains("--nostrip")
+    val narrowBands = flags.contains("--narrow")
+    val heavyBoiler = flags.contains("--heavyboiler")
+    val sizes = p.sizes(10000000L)
     import graft.result.JobStats
 
-    val pinnedBands = args.collectFirst {
+    val pinnedBands = flags.collectFirst {
       case a if a.startsWith("--bands=") =>
         val Array(k, r) = a.stripPrefix("--bands=").split(",").map(_.trim.toInt)
         (k, r)
@@ -91,7 +79,7 @@ object PipelineScale {
     sizes.foreach { n =>
       val (bandK, bandRows) = pinnedBands.getOrElse(
         if (narrowBands) (8, 4) else operators.Dedup.suggestBanding(n, 0.97))
-      val root = s"/tmp/graft_pipescale/$n"
+      val root = p.path(s"graft_pipescale/$n")
       // ---- generate (untimed): 40-token docs; ids %10 in (1,2) duplicate
       // /near-duplicate their decade head; ids %37 == 3 are 2-token junk.
       // --heavyboiler additionally appends a fixed 30-token footer to every
@@ -111,7 +99,7 @@ object PipelineScale {
         .select(col("doc_id"), expr(
           "concat(concat_ws(' ', transform(sequence(1, __len), " +
           "p -> concat('w', pmod(hash(__seed, p), 262144)))), __suffix)").as("text"))
-        .repartition(cpus * 2)
+        .repartition(p.cpus * 2)
         .write.mode("overwrite").parquet(s"$root/raw")
       val raw = spark.read.parquet(s"$root/raw")
 
@@ -119,7 +107,7 @@ object PipelineScale {
       // it by name at report time — a name-match there would MatchError
       // after the full run if a stage is added without updating it).
       def stage(name: String, inRows: Long, outRows: => Long): (String, Long, Long, JobStats.Snapshot) = {
-        val (rows, snap) = JobStats.measure(spark)(outRows)
+        val (rows, snap) = p.measure(outRows)
         (name, inRows, rows, snap)
       }
       def writeOut(df: DataFrame, path: String): Long = {
@@ -200,21 +188,15 @@ object PipelineScale {
         exportStats.rows
       })
 
-      val stages = Seq(clean) ++ stripStage.toSeq ++ Seq(dedup, select, pack, export)
-      val total = stages.map(_._4.wallTimeMs).sum / 1000.0
-      val parts = stages.map { case (name, inRows, rows, s) =>
-        f""""$name": {"wall_s": ${s.wallTimeMs / 1000.0}%.1f, """ +
-          f""""rows_out": $rows, """ +
-          f""""rows_per_s_core": ${inRows / math.max(s.coreSecs, 0.001)}%.0f, """ +
-          f""""shuffle_mb": ${s.shuffleBytesWritten / 1048576.0}%.0f}"""
+      def report(stage: (String, Long, Long, JobStats.Snapshot), extra: (String, Any)*): Unit = {
+        val (name, inRows, rows, snap) = stage
+        p.emit(name, snap, Seq("docs" -> n, "hash" -> (if (fastHash) "xxhash64" else "md5"),
+          "strip" -> doStrip, "heavy_boiler" -> heavyBoiler,
+          "bands" -> s"k=$bandK/rows=$bandRows", "rows_out" -> rows,
+          "rows_per_s_core" -> inRows / math.max(snap.coreSecs, 0.001)) ++ extra: _*)
       }
-      println(f"""{"docs": $n, "hash": "${if (fastHash) "xxhash64" else "md5"}", """ +
-        f""""strip": $doStrip, "heavy_boiler": $heavyBoiler, """ +
-        f""""bands": "k=$bandK/rows=$bandRows", """ +
-        f""""total_s": $total%.1f, "export_files": ${exportStats.files}, """ +
-        f""""export_mb": ${exportStats.bytes / 1048576.0}%.0f, """ +
-        parts.mkString(", ") + "}")
+      (Seq(clean) ++ stripStage.toSeq ++ Seq(dedup, select, pack)).foreach(report(_))
+      report(export, "files" -> exportStats.files, "mb" -> exportStats.bytes / 1048576.0)
     }
-    spark.stop()
   }
 }

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
  * Scale probe for PQ-ADC ANN (Ann.pqTrain/pqCodes/pqScoreTopK), sibling of
  * [[SemanticScale]]: the sf0.1 battery runs it on 2k embeddings — far too
- * small for the serving-cost claims to show. This main synthesizes a
+ * small for the serving-cost claims to show. This probe synthesizes a
  * clustered corpus with PLANTED near-duplicates of each query (tiny jitter,
  * cos ≈ 0.999 vs ~0.86 for same-cluster bulk) and times the deployment's
  * phases separately:
@@ -27,17 +26,10 @@ import org.apache.spark.sql.functions._
  * the re-ranked top-k. Recorded in BENCH.md: dup_recall = 1.0 and the adc
  * serving wall vs the brute scan at both sizes.
  */
-object PqScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(200000L, 1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object PqScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(200000L, 1000000L)
     graft.functions.VectorFunctions.register(spark)
 
     // The standard serving shape: 8-bit codebooks (nCodes = 256; the
@@ -66,46 +58,42 @@ object PqScale {
       emb.count() // materialize so no phase pays generation cost
       val queries = emb.where(col("vec_id") < nQueries)
 
-      val t0 = System.nanoTime()
-      val books = operators.Ann.pqTrain(emb, "vec_id", "embedding",
-        dim, nSub, nCodes, iters)
-      val tTrain = (System.nanoTime() - t0) / 1e9
+      val (books, train) = p.measure {
+        operators.Ann.pqTrain(emb, "vec_id", "embedding", dim, nSub, nCodes, iters)
+      }
 
-      val t1 = System.nanoTime()
-      val codes = graft.util.Caches.retain(
-        operators.Ann.pqCodes(emb, "vec_id", "embedding", books))
-      codes.count()
-      val tEncode = (System.nanoTime() - t1) / 1e9
+      val (codes, encode) = p.measure {
+        val c = graft.util.Caches.retain(
+          operators.Ann.pqCodes(emb, "vec_id", "embedding", books))
+        c.count()
+        c
+      }
 
-      val t2 = System.nanoTime()
       val pq = operators.Ann.pqScoreTopK(emb, queries, "vec_id", "embedding",
         books, k, rerank, precomputedCodes = Some(codes))
-      pq.count()
-      val tAdc = (System.nanoTime() - t2) / 1e9
+      val (_, adc) = p.measure(pq.count())
 
-      val t2b = System.nanoTime()
-      operators.Ann.pqScoreTopK(emb, queries, "vec_id", "embedding",
-        books, k, rerank = 1, precomputedCodes = Some(codes)).count()
-      val tAdc0 = (System.nanoTime() - t2b) / 1e9
+      val (_, adc0) = p.measure {
+        operators.Ann.pqScoreTopK(emb, queries, "vec_id", "embedding",
+          books, k, rerank = 1, precomputedCodes = Some(codes)).count()
+      }
 
       // The at-scale claim is scan FOOTPRINT, not CPU: persist both stores
       // and compare bytes (the code table is what an out-of-memory corpus
       // scan actually reads).
-      def dirBytes(p: String): Long = {
-        val d = new java.io.File(p)
+      def dirBytes(path: String): Long = {
+        val d = new java.io.File(path)
         if (!d.exists) 0L else d.listFiles.map(_.length).sum
       }
-      val base = s"/tmp/graft_pqscale/$n"
+      val base = p.path(s"graft_pqscale/$n")
       codes.write.mode("overwrite").parquet(s"$base/codes")
       emb.write.mode("overwrite").parquet(s"$base/vectors")
       val codeBytes = dirBytes(s"$base/codes")
       val vecBytes = dirBytes(s"$base/vectors")
 
-      val t3 = System.nanoTime()
       val exact = operators.Ann.bruteForceTopK(emb, queries, "vec_id",
         "embedding", k)
-      val exactRows = exact.count()
-      val tBrute = (System.nanoTime() - t3) / 1e9
+      val (exactRows, brute) = p.measure(exact.count())
 
       // IVFADC: coarse routing over the same corpus (64 cells, 4 probes) —
       // the sub-linear serving path. Index build = k-means + residual
@@ -114,17 +102,16 @@ object PqScale {
       // scan actually touches (Σ probed-cell sizes / (n × queries)) — the
       // sub-linearity claim, measured rather than argued.
       val nCells = 64; val nProbes = 4
-      val t4 = System.nanoTime()
-      val (ivfCodes0, cents, rbooks) = operators.Ann.ivfPqIndex(emb,
-        "vec_id", "embedding", dim, nCells, 2, nSub, nCodes, iters)
-      val ivfCodes = graft.util.Caches.retain(ivfCodes0)
-      ivfCodes.count()
-      val tIvfIndex = (System.nanoTime() - t4) / 1e9
-      val t5 = System.nanoTime()
+      val ((ivfCodes, cents, rbooks), ivfIndex) = p.measure {
+        val (ivfCodes0, cents, rbooks) = operators.Ann.ivfPqIndex(emb,
+          "vec_id", "embedding", dim, nCells, 2, nSub, nCodes, iters)
+        val ivfCodes = graft.util.Caches.retain(ivfCodes0)
+        ivfCodes.count()
+        (ivfCodes, cents, rbooks)
+      }
       val ivfpq = operators.Ann.ivfPqServe(emb, queries, "vec_id",
         "embedding", cents, rbooks, ivfCodes, k, nProbes, rerank)
-      ivfpq.count()
-      val tIvfServe = (System.nanoTime() - t5) / 1e9
+      val (_, ivfServe) = p.measure(ivfpq.count())
       val candRows = queries.select(col("vec_id"),
           explode(operators.Ann.probeCellsCol("embedding", cents, nProbes)
             .getField("cell")).as("cell"))
@@ -151,19 +138,19 @@ object PqScale {
           Seq("query_id", "neighbor_id"))
         .count().toDouble / exactRows
       graft.util.Caches.drain()
-      println(f"PQSCALE n=$n train=$tTrain%.1f encode=$tEncode%.1f " +
-        f"adc=$tAdc%.1f adc_norerank=$tAdc0%.1f brute=$tBrute%.1f " +
-        f"dup_recall=$dupRecall%.2f topk_overlap=$overlap%.2f " +
-        f"code_bytes=$codeBytes vec_bytes=$vecBytes " +
-        f"store_ratio=${vecBytes.toDouble / codeBytes}%.1f " +
-        f"adc_vecs_per_sec_per_core=${n.toDouble * nQueries / tAdc / cpus}%.0f " +
-        f"brute_vecs_per_sec_per_core=${n.toDouble * nQueries / tBrute / cpus}%.0f")
-      println(f"IVFPQSCALE n=$n cells=$nCells probes=$nProbes " +
-        f"index=$tIvfIndex%.1f serve=$tIvfServe%.1f " +
-        f"dup_recall=${plantedIvf.toDouble / nPlanted}%.2f " +
-        f"topk_overlap=$overlapIvf%.2f " +
-        f"cand_frac=${candRows.toDouble / (n.toDouble * nQueries)}%.3f")
+      val perCore = (s: graft.result.JobStats.Snapshot) =>
+        n.toDouble * nQueries * 1000.0 / s.wallTimeMs / p.cpus
+      p.emit("train", train, "n" -> n)
+      p.emit("encode", encode, "n" -> n, "code_bytes" -> codeBytes, "vec_bytes" -> vecBytes,
+        "store_ratio" -> vecBytes.toDouble / codeBytes)
+      p.emit("adc", adc, "n" -> n, "dup_recall" -> dupRecall, "topk_overlap" -> overlap,
+        "vecs_per_sec_per_core" -> perCore(adc))
+      p.emit("adc_norerank", adc0, "n" -> n)
+      p.emit("brute", brute, "n" -> n, "vecs_per_sec_per_core" -> perCore(brute))
+      p.emit("ivf_index", ivfIndex, "n" -> n, "cells" -> nCells)
+      p.emit("ivf_serve", ivfServe, "n" -> n, "cells" -> nCells, "probes" -> nProbes,
+        "dup_recall" -> plantedIvf.toDouble / nPlanted, "topk_overlap" -> overlapIvf,
+        "cand_frac" -> candRows.toDouble / (n.toDouble * nQueries))
     }
-    spark.stop()
   }
 }

@@ -1,62 +1,22 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool (guide §1): run one or more SparkEntry queries with a job
-  * listener and print every Spark job's wall time + description, so a
-  * multi-second query can be attributed to its constituent jobs (k-means
-  * iterations, fixture writes, collects, the final count) instead of
-  * guessing from the plan. Usage:
-  *   runMain graft.ProfileJobs <sfDir> <name> [name...]
+/** Dev tool (guide §1): run one or more SparkEntry queries and print every
+  * Spark job's wall time + description and every stage's wall time, task
+  * count and call site, so a multi-second query can be attributed to its
+  * constituent jobs (k-means iterations, fixture writes, collects, the
+  * final count) instead of guessing from the plan. The records are the
+  * measurement's own ([[graft.result.JobStats.measure]]), plus the driver
+  * gap: wall time minus the summed job wall. Usage:
+  *   runMain graft.Probe ProfileJobs <sfDir> <name> [name...]
+  * Runs at the battery's shape, one shuffle partition per core.
   */
-object ProfileJobs {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else Seq("ann_ivfpq_saved")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+object ProfileJobs extends Probe.Body {
+  override def confs(cpus: Int) = Map("spark.sql.shuffle.partitions" -> cpus.toString)
 
-    val starts = new ConcurrentHashMap[Int, (Long, String)]()
-    // Dedicated lock: synchronizing on `rows` itself would lock whatever Seq
-    // instance the @volatile var happens to hold (reassigned on every append,
-    // initially the shared Seq.empty singleton) — not a valid mutex.
-    val rowsLock = new Object
-    @volatile var rows = Seq.empty[(Int, Double, Int, String)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(js.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("?")
-        starts.put(js.jobId, (System.nanoTime(), desc))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-          val secs = (System.nanoTime() - t0) / 1e9
-          val nTasks = 0
-          rowsLock.synchronized { rows = rows :+ ((je.jobId, secs, nTasks, desc)) }
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = for (a <- si.completionTime; b <- si.submissionTime)
-          yield (a - b) / 1e3
-        println(f"    stage ${si.stageId}%3d  ${wall.getOrElse(-1.0)}%6.3f s  " +
-          f"tasks=${si.numTasks}%3d  ${si.name.takeWhile(_ != '\n').take(90)}")
-      }
-    })
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sfDir = p.args.headOption.getOrElse("/root/testdata/sf0.1")
+    val names = if (p.args.length > 1) p.args.drop(1) else Seq("ann_ivfpq_saved")
 
     // Streaming rows' micro-batch duration split: a listener HERE never
     // fires — every st_* query runs its stream on a CHILD session, and a
@@ -67,26 +27,22 @@ object ProfileJobs {
     for (n <- names) {
       val fn = SparkEntry.queries(n)
       // warmup (codegen/caches), same as Bench
-      spark.catalog.clearCache()
       System.gc()
       try fn(spark, sfDir).count()
       catch { case scala.util.control.NonFatal(e) => println(s"warmup err: $e") }
-      rowsLock.synchronized { rows = Seq.empty }
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val total = (System.nanoTime() - t0) / 1e9
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(300)
-      println(s"\n===== $n  total=${f"$total%.3f"}s =====")
-      val snap = rowsLock.synchronized(rows)
-      snap.sortBy(_._1).foreach { case (id, secs, _, desc) =>
-        println(f"  job $id%3d  $secs%7.3f s  $desc")
+      val (_, stats) = p.measure(fn(spark, sfDir).count())
+      println(f"\n===== $n  total=${stats.wallTimeMs / 1e3}%.3fs =====")
+      stats.stages.foreach { s =>
+        println(f"    stage ${s.id}%3d  ${s.wallMs / 1e3}%6.3f s  tasks=${s.tasks}%3d  ${s.name.take(90)}")
       }
-      val jobSum = snap.map(_._2).sum
-      println(f"  [${snap.size} jobs, sum=$jobSum%.3f s; gap=${total - jobSum}%.3f s driver-side]")
+      stats.jobs.foreach { j =>
+        println(f"  job ${j.id}%3d  ${j.wallMs / 1e3}%7.3f s  tasks=${j.tasks}%3d  ${j.description}")
+      }
+      println(f"  [${stats.jobs.size} jobs, sum=${stats.jobs.map(_.wallMs).sum / 1e3}%.3f s; " +
+        f"gap=${stats.driverGapMs / 1e3}%.3f s driver-side]")
+      p.emit(n, stats, "sf" -> sfDir, "jobs" -> stats.jobs.size,
+        "job_wall_ms" -> stats.jobs.map(_.wallMs).sum, "driver_gap_ms" -> stats.driverGapMs)
       graft.util.Caches.drain()
     }
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    spark.stop()
   }
 }

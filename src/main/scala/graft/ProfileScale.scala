@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -13,17 +12,10 @@ import org.apache.spark.sql.functions._
  * plus the HLL error actually observed at rsd 2% — the numbers behind
  * "approx is the 100 TB default, exact is the audit mode".
  */
-object ProfileScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object ProfileScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(2000000L, 10000000L)
     val cols = Seq("a", "b", "c", "d", "e", "f")
 
     def corpusAt(n: Long) = graft.util.Caches.retain(spark.range(n).select(
@@ -35,8 +27,8 @@ object ProfileScale {
       when(col("id") % 10 === 0, lit(null).cast("string")) // 10% null
         .otherwise(concat(lit("x"), col("id") % 7)).as("f")))
 
-    // Warmup (codegen + HLL paths).
-    { val w = corpusAt(200000L)
+    // Warmup (codegen + HLL paths) at 200k, or at the smallest size below.
+    { val w = corpusAt(math.min(200000L, sizes.min))
       graft.operators.Profile.profile(w, cols).collect()
       graft.operators.Profile.profile(w, cols, approxDistinct = true, rsd = 0.02).collect()
       graft.util.Caches.drain() }
@@ -45,10 +37,10 @@ object ProfileScale {
       val corpus = corpusAt(n)
       corpus.count()
       import graft.result.JobStats.minOf2
-      val (exactRows, ex) = minOf2(graft.result.JobStats.measure(spark) {
+      val (exactRows, ex) = minOf2(p.measure {
         graft.operators.Profile.profile(corpus, cols).collect()
       })
-      val (approxRows, ap) = minOf2(graft.result.JobStats.measure(spark) {
+      val (approxRows, ap) = minOf2(p.measure {
         graft.operators.Profile.profile(corpus, cols,
           approxDistinct = true, rsd = 0.02).collect()
       })
@@ -59,12 +51,8 @@ object ProfileScale {
         else math.abs(approx(c) - exact(c)).toDouble / exact(c)
       }.max
       graft.util.Caches.drain()
-      println(f"PROFILESCALE n=$n exact_wall=${ex.wallTimeMs / 1000.0}%.1f " +
-        f"exact_shuffle_mb=${ex.shuffleBytesWritten / 1e6}%.1f " +
-        f"approx_wall=${ap.wallTimeMs / 1000.0}%.1f " +
-        f"approx_shuffle_mb=${ap.shuffleBytesWritten / 1e6}%.1f " +
-        f"worst_hll_rel_err=${worstErr}%.4f")
+      p.emit("exact", ex, "n" -> n)
+      p.emit("approx", ap, "n" -> n, "worst_hll_rel_err" -> worstErr)
     }
-    spark.stop()
   }
 }

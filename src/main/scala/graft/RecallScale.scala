@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -11,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
  * `ann_lsh_recall`, `dd_semantic_recall`) run on near-uniform synthetic
  * vectors — the WORST case for cell-locality, since every cell boundary
  * cuts through uniformly dense neighborhoods. Real embedding corpora
- * cluster. This main generates a mixture-of-Gaussians-shaped corpus
+ * cluster. This probe generates a mixture-of-Gaussians-shaped corpus
  * (hash-derived, deterministic: `latent` centers scaled by `sep`, unit
  * per-point noise, ~5% planted near-duplicate pairs) at two cluster
  * separations and records:
@@ -32,17 +31,10 @@ import org.apache.spark.storage.StorageLevel
  *
  * Args: corpus size (default 100000).
  */
-object RecallScale {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object RecallScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val n = if (p.args.nonEmpty) p.args(0).toLong else 100000L
     graft.functions.VectorFunctions.register(spark)
 
     val dim = 16
@@ -72,14 +64,16 @@ object RecallScale {
       val truth = operators.Ann.bruteForceTopK(emb, queries, "vec_id", "embedding", k)
         .select("query_id", "neighbor_id").persist(StorageLevel.MEMORY_AND_DISK)
       val truthN = truth.count()
-      Seq(1, 2, 4).foreach { p =>
-        val hits = operators.Ann.ivfTopK(emb, queries, "vec_id", "embedding",
-            dim, nCells, iters = 2, k = k, nProbes = p)
-          .select("query_id", "neighbor_id")
-          .join(truth, Seq("query_id", "neighbor_id")).count()
+      Seq(1, 2, 4).foreach { nProbes =>
+        val (hits, stats) = p.measure {
+          operators.Ann.ivfTopK(emb, queries, "vec_id", "embedding",
+              dim, nCells, iters = 2, k = k, nProbes = nProbes)
+            .select("query_id", "neighbor_id")
+            .join(truth, Seq("query_id", "neighbor_id")).count()
+        }
         graft.util.Caches.drain()
-        println(f"RECALL kind=ivf sep=$sep n=$n nCells=$nCells nProbes=$p " +
-          f"recall=${hits.toDouble / truthN}%.3f")
+        p.emit("ivf", stats, "sep" -> sep, "n" -> n, "nCells" -> nCells,
+          "nProbes" -> nProbes, "recall" -> hits.toDouble / truthN)
       }
 
       // ---- semanticPairs planted-pair recall vs nProbes ----
@@ -91,17 +85,17 @@ object RecallScale {
           (expr("vec_norm(va)") * expr("vec_norm(vb)")) >= threshold)
         .select("v1", "v2").persist(StorageLevel.MEMORY_AND_DISK)
       val plantedN = planted.count()
-      Seq(1, 2).foreach { p =>
-        val found = operators.Dedup.semanticPairs(emb, "vec_id", "embedding",
-            threshold, dim = dim, nCells = nCells, iters = 2, nProbes = p)
-          .join(planted, Seq("v1", "v2")).count()
+      Seq(1, 2).foreach { nProbes =>
+        val (found, stats) = p.measure {
+          operators.Dedup.semanticPairs(emb, "vec_id", "embedding",
+              threshold, dim = dim, nCells = nCells, iters = 2, nProbes = nProbes)
+            .join(planted, Seq("v1", "v2")).count()
+        }
         graft.util.Caches.drain()
-        println(f"RECALL kind=semantic sep=$sep n=$n nCells=$nCells nProbes=$p " +
-          f"planted=$plantedN recall=${found.toDouble / plantedN}%.3f")
+        p.emit("semantic", stats, "sep" -> sep, "n" -> n, "nCells" -> nCells,
+          "nProbes" -> nProbes, "planted" -> plantedN, "recall" -> found.toDouble / plantedN)
       }
       Seq(emb, truth, planted).foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
     }
-    spark.stop()
   }
 }

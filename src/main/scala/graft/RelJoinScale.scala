@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
  * path): at sf0.1 `orders` broadcasts everywhere, so the reorder's claimed
  * win — pre-cutting the fact join's probe side once orders EXCEEDS the
  * broadcast threshold — was argued, never demonstrated (VERDICT r19 #3).
- * This main synthesizes TPC-H-shaped customer/orders/lineitem parquet at a
+ * This probe synthesizes TPC-H-shaped customer/orders/lineitem parquet at a
  * size where orders is far past `spark.sql.autoBroadcastJoinThreshold`
  * (10 MB), runs the q3 aggregation in BOTH join orders over the same
  * files, prints interleaved walls, and dumps both formatted plans.
@@ -19,22 +19,14 @@ import org.apache.spark.sql.functions._
  *
  * Args: nOrders (default 10M; lineitem = 4x orders, customer = nOrders/5).
  */
-object RelJoinScale {
-  def main(args: Array[String]): Unit = {
-    val nOrders = args.headOption.map(_.toLong).getOrElse(10000000L)
+object RelJoinScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val nOrders = p.args.headOption.map(_.toLong).getOrElse(10000000L)
     val nLines = nOrders * 4
     val nCust = math.max(1L, nOrders / 5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    val base = s"/tmp/graft_reljoin_scale/$nOrders"
+    val base = p.path(s"graft_reljoin_scale/$nOrders")
     def ready(t: String) = new java.io.File(s"$base/$t/_SUCCESS").exists()
     if (!(ready("customer") && ready("orders") && ready("lineitem"))) {
       spark.range(nCust).select(
@@ -86,38 +78,32 @@ object RelJoinScale {
     }
 
     // Shuffle bytes are the robust comparison on a noisy box: wall swings
-    // with ambient load, bytes written to shuffle do not.
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        Option(te.taskMetrics).foreach(m =>
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-      }
-    })
-
-    def timed(label: String, df: => DataFrame): Double = {
+    // with ambient load, bytes written to shuffle do not. Each label's
+    // bytes are its own measurement's tasks.
+    def timed(label: String, df: => DataFrame): Seq[Row] = {
       spark.sparkContext.setJobDescription(s"reljoin-scale $label")
-      shuffleWrite.set(0L)
-      val t0 = System.nanoTime()
-      val rows = df.collect()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain task-end events
-      println(f"RELJOINSCALE $label orders=$nOrders wall=$secs%.2f " +
-        f"shuffleMB=${shuffleWrite.get / 1e6}%.1f first=${rows.headOption.mkString}")
-      secs
+      val (rows, stats) = p.measure(df.collect().toSeq)
+      p.emit(label, stats, "orders" -> nOrders, "first" -> rows.headOption.mkString)
+      rows
     }
 
     def dumpPlan(label: String, df: DataFrame): Unit = {
-      val out = new java.io.PrintStream(s"/tmp/reljoin_${label}_plan.txt")
+      val out = new java.io.PrintStream(p.path(s"reljoin_${label}_plan.txt"))
       Console.withOut(out) { df.explain("formatted") }
       out.close()
     }
     dumpPlan("old", oldOrder())
     dumpPlan("new", newOrder())
 
-    // Interleaved pairs: warm each once, then OLD/NEW x2.
-    timed("warm_old", oldOrder()); timed("warm_new", newOrder())
-    for (i <- 1 to 2) { timed(s"old_$i", oldOrder()); timed(s"new_$i", newOrder()) }
-    spark.stop()
+    // Interleaved pairs: warm each once, then OLD/NEW x2. Both join orders
+    // must return the same top 10.
+    def pair(old: String, nu: String): Unit = {
+      val (o, n) = (timed(old, oldOrder()), timed(nu, newOrder()))
+      require(o == n, s"join orders disagree: $o vs $n")
+    }
+    try {
+      pair("warm_old", "warm_new")
+      for (i <- 1 to 2) pair(s"old_$i", s"new_$i")
+    } finally spark.sparkContext.setJobDescription(null)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,24 +19,17 @@ import org.apache.spark.sql.functions._
  * Corpus is synthetic: 12 pseudo-random vocabulary words per doc drawn
  * from Zipf-ish pools, target slice = every 17th doc.
  */
-object SelectionScale {
-  def main(args: Array[String]): Unit = {
+object SelectionScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
     // --fast switches the hash family to xxhash64 (the Dedup fast-family
     // precedent) for a like-for-like cost comparison against md5.
-    val fast = args.contains("--fast")
-    val sizes0 = args.toSeq.filterNot(_ == "--fast")
-    val sizes = if (sizes0.nonEmpty) sizes0.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val fast = p.flags("--fast").contains("--fast")
+    val sizes = p.sizes(2000000L, 10000000L)
     val b = 10000
 
-    // Untimed warmup at 1M docs with the REAL text shape: whole-stage
+    // Untimed warmup at 1M docs (or the smallest size below that) with the
+    // REAL text shape: whole-stage
     // codegen compilation, md5/agg JIT warm-in and the first parquet
     // writer init otherwise land inside the first size's timings (the
     // Bench warmup contract; measured: the first full-occupancy train run
@@ -47,9 +39,9 @@ object SelectionScale {
         val pool = Seq(50000, 5000, 500, 50)(j % 4)
         concat(lit("w"), pmod(col("doc_id") * lit(2654435761L + j * 40503L), lit(pool)))
       }
-      val w = spark.range(1000000L).select(col("id").as("doc_id"))
+      val w = spark.range(math.min(1000000L, sizes.min)).select(col("id").as("doc_id"))
         .select(col("doc_id"), concat_ws(" ", wWords: _*).as("text"))
-      val fixW = "/tmp/graft_selscale_model/warmup"
+      val fixW = p.path("graft_selscale_model/warmup")
       operators.Dsir.trainLogRatios(w.where(pmod(col("doc_id"), lit(17)) === 0),
         w, "doc_id", "text", b, "sc", fast)
         .coalesce(1).write.mode("overwrite").parquet(fixW)
@@ -68,22 +60,22 @@ object SelectionScale {
         .select(col("id").as("doc_id"), concat_ws(" ", words: _*).as("text")))
       corpus.count() // materialize outside the timings
       val target = corpus.where(pmod(col("doc_id"), lit(17)) === 0)
-      val fix = s"/tmp/graft_selscale_model/$n"
+      val fix = p.path(s"graft_selscale_model/$n")
 
       import graft.result.JobStats.minOf2
-      val (_, train) = minOf2(graft.result.JobStats.measure(spark) {
+      val (_, train) = minOf2(p.measure {
         operators.Dsir.trainLogRatios(target, corpus, "doc_id", "text", b, "sc", fast)
           .coalesce(1).write.mode("overwrite").parquet(fix)
       })
       val model = spark.read.parquet(fix)
       require(model.count() == b, "model must be exactly nBuckets rows")
 
-      val (topSum, score) = minOf2(graft.result.JobStats.measure(spark) {
+      val (topSum, score) = minOf2(p.measure {
         operators.Dsir.selectTopK(
           operators.Dsir.score(corpus, model, "doc_id", "text", b, "sc", fast), 1000)
           .agg(sum(col("doc_id"))).head().getLong(0)
       })
-      val (thrCount, thr) = minOf2(graft.result.JobStats.measure(spark) {
+      val (thrCount, thr) = minOf2(p.measure {
         operators.Dsir.score(corpus, model, "doc_id", "text", b, "sc", fast)
           .where(col("logw_micro") > 0L).count()
       })
@@ -92,7 +84,7 @@ object SelectionScale {
       // Parity is asserted at full size: the corpus-wide logw sum from the
       // row-local fold must equal the explode+join pipeline's bit-for-bit.
       val modelMap = model.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val (rsSum, rs) = minOf2(graft.result.JobStats.measure(spark) {
+      val (rsSum, rs) = minOf2(p.measure {
         graft.functions.DsirFunctions.withRowScore(spark, modelMap, b, "sc",
           fast, col("text")) { c =>
           corpus.select(c.getField("logw_micro").as("lw"))
@@ -108,17 +100,14 @@ object SelectionScale {
       require(scoreSum == rsSum,
         s"native/batch scorer divergence at n=$n: $rsSum vs $scoreSum")
       graft.util.Caches.drain()
-      println(f"SELECTIONSCALE fast=$fast n=$n topk_check=$topSum thr_kept=$thrCount " +
-        f"train_wall=${train.wallTimeMs / 1000.0}%.1f " +
-        f"score_wall=${score.wallTimeMs / 1000.0}%.1f " +
-        f"score_shuffle_b_per_doc=${score.shuffleBytesWritten.toDouble / n}%.1f " +
-        f"score_docs_per_s_core=${n / score.coreSecs}%.0f " +
-        f"threshold_wall=${thr.wallTimeMs / 1000.0}%.1f " +
-        f"rowscore_wall=${rs.wallTimeMs / 1000.0}%.1f " +
-        f"rowscore_docs_per_s_core=${n / rs.coreSecs}%.0f " +
-        f"rowscore_shuffle_b_per_doc=${rs.shuffleBytesWritten.toDouble / n}%.2f " +
-        f"rowscore_check=$rsSum")
+      p.emit("train", train, "fast" -> fast, "n" -> n)
+      p.emit("score", score, "fast" -> fast, "n" -> n, "topk_check" -> topSum,
+        "shuffle_b_per_doc" -> score.shuffleBytesWritten.toDouble / n,
+        "docs_per_s_core" -> n / score.coreSecs)
+      p.emit("threshold", thr, "fast" -> fast, "n" -> n, "kept" -> thrCount)
+      p.emit("rowscore", rs, "fast" -> fast, "n" -> n, "check" -> rsSum,
+        "shuffle_b_per_doc" -> rs.shuffleBytesWritten.toDouble / n,
+        "docs_per_s_core" -> n / rs.coreSecs)
     }
-    spark.stop()
   }
 }

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
  * Scale probe for SemDeDup-style semantic dedup (Dedup.semanticPairs),
  * sibling of [[DedupScale]]: the sf0.1 battery runs it on 2k embeddings —
  * too small to see whether cell-locality actually bounds the pair search.
- * This main synthesizes a clustered corpus (hash-derived 16-dim vectors
+ * This probe synthesizes a clustered corpus (hash-derived 16-dim vectors
  * around `nCells`-ish latent centers, ~5% near-duplicate pairs) and runs
  * the pair stage at two sizes with nCells grown proportionally — per the
  * operator's contract that candidates ≈ n²·nProbes²/nCells stay LINEAR in
@@ -15,17 +14,10 @@ import org.apache.spark.sql.functions._
  * pass criterion recorded in BENCH.md is wall growing ~linearly (never
  * quadratically) with n at fixed n/nCells.
  */
-object SemanticScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(50000L, 200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object SemanticScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(50000L, 200000L)
     graft.functions.VectorFunctions.register(spark)
 
     val dim = 16
@@ -50,15 +42,14 @@ object SemanticScale {
                  (pmod(xxhash64(id, j + 200), 100) / 2500.0) AS FLOAT))""").as("embedding"))
         .drop("id", "src")
 
-      val t0 = System.nanoTime()
-      val pairs = operators.Dedup.semanticPairs(
-        emb, "vec_id", "embedding", threshold = 0.9,
-        dim = dim, nCells = nCells, iters = 2, nProbes = 2).count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (pairs, stats) = p.measure {
+        operators.Dedup.semanticPairs(
+          emb, "vec_id", "embedding", threshold = 0.9,
+          dim = dim, nCells = nCells, iters = 2, nProbes = 2).count()
+      }
       graft.util.Caches.drain()
-      println(f"SEMSCALE n=$n nCells=$nCells pairs=$pairs wall=$wall%.1f " +
-        f"vecs_per_sec_per_core=${n / wall / cpus}%.0f")
+      p.emit("semantic", stats, "n" -> n, "nCells" -> nCells, "pairs" -> pairs,
+        "vecs_per_sec_per_core" -> n * 1000.0 / stats.wallTimeMs / p.cpus)
     }
-    spark.stop()
   }
 }

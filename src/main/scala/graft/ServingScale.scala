@@ -3,7 +3,7 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.SparkSession
+import graft.result.JobStats
 
 /**
  * Serving-path latency-floor probe (r15): at 100 TB a query's cost is the
@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
  *     query, 1 sequential client and 2 concurrent clients (= the server's
  *     worker pool), requests/sec + per-request percentiles.
  *
- * Prints one JSON line (BENCH.md §"Serving-path latency floor").
+ * Prints one JSON line per phase (BENCH.md §"Serving-path latency floor").
  *
  * `ServingScale crossover [--reps N] <dir>...` instead times uncached
  * queries of nine dashboard shapes on all three execution profiles
@@ -34,15 +34,18 @@ import org.apache.spark.sql.SparkSession
  * generator output at several row counts. Each repetition draws fresh
  * literals, so the codegen profile compiles as a first-seen query does;
  * every profile must give the same answer. Prints a table and one JSON
- * line per directory (BENCH.md §"Execution profile crossover").
+ * line per shape and profile (BENCH.md §"Execution profile crossover").
  */
-object ServingScale {
-  def main(args: Array[String]): Unit =
-    if (args.headOption.contains("crossover")) crossover(args.tail.toList) else floor(args)
+object ServingScale extends Probe.Body {
+  // The battery's serving shape: one shuffle partition per core.
+  override def confs(cpus: Int) = Map("spark.sql.shuffle.partitions" -> cpus.toString)
 
-  private def floor(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = session()
+  def run(p: Probe.Run): Unit =
+    if (p.args.headOption.contains("crossover")) crossover(p, p.args.tail.toList) else floor(p)
+
+  private def floor(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sfDir = p.args.headOption.getOrElse("/root/testdata/sf0.001")
 
     import graft.engine.{DatasetSpec, QueryEngine}
     val ev = ops.Tables.events(spark, sfDir)
@@ -63,82 +66,79 @@ object ServingScale {
     // routable shape the routed engine still pays bigEnough's optimizer
     // pass and the window engine doesn't, which is exactly the difference
     // worth a number.
-    def planMs(engine: QueryEngine, json: String, iters: Int = 100): Double = {
+    def planMs(label: String, engine: QueryEngine, json: String, iters: Int = 100): Unit = {
       val q = graft.query.QueryParser.parse(json)
       (1 to 20).foreach(_ => engine.runValidated(ev, q)) // JIT + analysis warm
-      val t0 = System.nanoTime()
-      (1 to iters).foreach(_ => engine.runValidated(ev, graft.query.QueryParser.parse(json)))
-      (System.nanoTime() - t0) / 1e6 / iters
+      val (_, stats) = p.measure {
+        (1 to iters).foreach(_ => engine.runValidated(ev, graft.query.QueryParser.parse(json)))
+      }
+      p.emit(label, stats, "sf" -> sfDir, "ms_per_req" -> stats.wallTimeMs.toDouble / iters)
     }
-    val planSeqRouted = planMs(routedEngine, seqJson)
-    val planSeqWindow = planMs(windowEngine, seqJson)
-    val planFilters = planMs(routedEngine, filtersJson)
-    println(f"[serving] planning ms/req: seq routed $planSeqRouted%.2f, " +
-      f"seq window $planSeqWindow%.2f, filters $planFilters%.2f")
+    planMs("plan_seq_routed", routedEngine, seqJson)
+    planMs("plan_seq_window", windowEngine, seqJson)
+    planMs("plan_filters", routedEngine, filtersJson)
 
     // -------------------------------------------------- HTTP end-to-end
     val server = new graft.server.ApiServer(spark, 0, routingMinBytes = Some(0))
     server.start()
-    val base = s"http://127.0.0.1:${server.boundPort}"
     val client = HttpClient.newHttpClient()
-    def post(path: String, body: String): HttpResponse[String] =
-      client.send(HttpRequest.newBuilder(URI.create(base + path))
+    // The q-quantile, in ms, of client-side request latencies in ns; each
+    // phase's wall is its measurement's.
+    def pct(lat: Seq[Long], q: Double): Double = lat.sorted.apply(((lat.length - 1) * q).toInt) / 1e6
+    def post(to: graft.server.ApiServer, path: String, body: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${to.boundPort}$path"))
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
         HttpResponse.BodyHandlers.ofString())
-    try {
-      val reg = post("/datasets/register",
-        s"""{"name": "srv", "basepath": "$sfDir/events.parquet",
+    def register(to: graft.server.ApiServer, name: String): Unit = {
+      val r = post(to, "/datasets/register",
+        s"""{"name": "$name", "basepath": "$sfDir/events.parquet",
            | "groupIdColumn": "user_id", "timestampColumn": "ts"}""".stripMargin)
-      require(reg.statusCode() == 200, reg.body())
-
-      def oneRequest(): Long = {
-        val t = System.nanoTime()
-        val r = post("/datasets/srv/query", seqJson)
-        require(r.statusCode() == 200 && r.body().contains("\"plan\""), r.body())
-        System.nanoTime() - t
-      }
+      require(r.statusCode() == 200, r.body())
+    }
+    // One request's client-side latency in ns; `ok` checks the response.
+    def timedPost(to: graft.server.ApiServer, path: String)(ok: HttpResponse[String] => Boolean): Long = {
+      val t = System.nanoTime()
+      val r = post(to, path, seqJson)
+      require(ok(r), r.body())
+      System.nanoTime() - t
+    }
+    try {
+      register(server, "srv")
+      def oneRequest(): Long = timedPost(server, "/datasets/srv/query")(r =>
+        r.statusCode() == 200 && r.body().contains("\"plan\""))
       (1 to 30).foreach(_ => oneRequest()) // warm: JIT, parquet footer, plans
 
       val n1 = 200
-      val w0 = System.nanoTime()
-      val lat = Array.fill(n1)(oneRequest()).sorted
-      val wall1 = (System.nanoTime() - w0) / 1e9
-      val rps1 = n1 / wall1
-      def pct(p: Double): Double = lat(((lat.length - 1) * p).toInt) / 1e6
-      println(f"[serving] 1 client: $rps1%.1f req/s, " +
-        f"p50 ${pct(0.5)}%.1f ms, p95 ${pct(0.95)}%.1f ms")
+      val (lat, one) = p.measure(Seq.fill(n1)(oneRequest()))
+      p.emit("http_1client", one, "sf" -> sfDir, "requests" -> n1,
+        "rps" -> n1 * 1000.0 / one.wallTimeMs, "p50_ms" -> pct(lat, 0.5), "p95_ms" -> pct(lat, 0.95))
 
       // 2 concurrent clients = the server's worker-thread count; also the
       // regime the r15 per-query cache scope + stats attribution protect.
       val n2 = 200
       val errs = new java.util.concurrent.atomic.AtomicInteger
-      val w2 = System.nanoTime()
-      val threads = (1 to 2).map { _ =>
-        new Thread(() => (1 to n2 / 2).foreach { _ =>
-          try oneRequest() catch { case _: Throwable => errs.incrementAndGet() }
-        })
+      val (_, two) = p.measure {
+        val threads = (1 to 2).map { _ =>
+          new Thread(() => (1 to n2 / 2).foreach { _ =>
+            try oneRequest() catch { case _: Throwable => errs.incrementAndGet() }
+          })
+        }
+        threads.foreach(_.start()); threads.foreach(_.join())
       }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val wall2 = (System.nanoTime() - w2) / 1e9
-      val rps2 = n2 / wall2
       require(errs.get() == 0, s"${errs.get()} concurrent requests failed")
-      println(f"[serving] 2 clients: $rps2%.1f req/s")
+      p.emit("http_2clients", two, "sf" -> sfDir, "requests" -> n2,
+        "rps" -> n2 * 1000.0 / two.wallTimeMs)
 
       // Chunked-stream path (r16): the long-query surface clients actually
       // use at 100 TB — progress lines then the result. Its floor is the
       // sync floor plus the server's completion-detection granularity.
-      def oneStream(): Long = {
-        val t = System.nanoTime()
-        val r = post("/datasets/srv/query?stream=true", seqJson)
-        require(r.statusCode() == 200, r.body())
-        require(r.body().split("\n").last.contains("matchingGroups"), r.body())
-        System.nanoTime() - t
-      }
+      def oneStream(): Long = timedPost(server, "/datasets/srv/query?stream=true")(r =>
+        r.statusCode() == 200 && r.body().split("\n").last.contains("matchingGroups"))
       (1 to 20).foreach(_ => oneStream())
       val nS = 100
-      val latS = Array.fill(nS)(oneStream()).sorted
-      def pctS(p: Double): Double = latS(((latS.length - 1) * p).toInt) / 1e6
-      println(f"[serving] stream path: p50 ${pctS(0.5)}%.1f ms, p95 ${pctS(0.95)}%.1f ms")
+      val (latS, streamed) = p.measure(Seq.fill(nS)(oneStream()))
+      p.emit("http_stream", streamed, "sf" -> sfDir, "requests" -> nS,
+        "p50_ms" -> pct(latS, 0.5), "p95_ms" -> pct(latS, 0.95))
 
       // Cached repeats (r15): the same query against a server with the
       // versioned result cache ON — the repeated-dashboard-query regime.
@@ -149,31 +149,17 @@ object ServingScale {
         routingMinBytes = Some(0), resultCacheSize = 64,
         httpThreads = 4) // 4 sync workers so the herd probe below genuinely overlaps
       cServer.start()
-      val (rpsC, p50C, soloColdMs, herdWallMs) = try {
-        val cBase = s"http://127.0.0.1:${cServer.boundPort}"
-        def postC(path: String, body: String): HttpResponse[String] =
-          client.send(HttpRequest.newBuilder(URI.create(cBase + path))
-            .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-            HttpResponse.BodyHandlers.ofString())
-        def reRegister(): Unit = {
-          val r = postC("/datasets/register",
-            s"""{"name": "srvcache", "basepath": "$sfDir/events.parquet",
-               | "groupIdColumn": "user_id", "timestampColumn": "ts"}""".stripMargin)
-          require(r.statusCode() == 200, r.body())
-        }
+      try {
+        def reRegister(): Unit = register(cServer, "srvcache")
         reRegister()
-        def oneCached(): Long = {
-          val t = System.nanoTime()
-          val r = postC("/datasets/srvcache/query", seqJson)
-          require(r.statusCode() == 200, r.body())
-          System.nanoTime() - t
-        }
+        def oneCached(): Long =
+          timedPost(cServer, "/datasets/srvcache/query")(_.statusCode() == 200)
         oneCached() // cold fill
         (1 to 30).foreach(_ => oneCached()) // warm
         val nC = 500
-        val wC = System.nanoTime()
-        val latC = Array.fill(nC)(oneCached()).sorted
-        val wallC = (System.nanoTime() - wC) / 1e9
+        val (latC, cached) = p.measure(Seq.fill(nC)(oneCached()))
+        p.emit("http_cached", cached, "sf" -> sfDir, "requests" -> nC,
+          "rps" -> nC * 1000.0 / cached.wallTimeMs, "p50_ms" -> pct(latC, 0.5))
 
         // Cold-key herd (r15): 4 concurrent clients fire the SAME query
         // right after a re-registration invalidated its key — the regime
@@ -184,45 +170,24 @@ object ServingScale {
         // of stacking four. Min of 3 iterations (drift protocol: paired,
         // back-to-back).
         val herdErrs = new java.util.concurrent.atomic.AtomicInteger
-        val (soloCold, herdWall) = (1 to 3).map { _ =>
+        val (soloCold, herd) = (1 to 3).map { _ =>
           reRegister()
           val solo = oneCached() / 1e6
           reRegister()
-          val t0 = System.nanoTime()
-          val threads = (1 to 4).map(_ => new Thread(() =>
-            try oneCached() catch { case _: Throwable => herdErrs.incrementAndGet() }))
-          threads.foreach(_.start()); threads.foreach(_.join())
-          (solo, (System.nanoTime() - t0) / 1e6)
-        }.minBy(_._2)
+          (solo, p.measure {
+            val threads = (1 to 4).map(_ => new Thread(() =>
+              try oneCached() catch { case _: Throwable => herdErrs.incrementAndGet() }))
+            threads.foreach(_.start()); threads.foreach(_.join())
+          }._2)
+        }.minBy(_._2.wallTimeMs)
         require(herdErrs.get() == 0, s"${herdErrs.get()} herd requests failed")
-
-        (nC / wallC, latC(((latC.length - 1) * 0.5).toInt) / 1e6, soloCold, herdWall)
+        p.emit("http_herd4", herd, "sf" -> sfDir, "solo_cold_ms" -> soloCold)
       } finally cServer.stop()
-      println(f"[serving] cached repeats: $rpsC%.1f req/s, p50 $p50C%.2f ms")
-      println(f"[serving] cold-key herd of 4: $herdWallMs%.1f ms wall vs solo cold $soloColdMs%.1f ms")
-
-      println(s"""{"metric": "serving_latency", "sf": "$sfDir", """ +
-        f""""planning_ms": {"seq_routed": $planSeqRouted%.2f, "seq_window": $planSeqWindow%.2f, "filters": $planFilters%.2f}, """ +
-        f""""http": {"rps_1client": $rps1%.1f, "p50_ms": ${pct(0.5)}%.1f, "p95_ms": ${pct(0.95)}%.1f, "rps_2clients": $rps2%.1f, """ +
-        f""""stream_p50_ms": ${pctS(0.5)}%.1f, """ +
-        f""""rps_cached": $rpsC%.1f, "p50_cached_ms": $p50C%.2f, """ +
-        f""""herd4_wall_ms": $herdWallMs%.1f, "solo_cold_ms": $soloColdMs%.1f}}""")
     } finally {
       server.stop()
-      spark.stop()
+      // The catalog is process-wide: release both registrations' copies.
+      Seq("srv", "srvcache").foreach(graft.catalog.Catalog.unregister)
     }
-  }
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
 
@@ -262,14 +227,14 @@ object ServingScale {
         s"""{"query":{"conditions":[{"filters":[["props","contains","\\"k\\": ${1 + r % 9}"]],"target":["count",">=",1]}]},"timeframe":{"from":$from,"to":${from + 5 * dayNs}}}""")
   }
 
-  private def crossover(args: List[String]): Unit = {
+  private def crossover(p: Probe.Run, args: List[String]): Unit = {
     import graft.catalog.{Catalog, ExecutionProfile}
     val (reps, dirs) = args match {
       case "--reps" :: n :: rest => (n.toInt, rest)
       case rest                  => (5, rest)
     }
     require(dirs.nonEmpty, "usage: ServingScale crossover [--reps N] <events dir>...")
-    val spark = session()
+    val spark = p.spark
     import ExecutionProfile.{Codegen, Interpreted, InterpretedParallel}
     val profiles: Seq[ExecutionProfile] = Seq(Codegen, InterpretedParallel, Interpreted)
     // A recorded size that picks each profile (no size keeps codegen).
@@ -277,30 +242,28 @@ object ServingScale {
       InterpretedParallel -> Some(ExecutionProfile.ResidentMaxBytes), Interpreted -> Some(0L))
     val label: Map[ExecutionProfile, String] =
       Map(Codegen -> "codegen", InterpretedParallel -> "parallel", Interpreted -> "resident")
-    try dirs.foreach { dir =>
+    dirs.foreach { dir => try {
       val ds = Catalog.register(spark, "crossover", dir, "user_id", "ts")
       // The production load path, with the recorded size overridden so
       // each profile reads the same files.
       val handles = profiles.map(p => p -> Catalog.load(spark, ds.copy(totalBytes = sizeFor(p)))).toMap
       val engine = graft.server.ApiServer.engine(ds, None)
-      def run(p: ExecutionProfile, json: String): (Double, String) = {
-        val t0 = System.nanoTime()
+      def run(prof: ExecutionProfile, json: String) = p.measure {
         val parsed = graft.query.QueryParser.parse(json)
         graft.query.SchemaValidator.validateTimeframeScale(parsed, ds.minTimestamp, ds.maxTimestamp)
-        val answer = graft.util.Caches.scoped(
-          graft.result.ResultJson.build(engine.runValidated(handles(p), parsed)))
-        ((System.nanoTime() - t0) / 1e6, answer)
+        graft.util.Caches.scoped(
+          graft.result.ResultJson.build(engine.runValidated(handles(prof), parsed)))
       }
       // One warm-up repetition on literals the timed ones never draw.
       shapes(1000).foreach { case (_, json) => profiles.foreach(run(_, json)) }
-      val ms = scala.collection.mutable.Map.empty[(String, ExecutionProfile), Seq[Double]]
+      val runs = scala.collection.mutable.Map.empty[(String, ExecutionProfile), Seq[JobStats.Snapshot]]
         .withDefaultValue(Seq.empty)
       for (r <- 0 until reps; (shape, json) <- shapes(r)) {
         // Rotate which profile goes first, so drift hits all alike.
         val order = profiles.drop(r % profiles.size) ++ profiles.take(r % profiles.size)
-        val answers = order.map { p =>
-          val (t, a) = run(p, json)
-          ms((shape, p)) = ms((shape, p)) :+ t
+        val answers = order.map { prof =>
+          val (a, stats) = run(prof, json)
+          runs((shape, prof)) = runs((shape, prof)) :+ stats
           a
         }
         require(answers.distinct.size == 1, s"profiles disagree on $shape r=$r: $answers")
@@ -310,22 +273,22 @@ object ServingScale {
         if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
       val names = shapes(0).map(_._1)
-      val rows = names.map(n => n -> profiles.map(p => median(ms((n, p)))))
+      val rows = names.map(n => n -> profiles.map(prof =>
+        median(runs((n, prof)).map(_.wallTimeMs.toDouble))))
       val sums = profiles.indices.map(i => rows.map(_._2(i)).sum)
       def line(label: String, v: Seq[Double]): String =
         f"[crossover]   $label%-18s" + v.map(x => f"$x%12.1f").mkString +
           f"  ${v(1) / v(0)}%5.2f ${v(2) / v(0)}%5.2f ${v(2) / v(1)}%5.2f"
       println(f"[crossover] $dir: ${ds.numRows} rows, ${ds.totalBytes.get} bytes, $reps reps")
-      println(f"[crossover]   ${"ms (median)"}%-18s" + profiles.map(p => f"${label(p)}%12s").mkString +
+      println(f"[crossover]   ${"ms (median)"}%-18s" + profiles.map(prof => f"${label(prof)}%12s").mkString +
         "  par/cg res/cg res/par")
       rows.foreach { case (n, v) => println(line(n, v)) }
       println(line("sum of medians", sums))
-      println(s"""{"metric": "profile_crossover", "dir": "$dir", "rows": ${ds.numRows}, """ +
-        s""""bytes": ${ds.totalBytes.get}, "reps": $reps, """ +
-        f""""codegen_ms": ${sums(0)}%.1f, "parallel_ms": ${sums(1)}%.1f, "resident_ms": ${sums(2)}%.1f, """ +
-        rows.map { case (n, v) => s""""$n": ${v.map(x => f"$x%.1f").mkString("[", ", ", "]")}""" }
-          .mkString("\"shapes\": {", ", ", "}}"))
-      Catalog.unregister("crossover")
-    } finally spark.stop()
+      // One line per shape and profile: its median-wall run.
+      for (n <- names; prof <- profiles)
+        p.emit("crossover", runs((n, prof)).sortBy(_.wallTimeMs).apply(reps / 2),
+          "dir" -> dir, "rows" -> ds.numRows, "bytes" -> ds.totalBytes.get, "reps" -> reps,
+          "shape" -> n, "profile" -> label(prof))
+    } finally Catalog.unregister("crossover") }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,17 +13,10 @@ import org.apache.spark.sql.functions._
  * growing corpus sizes to show the naive form's single-task bottleneck is
  * real, not theoretical, and that the two-phase form scales with cores.
  */
-object ShardScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object ShardScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(2000000L, 10000000L)
 
     sizes.foreach { n =>
       // Synthetic corpus: token counts vary 1..512 so shard boundaries are
@@ -40,11 +32,11 @@ object ShardScale {
         (r.getLong(0), r.getLong(1))
       }
 
-      val (twoPhase, tpStats) = graft.result.JobStats.measure(spark) {
+      val (twoPhase, tpStats) = p.measure {
         checksum(operators.Sampling.shardByBudget(
           corpus, "doc_id", col("tok"), budget, "ss"))
       }
-      val (naive, nvStats) = graft.result.JobStats.measure(spark) {
+      val (naive, nvStats) = p.measure {
         val line = operators.TextAnalysis.saltedMd5Public(col("doc_id"), "ss")
         val w = Window.orderBy(line, col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -54,10 +46,8 @@ object ShardScale {
       }
       require(twoPhase == naive, s"shard mismatch: $twoPhase vs $naive")
       graft.util.Caches.drain()
-      println(f"SHARDSCALE n=$n shards=${twoPhase._2 + 1} " +
-        f"two_phase_wall=${tpStats.wallTimeMs / 1000.0}%.1f " +
-        f"naive_window_wall=${nvStats.wallTimeMs / 1000.0}%.1f")
+      p.emit("two_phase", tpStats, "n" -> n, "shards" -> (twoPhase._2 + 1))
+      p.emit("naive_window", nvStats, "n" -> n, "shards" -> (naive._2 + 1))
     }
-    spark.stop()
   }
 }

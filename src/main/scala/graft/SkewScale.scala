@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,23 +27,10 @@ import org.apache.spark.sql.functions._
  *
  * Args: row count (default 10M).
  */
-object SkewScale {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", ScaleDefaults.shuffleParts(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+object SkewScale extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val n = if (p.args.nonEmpty) p.args(0).toLong else 10000000L
 
     val nKeys = math.max(1L, n / 200)
     val span = 86400L * 1000000L // one day of microseconds
@@ -80,23 +67,22 @@ object SkewScale {
           "bucketed_w86s"  -> Some(span / 1000))
          else Nil)
       for ((mode, bucket) <- widths) {
-        val (matched, sec) = timed {
+        val (matched, stats) = p.measure {
           operators.AsOfJoin
             .backward(left, right, Seq("k"), "lt", "rt", rightVals = Seq("rt"),
               tieBreak = Seq("rid"), timeBucket = bucket)
             .agg(count(col("asof_rt"))).collect()(0).getLong(0)
         }
-        println(f"SKEWSCALE asof dist=$label mode=$mode rows=$n " +
-          f"matched=$matched wall=$sec%.1f")
+        p.emit("asof", stats, "dist" -> label, "mode" -> mode, "rows" -> n,
+          "matched" -> matched)
       }
       // --- per-key cap at 1000: exact window vs no-sort approximate ---
       val docs = left.toDF("k", "t", "doc_id")
       for ((mode, capped) <- Seq(
           "exact" -> operators.TextAnalysis.capPerKey(docs, "k", "doc_id", 1000, "skew"),
           "approx" -> operators.TextAnalysis.capPerKeyApprox(docs, "k", "doc_id", 1000, "skew"))) {
-        val (kept, sec) = timed(capped.count())
-        println(f"SKEWSCALE cap dist=$label mode=$mode rows=$n " +
-          f"kept=$kept wall=$sec%.1f")
+        val (kept, stats) = p.measure(capped.count())
+        p.emit("cap", stats, "dist" -> label, "mode" -> mode, "rows" -> n, "kept" -> kept)
       }
       // --- per-key top-1000: plain window vs salted two-phase ---
       val ord = Seq(desc("t"), asc("doc_id"))
@@ -107,19 +93,17 @@ object SkewScale {
             .where(col("__rk") <= 1000).drop("__rk"),
           "salted" -> operators.Skew.topNPerKey(
             docs, "k", "doc_id", ord, n = 1000, salts = 64))) {
-        val (kept, sec) = timed(ranked.count())
-        println(f"SKEWSCALE topn dist=$label mode=$mode rows=$n " +
-          f"kept=$kept wall=$sec%.1f")
+        val (kept, stats) = p.measure(ranked.count())
+        p.emit("topn", stats, "dist" -> label, "mode" -> mode, "rows" -> n, "kept" -> kept)
       }
       // --- sessionize (30-min gap): measured bound, no mitigation ---
-      val (sessions, sec) = timed {
+      val (sessions, stats) = p.measure {
         operators.Sessionize
           .groupSummary(left.select(col("k"), col("lt")), "k", "lt",
             maxGap = 30L * 60L * 1000000L)
           .count()
       }
-      println(f"SKEWSCALE sessions dist=$label rows=$n groups=$sessions wall=$sec%.1f")
+      p.emit("sessions", stats, "dist" -> label, "rows" -> n, "groups" -> sessions)
     }
-    spark.stop()
   }
 }

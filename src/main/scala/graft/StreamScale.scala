@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -23,40 +22,28 @@ import org.apache.spark.sql.streaming.Trigger
  * watermark delay 30 min ⇒ horizon ≈ 5400 rows/side per key-partition
  * spread.
  */
-object StreamScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8") // state sizing, see st_attribution
-      // recentProgress is a ring buffer (default 100): ~100k-row batches at
-      // the default sizes produce ~100+ triggers, and anything larger would
-      // silently evict early progress entries — under-reporting `batches`
-      // and possibly the true max_state_rows. Progress objects are small
-      // metric maps; retaining every trigger is cheap at any size this
-      // probe can reach.
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+object StreamScale extends Probe.Body {
+  override def confs(cpus: Int) = Map(
+    "spark.sql.shuffle.partitions" -> "8", // state sizing, see st_attribution
+    // recentProgress is a ring buffer (default 100): ~100k-row batches at
+    // the default sizes produce ~100+ triggers, and anything larger would
+    // silently evict early progress entries — under-reporting `batches`
+    // and possibly the true max_state_rows. Progress objects are small
+    // metric maps; retaining every trigger is cheap at any size this
+    // probe can reach.
+    "spark.sql.streaming.numRecentProgressUpdates" -> "100000")
+
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(2000000L, 10000000L)
 
     sizes.foreach { n =>
       // Fixed ~100k clicks per micro-batch at any stream length: state is
       // O(batch input + watermark horizon), so holding the batch constant
       // is what makes "state independent of stream length" observable.
       val nFiles = math.max(4, (n / 100000L).toInt)
-      val root = s"/tmp/graft_stream_scale_$n"
-      val fs = new java.io.File(root)
-      def clean(): Unit = { // fresh dirs per run
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-        }
-        if (fs.exists()) rm(fs)
-      }
-      clean()
+      val root = p.path(s"graft_stream_scale_$n")
+      p.delete(root) // fresh dirs per run
       // Time-ordered file chunks: file i covers event seconds
       // [i*n/nFiles, (i+1)*n/nFiles) — one file per trigger, so the
       // watermark (max event time - delay) advances between batches and
@@ -91,20 +78,20 @@ object StreamScale {
         purchases, clicks, Seq("user_id"), "pts", "cts",
         window = "1 hour", watermark = "30 minutes")
 
-      val t0 = System.nanoTime()
-      val q = joined.writeStream.format("noop")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (q, stats) = p.measure {
+        val q = joined.writeStream.format("noop")
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q
+      }
       val progress = q.recentProgress.toSeq
       val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-      val batches = progress.size
       val totalIn = n + n / 10
-      println(f"""{"clicks": $n, "purchases": ${n / 10}, "batches": $batches, """ +
-        f""""wall_sec": $wall%.2f, "rows_per_sec_core": ${totalIn / wall / cpus}%.0f, """ +
-        f""""max_state_rows": $maxState, "state_over_input": ${maxState.toDouble / totalIn}%.4f}""")
-      clean()
+      p.emit("stream", stats, "clicks" -> n, "purchases" -> n / 10,
+        "batches" -> progress.size,
+        "rows_per_sec_core" -> totalIn * 1000.0 / stats.wallTimeMs / p.cpus,
+        "max_state_rows" -> maxState, "state_over_input" -> maxState.toDouble / totalIn)
+      p.delete(root)
     }
-    spark.stop()
   }
 }

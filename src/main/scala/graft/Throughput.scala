@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.engine.{DatasetSpec, QueryEngine}
+import graft.query.QueryAst._
 
 /**
  * One-off throughput probe for the BASELINE.md comparison: the reference's
@@ -9,30 +12,94 @@ import org.apache.spark.sql.functions._
  * over 254M rows on 256 warm Lambda cores — 2.11 s wall, i.e. ~470k
  * rows/s/core end-to-end, ~4.3M rows/s/core compute-only (docs/api.md).
  *
- * At sf0.1 (100k rows) fixed job overhead dominates, so this main builds a
+ * At sf0.1 (100k rows) fixed job overhead dominates, so this probe builds a
  * ~50M-row parquet replica of the events table once (user ids shifted per
  * replica so group cardinality scales too) and measures the same
  * scan → partial/final aggregate plan warm. Prints one JSON line with
  * rows/s/core for a like-for-like comparison.
  */
-object Throughput {
-  def main(args: Array[String]): Unit = {
+object Throughput extends Probe.Body {
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val args = p.args
     val replicas = args.headOption.map(_.toInt).getOrElse(500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Default 4× cores (r13, ScaleDefaults scaladoc: the partitions==cores
-    // shape sat at the 8g execution-memory margin on the 6-step probe;
-    // real clusters run partitions >> cores). SPARK_GRAFT_SHUFFLE pins an
-    // explicit count — e.g. =32 to reproduce the pre-r13 margin numbers.
-    val shuffleParts = ScaleDefaults.shuffleParts(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = p.cpus
+    // The harness's default 4× cores (r13, Probe.shuffleParts scaladoc: the
+    // partitions==cores shape sat at the 8g execution-memory margin on the
+    // 6-step probe; real clusters run partitions >> cores).
+    // SPARK_GRAFT_SHUFFLE pins an explicit count — e.g. =32 to reproduce
+    // the pre-r13 margin numbers.
+    val shuffleParts = spark.sessionState.conf.numShufflePartitions
+    // Every timed shape: one warm run, then the faster of two, each run's
+    // per-request caches drained outside its measurement (see the
+    // funnel-agg branch note).
+    def best[T](body: => T): (T, graft.result.JobStats.Snapshot) = {
+      def once() = { val r = p.measure(body); util.Caches.drain(); r }
+      once()
+      graft.result.JobStats.minOf2(once())
+    }
 
-    val target = s"/tmp/graft_scale/events_x$replicas"
+    def perCore(rows: Long, s: graft.result.JobStats.Snapshot) =
+      rows * 1000.0 / s.wallTimeMs / cpus
+
+    // Every shape's steps filter an event type and a value floor.
+    def step(t: String, minValue: Double = 100) = SequenceStep(Seq(
+      RowFilter("event_type", FilterOp.Eq, Scalar.Str(t)),
+      RowFilter("value", FilterOp.Gt, Scalar.Num(minValue))))
+    val funnel3 = Seq("view", "click", "purchase").map(step(_))
+    val funnelQ = GraftQuery(None, Nil, None, Nil, Some(Funnel(funnel3, None, Nil, Nil)))
+    // The funnel with one step aggregation and one end aggregation.
+    val funnelAggQ = GraftQuery(None, Nil, None, Nil, Some(Funnel(funnel3, None,
+      stepAggregations = Seq(Aggregation(None, "event_type", AggType.CountPerValue, None)),
+      endAggregations = Seq(Aggregation(None, "value", AggType.Count, None)))))
+    // 6 steps, every one value-filtered (~12% of rows match any step):
+    // the selective long-funnel shape where the Aggregator's claimed
+    // advantage — shuffle only candidate rows, one pass instead of six
+    // window aggregates — should be largest.
+    val steps6 = Seq(step("signup"), step("view"), step("click"),
+      step("view", 150), step("purchase"), step("purchase", 200))
+    val seqAggs = Seq(Aggregation(None, "value", AggType.Count, None),
+      Aggregation(None, "event_type", AggType.CountPerValue, None))
+    def windowEngine = new QueryEngine(DatasetSpec("user_id", "ts")).withWindowPlan
+    // Threshold 0: the probe measures the ROUTED plan at whatever replica
+    // count the caller picked, not the production size gate.
+    def routedEngine(spec: DatasetSpec = DatasetSpec("user_id", "ts")) =
+      new QueryEngine(spec).withRoutingThreshold(0)
+    // numGroups: the replicated corpus has ~1.5k distinct users per
+    // replica of sf0.1 events — the routed engine's survivor-sharing
+    // broadcast gate reads it exactly as ApiServer passes the catalog's
+    // registration stat.
+    val numGroups = Some(1500L * replicas)
+
+    // The shared-SURVIVOR plan (see the sequence-agg-shared mode's note):
+    // the matching groups' rows, projected to the used columns, retained
+    // once, then the summary and both aggregation frames over them.
+    def sharedSurvivors(in: DataFrame, steps: Seq[SequenceStep]): Unit = {
+      val g = operators.SequenceMatch
+        .matchingGroups(in, "user_id", "ts", steps)
+        .withColumnRenamed("user_id", "__seq_gid")
+      // EXPLICIT broadcast hint — the shape the engine ships
+      // (QueryEngine routed fold, numGroups gate). Measured history
+      // at 1B rows, all same-session pairs: a persisted plan freezes
+      // BEFORE AQE's runtime broadcast conversion, so the un-hinted
+      // cache materialization paid the full-corpus sort-merge join
+      // (73.2s; lazy localCheckpoint 73.0s; persist under
+      // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=
+      // true STILL ran the SMJ at 75.2s — SPARK-35332 lets AQE
+      // re-plan around cached-plan partitioning, it does not re-plan
+      // the cached plan's own join); the explicit hint fixed it to
+      // 28.8s. The unbounded-hint hazard is the engine's numGroups/
+      // gidMaxBytes gate, not an adaptive conf.
+      val survivors = util.Caches.retain(
+        in.select(col("user_id"), col("ts"), col("event_type"), col("value"))
+          .join(broadcast(g), col("user_id") === g("__seq_gid"), "left_semi"))
+      survivors.agg(count_distinct(col("user_id")).as("matching_groups"),
+        count(lit(1)).as("matching_group_rows")).collect()
+      val eng = new QueryEngine(DatasetSpec("user_id", "ts"))
+      seqAggs.foreach(a => eng.runAggregation(survivors, a).collect())
+    }
+
+    val target = p.path(s"graft_scale/events_x$replicas")
     if (!new java.io.File(target, "_SUCCESS").exists()) {
       val ev = ops.Tables.events(spark, "/root/testdata/sf0.1")
       // Repartition BEFORE the explode: the source is a single parquet file
@@ -126,9 +193,14 @@ object Throughput {
         spark.table(table)
       }
     val layout = if (bucketed) "bucketed" else "parquet"
+    // The sequence modes' gid: "-stringgid" derives the non-numeric "u<id>".
+    val stringGid = mode.endsWith("stringgid")
+    val (sdf, gidCol) =
+      if (stringGid)
+        (df.withColumn("uid_s", concat(lit("u"), col("user_id").cast("string"))), "uid_s")
+      else (df, "user_id")
 
     if (skewMode) {
-      import query.QueryAst._
       val hotPct = if (args.length > 2) args(2).toInt else 10
       // Deterministic per-row draw: hotPct% of ALL rows move to user -1
       // (a "bot" group holding that share of the corpus). hotPct=0 is the
@@ -157,15 +229,9 @@ object Throughput {
       // Window plan pinned: these shapes MEASURE the window stack's skew
       // bound (the engine's Auto routing would silently swap in the very
       // fast paths the other shapes measure against).
-      val eng = new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-        .withWindowPlan
-      def fstep(t: String) = SequenceStep(Seq(
-        RowFilter("event_type", FilterOp.Eq, Scalar.Str(t)),
-        RowFilter("value", FilterOp.Gt, Scalar.Num(100))))
+      val eng = windowEngine
       val shapes: Seq[(String, () => Unit)] = Seq(
-        "fr_funnel" -> (() => eng.run(skewed, GraftQuery(None, Nil, None, Nil,
-          Some(Funnel(Seq("view", "click", "purchase").map(fstep), None, Nil, Nil))))
-          .funnel.get.collect()),
+        "fr_funnel" -> (() => eng.run(skewed, funnelQ).funnel.get.collect()),
         "fr_count_target" -> (() => eng.run(skewed, GraftQuery(None,
           Seq(Condition.Filters(None,
             Seq(RowFilter("event_type", FilterOp.Eq, Scalar.Str("purchase")),
@@ -192,11 +258,7 @@ object Throughput {
         // 25-75M rows before the window stack sorts it — the funnel shape
         // that pays the full 5.2x serialization above.
         "fr_funnel_capped" -> (() => {
-          eng.capGroupRows(100000, "event_id").run(skewed,
-            GraftQuery(None, Nil, None, Nil,
-              Some(Funnel(Seq("view", "click", "purchase").map(fstep),
-                None, Nil, Nil))))
-            .funnel.get.collect()
+          eng.capGroupRows(100000, "event_id").run(skewed, funnelQ).funnel.get.collect()
           ()
         }),
         // The counts-only funnel twin under the hot group: the window
@@ -204,8 +266,7 @@ object Throughput {
         // funnelCounts bounds the bot's single merge to its CANDIDATE
         // rows and counts the rest algebraically.
         "fr_funnel_fast" -> (() => {
-          operators.SequenceMatch.funnelCounts(skewed, "user_id", "ts",
-            Seq("view", "click", "purchase").map(fstep)).collect()
+          operators.SequenceMatch.funnelCounts(skewed, "user_id", "ts", funnel3).collect()
           ()
         }),
         // r13: the ENGINE's Auto routing end-to-end under the hot group —
@@ -214,14 +275,7 @@ object Throughput {
         // the routing decision (not just the hand-picked twin) survives
         // skew at 250M rows.
         "fr_funnel_routed" -> (() => {
-          // threshold 0: the probe measures the ROUTED plan at whatever
-          // replica count the caller picked, not the production size gate.
-          new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-            .withRoutingThreshold(0)
-            .run(skewed, GraftQuery(None, Nil, None, Nil,
-              Some(Funnel(Seq("view", "click", "purchase").map(fstep),
-                None, Nil, Nil))))
-            .funnel.get.collect()
+          routedEngine().run(skewed, funnelQ).funnel.get.collect()
           ()
         }),
         // r14 head-to-head: the 3-step funnel WITH one step aggregation
@@ -230,12 +284,7 @@ object Throughput {
         // frames + 1 end-agg frame collected in sequence (a real query's
         // full result). Window side pinned...
         "fr_funnel_agg" -> (() => {
-          val plan = eng.run(skewed, GraftQuery(None, Nil, None, Nil,
-            Some(Funnel(Seq("view", "click", "purchase").map(fstep), None,
-              stepAggregations = Seq(Aggregation(None, "event_type",
-                AggType.CountPerValue, None)),
-              endAggregations = Seq(Aggregation(None, "value",
-                AggType.Count, None))))))
+          val plan = eng.run(skewed, funnelAggQ)
           plan.funnel.get.collect()
           plan.funnelAggregations.foreach(_._2.collect())
         }),
@@ -243,14 +292,7 @@ object Throughput {
         // the counts + per-step survivor joins against the max-step table
         // for each aggregation frame.
         "fr_funnel_agg_routed" -> (() => {
-          val plan = new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-            .withRoutingThreshold(0)
-            .run(skewed, GraftQuery(None, Nil, None, Nil,
-              Some(Funnel(Seq("view", "click", "purchase").map(fstep), None,
-                stepAggregations = Seq(Aggregation(None, "event_type",
-                  AggType.CountPerValue, None)),
-                endAggregations = Seq(Aggregation(None, "value",
-                  AggType.Count, None))))))
+          val plan = routedEngine().run(skewed, funnelAggQ)
           plan.funnel.get.collect()
           plan.funnelAggregations.foreach(_._2.collect())
         }),
@@ -259,16 +301,9 @@ object Throughput {
         // biggest-win shape (5.6x uniform), here measuring how the win
         // holds when the bot's candidate rows reach one merge per pass.
         "fr_sequence_agg_routed" -> (() => {
-          val plan = new engine.QueryEngine(engine.DatasetSpec("user_id", "ts",
-              numGroups = Some(1500L * replicas)))
-            .withRoutingThreshold(0)
-            .run(skewed, GraftQuery(None,
-              Seq(Condition.Sequence(None, Seq(
-                fstep("signup"), fstep("view"), fstep("click")), None)),
-              None,
-              Seq(Aggregation(None, "value", AggType.Count, None),
-                Aggregation(None, "event_type", AggType.CountPerValue, None)),
-              None))
+          val plan = routedEngine(DatasetSpec("user_id", "ts", numGroups = numGroups))
+            .run(skewed, GraftQuery(None, Seq(Condition.Sequence(None,
+              Seq(step("signup"), step("view"), step("click")), None)), None, seqAggs, None))
           plan.summary.collect()
           plan.aggregations.foreach(_._2.collect())
           ()
@@ -278,32 +313,14 @@ object Throughput {
         // the retained survivor table is ~30% of all rows — the worst
         // case for caching the semi-join output instead of re-scanning
         // per frame. This cell decides whether the lever needs a gate.
-        "fr_sequence_agg_shared" -> (() => {
-          val steps3 = Seq(fstep("signup"), fstep("view"), fstep("click"))
-          val g = operators.SequenceMatch
-            .matchingGroups(skewed, "user_id", "ts", steps3)
-            .withColumnRenamed("user_id", "__seq_gid")
-          // Explicit broadcast: see the sequence-agg-shared mode's note —
-          // the persisted plan would otherwise freeze a sort-merge join.
-          val survivors = util.Caches.retain(
-            skewed.select(col("user_id"), col("ts"), col("event_type"), col("value"))
-              .join(broadcast(g), col("user_id") === g("__seq_gid"), "left_semi"))
-          survivors.agg(count_distinct(col("user_id")).as("matching_groups"),
-            count(lit(1)).as("matching_group_rows")).collect()
-          val e = new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-          e.runAggregation(survivors,
-            Aggregation(None, "value", AggType.Count, None)).collect()
-          e.runAggregation(survivors,
-            Aggregation(None, "event_type", AggType.CountPerValue, None)).collect()
-          ()
-        }),
+        "fr_sequence_agg_shared" -> (() =>
+          sharedSurvivors(skewed, Seq(step("signup"), step("view"), step("click")))),
         // The aggregator under the hot group: only step-matching rows
         // (~7% here) reach the bot group's single merge, so its sort is
         // bounded by the bot's CANDIDATE rows — the skew story the
         // SequenceMatch scaladoc claims, measured.
         "fr_sequence_aggregator" -> (() => {
-          val g = operators.SequenceMatch.matchingGroups(skewed,
-            "user_id", "ts", Seq("view", "click", "purchase").map(fstep))
+          val g = operators.SequenceMatch.matchingGroups(skewed, "user_id", "ts", funnel3)
             .repartition(shuffleParts) // AQE stats boundary — must be round-robin (r13)
           skewed.join(g, Seq("user_id"), "left_semi").agg(
             count_distinct(col("user_id")).as("matching_groups"),
@@ -315,23 +332,11 @@ object Throughput {
       val want = if (args.length > 3) args(3).split(",").toSet else Set.empty[String]
       val chosen = if (want.isEmpty) shapes else shapes.filter(s => want(s._1))
       val rows = df.count()
-      val results = chosen.map { case (name, body) =>
-        def run(): Double = {
-          val t0 = System.nanoTime()
-          body()
-          val sec = (System.nanoTime() - t0) / 1e9
-          // Per-request cache lifecycle, outside the timer (see the
-          // funnel-agg branch note): the routed agg shapes retain a
-          // group-sized table the serving surfaces drain per query.
-          util.Caches.drain()
-          sec
-        }
-        run() // warm
-        val sec = (1 to 2).map(_ => run()).min
-        f""""$name": $sec%.3f"""
-      }
-      println(f"""{"plan": "skew", "hot_pct": $hotPct, "rows": $rows, """ +
-        f""""cores": $cpus, ${results.mkString(", ")}, "layout": "$layout"}""")
+      // The routed agg shapes retain a group-sized table the serving
+      // surfaces drain per query; `best` drains it outside the timer.
+      for ((name, body) <- chosen)
+        p.emit(name, best(body())._2, "plan" -> "skew", "hot_pct" -> hotPct,
+          "rows" -> rows, "cores" -> cpus, "layout" -> layout)
     } else if (mode.startsWith("sequence-agg")) {
       // r14: the 6-step sequence WITH aggregations — the shape where the
       // routed path's matched-gid set is consumed by THREE separate
@@ -339,17 +344,7 @@ object Throughput {
       // re-run the candidate pass without the Caches.retain sharing.
       // "sequence-agg[-bucketed]" pins the window plan,
       // "sequence-agg-routed[-bucketed]" the routed one (threshold 0).
-      import query.QueryAst._
-      def step(t: String, minValue: Double) = SequenceStep(Seq(
-        RowFilter("event_type", FilterOp.Eq, Scalar.Str(t)),
-        RowFilter("value", FilterOp.Gt, Scalar.Num(minValue))))
-      val steps = Seq(
-        step("signup", 100), step("view", 100), step("click", 100),
-        step("view", 150), step("purchase", 100), step("purchase", 200))
-      val q = GraftQuery(None, Seq(Condition.Sequence(None, steps, None)), None,
-        Seq(Aggregation(None, "value", AggType.Count, None),
-          Aggregation(None, "event_type", AggType.CountPerValue, None)),
-        None)
+      val q = GraftQuery(None, Seq(Condition.Sequence(None, steps6, None)), None, seqAggs, None)
       val routed = mode.startsWith("sequence-agg-routed")
       // "sequence-agg-shared[-bucketed]" (r15, probe-first for a candidate
       // engine lever): the routed plan's output frames each re-scan the
@@ -370,151 +365,75 @@ object Throughput {
       // the BYTE gate itself decides the hint (150k groups × ~11B ids ≈
       // 5 MB estimated broadcast, far under the 512 MB budget);
       // routed-stringgid omits numGroups = the unshared r14 baseline.
-      val stringGid = mode.endsWith("stringgid")
-      val (sdf2, gidCol2) =
-        if (stringGid)
-          (df.withColumn("uid_s", concat(lit("u"), col("user_id").cast("string"))), "uid_s")
-        else (df, "user_id")
-      // numGroups: the replicated corpus has ~1.5k distinct users per
-      // replica of sf0.1 events — the routed engine's survivor-sharing
-      // broadcast gate reads it exactly as ApiServer passes the catalog's
-      // registration stat.
       val eng =
         if (stringGid && sharedMode)
-          new engine.QueryEngine(engine.DatasetSpec(gidCol2, "ts",
-            numGroups = Some(1500L * replicas),
+          routedEngine(DatasetSpec(gidCol, "ts", numGroups = numGroups,
             // "u" + up to 10 digits (ids reach ~1e9 at 1000 replicas)
             gidMaxBytes = Some(11L)))
-            .withRoutingThreshold(0)
-        else if (stringGid)
-          new engine.QueryEngine(engine.DatasetSpec(gidCol2, "ts"))
-            .withRoutingThreshold(0)
-        else if (routed || sharedMode)
-          new engine.QueryEngine(engine.DatasetSpec("user_id", "ts",
-            numGroups = Some(1500L * replicas)))
-            .withRoutingThreshold(0)
-        else new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-          .withWindowPlan
+        else if (stringGid) routedEngine(DatasetSpec(gidCol, "ts"))
+        else if (routed) routedEngine(DatasetSpec("user_id", "ts", numGroups = numGroups))
+        else windowEngine
       val rows = df.count()
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        if (sharedMode && !stringGid) {
-          val g = operators.SequenceMatch
-            .matchingGroups(df, "user_id", "ts", steps)
-            .withColumnRenamed("user_id", "__seq_gid")
-          // EXPLICIT broadcast hint — the shape the engine ships
-          // (QueryEngine routed fold, numGroups gate). Measured history
-          // at 1B rows, all same-session pairs: a persisted plan freezes
-          // BEFORE AQE's runtime broadcast conversion, so the un-hinted
-          // cache materialization paid the full-corpus sort-merge join
-          // (73.2s; lazy localCheckpoint 73.0s; persist under
-          // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=
-          // true STILL ran the SMJ at 75.2s — SPARK-35332 lets AQE
-          // re-plan around cached-plan partitioning, it does not re-plan
-          // the cached plan's own join); the explicit hint fixed it to
-          // 28.8s. The unbounded-hint hazard is the engine's numGroups/
-          // gidMaxBytes gate, not an adaptive conf.
-          val survivors = util.Caches.retain(
-            df.select(col("user_id"), col("ts"), col("event_type"), col("value"))
-              .join(broadcast(g), col("user_id") === g("__seq_gid"), "left_semi"))
-          survivors.agg(count_distinct(col("user_id")).as("matching_groups"),
-            count(lit(1)).as("matching_group_rows")).collect()
-          eng.runAggregation(survivors,
-            Aggregation(None, "value", AggType.Count, None)).collect()
-          eng.runAggregation(survivors,
-            Aggregation(None, "event_type", AggType.CountPerValue, None)).collect()
-        } else {
-          val plan = eng.run(sdf2, q)
+      val (_, stats) = best {
+        if (sharedMode && !stringGid) sharedSurvivors(df, steps6)
+        else {
+          val plan = eng.run(sdf, q)
           plan.summary.collect()
           plan.aggregations.foreach(_._2.collect())
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        util.Caches.drain() // per-request lifecycle, outside the timer
-        sec
       }
-      run() // warm
-      val sec = (1 to 2).map(_ => run()).min
       val planName =
         (if (sharedMode) "sequence6-agg-shared"
          else if (routed) "sequence6-agg-routed" else "sequence6-agg-window") +
           (if (stringGid) "-stringgid" else "")
-      println(f"""{"plan": "$planName", "rows": $rows, "sec": $sec%.3f, """ +
-        f""""cores": $cpus, "layout": "$layout"}""")
+      p.emit(planName, stats, "rows" -> rows, "cores" -> cpus, "layout" -> layout)
     } else if (seqMode) {
-      import query.QueryAst._
-      // 6 steps, every one value-filtered (~12% of rows match any step):
-      // the selective long-funnel shape where the Aggregator's claimed
-      // advantage — shuffle only candidate rows, one pass instead of six
-      // window aggregates — should be largest.
-      def step(t: String, minValue: Double) = SequenceStep(Seq(
-        RowFilter("event_type", FilterOp.Eq, Scalar.Str(t)),
-        RowFilter("value", FilterOp.Gt, Scalar.Num(minValue))))
-      val steps = Seq(
-        step("signup", 100), step("view", 100), step("click", 100),
-        step("view", 150), step("purchase", 100), step("purchase", 200))
-      val stringGid = mode.endsWith("stringgid")
-      val (sdf, gidCol) =
-        if (stringGid)
-          (df.withColumn("uid_s", concat(lit("u"), col("user_id").cast("string"))), "uid_s")
-        else (df, "user_id")
       val rows = df.count()
-      def run(): (Row, Double) = {
-        val t0 = System.nanoTime()
-        val out =
-          if (seqRouted) {
-            // threshold 0: measure the routed plan at any replica count.
-            new engine.QueryEngine(engine.DatasetSpec(gidCol, "ts"))
-              .withRoutingThreshold(0)
-              .run(sdf, GraftQuery(None,
-                Seq(Condition.Sequence(None, steps, None)),
-                None, Nil, None)).summary.head()
-          } else if (seqFast) {
-            // fr_sequence_fast's exact summary shape: semi-join back, with
-            // the r13 repartition stage boundary on the matched-gid set so
-            // AQE broadcasts from runtime stats (without it the static
-            // estimate planned a 250M-row sort-merge join — see the
-            // FrQueries entry and BENCH.md §Sequence at reference scale).
-            val groups = operators.SequenceMatch.matchingGroups(
-              sdf, gidCol, "ts", steps).repartition(shuffleParts)
-            sdf.join(groups, Seq(gidCol), "left_semi").agg(
-              count_distinct(col(gidCol)).as("matching_groups"),
-              count(lit(1)).as("matching_group_rows")).head()
-          } else {
-            // Window plan pinned — this branch IS the window side of the
-            // head-to-head (Auto routing would collapse both branches onto
-            // the aggregator).
-            val eng = new engine.QueryEngine(engine.DatasetSpec(gidCol, "ts"))
-              .withWindowPlan
-            eng.run(sdf, GraftQuery(None,
-              Seq(Condition.Sequence(None, steps, None)),
+      val (out, stats) = best {
+        if (seqRouted) {
+          routedEngine(DatasetSpec(gidCol, "ts"))
+            .run(sdf, GraftQuery(None,
+              Seq(Condition.Sequence(None, steps6, None)),
               None, Nil, None)).summary.head()
-          }
-        (out, (System.nanoTime() - t0) / 1e9)
+        } else if (seqFast) {
+          // fr_sequence_fast's exact summary shape: semi-join back, with
+          // the r13 repartition stage boundary on the matched-gid set so
+          // AQE broadcasts from runtime stats (without it the static
+          // estimate planned a 250M-row sort-merge join — see the
+          // FrQueries entry and BENCH.md §Sequence at reference scale).
+          val groups = operators.SequenceMatch.matchingGroups(
+            sdf, gidCol, "ts", steps6).repartition(shuffleParts)
+          sdf.join(groups, Seq(gidCol), "left_semi").agg(
+            count_distinct(col(gidCol)).as("matching_groups"),
+            count(lit(1)).as("matching_group_rows")).head()
+        } else {
+          // Window plan pinned — this branch IS the window side of the
+          // head-to-head (Auto routing would collapse both branches onto
+          // the aggregator).
+          new QueryEngine(DatasetSpec(gidCol, "ts")).withWindowPlan
+            .run(sdf, GraftQuery(None,
+            Seq(Condition.Sequence(None, steps6, None)),
+            None, Nil, None)).summary.head()
+        }
       }
-      run() // warm
-      val (out, sec) = (1 to 2).map(_ => run()).minBy(_._2)
-      val perCore = rows / sec / cpus
       val plan = (if (seqRouted) "sequence6-routed"
         else if (seqFast) "sequence6-aggregator"
         else "sequence6-window") +
         (if (stringGid) "-stringgid" else "")
-      println(f"""{"plan": "$plan", "rows": $rows, "sec": $sec%.3f, """ +
-        f""""cores": $cpus, "rows_per_sec_per_core": ${perCore}%.0f, """ +
-        f""""matching_groups": ${out.getLong(0)}, """ +
-        f""""matching_group_rows": ${out.getLong(1)}, "layout": "$layout"}""")
+      p.emit(plan, stats, "rows" -> rows, "cores" -> cpus,
+        "rows_per_sec_per_core" -> perCore(rows, stats),
+        "matching_groups" -> out.getLong(0), "matching_group_rows" -> out.getLong(1),
+        "layout" -> layout)
     } else if (!funnelMode) {
-      def run(): (Long, Long, Double) = {
-        val t0 = System.nanoTime()
-        val r = df.agg(count_distinct(col("user_id")).as("matching_groups"),
+      def once() = p.measure {
+        df.agg(count_distinct(col("user_id")).as("matching_groups"),
           count(lit(1)).as("matching_group_rows")).collect()(0)
-        (r.getLong(0), r.getLong(1), (System.nanoTime() - t0) / 1e9)
       }
-      run() // warm
-      val (groups, rows, sec) = (1 to 3).map(_ => run()).minBy(_._3)
-      val perCore = rows / sec / cpus
-      println(f"""{"rows": $rows, "groups": $groups, "sec": $sec%.3f, """ +
-        f""""cores": $cpus, "rows_per_sec_per_core": ${perCore}%.0f, """ +
-        f""""layout": "$layout"}""")
+      once() // warm
+      val (r, stats) = (1 to 3).map(_ => once()).minBy(_._2.wallTimeMs)
+      val rows = r.getLong(1)
+      p.emit("empty", stats, "rows" -> rows, "groups" -> r.getLong(0), "cores" -> cpus,
+        "rows_per_sec_per_core" -> perCore(rows, stats), "layout" -> layout)
     } else if (mode.startsWith("funnel-agg")) {
       // r14: the funnel WITH one step aggregation and one end aggregation —
       // "funnel-agg[-bucketed]" pins the window plan, "funnel-agg-routed
@@ -522,66 +441,29 @@ object Throughput {
       // funnel counts + 3 step-agg frames + 1 end-agg frame collected in
       // sequence (a real query's full result); the skew A/B for this shape
       // lives in the skew mode (fr_funnel_agg[_routed] shapes).
-      import query.QueryAst._
-      val steps = Seq("view", "click", "purchase").map(t =>
-        SequenceStep(Seq(
-          RowFilter("event_type", FilterOp.Eq, Scalar.Str(t)),
-          RowFilter("value", FilterOp.Gt, Scalar.Num(100)))))
-      val q = GraftQuery(None, Nil, None, Nil,
-        Some(Funnel(steps, None,
-          stepAggregations = Seq(Aggregation(None, "event_type",
-            AggType.CountPerValue, None)),
-          endAggregations = Seq(Aggregation(None, "value",
-            AggType.Count, None)))))
       val routed = mode.startsWith("funnel-agg-routed")
-      val eng =
-        if (routed) new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-          .withRoutingThreshold(0)
-        else new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-          .withWindowPlan
+      val eng = if (routed) routedEngine() else windowEngine
       val rows = df.count()
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        val plan = eng.run(df, q)
+      // Per-request cache lifecycle (ApiServer drains after each query):
+      // without `best`'s drain, Spark's plan-matching CacheManager would
+      // hand run N+1 the candidate-pass cache run N materialized, and the
+      // timed runs would measure a warm cross-request cache no serving
+      // path keeps. Drained OUTSIDE the timer, like the server does.
+      val (_, stats) = best {
+        val plan = eng.run(df, funnelAggQ)
         plan.funnel.get.collect()
         plan.funnelAggregations.foreach(_._2.collect())
-        val sec = (System.nanoTime() - t0) / 1e9
-        // Per-request cache lifecycle (ApiServer drains after each query):
-        // without this, Spark's plan-matching CacheManager would hand run
-        // N+1 the candidate-pass cache run N materialized, and the timed
-        // runs would measure a warm cross-request cache no serving path
-        // keeps. Drain OUTSIDE the timer, like the server does.
-        util.Caches.drain()
-        sec
       }
-      run() // warm
-      val sec = (1 to 2).map(_ => run()).min
       val planName = if (routed) "funnel3-agg-routed" else "funnel3-agg-window"
-      println(f"""{"plan": "$planName", "rows": $rows, "sec": $sec%.3f, """ +
-        f""""cores": $cpus, "layout": "$layout"}""")
+      p.emit(planName, stats, "rows" -> rows, "cores" -> cpus, "layout" -> layout)
     } else {
-      import query.QueryAst._
-      val steps = Seq("view", "click", "purchase").map(t =>
-        SequenceStep(Seq(
-          RowFilter("event_type", FilterOp.Eq, Scalar.Str(t)),
-          RowFilter("value", FilterOp.Gt, Scalar.Num(100)))))
-      val q = GraftQuery(None, Nil, None, Nil,
-        Some(Funnel(steps, None, Nil, Nil)))
       // Window plan pinned for the non-fast branch (the head-to-head's
       // window side; Auto routing would make both branches funnelCounts).
-      val eng = new engine.QueryEngine(engine.DatasetSpec("user_id", "ts"))
-        .withWindowPlan
       def funnelDf() =
-        if (funnelFast) operators.SequenceMatch.funnelCounts(df, "user_id", "ts", steps)
-        else eng.run(df, q).funnel.get
+        if (funnelFast) operators.SequenceMatch.funnelCounts(df, "user_id", "ts", funnel3)
+        else windowEngine.run(df, funnelQ).funnel.get
       val rows = df.count()
-      def run(): (Seq[Row], Double) = {
-        val t0 = System.nanoTime()
-        val out = funnelDf().collect().toSeq
-        (out, (System.nanoTime() - t0) / 1e9)
-      }
-      run() // warm
-      val (out, sec) = (1 to 2).map(_ => run()).minBy(_._2)
+      val (out, stats) = best(funnelDf().collect().toSeq)
       // Exchange count from the FINAL adaptive plan (the Initial Plan
       // section would double-count) — the bucketed layout must show one
       // fewer exchange (no pre-window shuffle of the 250M rows).
@@ -590,15 +472,11 @@ object Throughput {
       val finalPlan = fdf.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
       val exchanges = "(?m)Exchange".r.findAllIn(finalPlan).size
-      val perCore = rows / sec / cpus
-      val stepsStr = out.sortBy(_.getInt(0))
-        .map(r => s"[${r.getInt(0)}, ${r.getLong(1)}, ${r.getLong(2)}]")
-        .mkString("[", ", ", "]")
       val plan = if (funnelFast) "funnel3-fast" else "funnel3"
-      println(f"""{"plan": "$plan", "rows": $rows, "sec": $sec%.3f, """ +
-        f""""cores": $cpus, "rows_per_sec_per_core": ${perCore}%.0f, """ +
-        f""""exchanges": $exchanges, "steps": $stepsStr, "layout": "$layout"}""")
+      p.emit(plan, stats, "rows" -> rows, "cores" -> cpus,
+        "rows_per_sec_per_core" -> perCore(rows, stats), "exchanges" -> exchanges,
+        "steps" -> out.sortBy(_.getInt(0)).map(r => Seq(r.getInt(0), r.getLong(1), r.getLong(2))),
+        "layout" -> layout)
     }
-    spark.stop()
   }
 }

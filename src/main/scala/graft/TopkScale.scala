@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -18,34 +17,28 @@ import org.apache.spark.sql.streaming.Trigger
  * `max_state_rows` stays flat (near windows × buckets × m) while the
  * plain aggregation's grows with the key count.
  */
-object TopkScale {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(2000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8") // state sizing, see st_attribution
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object TopkScale extends Probe.Body {
+  override def confs(cpus: Int) = Map(
+    "spark.sql.shuffle.partitions" -> "8", // state sizing, see st_attribution
+    // Every trigger's progress, as in StreamScale.
+    "spark.sql.streaming.numRecentProgressUpdates" -> "100000")
+
+  def run(p: Probe.Run): Unit = {
+    val spark = p.spark
+    val sizes = if (p.args.nonEmpty) p.args.map(_.toLong) else Seq(2000000L, 10000000L)
 
     val spanSec = 6L * 3600L
     sizes.foreach { n =>
       val nKeys = n / 20
-      val root = s"/tmp/graft_topk_scale_$n"
-      def clean(): Unit = {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-        }
-        val fs = new java.io.File(root); if (fs.exists()) rm(fs)
-      }
-      clean()
-      // Time-ordered chunks (ascending mtime, one per trigger): chunk i
-      // covers event seconds [i, i+1) * span/nFiles. Zipf-ish keys so the
-      // heavy hitters are real; cardinality grows with n.
-      val nFiles = 24
+      val root = p.path(s"graft_topk_scale_$n")
+      p.delete(root)
+      // Time-ordered chunks (ascending mtime, one trigger per part file):
+      // chunk i covers event seconds [i, i+1) * span/nFiles. Zipf-ish keys
+      // so the heavy hitters are real; cardinality grows with n. Below 1M
+      // events a run is a smoke run: 6 hourly chunks of one part each
+      // (6 triggers) instead of 24 chunks of 4 parts (96 triggers).
+      val small = n < 1000000L
+      val nFiles = if (small) 6 else 24
       val chunk = n / nFiles
       (0 until nFiles).foreach { i =>
         val lo = i * chunk; val hi = if (i == nFiles - 1) n else (i + 1) * chunk
@@ -54,38 +47,33 @@ object TopkScale {
             concat(lit("k"), pmod(col("id") * col("id"), lit(nKeys))).as("key0"),
             timestamp_seconds(lit(1704067200L) +
               (col("id") * spanSec / n)).as("ts"))
-          .coalesce(4)
+          .coalesce(if (small) 1 else 4)
           .write.mode("append").parquet(s"$root/events")
       }
       val schema = spark.read.parquet(s"$root/events").schema
       def stream() = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$root/events")
 
-      def runToNoop(df: org.apache.spark.sql.DataFrame, mode: String): (Double, Long, Int) = {
-        val t0 = System.nanoTime()
-        val q = df.writeStream.format("noop").outputMode(mode)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val wall = (System.nanoTime() - t0) / 1e9
+      def runToNoop(label: String, df: org.apache.spark.sql.DataFrame, mode: String): Unit = {
+        val (q, stats) = p.measure {
+          val q = df.writeStream.format("noop").outputMode(mode)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          q
+        }
         val progress = q.recentProgress.toSeq
-        (wall,
-          progress.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L),
-          progress.size)
+        p.emit(label, stats, "n" -> n, "keys" -> nKeys, "batches" -> progress.size,
+          "max_state_rows" ->
+            progress.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L))
       }
 
-      val (ssWall, ssState, ssBatches) = runToNoop(
-        streaming.StreamingTopK.heavyHitters(
-          stream(), "ts", "key0", "1 hour", "30 minutes", m = 64, buckets = 8).toDF(),
+      runToNoop("space_saving", streaming.StreamingTopK.heavyHitters(
+        stream(), "ts", "key0", "1 hour", "30 minutes", m = 64, buckets = 8).toDF(),
         "update")
-      val (plainWall, plainState, _) = runToNoop(
-        stream().withWatermark("ts", "30 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("key0")).count(),
+      runToNoop("plain", stream().withWatermark("ts", "30 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("key0")).count(),
         "append")
-      clean()
-      println(f"""{"n": $n, "keys": $nKeys, "batches": $ssBatches, """ +
-        f""""ss_wall_sec": $ssWall%.1f, "ss_max_state_rows": $ssState, """ +
-        f""""plain_wall_sec": $plainWall%.1f, "plain_max_state_rows": $plainState}""")
+      p.delete(root)
     }
-    spark.stop()
   }
 }

@@ -62,7 +62,7 @@ object ExecutionProfile {
 
   /** Inputs whose part files add up to fewer bytes than this run in the
     * one-task [[Interpreted]] profile, from a resident copy. Measured with
-    * `graft.ServingScale crossover` (BENCH.md §"Execution profile
+    * `graft.Probe ServingScale crossover` (BENCH.md §"Execution profile
     * crossover"): the resident copy answered the nine dashboard shapes in
     * 0.93× the parallel file scan's time at 0.95 MB and 1.07× at 1.32 MB;
     * the constant is the two sizes' geometric mean, rounded down to a
@@ -71,7 +71,7 @@ object ExecutionProfile {
 
   /** Inputs whose part files add up to fewer bytes than this (and at
     * least [[ResidentMaxBytes]]) run in [[InterpretedParallel]]. Measured
-    * with `graft.ServingScale crossover` (BENCH.md §"Execution profile
+    * with `graft.Probe ServingScale crossover` (BENCH.md §"Execution profile
     * crossover"): the parallel interpreted profile answered the nine
     * dashboard shapes in 0.60× codegen's time at 1.9 MB and 1.17× at
     * 17 MB; the constant is the two sizes' geometric mean, rounded down

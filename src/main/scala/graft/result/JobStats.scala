@@ -1,8 +1,12 @@
 package graft.result
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -14,6 +18,14 @@ import org.apache.spark.sql.SparkSession
  * query execution.
  */
 object JobStats {
+
+  /** One Spark job of a measurement: wall time from the job's start event
+    * to its end event, and the tasks of its stages that ran (a stage an
+    * earlier job already computed is skipped and counts none). */
+  final case class Job(id: Int, description: String, wallMs: Long, tasks: Int)
+
+  /** One completed stage of a measurement; `name` is its call site. */
+  final case class Stage(id: Int, name: String, wallMs: Long, tasks: Int)
 
   /** `rowsScanned` and `bytesScanned` are the tasks' input records and
     * bytes: Parquet rows and bytes read, or, for a resident copy
@@ -28,16 +40,21 @@ object JobStats {
       bytesScanned: Long,
       shuffleBytesWritten: Long,
       peakExecutionMemory: Long,
-      executorRunMs: Long) {
+      executorRunMs: Long,
+      jobs: Seq[Job] = Nil,
+      stages: Seq[Stage] = Nil) {
     /** Engine-appropriate analog of the reference's per-query cost estimate
       * (invoker/stats_builder.py:42+, api.md "cost"): the reference prices
       * Lambda GB-seconds; on Spark the billable unit is executor-core time,
       * so report summed task run time as core-seconds. Cluster $/query =
       * coreSecs x the deployment's per-core-second rate. */
     def coreSecs: Double = executorRunMs / 1000.0
+    /** Wall time outside every job: planning, driver-side collects and
+      * result shaping (the reference's invoke-vs-task split). */
+    def driverGapMs: Long = wallTimeMs - jobs.map(_.wallMs).sum
     /** Key → rendered-JSON-value pairs — callers composing a larger object
       * (ApiServer's stats block) append their own pairs instead of slicing
-      * the serialized string. */
+      * the serialized string. The job and stage records are not rendered. */
     def fields: Seq[(String, String)] = Seq(
       "wallTimeMs" -> wallTimeMs.toString,
       "tasks" -> tasks.toString,
@@ -81,7 +98,8 @@ object JobStats {
     * stage ids at job start and counts ONLY tasks of those stages — so
     * concurrent queries (ApiServer's async/stream paths) no longer
     * cross-attribute rowsScanned/coreSecs, the cost basis (reference
-    * parity: invoker/stats_builder.py prices each job's own tasks). */
+    * parity: invoker/stats_builder.py prices each job's own tasks). The
+    * same attribution yields the measurement's job and stage records. */
   def measure[T](spark: SparkSession)(body: => T): (T, Snapshot) = {
     val tasks = new AtomicInteger
     val rows = new AtomicLong
@@ -90,14 +108,39 @@ object JobStats {
     val peak = new AtomicLong
     val runMs = new AtomicLong
     val measureId = s"m${measureSeq.incrementAndGet()}"
-    val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    // Every stage of this measurement's jobs, mapped to the first job that
+    // lists it: the job that runs it, since a later job reusing its output
+    // skips it.
+    val stageJob = new ConcurrentHashMap[Int, Int]()
+    val jobStarts = new ConcurrentHashMap[Int, SparkListenerJobStart]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val stages = new ConcurrentHashMap[Int, Stage]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(MeasureIdKey) == measureId)
-          e.stageIds.foreach(id => myStages.add(id))
+        if (e.properties != null && e.properties.getProperty(MeasureIdKey) == measureId) {
+          e.stageIds.foreach(id => stageJob.putIfAbsent(id, e.jobId))
+          jobStarts.put(e.jobId, e)
+        }
+      // Stage completions are posted before their job's end, so the job's
+      // stages are all recorded by the time it ends.
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobStarts.remove(e.jobId)).foreach { s =>
+          val desc = Option(s.properties.getProperty("spark.job.description"))
+            .orElse(Option(s.properties.getProperty("callSite.short"))).getOrElse("?")
+          val ran = s.stageIds.filter(id => stageJob.get(id) == e.jobId)
+          jobs.add(Job(e.jobId, desc, e.time - s.time,
+            ran.flatMap(id => Option(stages.get(id))).map(_.tasks).sum))
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        if (stageJob.containsKey(si.stageId))
+          stages.put(si.stageId, Stage(si.stageId, si.name.takeWhile(_ != '\n'),
+            (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(0L),
+            si.numTasks))
+      }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
-        if (m != null && myStages.contains(e.stageId)) {
+        if (m != null && stageJob.containsKey(e.stageId)) {
           tasks.incrementAndGet()
           rows.addAndGet(m.inputMetrics.recordsRead)
           bytes.addAndGet(m.inputMetrics.bytesRead)
@@ -127,7 +170,8 @@ object JobStats {
       // arrived, the same contract the bounded polling loop had.
       org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 5000)
       (result, Snapshot((System.nanoTime() - t0) / 1000000, tasks.get(),
-        rows.get(), bytes.get(), shuffle.get(), peak.get(), runMs.get()))
+        rows.get(), bytes.get(), shuffle.get(), peak.get(), runMs.get(),
+        jobs.asScala.toSeq.sortBy(_.id), stages.values.asScala.toSeq.sortBy(_.id)))
     } finally {
       spark.sparkContext.setLocalProperty(MeasureIdKey, outerId)
       spark.sparkContext.removeSparkListener(listener)

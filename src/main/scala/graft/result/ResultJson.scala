@@ -73,7 +73,7 @@ object ResultJson {
     }
   }
 
-  private def jsonValue(v: Any): String = v match {
+  private[graft] def jsonValue(v: Any): String = v match {
     case null                => "null"
     case s: String           => quote(s)
     case b: Boolean          => b.toString

@@ -16,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
  * cleaner reclaims them on JVM exit).
  *
  * **Ownership** (r15): the registry is scope-aware. Single-threaded
- * callers (Bench, Verify, CLI, the scale probes) use the process-global
- * bin and call [[drain]] between queries, exactly as before. A server
+ * callers (Bench, Verify, CLI) use the process-global bin and call
+ * [[drain]] between queries; each scale probe runs in its own scope
+ * (`graft.Probe`) and drains that scope between its sizes. A server
  * executing queries CONCURRENTLY (ApiServer's async/stream paths each run
  * on their own thread) wraps each query in [[scoped]]: every frame the
  * query retains lands in a bin owned by that query's thread, and leaving
@@ -96,17 +97,19 @@ object Caches {
       case _ => ()
     }
 
-  /** Unpersist every GLOBALLY retained dataset and clear the global
-    * registry — frames inside an active [[scoped]] bin belong to their
-    * scope and are untouched. Blocking: callers drain between measured
-    * queries (Bench) or between batches (Verify), and a non-blocking
-    * unpersist lets one query's block cleanup churn leak into the next
-    * measurement (observed 1.5-4x in-battery inflation at sf0.1). */
+  /** Unpersist every dataset in the calling thread's bin — its innermost
+    * [[scoped]] bin if one is active, else the global one — and clear that
+    * bin; other scopes' frames are untouched. Blocking: callers drain
+    * between measured queries (Bench, the probes) or between batches
+    * (Verify), and a non-blocking unpersist lets one query's block cleanup
+    * churn leak into the next measurement (observed 1.5-4x in-battery
+    * inflation at sf0.1). */
   def drain(): Unit = synchronized {
-    bin.foreach { ds =>
+    val mine = currentBin
+    mine.foreach { ds =>
       ds.unpersist(blocking = true)
       freeCheckpoint(ds) // tracked checkpoint-backed frames free here
     }
-    bin.clear()
+    mine.clear()
   }
 }

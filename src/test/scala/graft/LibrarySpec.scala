@@ -768,6 +768,25 @@ class LibrarySpec extends SparkSpec {
     assert(stats.tasks >= 1200, s"expected all 1200 tasks counted, got ${stats.tasks}")
   }
 
+  test("job stats record each job and stage of the measured body, not in the stats keys") {
+    val (_, first) = graft.result.JobStats.measure(spark)(spark.range(100).count())
+    val (_, stats) = graft.result.JobStats.measure(spark) {
+      spark.sparkContext.setJobDescription("two-stage count")
+      try spark.range(0, 4000, 1, 4).repartition(3).selectExpr("id % 5 AS k")
+        .groupBy("k").count().collect()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    assert(stats.jobs.nonEmpty && stats.stages.size >= 2, s"$stats")
+    assert(stats.jobs.map(_.id).intersect(first.jobs.map(_.id)).isEmpty,
+      "a measurement must not see an earlier one's jobs")
+    assert(stats.jobs.forall(_.description == "two-stage count"), s"${stats.jobs}")
+    // Each ran task belongs to exactly one stage record and one job record.
+    assert(stats.stages.map(_.tasks).sum == stats.tasks, s"$stats")
+    assert(stats.jobs.map(_.tasks).sum == stats.tasks, s"$stats")
+    assert(stats.fields.map(_._1) == Seq("wallTimeMs", "tasks", "rowsScanned",
+      "bytesScanned", "shuffleBytesWritten", "peakExecutionMemory", "coreSecs"))
+  }
+
   test("job stats attribute metrics per measurement under concurrency (r15)") {
     // Two measurements racing on their own threads (ApiServer's async
     // regime): each must count ONLY its own tasks. Pre-r15 the listener
@@ -810,6 +829,23 @@ class LibrarySpec extends SparkSpec {
     }
     assert(sJoin.rowsScanned == 55000,
       s"broadcast build side must be attributed (50000+5000), got ${sJoin.rowsScanned}")
+  }
+
+  test("Caches.drain inside a scope releases only that scope's frames") {
+    import org.apache.spark.storage.StorageLevel
+    val global = spark.range(300).toDF("g").filter("g >= 0")
+    val scoped = spark.range(400).toDF("s").filter("s >= 0")
+    graft.util.Caches.retain(global)
+    try {
+      graft.util.Caches.scoped {
+        graft.util.Caches.retain(scoped)
+        graft.util.Caches.drain()
+        assert(scoped.storageLevel == StorageLevel.NONE)
+        assert(global.storageLevel != StorageLevel.NONE)
+      }
+      assert(global.storageLevel != StorageLevel.NONE)
+    } finally graft.util.Caches.drain()
+    assert(global.storageLevel == StorageLevel.NONE)
   }
 
   test("Caches.scoped: a query's exit drains only its own frames (r15)") {

@@ -2,6 +2,7 @@
 # Run a graft main class with the same JVM setup sbt's forked runs use
 # (JDK17 add-opens for Spark 4, UTC, no UI). Usage:
 #   tools/run_main.sh graft.Verify /root/testdata/sf0.001 /tmp/verify_out
+#   tools/run_main.sh graft.Probe Throughput 2500 bucketed
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SCALA_LIB=$(find "$HOME/.cache/coursier" "$HOME/.ivy2" -name 'scala-library-2.13*.jar' 2>/dev/null | head -1 || true)
