@@ -21,8 +21,9 @@ import org.apache.spark.storage.StorageLevel
  * exercising transitivity through the survivor components), one third are
  * unique.
  *
- * Args: corpus sizes (default 200000, 1000000); batch is
- * `GRAFT_BATCH` docs (default 20000) at every corpus size.
+ * Args: corpus sizes (default 200000, 1000000); batch is a tenth of the
+ * corpus, capped at `GRAFT_BATCH` docs (default 20000, which both
+ * default sizes reach).
  */
 object IncrementalScale extends Probe.Body {
   def run(p: Probe.Run): Unit = {
@@ -103,6 +104,6 @@ object IncrementalScale extends Probe.Body {
     // measured corpus.
     val w = math.min(50000L, sizes.min)
     run(w, w / 10, warmup = true)
-    sizes.foreach(n => run(n, batchN, warmup = false))
+    sizes.foreach(n => run(n, math.min(batchN, n / 10), warmup = false))
   }
 }

@@ -584,8 +584,7 @@ object Catalog {
     * pressure, and lost blocks recompute from the part files.
     * Re-registration, [[unregister]] and a failed registration release it.
     * Rejected alternatives, measured: one shuffle partition without the
-    * copy (fewer tasks, latency inside the noise), one action per query
-    * (no gain on top of the copy), and the copy up to
+    * copy (fewer tasks, latency inside the noise), and the copy up to
     * `InterpretedMaxBytes` (one task loses to the parallel file scan from
     * about a megabyte of Parquet up; BENCH.md §"Resident single-partition
     * copy"). */

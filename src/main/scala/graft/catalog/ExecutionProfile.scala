@@ -17,10 +17,10 @@ import org.apache.spark.sql.SparkSession
  *  - [[ExecutionProfile.Interpreted]]: a second such child that also uses
  *    one shuffle partition. Its datasets, unless day-partitioned, load as
  *    a resident copy (`Catalog.load`): one persisted partition, so queries
- *    plan no exchange and run one task per action. The few exchanges a
- *    plan still needs (the `Expand` behind multi-distinct counts, the
- *    routed plan's explicit repartition) run one task each instead of one
- *    per core.
+ *    plan no exchange and run one task per output frame, all in the
+ *    query's one job (`graft.result.ResultJson`). The few exchanges a
+ *    plan still needs (the routed plan's explicit repartition) run one
+ *    task each instead of one per core.
  *
  * Why a small input wants an interpreted profile: Spark inlines numeric
  * literals into generated code, so every new literal is a new class, and
@@ -42,13 +42,14 @@ import org.apache.spark.sql.SparkSession
  * a megabyte of Parquet up the parallel work wins again: the resident
  * copy answered the nine dashboard shapes in 1.07× the parallel file
  * scan's time at 1.3 MB and 1.14-1.49× at 1.9 MB, and one shuffle
- * partition over the part files lost as much. Measured alternatives on
- * the smallest inputs were one shuffle partition over the files (fewer
- * tasks, latency within the noise) and folding each query into one
- * action (no gain once the copy is resident). The cost is memory: one
- * copy per live registration under [[ExecutionProfile.ResidentMaxBytes]],
- * which Spark's storage LRU spills to disk under pressure (BENCH.md
- * §"Resident single-partition copy").
+ * partition over the part files lost as much. One shuffle partition over
+ * the files, without the copy, was measured as an alternative (fewer
+ * tasks, latency within the noise). Folding each query's output frames
+ * into one action pays off on every profile: one job and one planner
+ * pass in place of one per frame (BENCH.md §"One job per served query").
+ * The cost of the copy is memory: one copy per live registration under
+ * [[ExecutionProfile.ResidentMaxBytes]], which Spark's storage LRU spills
+ * to disk under pressure (BENCH.md §"Resident single-partition copy").
  *
  * Input without a recorded size (a registration persisted before the size
  * was recorded) keeps the codegen profile.
@@ -84,10 +85,20 @@ object ExecutionProfile {
     case _                                  => Codegen
   }
 
+  // Subexpression elimination off: an interpreted projection with it on
+  // resets a cache of common subexpressions on every row, even when the
+  // projection has none. Union output partitioning off: `ResultJson`
+  // collects a query's output frames as branches of one union, and over
+  // the resident copy every branch is one partition, which Spark would
+  // otherwise zip into a single task that computes the branches one after
+  // another. Each setting alone, turned back on, slowed the dashboard
+  // queries (BENCH.md §"One job per served query").
   private val InterpretedConf = Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.subexpressionElimination.enabled" -> "false",
+    "spark.sql.unionOutputPartitioning" -> "false")
 
   /** The interpreted children of each host session, one per profile. Weak
     * keys: a child holds no reference back, so once nothing else holds a

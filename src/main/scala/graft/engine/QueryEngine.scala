@@ -710,9 +710,10 @@ final class QueryEngine(spec: DatasetSpec,
   /**
    * Funnel (reference F1-F4, engine/query_engine.py:294-321): over the rows of
    * condition-matching groups, compute per-step passed flags with the same
-   * chained-window machinery, then aggregate all steps in ONE pass:
-   * `count_distinct(when(passed_i, gid))` / `sum(when(passed_i, 1))` per step,
-   * unpivoted to (step, step_groups, step_rows) rows.
+   * chained-window machinery, then aggregate all steps in ONE pass: per
+   * group its row count and each step's flag, then per step the groups
+   * and rows whose flag holds, unpivoted to (step, step_groups, step_rows)
+   * rows.
    */
   private def planFunnel(rows: DataFrame, f: Funnel): (Option[DataFrame], Seq[(String, DataFrame)]) = {
     var cur = rows
@@ -749,16 +750,24 @@ final class QueryEngine(spec: DatasetSpec,
     val flagged = stepPassed.zipWithIndex.foldLeft(cur) { case (d, (p, j)) =>
       d.withColumn(s"__f_p$j", p)
     }
+    // Every step flag is constant within a group, so count per group
+    // first (each flag, and the group's rows), then sum over the groups:
+    // the group-by keeps the window's partitioning, where one distinct
+    // count per step would plan an Expand of (steps + 1)× the rows and a
+    // shuffle of it. A null gid is one group here, as in the window: its
+    // rows count, but not as a group, as count_distinct skips it.
+    val perGroup = flagged.groupBy(col(gid)).agg(count(lit(1)).as("__n"),
+      (0 until n).map(j => max(col(s"__f_p$j")).as(s"__p$j")): _*)
     val aggExprs = (0 until n).flatMap { j =>
       Seq(
-        count_distinct(when(col(s"__f_p$j"), col(gid))).as(s"__g$j"),
+        count(when(col(s"__p$j") && col(gid).isNotNull, lit(1))).as(s"__g$j"),
         // coalesce: sum over an EMPTY matched set is NULL, but a funnel
         // over zero rows counts zero (reference: per-part ints, empty
         // part → 0) — and the serving JSON reads these as longs
         // (r16 fuzz-caught: ResultJson crashed on the NULL).
-        coalesce(sum(when(col(s"__f_p$j"), 1L).otherwise(0L)), lit(0L)).as(s"__r$j"))
+        coalesce(sum(when(col(s"__p$j"), col("__n"))), lit(0L)).as(s"__r$j"))
     }
-    val one = flagged.agg(aggExprs.head, aggExprs.tail: _*)
+    val one = perGroup.agg(aggExprs.head, aggExprs.tail: _*)
     val stepStructs = (0 until n).map { j =>
       struct(lit(j).as("step"), col(s"__g$j").as("step_groups"), col(s"__r$j").as("step_rows"))
     }

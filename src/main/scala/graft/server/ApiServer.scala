@@ -68,9 +68,11 @@ import graft.result.{JobStats, ResultJson}
  * cache of its own. Over a copy, the stats block's `rowsScanned` counts
  * the rows read from it and `bytesScanned` the size of its blocks as
  * Spark's block manager accounts it, not Parquet bytes. Measured and
- * rejected: one shuffle partition over the files alone, and one action
- * per query (BENCH.md §"Resident single-partition copy"). Nothing here
- * is user-settable.
+ * rejected: one shuffle partition over the files alone (BENCH.md
+ * §"Resident single-partition copy"). Every query, on every profile, is
+ * one SQL execution and one Spark job over the union of its output
+ * frames (`ResultJson`; BENCH.md §"One job per served query"). Nothing
+ * here is user-settable.
  */
 final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int = 0,
                       catalogStore: Option[String] = None,

@@ -1442,10 +1442,99 @@ class ApiServerSpec extends SparkSpec {
         assert(p.find(_.isInstanceOf[WholeStageCodegenExec]).isEmpty, p.treeString)
         assert(p.find(_.isInstanceOf[ShuffleExchangeExec]).isEmpty, p.treeString)
       }
-      // Served from the resident copy: each action (the summary, then the
-      // aggregation) runs one stage of one task.
-      assert(tasks == plans.size, s"$tasks tasks for ${plans.size} actions")
+      // Served from the resident copy in one action, whose one stage runs
+      // one task per output frame (the summary, then the aggregation).
+      assert(plans.size == 1, s"${plans.size} actions")
+      assert(tasks == 2, s"$tasks tasks for two output frames")
     } finally Catalog.unregister("evinterp")
+  }
+
+  test("a query with every kind of output frame runs one SQL execution and one job") {
+    import graft.catalog.{Catalog, ExecutionProfile}
+    import graft.result.ResultJson
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val dir = java.nio.file.Files.createTempDirectory("evfold").toString
+    spark.range(2000)
+      .selectExpr("id % 50 AS user_id", "id AS ts", "CAST(id % 997 AS DOUBLE) AS value",
+        "IF(id % 3 = 0, 'view', 'click') AS event_type", "CAST(id % 4 AS STRING) AS tier")
+      .write.mode("overwrite").parquet(dir)
+    val reg = post("/datasets/register",
+      s"""{"name": "evfold", "basepath": "$dir",
+         | "groupIdColumn": "user_id", "timestampColumn": "ts"}""".stripMargin)
+    assert(reg.statusCode() == 200, reg.body())
+    // Conditions, a scalar count, a top-K whose four values tie (500 rows
+    // each, so the value order decides), and a funnel with step and end
+    // aggregations: seven output frames.
+    val query =
+      """{"query": {"conditions": [{"filters": [["value", ">", 12.5]],
+        |  "target": ["count", ">=", 3]}],
+        | "aggregations": [{"column": "value", "type": "count"},
+        |   {"column": "tier", "type": "countPerValue", "top": 3}]},
+        | "funnel": {"sequence": [{"filter": ["event_type", "==", "view"]},
+        |   {"filter": ["event_type", "==", "click"]}],
+        |  "stepAggregations": [{"column": "tier", "type": "countPerValue", "top": 2}],
+        |  "endAggregations": [{"column": "value", "type": "count"}]}}""".stripMargin
+    // (every job, result jobs). Only a result job runs result tasks: the
+    // other jobs are those adaptive execution runs to materialize shuffles.
+    def jobsOf(body: => Unit): (Int, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val resultStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ResultTask") resultStages.add(e.stageId)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      (jobs.get, resultStages.size)
+    }
+    try {
+      val ds = Catalog.get("evfold").get
+      assert(ds.profile == ExecutionProfile.Interpreted)
+      var served: JValue = JNothing
+      var jobs = (-1, -1)
+      val plans = capturePlans(ExecutionProfile.session(spark, ExecutionProfile.Interpreted)) {
+        jobs = jobsOf {
+          val r = post("/datasets/evfold/query", query)
+          assert(r.statusCode() == 200, r.body())
+          served = JsonMethods.parse(r.body())
+        }
+      }
+      assert((served \ "stats" \ "profile") == JString("interpreted"), JsonMethods.compact(served))
+      assert(plans.size == 1 && jobs == (1, 1), s"${plans.size} SQL executions, $jobs jobs")
+      // The funnel counts its steps per group: no Expand, and so no
+      // exchange, over the one resident partition.
+      plans.foreach { p =>
+        assert(p.find(_.isInstanceOf[ExpandExec]).isEmpty, p.treeString)
+        assert(p.find(_.isInstanceOf[ShuffleExchangeExec]).isEmpty, p.treeString)
+      }
+      // Compact strings, not JValues: JObject equality ignores key order.
+      val answer = JsonMethods.compact(served.removeField { case (k, _) => k == "stats" })
+      assert(answer.contains(""""values":{"0":500,"1":500,"2":500}"""), answer)
+
+      // The same query on the codegen profile (the registration loaded
+      // without a recorded size): one SQL execution and one result job,
+      // after the shuffle-stage jobs of adaptive execution.
+      val codegenDf = Catalog.load(spark, ds.copy(totalBytes = None))
+      val engine = ApiServer.engine(ds, None)
+      var codegen = ""
+      val codegenPlans = capturePlans(spark) {
+        jobs = jobsOf(graft.util.Caches.scoped {
+          codegen = JsonMethods.compact(JsonMethods.parse(ResultJson.build(
+            engine.runValidated(codegenDf, graft.query.QueryParser.parse(query)))))
+        })
+      }
+      assert(codegenPlans.size == 1 && jobs._2 == 1,
+        s"${codegenPlans.size} SQL executions, ${jobs._2} result jobs of ${jobs._1}")
+      assert(codegen == answer)
+    } finally Catalog.unregister("evfold")
   }
 
   test("execution profile: a registration past the resident size reads its files in parallel, interpreted") {

@@ -135,6 +135,18 @@ class ServingFuzzSpec extends SparkSpec {
           s"seed=$Seed q$i: codegen and interpreted profiles disagree\nquery: $q")
       }
 
+      // ---- on both profiles, the rows ResultJson collects for each output
+      // frame through its one union equal, in order, the frame's own
+      // collect.
+      for ((profile, df) <- Seq("interpreted" -> Catalog.load(spark, ds), "codegen" -> codegenDf);
+           (q, i) <- queries.zipWithIndex) graft.util.Caches.scoped {
+        val plan = engine.runValidated(df, graft.query.QueryParser.parse(q))
+        val folded = ResultJson.frameRows(plan).map(_.toSeq)
+        val perFrame = ResultJson.frames(plan).map(_.collect().toSeq)
+        assert(folded == perFrame,
+          s"seed=$Seed q$i $profile: the union's frames differ from their own collects\nquery: $q")
+      }
+
       // ---- concurrent pass: fresh registration (all keys cold), every
       // query submitted twice to the async pool, interleaved.
       register()
