@@ -27,14 +27,15 @@ import graft.result.JobStats
  * Prints one JSON line per phase (BENCH.md §"Serving-path latency floor").
  *
  * `ServingScale crossover [--reps N] <dir>...` instead times uncached
- * queries of nine dashboard shapes on all three execution profiles
- * (`graft.catalog.ExecutionProfile`: codegen, interpreted over the part
- * files in parallel, and one-task interpreted over the resident copy)
- * over each events directory, e.g. the query-service benchmark's
- * generator output at several row counts. Each repetition draws fresh
+ * queries of nine dashboard shapes on the three layouts a registration
+ * can be served from (`graft.catalog.Catalog.load`: codegen over the part
+ * files, and the interpreted profile's resident copy hashed by group id
+ * and in one partition) over each events directory, e.g. the
+ * query-service benchmark's generator output at several row counts. Each repetition draws fresh
  * literals, so the codegen profile compiles as a first-seen query does;
- * every profile must give the same answer. Prints a table and one JSON
- * line per shape and profile (BENCH.md §"Execution profile crossover").
+ * every layout must give the same answer. Prints a table, each copy's
+ * size in the block manager, and one JSON line per shape and layout
+ * (BENCH.md §"Execution profile crossover", §"One interpreted profile").
  */
 object ServingScale extends Probe.Body {
   // The battery's serving shape: one shuffle partition per core.
@@ -235,60 +236,65 @@ object ServingScale extends Probe.Body {
     }
     require(dirs.nonEmpty, "usage: ServingScale crossover [--reps N] <events dir>...")
     val spark = p.spark
-    import ExecutionProfile.{Codegen, Interpreted, InterpretedParallel}
-    val profiles: Seq[ExecutionProfile] = Seq(Codegen, InterpretedParallel, Interpreted)
-    // A recorded size that picks each profile (no size keeps codegen).
-    val sizeFor: Map[ExecutionProfile, Option[Long]] = Map(Codegen -> None,
-      InterpretedParallel -> Some(ExecutionProfile.ResidentMaxBytes), Interpreted -> Some(0L))
-    val label: Map[ExecutionProfile, String] =
-      Map(Codegen -> "codegen", InterpretedParallel -> "parallel", Interpreted -> "resident")
+    // A recorded size that picks each layout: no size keeps codegen's file
+    // scan, the others pick the interpreted profile's two copies.
+    val layouts = Seq("codegen" -> None, "hashed" -> Some(ExecutionProfile.ResidentMaxBytes),
+      "one-partition" -> Some(0L))
+    val labels = layouts.map(_._1)
     dirs.foreach { dir => try {
       val ds = Catalog.register(spark, "crossover", dir, "user_id", "ts")
       // The production load path, with the recorded size overridden so
-      // each profile reads the same files.
-      val handles = profiles.map(p => p -> Catalog.load(spark, ds.copy(totalBytes = sizeFor(p)))).toMap
+      // each layout reads the same files.
+      val handles = layouts.map { case (l, size) => l -> Catalog.load(spark, ds.copy(totalBytes = size)) }.toMap
       val engine = graft.server.ApiServer.engine(ds, None)
-      def run(prof: ExecutionProfile, json: String) = p.measure {
+      def run(layout: String, json: String) = p.measure {
         val parsed = graft.query.QueryParser.parse(json)
         graft.query.SchemaValidator.validateTimeframeScale(parsed, ds.minTimestamp, ds.maxTimestamp)
         graft.util.Caches.scoped(
-          graft.result.ResultJson.build(engine.runValidated(handles(prof), parsed)))
+          graft.result.ResultJson.build(engine.runValidated(handles(layout), parsed)))
       }
       // One warm-up repetition on literals the timed ones never draw.
-      shapes(1000).foreach { case (_, json) => profiles.foreach(run(_, json)) }
-      val runs = scala.collection.mutable.Map.empty[(String, ExecutionProfile), Seq[JobStats.Snapshot]]
+      shapes(1000).foreach { case (_, json) => labels.foreach(run(_, json)) }
+      val runs = scala.collection.mutable.Map.empty[(String, String), Seq[JobStats.Snapshot]]
         .withDefaultValue(Seq.empty)
       for (r <- 0 until reps; (shape, json) <- shapes(r)) {
-        // Rotate which profile goes first, so drift hits all alike.
-        val order = profiles.drop(r % profiles.size) ++ profiles.take(r % profiles.size)
-        val answers = order.map { prof =>
-          val (a, stats) = run(prof, json)
-          runs((shape, prof)) = runs((shape, prof)) :+ stats
+        // Rotate which layout goes first, so drift hits all alike.
+        val order = labels.drop(r % labels.size) ++ labels.take(r % labels.size)
+        val answers = order.map { layout =>
+          val (a, stats) = run(layout, json)
+          runs((shape, layout)) = runs((shape, layout)) :+ stats
           a
         }
-        require(answers.distinct.size == 1, s"profiles disagree on $shape r=$r: $answers")
+        require(answers.distinct.size == 1, s"layouts disagree on $shape r=$r: $answers")
       }
       def median(xs: Seq[Double]): Double = {
         val s = xs.sorted
         if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
       val names = shapes(0).map(_._1)
-      val rows = names.map(n => n -> profiles.map(prof =>
-        median(runs((n, prof)).map(_.wallTimeMs.toDouble))))
-      val sums = profiles.indices.map(i => rows.map(_._2(i)).sum)
+      val rows = names.map(n => n -> labels.map(l =>
+        median(runs((n, l)).map(_.wallTimeMs.toDouble))))
+      val sums = labels.indices.map(i => rows.map(_._2(i)).sum)
       def line(label: String, v: Seq[Double]): String =
-        f"[crossover]   $label%-18s" + v.map(x => f"$x%12.1f").mkString +
+        f"[crossover]   $label%-18s" + v.map(x => f"$x%14.1f").mkString +
           f"  ${v(1) / v(0)}%5.2f ${v(2) / v(0)}%5.2f ${v(2) / v(1)}%5.2f"
       println(f"[crossover] $dir: ${ds.numRows} rows, ${ds.totalBytes.get} bytes, $reps reps")
-      println(f"[crossover]   ${"ms (median)"}%-18s" + profiles.map(prof => f"${label(prof)}%12s").mkString +
-        "  par/cg res/cg res/par")
+      println(f"[crossover]   ${"ms (median)"}%-18s" + labels.map(l => f"$l%14s").mkString +
+        "  hsh/cg one/cg one/hsh")
       rows.foreach { case (n, v) => println(line(n, v)) }
       println(line("sum of medians", sums))
-      // One line per shape and profile: its median-wall run.
-      for (n <- names; prof <- profiles)
-        p.emit("crossover", runs((n, prof)).sortBy(_.wallTimeMs).apply(reps / 2),
+      // Each copy's deserialized size, from the block manager.
+      val mb = ds.totalBytes.get / 1e6
+      spark.sparkContext.getRDDStorageInfo
+        .filter(_.name.startsWith("resident copy of 'crossover'"))
+        .foreach(i => println(f"[crossover]   copy in ${i.numPartitions}%d partitions: " +
+          f"${i.memSize / 1e6}%.1f MB in memory, ${i.diskSize / 1e6}%.1f MB on disk, " +
+          f"${(i.memSize + i.diskSize) / 1e6 / mb}%.1f MB per Parquet MB"))
+      // One line per shape and layout: its median-wall run.
+      for (n <- names; l <- labels)
+        p.emit("crossover", runs((n, l)).sortBy(_.wallTimeMs).apply(reps / 2),
           "dir" -> dir, "rows" -> ds.numRows, "bytes" -> ds.totalBytes.get, "reps" -> reps,
-          "shape" -> n, "profile" -> label(prof))
+          "shape" -> n, "layout" -> l)
     } finally Catalog.unregister("crossover") }
   }
 }

@@ -29,10 +29,9 @@ import org.apache.spark.sql.types._
  * Registration also records the summed part-file size, which picks the
  * dataset's [[ExecutionProfile]]: its stats pass and every later
  * [[load]] run in that profile's session. The catalog memoises the
- * handles [[load]] returns, and a registration in the one-task
- * interpreted profile without a declared day partition also gets a
- * resident copy (see [[load]]), which the catalog builds, serves and
- * releases.
+ * handles [[load]] returns, and every registration in the interpreted
+ * profile is served from a resident copy laid out by group id (see
+ * [[load]]), which the catalog builds, serves and releases.
  */
 object Catalog {
 
@@ -142,50 +141,57 @@ object Catalog {
   /** What [[load]] has built for the current registration under each
     * name. Guarded by itself, and so is publishing a registration under a
     * name (`datasets` writes), so only the current registration's handles
-    * are memoised and a replaced registration's copy is released. */
+    * are memoised and a replaced registration's copies are released. */
   private val loaded = new java.util.HashMap[String, Loaded]()
 
   /** The handles loaded for one registration snapshot, one per host
-    * session and profile, and for a resident registration the persisted
-    * rows that all of its handles read. A handle holds its host's profile
-    * session, so both live until the registration is replaced or
-    * unregistered. */
+    * session and layout, and the resident copies they read, one per
+    * partition count. A handle holds its host's profile session, so both
+    * live until the registration is replaced or unregistered. */
   private final class Loaded(val registeredAt: Long) {
-    var rows: Option[RDD[InternalRow]] = None
-    val handles = new java.util.HashMap[(SparkSession, ExecutionProfile), DataFrame]()
-    def release(): Unit = rows.foreach(_.unpersist(blocking = false))
+    val copies = new java.util.HashMap[Int, RDD[InternalRow]]()
+    val handles = new java.util.HashMap[(SparkSession, Option[Int]), DataFrame]()
+    def release(): Unit = copies.values.forEach(_.unpersist(blocking = false))
   }
 
-  /** Whether a registration is served from a resident copy: one in the
-    * one-task interpreted profile (under `ExecutionProfile.ResidentMaxBytes`)
-    * that declares no day-partition column. A declared day partition keeps
-    * the file scan, whose queries prune whole day directories (the
-    * declaration's purpose, pinned in LibrarySpec). */
-  private def resident(profile: ExecutionProfile,
-                       dayPartitionColumn: Option[String]): Boolean =
-    profile == ExecutionProfile.Interpreted && dayPartitionColumn.isEmpty
+  /** The partitions of the resident copy serving an input of `totalBytes`:
+    * one under `ExecutionProfile.ResidentMaxBytes`, else one per core.
+    * None in the codegen profile, which scans the part files. */
+  private def copyPartitions(spark: SparkSession, totalBytes: Option[Long]): Option[Int] =
+    ExecutionProfile.forInput(totalBytes) match {
+      case ExecutionProfile.Codegen => None
+      case ExecutionProfile.Interpreted =>
+        Some(if (totalBytes.exists(_ < ExecutionProfile.ResidentMaxBytes)) 1
+             else spark.sparkContext.defaultParallelism)
+    }
 
-  /** The rows of `scan` (coalesced to one partition) persisted
-    * memory-and-disk, lazily: the first action that reads them fills the
-    * blocks. `persist`, not `localCheckpoint`: lost blocks recompute from
-    * lineage.
+  /** `scan` laid out by group id in `parts` partitions: one, reporting
+    * `SinglePartition`, or hashed, reporting `HashPartitioning(gid, parts)`.
+    * Either way no window or per-group aggregate over it needs an exchange. */
+  private def layout(scan: DataFrame, parts: Int, gid: String): DataFrame =
+    if (parts == 1) scan.coalesce(1) else scan.repartition(parts, col(gid))
+
+  /** The rows of `scan`, laid out in `parts` partitions by `gid`,
+    * persisted memory-and-disk, lazily: the first action that reads them
+    * fills the blocks. `persist`, not `localCheckpoint`: lost blocks
+    * recompute from lineage.
     *
     * The copy holds rows, scanned interpreted, rather than a CacheManager
     * entry (`Dataset.persist`): Spark's default cached-batch serializer
     * decodes string columns through `GenerateColumnAccessor`, generated
     * code the interpreted profile exists to avoid (two compiles on the
     * first query of a string-column dataset, measured). */
-  private def residentRows(scan: DataFrame, name: String,
+  private def residentRows(scan: DataFrame, parts: Int, gid: String, name: String,
                            basepath: String): RDD[InternalRow] =
-    org.apache.spark.sql.GraftResidentRows.persist(scan.coalesce(1),
+    org.apache.spark.sql.GraftResidentRows.persist(layout(scan, parts, gid),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       s"resident copy of '$name' ($basepath)")
 
-  /** A handle over resident `rows` in `scan`'s session. Its plan reports
-    * `SinglePartition`, so every window, group-by and final aggregate over
-    * it needs no exchange. */
-  private def residentFrame(rows: RDD[InternalRow], scan: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftResidentRows.frame(rows, scan.coalesce(1))
+  /** A handle over resident `rows` in `scan`'s session, reporting the
+    * partitioning of the layout they were built with. */
+  private def residentFrame(rows: RDD[InternalRow], scan: DataFrame, parts: Int,
+                            gid: String): DataFrame =
+    org.apache.spark.sql.GraftResidentRows.frame(rows, layout(scan, parts, gid))
 
   /** Release what was loaded for `name`, if anything. Call holding
     * `loaded`. */
@@ -194,16 +200,16 @@ object Catalog {
 
   /** Publish `ds` under its name, releasing what was loaded for the
     * registration it replaces and memoising `first`: the registering host
-    * session's handle over resident rows. */
+    * session's handle over a resident copy of the given partitions. */
   private def publish(ds: RegisteredDataset,
-                      first: Option[(SparkSession, DataFrame, RDD[InternalRow])]): Unit =
+                      first: Option[(SparkSession, Int, DataFrame, RDD[InternalRow])]): Unit =
     loaded.synchronized {
       datasets.put(ds.name, ds)
       release(ds.name)
-      first.foreach { case (host, df, rows) =>
+      first.foreach { case (host, parts, df, rows) =>
         val l = new Loaded(ds.registeredAt)
-        l.rows = Some(rows)
-        l.handles.put((host, ds.profile), df)
+        l.copies.put(parts, rows)
+        l.handles.put((host, Some(parts)), df)
         loaded.put(ds.name, l)
       }
     }
@@ -281,19 +287,14 @@ object Catalog {
     val profile = ExecutionProfile.forInput(Some(totalBytes))
     val session = prepare(ExecutionProfile.session(spark, profile))
     val sampled = chooseParts(allParts, mode)
-    // A Full-mode resident registration builds its copy here, and the
-    // stats and top-K passes read it (their first action fills it): one
-    // read of the part files serves registration and queries.
-    val copy =
-      if (mode == ValidationMode.Full && resident(profile, dayPartitionColumn)) {
-        val scan = read(session, basepath)
-        val rows = residentRows(scan, name, basepath)
-        Some((spark, residentFrame(rows, scan), rows))
-      } else None
+    // A Full-mode interpreted registration builds its copy once the group
+    // id is known to exist; the stats and top-K passes read (and so fill)
+    // it: one read of the part files serves registration and queries.
+    var copy: Option[(SparkSession, Int, DataFrame, RDD[InternalRow])] = None
     val ds = try {
-      val df = copy.map(_._2).getOrElse(graft.ops.Tables.tsToNanos(
-        if (mode == ValidationMode.Full) session.read.parquet(basepath)
-        else {
+      val scan =
+        if (mode == ValidationMode.Full) read(session, basepath)
+        else graft.ops.Tables.tsToNanos {
           // basePath keeps hive-style partition columns visible when reading
           // leaf part files directly — without it a partitioned dataset's
           // stats scan would drop columns the schema (read from the full
@@ -306,10 +307,10 @@ object Catalog {
           val rd = if (fs.getFileStatus(new org.apache.hadoop.fs.Path(basepath)).isDirectory)
             session.read.option("basePath", basepath) else session.read
           rd.parquet(sampled: _*)
-        }))
+        }
       // Schema AFTER ts normalization: registration classifies the columns the
       // engine will actually see (a TIMESTAMP-typed ts registers as Int).
-      val schema = (if (mode == ValidationMode.Full) df else read(session, basepath)).schema
+      val schema = (if (mode == ValidationMode.Full) scan else read(session, basepath)).schema
 
       def field(c: String): StructField =
         schema.find(_.name == c).getOrElse(
@@ -327,6 +328,13 @@ object Catalog {
         case other => throw RegistrationException(
           s"Timestamp column '$timestampColumn' must be numeric, got $other")
       }
+
+      if (mode == ValidationMode.Full)
+        copy = copyPartitions(spark, Some(totalBytes)).map { parts =>
+          val rows = residentRows(scan, parts, groupIdColumn, name, basepath)
+          (spark, parts, residentFrame(rows, scan, parts, groupIdColumn), rows)
+        }
+      val df = copy.fold(scan)(_._3)
 
       val classified = schema.fields.map(f => f.name -> classify(f.dataType))
       val columns = classified.collect { case (n, Some(t)) => n -> t }.toMap
@@ -504,7 +512,7 @@ object Catalog {
           else None,
         totalBytes = Some(totalBytes))
     } catch { case e: Throwable =>
-      copy.foreach(_._3.unpersist(blocking = false))
+      copy.foreach(_._4.unpersist(blocking = false))
       throw e
     }
     publish(ds, copy)
@@ -556,53 +564,48 @@ object Catalog {
     * (name, registeredAt)-keyed cache above.
     *
     * The handle is memoised per (name, registeredAt, host session,
-    * profile) for the current registration, checked before any footer is
+    * layout) for the current registration, checked before any footer is
     * read: the part files never change under a registration (updates
     * re-register, reference dataset.py:36-53), so a handle is the plan
     * over the listing captured at its first load. A replaced snapshot
-    * gets an unmemoised scan. Re-registration, [[unregister]] and
-    * [[clear]] drop the memo. The listing and footer reads of a first load
-    * run outside the memo's lock; when two loads race, the later one's
-    * copy is released and the memoised handle returned.
+    * gets an unmemoised scan of its part files in its profile's session.
+    * Re-registration, [[unregister]] and [[clear]] drop the memo. The
+    * listing and footer reads of a first load run outside the memo's
+    * lock; when two loads race, the later one's copy is released and the
+    * memoised handle returned.
     *
-    * A registration loads as a plain scan of its part files in its
-    * profile's session, except in the one-task `ExecutionProfile.Interpreted`
-    * profile (under `ExecutionProfile.ResidentMaxBytes`) without a declared
-    * day partition: that one loads as its resident copy, the rows of the
-    * normalized scan coalesced to one partition and persisted
-    * memory-and-disk. Its queries open no Parquet file and, as the copy's
-    * plan reports `SinglePartition`, shuffle nothing: the window stack,
-    * every group-by and every final aggregate run in one task. Full-mode
-    * registration builds the copy; a registration loaded from the store or
-    * registered in a sampled mode gets it here, on its first load. Host
-    * sessions share one copy's rows, each through a handle in its own
-    * profile session.
+    * A registration in the codegen profile loads as a scan of its part
+    * files in the host session; every one in `ExecutionProfile.Interpreted`,
+    * day-partitioned or not, as its resident copy: the rows of the
+    * normalized scan laid out by group id (see [[layout]]) and persisted
+    * memory-and-disk. Its queries open no Parquet file, so a declared day
+    * partition prunes nothing over it. Full-mode registration builds the
+    * copy; a registration loaded from the store or registered in a sampled
+    * mode gets it here, on its first load. Host sessions share one copy's
+    * rows, each through a handle in its own profile session. A
+    * `totalBytes` that picks another layout than the registered one (as
+    * `graft.Probe ServingScale crossover` sets) gets its own copy.
     *
-    * Memory: one copy per live resident registration, each the rows of an
-    * input under `ResidentMaxBytes` of Parquet held deserialized (several
-    * times the Parquet size). Spark's storage LRU spills it to disk under
-    * pressure, and lost blocks recompute from the part files.
-    * Re-registration, [[unregister]] and a failed registration release it.
-    * Rejected alternatives, measured: one shuffle partition without the
-    * copy (fewer tasks, latency inside the noise), and the copy up to
-    * `InterpretedMaxBytes` (one task loses to the parallel file scan from
-    * about a megabyte of Parquet up; BENCH.md §"Resident single-partition
-    * copy"). */
+    * Memory: one copy per live interpreted registration, about 7 MB of
+    * heap per MB of Parquet (BENCH.md §"One interpreted profile"). Spark's
+    * storage LRU spills it to disk under pressure, and lost blocks
+    * recompute from lineage. Re-registration, [[unregister]] and a failed
+    * registration release it. */
   def load(spark: SparkSession, ds: RegisteredDataset): DataFrame = {
     lastUsedAt.put(ds.name, System.currentTimeMillis())
-    val key = (spark, ds.profile)
-    val isResident = resident(ds.profile, ds.dayPartitionColumn)
+    val parts = copyPartitions(spark, ds.totalBytes)
+    val key = (spark, parts)
     def snapshot: Option[Loaded] =
       Option(loaded.get(ds.name)).filter(_.registeredAt == ds.registeredAt)
-    val (memo, rows) = loaded.synchronized {
-      (snapshot.flatMap(l => Option(l.handles.get(key))), snapshot.flatMap(_.rows))
+    val (memo, copied) = loaded.synchronized {
+      (snapshot.flatMap(l => Option(l.handles.get(key))),
+       snapshot.exists(l => parts.exists(k => l.copies.containsKey(k))))
     }
     memo.getOrElse {
       prepare(spark)
       val scan = read(prepare(ExecutionProfile.session(spark, ds.profile)), ds.basepath)
-      val built =
-        if (isResident && rows.isEmpty) Some(residentRows(scan, ds.name, ds.basepath))
-        else None
+      def build(k: Int) = residentRows(scan, k, ds.groupIdColumn, ds.name, ds.basepath)
+      val built = if (copied) None else parts.map(build)
       loaded.synchronized {
         if (!get(ds.name).exists(_.registeredAt == ds.registeredAt)) {
           built.foreach(_.unpersist(blocking = false))
@@ -613,11 +616,12 @@ object Catalog {
             loaded.put(ds.name, fresh)
             fresh
           }
-          if (isResident && l.rows.isEmpty)
-            l.rows = built.orElse(Some(residentRows(scan, ds.name, ds.basepath)))
-          else built.foreach(_.unpersist(blocking = false)) // another load won
+          parts.foreach { k =>
+            if (!l.copies.containsKey(k)) l.copies.put(k, built.getOrElse(build(k)))
+            else built.foreach(_.unpersist(blocking = false)) // another load won
+          }
           Option(l.handles.get(key)).getOrElse {
-            val df = if (isResident) residentFrame(l.rows.get, scan) else scan
+            val df = parts.fold(scan)(k => residentFrame(l.copies.get(k), scan, k, ds.groupIdColumn))
             l.handles.put(key, df)
             df
           }

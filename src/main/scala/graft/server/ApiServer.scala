@@ -54,22 +54,17 @@ import graft.result.{JobStats, ResultJson}
  * evicts). See `graft.catalog.ExecutionProfile` and BENCH.md
  * §"Execution profile crossover".
  *
- * Resident copy: a registration under `ExecutionProfile.ResidentMaxBytes`
- * ("profile": "interpreted") is served from a resident copy
- * (`Catalog.load`), the normalized scan coalesced to one partition and
- * persisted. Its queries open no Parquet file and plan no shuffle: the
- * window stack, group-bys and final aggregates run in one task. Larger
- * interpreted registrations ("interpreted-parallel") read their part
- * files in parallel tasks, where one task measured slower. The catalog
- * owns the copies, one per live resident registration, spilled to disk by
- * Spark's storage LRU under memory pressure; re-registration and
- * unregister release them. It also memoises every handle it loads, per
- * registration snapshot and host session, so this server keeps no handle
- * cache of its own. Over a copy, the stats block's `rowsScanned` counts
- * the rows read from it and `bytesScanned` the size of its blocks as
- * Spark's block manager accounts it, not Parquet bytes. Measured and
- * rejected: one shuffle partition over the files alone (BENCH.md
- * §"Resident single-partition copy"). Every query, on every profile, is
+ * Resident copy: every interpreted registration is served from a
+ * resident copy laid out by group id (`Catalog.load`), so its queries
+ * open no Parquet file and their windows and per-group aggregates plan
+ * no shuffle. The catalog owns the copies and releases them on
+ * re-registration and unregister. It also memoises every handle it
+ * loads, per registration snapshot and host session, so this server
+ * keeps no handle cache of its own. Over a copy, the stats block's
+ * `rowsScanned` counts the rows read from it and `bytesScanned` the
+ * size of its blocks as Spark's block manager accounts it, not Parquet
+ * bytes (BENCH.md §"One interpreted profile"). Every query, on every
+ * profile, is
  * one SQL execution and one Spark job over the union of its output
  * frames (`ResultJson`; BENCH.md §"One job per served query"). Nothing
  * here is user-settable.

@@ -289,6 +289,50 @@ class LibrarySpec extends SparkSpec {
     } finally Catalog.unregister("hosts")
   }
 
+  test("catalog: a resident copy whose blocks are lost recomputes on both layouts") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val dir = tmpDir("catlost")
+    val schema = StructType(Seq(
+      StructField("uid", LongType), StructField("ts", LongType), StructField("v", LongType)))
+    frame(schema, (0 until 200).map(i => Map[String, Any](
+      "uid" -> (i % 13).toLong, "ts" -> (1000L + i), "v" -> (i * 7 % 31).toLong)))
+      .write.mode("overwrite").parquet(dir)
+    val ds = Catalog.register(spark, "lost", dir, "uid", "ts")
+    try {
+      val sc = spark.sparkContext
+      // The registered size picks the one-partition copy; a recorded size
+      // of ResidentMaxBytes picks the copy hashed by group id.
+      val layouts = Seq(1 -> ds,
+        sc.defaultParallelism -> ds.copy(totalBytes = Some(ExecutionProfile.ResidentMaxBytes)))
+      val q = graft.query.QueryParser.parse(
+        """{"query": {"conditions": [{"filters": [["v", ">", 9]], "target": ["count", ">=", 3]}],
+          | "aggregations": [{"column": "v", "type": "sumPerValue", "otherColumn": "ts", "top": 4}]}}""".stripMargin)
+      val engine = graft.server.ApiServer.engine(ds, None)
+      val master = org.apache.spark.SparkEnv.get.blockManager.master
+      for ((parts, snapshot) <- layouts) {
+        val df = Catalog.load(spark, snapshot)
+        val rows = df.queryExecution.analyzed match {
+          case lr: LogicalRDD => lr.rdd
+          case p => fail(s"not a resident copy: $p")
+        }
+        assert(rows.getNumPartitions == parts)
+        def answer() = graft.util.Caches.scoped(
+          graft.result.ResultJson.build(engine.runValidated(df, q)))
+        def cached() = (0 until parts).count(i =>
+          master.getLocations(org.apache.spark.storage.RDDBlockId(rows.id, i)).nonEmpty)
+        val before = answer()
+        assert(cached() == parts, s"$parts-partition copy: ${cached()} blocks after a query")
+        // Lose every block; the storage level stays, so the next query
+        // recomputes the copy from lineage and caches it again.
+        master.removeRdd(rows.id, blocking = true)
+        assert(cached() == 0)
+        assert(rows.getStorageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        assert(answer() == before, s"$parts-partition copy answered differently after its loss")
+        assert(cached() == parts, s"$parts-partition copy: ${cached()} blocks after the recompute")
+      }
+    } finally Catalog.unregister("lost")
+  }
+
   test("catalog: JSON store round-trips registrations across a restart") {
     val store = Files.createTempDirectory("catstore").resolve("catalog.json")
     Catalog.enablePersistence(store.toString)
@@ -505,7 +549,10 @@ class LibrarySpec extends SparkSpec {
 
     // Catalog.load → engine timeframe → dt partition pruning end-to-end,
     // with the spec built from the REGISTRATION's validated declaration —
-    // the exact construction the ApiServer serving path uses.
+    // the exact construction the ApiServer serving path uses. The 300 rows
+    // are served from a resident copy, which has no directories to prune,
+    // so pruning is pinned on the codegen serving path: the registration
+    // loaded without a recorded size, which reads the part files.
     val engine = new QueryEngine(
       DatasetSpec("uid", "ts", dayPartitionColumn = reg.dayPartitionColumn))
     val q = GraftQuery(
@@ -513,11 +560,15 @@ class LibrarySpec extends SparkSpec {
       Seq(Condition.Filters(None, Seq(RowFilter("etype", FilterOp.Eq,
         Scalar.Str("view"))), Target.Count(CmpOp.Gte, 1), includeZero = false)),
       None, Nil, None)
-    val planned = engine.runValidated(Catalog.load(spark, "dtcat1"), q).summary
+    val planned = engine.runValidated(Catalog.load(spark, reg.copy(totalBytes = None)), q).summary
     val plan = planned.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*dt".r.findFirstIn(plan).isDefined, plan)
     val flat = engine.run(ev, q).summary.collect()(0)
     assert(planned.collect()(0) == flat)
+    val resident = Catalog.load(spark, "dtcat1")
+    assert(resident.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      resident.queryExecution.analyzed.treeString)
+    assert(engine.runValidated(resident, q).summary.collect()(0) == flat)
     Catalog.unregister("dtcat1")
   }
 

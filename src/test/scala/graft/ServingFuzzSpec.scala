@@ -8,7 +8,7 @@ import scala.util.Random
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.catalog.Catalog
+import graft.catalog.{Catalog, ExecutionProfile}
 import graft.result.ResultJson
 import graft.server.ApiServer
 
@@ -30,8 +30,9 @@ import graft.server.ApiServer
  * for this exact generator.
  *
  * The solo pass runs on the interpreted execution profile (the fuzz
- * frame is small); each query is replayed on the codegen profile and must
- * answer identically.
+ * frame is small, so it is served from a one-partition copy); each query
+ * is replayed on the codegen profile and on the copy hashed by group id,
+ * and must answer identically.
  *
  * Solo pass → re-register (new registeredAt = every key cold) →
  * concurrent pass. The duplicate of each query must be answered from the
@@ -121,30 +122,38 @@ class ServingFuzzSpec extends SparkSpec {
 
       // ---- the codegen profile: the same registration loaded without a
       // recorded size (the profile such a registration keeps) through the
-      // server's engine must answer every query identically. Exact
-      // equality holds because the fuzz frame's measures are decimals or
-      // integer-valued doubles, whose sums do not depend on the order
-      // AQE's partitioning adds them in.
+      // server's engine must answer every query identically, and so must
+      // the interpreted profile's other layout, the copy hashed by group id
+      // (loaded with a recorded size that picks it). Exact equality holds
+      // because the fuzz frame's measures are decimals or integer-valued
+      // doubles, whose sums do not depend on the order AQE's partitioning
+      // or the copy's partitions add them in.
       val ds = Catalog.get("servfuzz").get
       val codegenDf = Catalog.load(spark, ds.copy(totalBytes = None))
+      val hashedDf = Catalog.load(spark, ds.copy(totalBytes = Some(ExecutionProfile.ResidentMaxBytes)))
       val engine = ApiServer.engine(ds, Some(0))
+      def answer(df: org.apache.spark.sql.DataFrame, q: String): JValue =
+        graft.util.Caches.scoped(JsonMethods.parse(ResultJson.build(
+          engine.runValidated(df, graft.query.QueryParser.parse(q)))))
       queries.zipWithIndex.foreach { case (q, i) =>
-        val codegen = graft.util.Caches.scoped(JsonMethods.parse(ResultJson.build(
-          engine.runValidated(codegenDf, graft.query.QueryParser.parse(q)))))
+        val codegen = answer(codegenDf, q)
         assert(codegen == solo(i),
           s"seed=$Seed q$i: codegen and interpreted profiles disagree\nquery: $q")
+        assert(answer(hashedDf, q) == codegen,
+          s"seed=$Seed q$i: the hashed copy and codegen disagree\nquery: $q")
       }
 
-      // ---- on both profiles, the rows ResultJson collects for each output
+      // ---- on every layout, the rows ResultJson collects for each output
       // frame through its one union equal, in order, the frame's own
       // collect.
-      for ((profile, df) <- Seq("interpreted" -> Catalog.load(spark, ds), "codegen" -> codegenDf);
-           (q, i) <- queries.zipWithIndex) graft.util.Caches.scoped {
+      val layouts = Seq("interpreted" -> Catalog.load(spark, ds), "hashed" -> hashedDf,
+        "codegen" -> codegenDf)
+      for ((layout, df) <- layouts; (q, i) <- queries.zipWithIndex) graft.util.Caches.scoped {
         val plan = engine.runValidated(df, graft.query.QueryParser.parse(q))
         val folded = ResultJson.frameRows(plan).map(_.toSeq)
         val perFrame = ResultJson.frames(plan).map(_.collect().toSeq)
         assert(folded == perFrame,
-          s"seed=$Seed q$i $profile: the union's frames differ from their own collects\nquery: $q")
+          s"seed=$Seed q$i $layout: the union's frames differ from their own collects\nquery: $q")
       }
 
       // ---- concurrent pass: fresh registration (all keys cold), every
