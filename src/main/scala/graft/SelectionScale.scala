@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
  *
  *  1. the model stays `nBuckets` rows no matter the corpus size (train
  *     wall grows linearly with gram volume, the output does not);
- *  2. scoring's only data-sized exchange carries ~one partial-aggregate
- *     row per document, NOT per gram: the probe reports shuffle bytes per
- *     document, which must stay flat (and small) from 2M to 10M docs
- *     while each doc explodes to ~23 grams;
+ *  2. scoring is row-local — zero shuffle (the native `dsir_row_score`
+ *     fold; each doc's ~23 grams never leave its row): the probe reports
+ *     shuffle bytes per document, which is only the top-k's gather of k
+ *     rows per partition and so falls toward 0 as the corpus grows;
  *  3. hard top-k (TakeOrderedAndProject) and the map-only threshold form
  *     cost the same scan — the threshold form is the path for selections
  *     too large for a driver-side k-row merge.
@@ -67,47 +67,24 @@ object SelectionScale extends Probe.Body {
         operators.Dsir.trainLogRatios(target, corpus, "doc_id", "text", b, "sc", fast)
           .coalesce(1).write.mode("overwrite").parquet(fix)
       })
-      val model = spark.read.parquet(fix)
-      require(model.count() == b, "model must be exactly nBuckets rows")
+      // Built outside the timings: score collects the model and checks it
+      // is exactly nBuckets rows, one per bucket.
+      val scored = operators.Dsir.score(corpus, spark.read.parquet(fix),
+        "doc_id", "text", b, "sc", fast)
 
       val (topSum, score) = minOf2(p.measure {
-        operators.Dsir.selectTopK(
-          operators.Dsir.score(corpus, model, "doc_id", "text", b, "sc", fast), 1000)
+        operators.Dsir.selectTopK(scored, 1000)
           .agg(sum(col("doc_id"))).head().getLong(0)
       })
       val (thrCount, thr) = minOf2(p.measure {
-        operators.Dsir.score(corpus, model, "doc_id", "text", b, "sc", fast)
-          .where(col("logw_micro") > 0L).count()
+        scored.where(col("logw_micro") > 0L).count()
       })
-      // The native row-local serving path (functions.DsirRowScore): the
-      // same integers with zero shuffle — what a stream pays per batch.
-      // Parity is asserted at full size: the corpus-wide logw sum from the
-      // row-local fold must equal the explode+join pipeline's bit-for-bit.
-      val modelMap = model.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val (rsSum, rs) = minOf2(p.measure {
-        graft.functions.DsirFunctions.withRowScore(spark, modelMap, b, "sc",
-          fast, col("text")) { c =>
-          corpus.select(c.getField("logw_micro").as("lw"))
-            .agg(sum(col("lw"))).head().getLong(0)
-        }
-      })
-      // Parity BEFORE drain: the corpus is still cached, so the batch
-      // scoring pipeline runs once more from memory rather than
-      // regenerating the lineage from scratch.
-      val scoreSum = operators.Dsir
-        .score(corpus, model, "doc_id", "text", b, "sc", fast)
-        .agg(sum(col("logw_micro"))).head().getLong(0)
-      require(scoreSum == rsSum,
-        s"native/batch scorer divergence at n=$n: $rsSum vs $scoreSum")
       graft.util.Caches.drain()
       p.emit("train", train, "fast" -> fast, "n" -> n)
       p.emit("score", score, "fast" -> fast, "n" -> n, "topk_check" -> topSum,
         "shuffle_b_per_doc" -> score.shuffleBytesWritten.toDouble / n,
         "docs_per_s_core" -> n / score.coreSecs)
       p.emit("threshold", thr, "fast" -> fast, "n" -> n, "kept" -> thrCount)
-      p.emit("rowscore", rs, "fast" -> fast, "n" -> n, "check" -> rsSum,
-        "shuffle_b_per_doc" -> rs.shuffleBytesWritten.toDouble / n,
-        "docs_per_s_core" -> n / rs.coreSecs)
     }
   }
 }

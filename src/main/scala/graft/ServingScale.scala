@@ -241,7 +241,7 @@ object ServingScale extends Probe.Body {
     val layouts = Seq("codegen" -> None, "hashed" -> Some(ExecutionProfile.ResidentMaxBytes),
       "one-partition" -> Some(0L))
     val labels = layouts.map(_._1)
-    dirs.foreach { dir => try {
+    dirs.zipWithIndex.foreach { case (dir, i) => try {
       val ds = Catalog.register(spark, "crossover", dir, "user_id", "ts")
       // The production load path, with the recorded size overridden so
       // each layout reads the same files.
@@ -253,8 +253,11 @@ object ServingScale extends Probe.Body {
         graft.util.Caches.scoped(
           graft.result.ResultJson.build(engine.runValidated(handles(layout), parsed)))
       }
-      // One warm-up repetition on literals the timed ones never draw.
-      shapes(1000).foreach { case (_, json) => labels.foreach(run(_, json)) }
+      // Untimed warm-up repetitions over every layout, on literals the
+      // timed ones never draw: one per directory, and `reps` more before
+      // the first directory, so the process's JIT warm-up is not timed.
+      for (w <- 0 until (if (i == 0) reps + 1 else 1); (_, json) <- shapes(1000 + w))
+        labels.foreach(run(_, json))
       val runs = scala.collection.mutable.Map.empty[(String, String), Seq[JobStats.Snapshot]]
         .withDefaultValue(Seq.empty)
       for (r <- 0 until reps; (shape, json) <- shapes(r)) {

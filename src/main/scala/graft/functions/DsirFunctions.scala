@@ -12,29 +12,27 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native row-local DSIR scorer — the codegen'd form of
- * [[graft.operators.Dsir.rowScore]]'s higher-order fold. Two costs the
- * HOF pays that this removes: lambda evaluation is interpreted per array
- * element (outside whole-stage codegen), and `element_at` on a LITERAL
- * map is a LINEAR scan of the map entries — nBuckets comparisons per
- * gram, ~150k per average document at the battery shape. Here the model
- * is a plain `Array[Long]` indexed by bucket (O(1)), the gram walk is a
- * tight JVM loop over the token split, and the expression participates
- * in whole-stage codegen via a reference-object call (the
- * [[BloomMightContain]] pattern).
+ * Native row-local DSIR scorer — the codegen'd fold behind
+ * [[graft.operators.Dsir.score]], the importance model's one scorer. The
+ * model is a plain `Array[Long]` indexed by bucket (O(1) lookups), the
+ * gram walk is a tight JVM loop over the token split, and the expression
+ * participates in whole-stage codegen via a reference-object call (the
+ * [[BloomMightContain]] pattern): no explode, no join, no shuffle.
  *
- * MUST produce bit-identical integers to `Dsir.rowScore` and
- * `Dsir.score` — same split semantics (Java regex split with limit -1 ≡
- * Spark's `split(text, " ")`), same md5-of-UTF8 first-4-bytes bucket,
- * same xxhash64 seed chain for the fast family (salt hashed at seed 42,
- * gram hashed at the salt's hash — Spark's multi-arg xxhash64 fold).
- * OperatorsSpec pins all three implementations against each other.
+ * MUST produce the integers the DuckDB oracles compute over the same
+ * fixture (`pipeline_dsir`, `st_dsir`, SelectionFuzzSpec) — same split
+ * semantics (Java regex split with limit -1 ≡ Spark's and DuckDB's
+ * `split(text, " ")`), same md5-of-UTF8 first-4-bytes bucket. The
+ * xxhash64 fast family, which no oracle can reproduce, follows Spark's
+ * multi-arg `xxhash64(salt, gram)` seed chain (salt hashed at seed 42,
+ * gram hashed at the salt's hash); OperatorsSpec pins it against
+ * [[graft.operators.Dsir.hashBucket]]'s Column form.
  */
-case class DsirRowScore(child: Expression, model: Array[Long], nBuckets: Int,
-                        salt: String, fastHash: Boolean)
+case class DsirRowScore(child: Expression, model: Array[Long], salt: String,
+                        fastHash: Boolean)
     extends UnaryExpression {
 
-  require(model.length == nBuckets, "model must cover buckets 0..nBuckets-1")
+  private val nBuckets = model.length
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_grams", LongType, nullable = false),
@@ -96,19 +94,15 @@ object DsirFunctions {
   private val counter = new AtomicInteger()
 
   /** Scoped registration (the [[BloomFunctions.withMightContain]]
-    * contract): frames analyze eagerly, so the temp-function entry is
+    * contract) of a scorer over `model` (bucket → lr_micro, one slot per
+    * bucket): frames analyze eagerly, so the temp-function entry is
     * deregistered as soon as `build` returns — nothing accumulates in a
     * long-lived session. */
-  def withRowScore[T](spark: SparkSession, model: Map[Long, Long],
-                      nBuckets: Int, salt: String, fastHash: Boolean,
-                      text: Column)(build: Column => T): T = {
-    require(model.size == nBuckets &&
-      (0L until nBuckets.toLong).forall(model.contains),
-      "model must cover buckets 0..nBuckets-1 exactly")
-    val arr = Array.tabulate(nBuckets)(b => model(b.toLong))
+  def withRowScore[T](spark: SparkSession, model: Array[Long], salt: String,
+                      fastHash: Boolean, text: Column)(build: Column => T): T = {
     val name = s"graft_dsir_rs_${counter.incrementAndGet()}"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, children => DsirRowScore(children.head, arr, nBuckets, salt, fastHash),
+      name, children => DsirRowScore(children.head, model, salt, fastHash),
       "built-in")
     try build(call_function(name, text))
     finally spark.sessionState.catalog.dropTempFunction(name, ignoreIfNotExists = true)

@@ -12,24 +12,24 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native row-local LM scorer — the [[DsirRowScore]] treatment for the
- * CCNet-style trigram quality model ([[graft.operators.LmScore]]): the
- * canonical alphabet is `[a-z ]`, so the trigram domain is exactly 27³ =
- * 19,683 — a dense `Array[Long]` indexed by
- * `code(c₀)·729 + code(c₁)·27 + code(c₂)` replaces the explode +
- * broadcast join + per-doc aggregate with ONE codegen'd call per row:
- * canonicalize, walk the trigrams, O(1) lookups (untrained slots hold
- * the `__OOV__` sentinel), integer sum. Zero shuffle — the form a
- * STREAM can run per arriving document.
+ * Native row-local LM scorer — the codegen'd fold behind
+ * [[graft.operators.LmScore.score]], the trigram quality model's one
+ * scorer. The canonical alphabet is `[a-z ]`, so the trigram domain is
+ * exactly 27³ = 19,683 — a dense `Array[Long]` indexed by
+ * `code(c₀)·729 + code(c₁)·27 + code(c₂)` holds the model, and each row
+ * is ONE codegen'd call: canonicalize, walk the trigrams, O(1) lookups
+ * (untrained slots hold the `__OOV__` sentinel), integer sum. Zero
+ * shuffle — the form a STREAM can run per arriving document.
  *
- * MUST produce bit-identical integers to [[graft.operators.LmScore.score]]
- * over the same fixture: the canonicalization replicates the Column
- * pipeline exactly (strip `[^A-Za-z ]` FIRST with the same Java regex,
- * ASCII lowercase, collapse `" +"`, trim — all on the post-strip ASCII
- * string, so no locale/ICU divergence can enter), and documents whose
- * canonical form is shorter than one trigram yield NULL (callers filter
- * — `score` omits them). Returns `struct(n_tri, sum_micro)`; the
- * average is the caller's one exact division.
+ * MUST produce the integers the DuckDB oracles compute over the same
+ * fixture (`tx_lm_score`, `st_lm`, LmFuzzSpec): the canonicalization
+ * replicates [[graft.operators.LmScore.canonical]] exactly (strip
+ * `[^A-Za-z ]` FIRST with the same Java regex, ASCII lowercase, collapse
+ * `" +"`, trim — all on the post-strip ASCII string, so no locale/ICU
+ * divergence can enter), and documents whose canonical form is shorter
+ * than one trigram yield NULL (`score` omits them). Returns
+ * `struct(n_tri, sum_micro)`; the average is the caller's one exact
+ * division.
  */
 case class LmRowScore(child: Expression, scores: Array[Long])
     extends UnaryExpression {
@@ -88,18 +88,28 @@ object LmFunctions {
   /** Dense score table from a materialized `(tri, score_micro)` model
     * frame ([[graft.operators.LmScore.trainModel]]'s output, read back
     * from its fixture): untrained slots get the `__OOV__` sentinel.
-    * Bounded driver state — 19,683 longs. */
+    * Bounded driver state — 19,683 longs. A malformed fixture (no or two
+    * `__OOV__` rows, a trigram twice, a null, a key outside the canonical
+    * alphabet) throws IllegalArgumentException rather than keeping one of
+    * the conflicting scores. */
   def denseScores(model: DataFrame): Array[Long] = {
-    val rows = model.collect().map(r => r.getString(0) -> r.getLong(1))
-    val oov = rows.collectFirst { case ("__OOV__", v) => v }
-      .getOrElse(throw new IllegalArgumentException("model lacks __OOV__ row"))
-    val arr = Array.fill(27 * 27 * 27)(oov)
+    val rows = model.select("tri", "score_micro").collect().map { r =>
+      require(!r.isNullAt(0) && !r.isNullAt(1), s"model row with a null: $r")
+      r.getString(0) -> r.getLong(1)
+    }
+    val oovs = rows.collect { case ("__OOV__", v) => v }
+    require(oovs.length == 1, s"model must hold one __OOV__ row, found ${oovs.length}")
+    val arr = Array.fill(27 * 27 * 27)(oovs.head)
+    val seen = new java.util.BitSet(arr.length)
     def code(c: Char): Int = if (c == ' ') 26 else c - 'a'
     rows.foreach { case (tri, v) =>
       if (tri != "__OOV__") {
         require(tri.length == 3 && tri.forall(c => c == ' ' || (c >= 'a' && c <= 'z')),
           s"trigram outside the canonical alphabet: '$tri'")
-        arr(code(tri(0)) * 729 + code(tri(1)) * 27 + code(tri(2))) = v
+        val i = code(tri(0)) * 729 + code(tri(1)) * 27 + code(tri(2))
+        require(!seen.get(i), s"model holds trigram '$tri' twice")
+        seen.set(i)
+        arr(i) = v
       }
     }
     arr

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.DsirFunctions
+
 /**
  * DSIR-style importance resampling — "Data Selection for Language Models
  * via Importance Resampling" (Xie et al., NeurIPS 2023): fit two hashed
@@ -40,24 +42,16 @@ import org.apache.spark.sql.functions._
  *
  * Shape at 100 TB: the model is `nBuckets` rows regardless of corpus size
  * — training is two map-side-partial gram aggregates (target slice + one
- * pass over the raw pool), scoring is a map-only gram explode + broadcast
- * hash join + per-document partial sum; the only data-sized exchange
- * carries one row per document. Selection is TakeOrderedAndProject (a
- * per-partition top-k heap + single k-row merge — no global sort); for k
- * beyond ~10⁶ pre-filter on a score threshold from a quantile sketch
+ * pass over the raw pool). Scoring is row-local: [[score]] collects the
+ * model into the `Array[Long]` of the codegen'd `dsir_row_score`
+ * expression ([[graft.functions.DsirRowScore]]) and weights each document
+ * inside its own row — no explode, no join, no exchange, and the same
+ * [[score]] serves a batch and a stream. Selection is TakeOrderedAndProject
+ * (a per-partition top-k heap + single k-row merge — no global sort); for
+ * k beyond ~10⁶ pre-filter on a score threshold from a quantile sketch
  * first (Skew.saltedTopN's two-phase trick), or use the threshold form
  * directly: `scored.where($"logw_micro" > t)` is map-only and shuffles
  * nothing.
- *
- * Which scorer to run: the native row-local expression
- * ([[graft.functions.DsirFunctions.withRowScore]]) computes the same
- * integers with ZERO shuffle at 7-8× the throughput of [[score]]
- * (BENCH.md §SelectionScale: 119k-135k docs/s/core) — at DSIR's model
- * sizes (≤ ~100k buckets ⇒ ≤ ~1 MB array) it is the serving AND batch
- * path of choice. [[score]] is the SQL-expressible reference pipeline —
- * the form the DuckDB oracle mirrors and the probe pins the native fold
- * against bit-for-bit; [[rowScore]] is its HOF twin kept as the
- * pure-Column reference implementation.
  */
 object Dsir {
 
@@ -151,77 +145,52 @@ object Dsir {
 
   /** Score every document against a materialized model (the integers on
     * disk): (doc_id, n_grams, logw_micro = Σ lr_micro over the doc's
-    * grams). Broadcast join — the model is nBuckets rows at any corpus
-    * size.
+    * grams). Null-text documents are omitted; every other document has at
+    * least one gram (the split of "" is one empty token).
     *
-    * Production batch serving should use the native `dsir_row_score`
-    * expression ([[graft.functions.DsirFunctions.withRowScore]]) instead:
-    * same integers, zero shuffle, 2× measured (BENCH.md:
-    * pipeline_dsir_serve 0.94s vs pipeline_dsir_native 0.47s) — see the
-    * class doc's "Which scorer to run". This method is the oracle-mirrored
-    * reference pipeline. NOTE: score() is EAGER — the coverage guard runs
-    * one O(nBuckets) Spark action at plan-construction time; build the
-    * plan outside any timed section. */
+    * One codegen'd `dsir_row_score` call per row
+    * ([[graft.functions.DsirRowScore]]): the plan holds no explode, join
+    * or exchange, and `docs` may be a stream. One output row per scored
+    * input row — rows sharing an id are scored separately, not summed.
+    *
+    * Model size: the model is collected to the driver and ships inside the
+    * expression as an `Array[Long](nBuckets)`, so inside every task — 8
+    * bytes per bucket: 2 KB at the battery's 256 buckets, 80 KB at the 10k
+    * of SelectionScale and PipelineScale, the largest callers. Models of
+    * millions of buckets would want the array broadcast instead.
+    *
+    * The model must cover buckets 0..nBuckets-1 with a non-null lr_micro
+    * exactly once, in exactly nBuckets rows: a missing bucket would fault
+    * on lookup and a duplicated one would silently keep one of its values,
+    * so either throws IllegalArgumentException. EAGER: the model is
+    * collected (and checked) when the plan is built; build the plan outside
+    * any timed section. */
   def score(docs: DataFrame, model: DataFrame, idCol: String,
             textCol: String, nBuckets: Int, salt: String,
             fastHash: Boolean = false): DataFrame = {
-    // The inner join below assumes full 0..nBuckets-1 coverage with ONE
-    // row per bucket; a partial OR duplicated model would silently drop /
-    // double-count grams and skew n_grams/logw_micro, breaking the
-    // bit-identity contract with rowScore / dsir_row_score (which
-    // require-check coverage). DISTINCT buckets must equal nBuckets AND
-    // total valid rows must equal nBuckets — together these exclude both
-    // a missing bucket and a duplicate masking one. NOTE: this makes
-    // score() EAGER — it runs one O(nBuckets) Spark action over the model
-    // at plan-construction time (negligible next to the broadcast it
-    // precedes, but callers timing pure plan construction should build
-    // the plan outside the timed section).
-    val cov = model.where(
-      col("bucket").between(0L, nBuckets.toLong - 1L) &&
-        col("lr_micro").isNotNull)
-      .agg(count(lit(1)).as("rows"), countDistinct(col("bucket")).as("dist"))
-      .head()
-    val (rows, dist) = (cov.getLong(0), cov.getLong(1))
-    require(rows == nBuckets.toLong && dist == nBuckets.toLong,
+    val rows = model.select("bucket", "lr_micro").collect()
+    // nBuckets rows holding nBuckets distinct valid buckets: every row is
+    // valid and no bucket is missing or repeated.
+    val valid = rows.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) &&
+        r.getLong(0) >= 0L && r.getLong(0) < nBuckets => r.getLong(0) -> r.getLong(1)
+    }.toMap
+    require(rows.length == nBuckets && valid.size == nBuckets,
       s"model must cover buckets 0..${nBuckets - 1} with non-null " +
-        s"lr_micro exactly once (found $rows rows over $dist distinct " +
-        s"buckets, expected $nBuckets of each)")
-    gramBuckets(docs, idCol, textCol, nBuckets, salt, fastHash)
-      .join(broadcast(model), Seq("bucket"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"), sum(col("lr_micro")).as("logw_micro"))
-  }
-
-  /** Row-local scoring against a DRIVER-HELD model — the serving path: a
-    * stream (or any map-only stage) scores each document inside its own
-    * row via a higher-order fold over the gram array, with the model
-    * inlined as a literal map. No explode, no join, no shuffle, no state
-    * — trivially batching-invariant in a stream. Returns
-    * `struct(n_grams, logw_micro)`; MUST produce bit-identical integers
-    * to [[score]] (the battery gates the two implementations against the
-    * same oracle). Intended for models that fit a literal comfortably
-    * (≤ ~10k buckets — the paper's shape); beyond that use [[score]]'s
-    * broadcast join. */
-  def rowScore(textCol: Column, model: Map[Long, Long], nBuckets: Int,
-               salt: String, fastHash: Boolean = false): Column = {
-    require(model.size == nBuckets &&
-      (0L until nBuckets.toLong).forall(model.contains),
-      "model must cover buckets 0..nBuckets-1 exactly")
-    val ts = split(textCol, " ")
-    val bis = when(size(ts) >= 2,
-      transform(sequence(lit(1), size(ts) - 1),
-        i => concat(element_at(ts, i), lit(" "), element_at(ts, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val grams = concat(ts, bis)
-    val m = typedLit(model)
-    val logw = aggregate(grams, lit(0L),
-      (acc, g) => acc + element_at(m, hashBucket(g, nBuckets, salt, fastHash)))
-    // Null text yields a NULL struct (callers filter it), matching
-    // [[score]]'s behavior of omitting such documents — without this, a
-    // stream would emit a (doc_id, null, null) row the batch path and the
-    // oracle both lack.
-    when(textCol.isNotNull,
-      struct(size(grams).cast("long").as("n_grams"), logw.as("logw_micro")))
+        s"lr_micro exactly once (found ${rows.length} rows over " +
+        s"${valid.size} distinct valid buckets, expected $nBuckets of each)")
+    val lr = Array.tabulate(nBuckets)(b => valid(b.toLong))
+    // The fold is null exactly for null text. Filtering on the text, not
+    // on the fold's alias, keeps the fold out of the Filter: the optimizer
+    // pushes a filter on an alias below the projection, inlining the fold
+    // and running it twice per row.
+    DsirFunctions.withRowScore(docs.sparkSession, lr, salt, fastHash,
+      col(textCol)) { s =>
+      docs.where(col(textCol).isNotNull)
+        .select(col(idCol).as("doc_id"), s.as("__s"))
+        .select(col("doc_id"), col("__s.n_grams").as("n_grams"),
+          col("__s.logw_micro").as("logw_micro"))
+    }
   }
 
   /** Hard top-k by importance weight (the paper's "top-k selection"

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.LmFunctions
+
 /**
  * Character n-gram language-model quality scoring — the CCNet-style
  * "perplexity filter" every scraped-corpus pipeline runs: train a small LM
@@ -29,10 +31,11 @@ import org.apache.spark.sql.functions._
  *
  * Shape at 100 TB: the model is bounded by the trigram vocabulary
  * (≤ 27³ + 1 rows) regardless of reference-slice size — training is one
- * map-side-partial aggregate over the slice, scoring is a map-only explode
- * + broadcast hash join + per-document partial aggregate. The only
- * data-sized exchange carries one row per document. Nothing here shuffles
- * the corpus trigrams.
+ * map-side-partial aggregate over the slice. Scoring is row-local: the
+ * model is collected into the dense 27³ table of the codegen'd
+ * `lm_row_score` expression ([[graft.functions.LmRowScore]]), and each
+ * document is scored inside its own row — no explode, no join, no
+ * exchange, so the same [[score]] serves a batch and a stream.
  */
 object LmScore {
 
@@ -90,33 +93,27 @@ object LmScore {
     * back from the fixture the training job wrote — the scores used are
     * the exact integers on disk): (doc_id, n_tri, avg_logp_micro) where
     * `avg_logp_micro` = Σ score_micro / n_tri. Documents whose canonical
-    * form is shorter than one trigram carry no signal and are omitted.
+    * form is shorter than one trigram (null text included) carry no
+    * signal and are omitted.
     *
-    * Which scorer to run in PRODUCTION BATCH serving: the native
-    * codegen'd `lm_row_score` expression
-    * ([[graft.functions.LmFunctions.withRowScore]]) computes the same
-    * integers with zero explode/join/shuffle at 6.6× the measured
-    * throughput (BENCH.md: tx_lm_score_serve 2.6s vs tx_lm_score_native
-    * 0.38s at sf0.1) — the model is ≤ 27³+1 rows, always driver-holdable.
-    * It already serves the streaming path (st_lm). THIS method is the
-    * SQL-expressible reference pipeline the DuckDB oracle mirrors and the
-    * battery pins the native fold against bit-for-bit; prefer it only
-    * when a pure-DataFrame lineage (no driver-held model) is required. */
+    * One codegen'd `lm_row_score` call per row
+    * ([[graft.functions.LmRowScore]]) over the dense table of
+    * [[graft.functions.LmFunctions.denseScores]], then the one exact
+    * division: the plan holds no explode, join or exchange, and `docs`
+    * may be a stream. One output row per scored input row — rows sharing
+    * an id are scored separately, not summed. The model ships inside the
+    * expression, so inside every task: 27³ longs, 157 KB. EAGER: the
+    * model is collected (and checked) when the plan is built. */
   def score(docs: DataFrame, model: DataFrame,
-            idCol: String, textCol: String): DataFrame = {
-    val vocab = model.where(col("tri") =!= "__OOV__")
-    val oov   = model.where(col("tri") === "__OOV__")
-      .select(col("score_micro").as("__oov"))
-    trigrams(docs, idCol, textCol)
-      .join(broadcast(vocab), Seq("tri"), "left")
-      .crossJoin(broadcast(oov))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tri"),
-        sum(coalesce(col("score_micro"), col("__oov"))).as("__sum"))
-      .select(col("doc_id"), col("n_tri"),
-        (col("__sum").cast("double") / col("n_tri").cast("double"))
-          .as("avg_logp_micro"))
-  }
+            idCol: String, textCol: String): DataFrame =
+    LmFunctions.withRowScore(docs.sparkSession, LmFunctions.denseScores(model),
+      col(textCol)) { s =>
+      docs.select(col(idCol).as("doc_id"), s.as("__s"))
+        .where(col("__s").isNotNull)
+        .select(col("doc_id"), col("__s.n_tri").as("n_tri"),
+          (col("__s.sum_micro").cast("double") / col("__s.n_tri").cast("double"))
+            .as("avg_logp_micro"))
+    }
 
   /** Train on `ref`, persist the model under `fixturePath`, read it back,
     * and score `docs` with the on-disk integers (the read-back is what

@@ -208,7 +208,7 @@ object TextAnalysis {
   def scrubSpans(corpus: DataFrame, evalSet: DataFrame, idCol: String,
                  textCol: String, n: Int): DataFrame = {
     require(n > 0, "window width must be positive")
-    // Null-text documents are OMITTED (the Dsir score/rowScore contract) —
+    // Null-text documents are OMITTED (the Dsir.score contract) —
     // without the filter the final select would emit a garbage
     // (doc_id, -1, -1, "") row the oracle lacks.
     def toks(df: DataFrame) =

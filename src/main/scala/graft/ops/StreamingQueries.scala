@@ -128,6 +128,12 @@ object StreamingQueries {
       .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
   }
 
+  /** File-source stream over the documents table (eventsStream's on-disk
+    * schema and directory-path rules). */
+  private def documentsStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(Tables.loadRaw(s, dir, "documents").schema)
+      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+
   val queries: Map[String, QFn] = Map(
     // Event-time hourly rates by event type: readStream → watermark →
     // window → agg, the canonical Structured Streaming shape. State at
@@ -343,12 +349,12 @@ object StreamingQueries {
 
     // Streaming DSIR scoring — the serving deployment: train the hashed
     // n-gram model ONCE on the static corpus (same params as
-    // pipeline_dsir), ship it to the stream as a driver-held literal, and
-    // score each arriving document row-locally (Dsir.rowScore: HOF fold,
-    // no explode/join/shuffle/state — trivially batching-invariant). The
-    // oracle is the batch scoring SQL verbatim minus the top-k cut, so
-    // green certifies the row-local fold and the batch explode+broadcast
-    // +aggregate pipeline produce bit-identical integers.
+    // pipeline_dsir), and score each arriving document with Dsir.score —
+    // the native row-local dsir_row_score fold, which holds the 256-bucket
+    // model inside the expression: no explode/join/shuffle/state, so it
+    // is trivially batching-invariant. The oracle is the batch scoring
+    // SQL minus the top-k cut, so green certifies that streamed scores
+    // equal the batch integers.
     "st_dsir" -> ((s, dir) => {
       val ss = streamSession(s)
       val d = Tables.documents(ss, dir)
@@ -356,35 +362,19 @@ object StreamingQueries {
       graft.operators.Dsir.trainLogRatios(
         d.where(col("doc_id") % 5 === 0), d, "doc_id", "text", 256, "dsir")
         .coalesce(1).write.mode("overwrite").parquet(fix)
-      // Bounded driver state (256 rows — the centroids/sketch class).
-      val model = ss.read.parquet(fix).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val schema = Tables.loadRaw(ss, dir, "documents").schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      // Native codegen'd scorer (functions.DsirRowScore): O(1) array
-      // lookups per gram vs the HOF fold's interpreted lambda + LINEAR
-      // literal-map scan — measured ~4s off this row at sf0.1. rowScore
-      // remains the reference implementation; the spec pins all three
-      // paths bit-identical.
-      graft.functions.DsirFunctions.withRowScore(ss, model, 256, "dsir",
-        fastHash = false, col("text")) { sc =>
-        val scored = stream.select(col("doc_id"), sc.as("s"))
-          .where(col("s").isNotNull) // null-text docs: score() omits them too
-          .select(col("doc_id"), col("s.n_grams").as("n_grams"),
-            col("s.logw_micro").as("logw_micro"))
-        runToBatch(ss, scored, "st_dsir_sink", mode = "append")
-      }
+      runToBatch(ss, graft.operators.Dsir.score(documentsStream(ss, dir),
+        ss.read.parquet(fix), "doc_id", "text", 256, "dsir"),
+        "st_dsir_sink", mode = "append")
     }),
 
     // Streaming LM quality scoring — the CCNet-style perplexity filter in
     // a stream: the trigram model trains once on the static reference
-    // slice, the dense 27^3 score table ships driver-held, and every
-    // arriving document is scored row-locally by the native lm_row_score
-    // expression (one codegen'd call, O(1) lookups, zero shuffle/state —
-    // trivially batching-invariant). Gated on the batch scorer's SQL
-    // verbatim over this fixture, so green certifies the native fold and
-    // the explode+join pipeline produce identical integers.
+    // slice, and LmScore.score scores every arriving document row-locally
+    // (the native lm_row_score fold over the dense 27^3 table: one
+    // codegen'd call, O(1) lookups, zero shuffle/state — trivially
+    // batching-invariant). Gated on the batch scoring SQL over this
+    // fixture, so green certifies that streamed scores equal the batch
+    // integers.
     "st_lm" -> ((s, dir) => {
       val ss = streamSession(s)
       val d = Tables.documents(ss, dir)
@@ -392,19 +382,8 @@ object StreamingQueries {
       graft.operators.LmScore.trainModel(
         d.where(col("doc_id") % 10 === 0), "doc_id", "text")
         .coalesce(1).write.mode("overwrite").parquet(fix)
-      // Bounded driver state: 19,683 longs.
-      val scores = graft.functions.LmFunctions.denseScores(ss.read.parquet(fix))
-      val schema = Tables.loadRaw(ss, dir, "documents").schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      graft.functions.LmFunctions.withRowScore(ss, scores, col("text")) { sc =>
-        val scored = stream.select(col("doc_id"), sc.as("s"))
-          .where(col("s").isNotNull) // sub-trigram docs: score() omits them
-          .select(col("doc_id"), col("s.n_tri").as("n_tri"),
-            (col("s.sum_micro").cast("double") / col("s.n_tri").cast("double"))
-              .as("avg_logp_micro"))
-        runToBatch(ss, scored, "st_lm_sink", mode = "append")
-      }
+      runToBatch(ss, graft.operators.LmScore.score(documentsStream(ss, dir),
+        ss.read.parquet(fix), "doc_id", "text"), "st_lm_sink", mode = "append")
     }),
 
     // Serve-only twins of st_dsir / st_lm: the contract rows above bundle
@@ -422,19 +401,9 @@ object StreamingQueries {
           d.where(col("doc_id") % 5 === 0), d, "doc_id", "text", 256, "dsir")
           .coalesce(1).write.mode("overwrite").parquet(fix)
       }
-      val model = ss.read.parquet(fix).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val schema = Tables.loadRaw(ss, dir, "documents").schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      graft.functions.DsirFunctions.withRowScore(ss, model, 256, "dsir",
-        fastHash = false, col("text")) { sc =>
-        val scored = stream.select(col("doc_id"), sc.as("s"))
-          .where(col("s").isNotNull)
-          .select(col("doc_id"), col("s.n_grams").as("n_grams"),
-            col("s.logw_micro").as("logw_micro"))
-        runToBatch(ss, scored, "st_dsir_serve_sink", mode = "append")
-      }
+      runToBatch(ss, graft.operators.Dsir.score(documentsStream(ss, dir),
+        ss.read.parquet(fix), "doc_id", "text", 256, "dsir"),
+        "st_dsir_serve_sink", mode = "append")
     }),
 
     "st_lm_serve" -> ((s, dir) => {
@@ -445,18 +414,8 @@ object StreamingQueries {
           Tables.documents(ss, dir).where(col("doc_id") % 10 === 0),
           "doc_id", "text")
           .coalesce(1).write.mode("overwrite").parquet(fix)
-      val scores = graft.functions.LmFunctions.denseScores(ss.read.parquet(fix))
-      val schema = Tables.loadRaw(ss, dir, "documents").schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      graft.functions.LmFunctions.withRowScore(ss, scores, col("text")) { sc =>
-        val scored = stream.select(col("doc_id"), sc.as("s"))
-          .where(col("s").isNotNull)
-          .select(col("doc_id"), col("s.n_tri").as("n_tri"),
-            (col("s.sum_micro").cast("double") / col("s.n_tri").cast("double"))
-              .as("avg_logp_micro"))
-        runToBatch(ss, scored, "st_lm_serve_sink", mode = "append")
-      }
+      runToBatch(ss, graft.operators.LmScore.score(documentsStream(ss, dir),
+        ss.read.parquet(fix), "doc_id", "text"), "st_lm_serve_sink", mode = "append")
     }),
 
     // Streaming span decontamination — scrub documents IN FLIGHT: the
@@ -472,10 +431,7 @@ object StreamingQueries {
       val d = Tables.documents(ss, dir)
       val hashes = graft.functions.ScrubFunctions.evalWindowHashes(
         d.where(col("doc_id") < 20), "text", n = 13)
-      val schema = Tables.loadRaw(ss, dir, "documents").schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .where(col("doc_id") >= 20)
+      val stream = documentsStream(ss, dir).where(col("doc_id") >= 20)
       graft.functions.ScrubFunctions.withScrub(ss, hashes, 13, col("text")) { sc =>
         val scrubbed = stream.select(col("doc_id"), sc.as("s"))
           .where(col("s").isNotNull) // null-text docs: scrubSpans omits them

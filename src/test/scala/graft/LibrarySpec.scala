@@ -614,20 +614,27 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("native batch scorers plan shuffle-free") {
-    // The whole point of tx_lm_score_native / pipeline_dsir_native is the
-    // zero-shuffle serve: a single codegen'd row-local fold. Pin it on the
-    // physical plan — the scoring projection must contain NO Exchange at
-    // all for the LM row, and only the TakeOrdered gather (no full
-    // Exchange) for the DSIR top-k row.
+    // The LM and DSIR serve rows (both names of each pair) score through
+    // the one native row-local fold. Pin it on the physical plan — the
+    // scoring projection must contain NO Exchange at all for the LM rows,
+    // and only the TakeOrdered gather (no full Exchange) for the DSIR
+    // top-k rows.
     val dir = "/root/testdata/sf0.001"
-    val lm = graft.ops.PipelineQueries.queries("tx_lm_score_native")(spark, dir)
-    val lmPlan = lm.queryExecution.executedPlan.toString
-    assert(!lmPlan.contains("Exchange"),
-      s"tx_lm_score_native must serve without any exchange:\n$lmPlan")
-    val ds = graft.ops.PipelineQueries.queries("pipeline_dsir_native")(spark, dir)
-    val dsPlan = ds.queryExecution.executedPlan.toString
-    assert(!dsPlan.contains("Exchange") && dsPlan.contains("TakeOrderedAndProject"),
-      s"pipeline_dsir_native must be map-only + TakeOrdered:\n$dsPlan")
+    for (name <- Seq("tx_lm_score_serve", "tx_lm_score_native")) {
+      val lmPlan = graft.ops.PipelineQueries.queries(name)(spark, dir)
+        .queryExecution.executedPlan.toString
+      assert(!lmPlan.contains("Exchange"),
+        s"$name must serve without any exchange:\n$lmPlan")
+    }
+    for (name <- Seq("pipeline_dsir_serve", "pipeline_dsir_native")) {
+      val dsPlan = graft.ops.PipelineQueries.queries(name)(spark, dir)
+        .queryExecution.executedPlan.toString
+      assert(!dsPlan.contains("Exchange") && dsPlan.contains("TakeOrderedAndProject"),
+        s"$name must be map-only + TakeOrdered:\n$dsPlan")
+      // One fold per row: no filter inlines a second dsir_row_score call.
+      assert("dsir_row_score\\(".r.findAllIn(dsPlan).size == 1,
+        s"$name must evaluate the fold once per row:\n$dsPlan")
+    }
   }
 
   test("boilerplate strip fast path: document side rebuilds without a shuffle") {

@@ -16,7 +16,7 @@ import graft.operators.LmScore
  * trigram stream). Each case trains + materializes its own model fixture
  * at generation time (Spark side), then both engines score against the
  * SAME on-disk integers — any divergence is in canonicalization, trigram
- * slicing, the broadcast join, or the final division, which is the point.
+ * slicing, the dense-table lookup, or the final division, which is the point.
  * Broken-mirror check: mutating the oracle's slice bound by one (tri =
  * nt[i : i+1]) makes every case diverge, so the mirror is load-bearing.
  */

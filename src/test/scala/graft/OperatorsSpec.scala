@@ -1789,6 +1789,27 @@ class OperatorsSpec extends SparkSpec {
     assert(got.values.count(_ == false) > 0)
   }
 
+  // --- LM quality scoring ----------------------------------------------
+
+  /** Driver mirror of LmScore's canonical form and trigram slicing. */
+  private def lmTris(t: String): Seq[String] = {
+    val nt = t.replaceAll("[^A-Za-z ]", "").toLowerCase.replaceAll(" +", " ").trim
+    if (nt.length < 3) Seq.empty[String]
+    else (0 to nt.length - 3).map(i => nt.substring(i, i + 3))
+  }
+
+  /** Driver mirror of LmScore.score over `model` (tri → score_micro) and
+    * its `oov` sentinel: (n_tri, Σ score / n_tri) per doc with at least
+    * one trigram. */
+  private def lmMirrorScores(texts: Map[Long, String], model: Map[String, Long],
+                             oov: Long): Map[Long, (Long, Double)] =
+    texts.flatMap { case (id, t) =>
+      val ts = lmTris(t)
+      if (ts.isEmpty) None
+      else Some(id -> (ts.size.toLong,
+        ts.map(g => model.getOrElse(g, oov)).sum.toDouble / ts.size))
+    }
+
   test("LM score matches a driver-side mirror fold exactly") {
     // Mixed charset (canonicalization), short docs (dropped), pure-OOV
     // docs, and reference docs (id % 10 == 0 is the training slice).
@@ -1810,36 +1831,23 @@ class OperatorsSpec extends SparkSpec {
     // folded in plain Scala. Same-JVM math.log ⇒ the model integers match
     // what Spark's log wrote to the fixture; sums and the single division
     // must then be bit-identical.
-    def canon(t: String) =
-      t.replaceAll("[^A-Za-z ]", "").toLowerCase.replaceAll(" +", " ").trim
-    def tris(t: String) = {
-      val nt = canon(t)
-      if (nt.length < 3) Seq.empty[String]
-      else (0 to nt.length - 3).map(i => nt.substring(i, i + 3))
-    }
     val texts = Map(0L -> "The CAT sat on the mat, the cat sat!",
       10L -> "the mat sat on the cat  and   the rat",
       20L -> "a cat and a rat sat... 42 times",
       1L -> "the cat sat QUICKLY on the mat",
       2L -> "xyzzy qwfp jjjj zzzz", 3L -> "zz", 4L -> "!!! 123 ???")
-    val refTris = Seq(0L, 10L, 20L).flatMap(i => tris(texts(i)))
+    val refTris = Seq(0L, 10L, 20L).flatMap(i => lmTris(texts(i)))
     val counts  = refTris.groupBy(identity).map { case (k, v) => k -> v.size }
     val tv      = refTris.size + counts.size
     val model   = counts.map { case (k, c) =>
       k -> math.floor(1e6 * math.log((c + 1).toDouble / tv)).toLong }
     val oov     = math.floor(1e6 * math.log(1.0 / tv)).toLong
-    val want = texts.flatMap { case (id, t) =>
-      val ts = tris(t)
-      if (ts.isEmpty) None
-      else Some(id -> (ts.size.toLong,
-        ts.map(g => model.getOrElse(g, oov)).sum.toDouble / ts.size))
-    }
-    assert(got == want)
+    assert(got == lmMirrorScores(texts, model, oov))
     // Reference docs must outscore the mostly-OOV doc by construction.
     assert(got(0L)._2 > got(2L)._2)
   }
 
-  test("LM score plan: model joins by broadcast, corpus trigrams never sorted") {
+  test("LM score plan: no exchange, no join, no generator") {
     val d = docs((0L until 40L).map(i =>
       i -> s"the cat sat on mat number $i and slept"): _*)
     val fixture = java.nio.file.Files.createTempDirectory("lm_fix2").toString
@@ -1848,14 +1856,12 @@ class OperatorsSpec extends SparkSpec {
       s"$fixture/model")
     scored.collect()
     val plan = scored.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    // The 100 TB claim pinned: vocabulary + OOV sentinel attach by
-    // broadcast; the exploded corpus-trigram stream is never sorted and
-    // the only data-sized exchange is the per-document aggregation.
-    assert(plan.contains("BroadcastHashJoin"),
-      s"model must join by broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("SortExec"),
-      s"corpus trigrams must never be sorted:\n$plan")
+    // The 100 TB claim pinned: each document is scored inside its own row
+    // by the native fold — its trigrams are never exploded, joined to the
+    // model or moved between partitions.
+    assert(plan.contains("lm_row_score"), s"scored by the native fold:\n$plan")
+    Seq("Exchange", "Join", "Generate").foreach(op =>
+      assert(!plan.contains(op), s"scoring plan holds a $op:\n$plan"))
   }
 
   test("IVFADC index save/load round-trips bit-exactly; serving is identical") {
@@ -2123,114 +2129,113 @@ class OperatorsSpec extends SparkSpec {
     assert(gotB != gotA, "independent salts should re-roll the draw")
   }
 
-  test("DSIR rowScore: the HOF serving path equals the explode+join scorer") {
+  /** Driver mirror of Dsir.score over `corpus` against a model trained on
+    * its odd ids: (n_grams, Σ lr_micro) per non-null doc, each gram's bucket
+    * from `dsirBucket` (md5) or, for the xxhash64 family, from Spark's
+    * Column form `Dsir.hashBucket(lit(g), …, fastHash = true)` — an
+    * implementation independent of DsirRowScore's seed chain. Returns
+    * (score, mirror, model). */
+  private def dsirScoreAndMirror(corpus: org.apache.spark.sql.DataFrame, b: Int,
+                                 salt: String, fast: Boolean) = {
     import graft.operators.Dsir
+    val dir = java.nio.file.Files.createTempDirectory("dsirmirror").toString
+    Dsir.trainLogRatios(corpus.where(col("doc_id") % 2 === 1), corpus,
+      "doc_id", "text", b, salt, fastHash = fast)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
+    val modelDf = spark.read.parquet(s"$dir/model")
+    val model = modelDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = Dsir.score(corpus, modelDf, "doc_id", "text", b, salt, fast)
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    val texts = corpus.collect().filter(!_.isNullAt(1))
+      .map(r => r.getLong(0) -> dsirGrams(r.getString(1))).toMap
+    val grams = texts.values.flatten.toSeq.distinct
+    val bucket: Map[String, Long] =
+      if (!fast) grams.map(g => g -> dsirBucket(g, b, salt)).toMap
+      else grams.zip(spark.range(1).select(
+        grams.map(g => Dsir.hashBucket(lit(g), b, salt, fastHash = true)): _*)
+        .head().toSeq.map(_.asInstanceOf[Long])).toMap
+    val want = texts.map { case (id, gs) =>
+      id -> (gs.size.toLong, gs.map(g => model(bucket(g))).sum) }
+    (got, want, model)
+  }
+
+  test("DSIR score equals the driver mirror on short docs, both families") {
     val corpus = docs(
       1L -> "the cat sat on the mat",
       2L -> "x",
       3L -> "stock prices rallied on tuesday while the cat slept",
       4L -> "buy cheap pills online now click here",
       5L -> "a")
-    val B = 64
-    val modelDf = Dsir.trainLogRatios(
-      corpus.where(col("doc_id") % 2 === 1), corpus, "doc_id", "text", B, "rs")
-    val model = modelDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = Dsir.score(corpus, modelDf, "doc_id", "text", B, "rs")
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    val local = corpus.select(col("doc_id"),
-      Dsir.rowScore(col("text"), model, B, "rs").as("s"))
-      .select(col("doc_id"), col("s.n_grams"), col("s.logw_micro"))
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(local == batch, s"local $local\nbatch $batch")
+    val (got, want, model) = dsirScoreAndMirror(corpus, 64, "rs", fast = false)
+    assert(got == want, s"score $got\nmirror $want")
     // Single-token docs exercise the empty-bigram branch.
-    assert(local(2L)._1 == 1L && local(5L)._1 == 1L)
-
-    // Fast family (xxhash64): self-consistent across the same three
-    // implementations — model covers every bucket, rowScore == score.
-    val fmDf = Dsir.trainLogRatios(corpus.where(col("doc_id") % 2 === 1),
-      corpus, "doc_id", "text", B, "rs", fastHash = true)
-    val fm = fmDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fm.size == B)
-    assert(fm != model, "families must induce different bucketings")
-    val fBatch = Dsir.score(corpus, fmDf, "doc_id", "text", B, "rs", fastHash = true)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    val fLocal = corpus.select(col("doc_id"),
-      Dsir.rowScore(col("text"), fm, B, "rs", fastHash = true).as("s"))
-      .select(col("doc_id"), col("s.n_grams"), col("s.logw_micro"))
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(fLocal == fBatch)
+    assert(got(2L)._1 == 1L && got(5L)._1 == 1L)
+    val (fGot, fWant, fModel) = dsirScoreAndMirror(corpus, 64, "rs", fast = true)
+    assert(fGot == fWant, s"xxhash64 score $fGot\nmirror $fWant")
+    assert(fModel != model, "families must induce different bucketings")
     // n_grams is family-independent.
-    assert(fBatch.view.mapValues(_._1).toMap == batch.view.mapValues(_._1).toMap)
+    assert(fGot.view.mapValues(_._1).toMap == got.view.mapValues(_._1).toMap)
   }
 
-  test("LM native scorer: bit-identical to the explode+join scorer") {
+  test("LM score equals the driver mirror fold on Unicode, OOV and sub-trigram docs") {
     import graft.operators.LmScore
-    import graft.functions.LmFunctions
     // Mixed charsets (canonicalization edge), sub-trigram docs (dropped),
     // pure-OOV docs, reference slice id % 10 == 0.
-    val d = docs(
+    val texts = Map(
       0L -> "The CAT sat on the mat, the cat sat!",
       1L -> "ZZZZ qqqq xxxx jjjj",
       2L -> "ab",
       3L -> "Íñtërnâtiônàl tëxt with æccents 123",
       4L -> "the mat the cat   the bat",
       10L -> "the cat and the bat sat")
+    val d = docs(texts.toSeq: _*)
     val dir = java.nio.file.Files.createTempDirectory("lmnative").toString
     LmScore.trainModel(d.where(col("doc_id") % 10 === 0), "doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
     val model = spark.read.parquet(s"$dir/model")
-    val batch = LmScore.score(d, model, "doc_id", "text")
+    val got = LmScore.score(d, model, "doc_id", "text")
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
-    val scores = LmFunctions.denseScores(model)
-    val native = LmFunctions.withRowScore(spark, scores, col("text")) { c =>
-      d.select(col("doc_id"), c.as("s"))
-        .where(col("s").isNotNull)
-        .select(col("doc_id"), col("s.n_tri"),
-          (col("s.sum_micro").cast("double") / col("s.n_tri").cast("double")))
-        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
-    }
-    assert(native == batch, s"native $native\nbatch $batch")
-    assert(!native.contains(2L), "sub-trigram docs must be omitted")
+    // The mirror folds the same on-disk integers in plain Scala.
+    val fixture = model.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val want = lmMirrorScores(texts, fixture - "__OOV__", fixture("__OOV__"))
+    assert(got == want, s"score $got\nmirror $want")
+    assert(!got.contains(2L), "sub-trigram docs must be omitted")
+    assert(got.keySet == Set(0L, 1L, 3L, 4L, 10L))
   }
 
-  test("DSIR native scorer: bit-identical to the HOF fold, both families") {
-    import graft.operators.Dsir
-    import graft.functions.DsirFunctions
-    val corpus = docs(
+  test("DSIR score equals the driver mirror on empty, spaced and null text, both families") {
+    val corpus = frame(docSchema, Seq(
       1L -> "the cat sat on the mat",
       2L -> "x",
       3L -> "",
       4L -> "stock  prices   rallied", // space runs → empty tokens
-      5L -> "buy cheap pills online now click here")
-    val B = 64
+      5L -> "buy cheap pills online now click here",
+      9L -> null).map { case (i, t) => Map[String, Any]("doc_id" -> i, "text" -> t) })
     for (fast <- Seq(false, true)) {
-      val model = Dsir.trainLogRatios(corpus.where(col("doc_id") % 2 === 1),
-        corpus, "doc_id", "text", B, "nv", fastHash = fast)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hof = corpus.select(col("doc_id"),
-        Dsir.rowScore(col("text"), model, B, "nv", fastHash = fast).as("s"))
-        .select(col("doc_id"), col("s.n_grams"), col("s.logw_micro"))
-        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-      val native = DsirFunctions.withRowScore(spark, model, B, "nv", fast,
-        col("text")) { c =>
-        corpus.select(col("doc_id"), c.as("s"))
-          .select(col("doc_id"), col("s.n_grams"), col("s.logw_micro"))
-          .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-      }
-      assert(native == hof, s"fast=$fast\nnative $native\nhof $hof")
+      val (got, want, _) = dsirScoreAndMirror(corpus, 64, "nv", fast)
+      assert(got == want, s"fast=$fast\nscore $got\nmirror $want")
+      // Null text is omitted; "" is one empty unigram.
+      assert(!got.contains(9L) && got(3L)._1 == 1L, s"fast=$fast: $got")
     }
-    // Null text: both paths yield a null struct (omitted after a filter).
-    val withNull = frame(docSchema, Seq(
-      Map[String, Any]("doc_id" -> 9L, "text" -> null),
-      Map[String, Any]("doc_id" -> 10L, "text" -> "a b")))
-    val model1 = Dsir.trainLogRatios(withNull, withNull, "doc_id", "text", B, "nv")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nn = DsirFunctions.withRowScore(spark, model1, B, "nv", fastHash = false,
-      col("text")) { c =>
-      withNull.select(col("doc_id"), c.as("s"))
-        .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
+  }
+
+  test("a model fixture with a duplicated row is rejected, both models") {
+    import graft.functions.LmFunctions
+    import graft.operators.{Dsir, LmScore}
+    val d = docs(1L -> "the cat sat on the mat", 2L -> "a dog")
+    // DSIR: nBuckets + 1 rows, bucket 1 twice with different weights.
+    val dsir = spark.createDataFrame(Seq(0L -> 5L, 1L -> 7L, 2L -> 3L, 3L -> 1L, 1L -> 9L))
+      .toDF("bucket", "lr_micro")
+    intercept[IllegalArgumentException] {
+      Dsir.score(d, dsir, "doc_id", "text", nBuckets = 4, salt = "x")
     }
-    assert(nn == Map(9L -> true, 10L -> false))
+    // LM: a trigram twice, and the __OOV__ sentinel twice.
+    val lm = Seq("the" -> -5L, "cat" -> -6L, "__OOV__" -> -9L)
+    for (dup <- Seq("the" -> -1L, "__OOV__" -> -2L)) {
+      val model = spark.createDataFrame(lm :+ dup).toDF("tri", "score_micro")
+      intercept[IllegalArgumentException](LmFunctions.denseScores(model))
+      intercept[IllegalArgumentException](LmScore.score(d, model, "doc_id", "text"))
+    }
   }
 
   // --- One-pass column profiler -----------------------------------------
@@ -2477,7 +2482,8 @@ class OperatorsSpec extends SparkSpec {
       Dsir.selectTopK(d.withColumnRenamed("text", "logw_micro"), 0)
     }
     intercept[IllegalArgumentException] {
-      Dsir.rowScore(col("text"), Map(0L -> 1L), nBuckets = 2, salt = "x")
+      Dsir.score(d, spark.createDataFrame(Seq(0L -> 1L)).toDF("bucket", "lr_micro"),
+        "id", "text", nBuckets = 2, salt = "x")
     }
     intercept[IllegalArgumentException] {
       Sampling.interleaveOrder(d.withColumn("mix_key", lit(1)),

@@ -43,7 +43,7 @@ class TestdataCanarySpec extends SparkSpec {
     assert(r.getLong(2) == r.getLong(0), "duplicate doc ids")
     assert(r.getLong(3) == r.getLong(0),
       "null texts appeared — audit the operators' null-text contracts " +
-        "(score/rowScore/scrubSpans document their behavior but the " +
+        "(score/scrubSpans document their behavior but the " +
         "battery oracles assume none)")
   }
 
