@@ -2203,7 +2203,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got.keySet == Set(0L, 1L, 3L, 4L, 10L))
   }
 
-  test("DSIR score equals the driver mirror on empty, spaced and null text, both families") {
+  test("DSIR score equals the driver mirror on empty, spaced, null text, both families") {
     val corpus = frame(docSchema, Seq(
       1L -> "the cat sat on the mat",
       2L -> "x",
