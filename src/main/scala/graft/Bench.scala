@@ -1,11 +1,108 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
-/** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
-  * prints ONE JSON line. Optional args restrict to the named queries
-  * (dev use: runMain graft.Bench fr_funnel dd_jaccard). */
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.result.JobStats
+import graft.result.ResultJson.jsonValue
+
+/** The battery benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
+  * through [[JobStats.measure]], writes one record per query to the
+  * artifact file (`SPARK_GRAFT_BENCH_OUT`, default `/tmp/bench_full.json`)
+  * and prints ONE summary line of at most 1.8 KB. Optional args restrict to
+  * the named queries (dev use: runMain graft.Bench fr_funnel dd_jaccard). */
 object Bench {
+
+  /** One battery row: the first error of its timed runs, if any, and the
+    * snapshot of its fastest successful timed run (none if all failed). */
+  final case class Record(name: String, err: Option[String], stats: Option[JobStats.Snapshot]) {
+    def ms: Option[Long] = stats.map(_.wallTimeMs)
+  }
+
+  /** The battery's families, in summary order. A row's family is its
+    * name's leading letters (`q1_pricing` → `q`); every row has one of
+    * these (BenchSpec). */
+  val Families: Seq[String] = Seq("fr", "q", "pipeline", "tx", "dd", "st", "ann", "mm", "emb")
+  def family(name: String): String = name.takeWhile(_.isLetter)
+
+  /** Time one row: one untimed warm-up, then three timed `count()` runs,
+    * each one `JobStats.measure` call; the row's seconds are the fastest.
+    * Whole-stage codegen compilation dominates cold first-runs (~9s on the
+    * heaviest queries vs ~1s steady-state); the reference's baseline
+    * numbers are likewise warm-fleet measurements (BASELINE.md: "0 cold /
+    * 256 warm"), so steady-state is the comparable figure. */
+  def runRow(spark: SparkSession, name: String, fn: () => DataFrame): Record = {
+    // Isolate from previous queries' persisted blocks, then warm up: the
+    // timed run may legitimately reuse caches its own warmup populated
+    // (same as any repeated production query).
+    spark.catalog.clearCache()
+    // Force a collection between queries: in a ~150-execution JVM, one
+    // query's garbage otherwise lands as a multi-second GC pause inside a
+    // later query's timed run (measured 0.6s isolated vs 4s in-battery).
+    System.gc()
+    try fn().count()
+    catch { case NonFatal(_) => () } // warmup failures don't mark the query
+    // Min of three timed runs: single-run times swing +-seconds from GC in
+    // a ~150-execution JVM; the min is the stable steady-state figure. Only
+    // timed-run failures mark the query as err — a transient warmup failure
+    // must not exclude a query whose timed runs all succeed.
+    val runs = Seq.fill(3)(Try(JobStats.measure(spark)(fn().count())._2))
+    // Release operator-retained caches (LSH bucket tables etc.) so one
+    // query's persisted blocks don't occupy memory during the next.
+    graft.util.Caches.drain()
+    val ok = runs.collect { case Success(s) => s }
+    Record(name, runs.collectFirst { case Failure(e) => e.getClass.getSimpleName },
+      if (ok.isEmpty) None else Some(ok.minBy(_.wallTimeMs)))
+  }
+
+  /** Exact, locale-free seconds with ms precision. */
+  private def secs(ms: Long): java.math.BigDecimal = java.math.BigDecimal.valueOf(ms, 3)
+
+  private def obj(fields: (String, String)*): String =
+    fields.map { case (k, v) => s"${jsonValue(k)}:$v" }.mkString("{", ",", "}")
+
+  /** The stdout line: total seconds, errors and query count, one subtotal
+    * per family, the sf and the artifact path. A failed row (`err`) stays
+    * out of the total and the subtotals, which sum to the total. */
+  def summary(records: Seq[Record], sfDir: String, artifact: String): String = {
+    val ok = records.filter(_.err.isEmpty).flatMap(r => r.ms.map(family(r.name) -> _))
+    obj("metric" -> jsonValue("total"), "value" -> jsonValue(secs(ok.map(_._2).sum)),
+      "unit" -> jsonValue("sec"), "errors" -> records.count(_.err.isDefined).toString,
+      "queries" -> records.size.toString,
+      "families" -> obj(Families.map(f =>
+        f -> jsonValue(secs(ok.collect { case (`f`, ms) => ms }.sum))): _*),
+      "sf" -> jsonValue(sfDir), "artifact" -> jsonValue(artifact))
+  }
+
+  /** One row's artifact record: its seconds and error, the snapshot's
+    * fields, the driver gap, and its job, stage and micro-batch records. */
+  def record(r: Record): String = {
+    val s = r.stats
+    obj(Seq("name" -> jsonValue(r.name), "family" -> jsonValue(family(r.name)),
+      "seconds" -> r.ms.map(m => jsonValue(secs(m))).getOrElse("null"),
+      "err" -> jsonValue(r.err.orNull)) ++
+      s.toSeq.flatMap(_.fields) ++
+      s.toSeq.flatMap(x => Seq(
+        "jobWallMs" -> x.jobs.map(_.wallMs).sum.toString,
+        "driverGapMs" -> x.driverGapMs.toString)) ++ Seq(
+      "jobs" -> s.toSeq.flatMap(_.jobs).map(j => obj("id" -> j.id.toString,
+        "description" -> jsonValue(j.description), "wallMs" -> j.wallMs.toString,
+        "tasks" -> j.tasks.toString)).mkString("[", ",", "]"),
+      "stages" -> s.toSeq.flatMap(_.stages).map(st => obj("id" -> st.id.toString,
+        "name" -> jsonValue(st.name), "wallMs" -> st.wallMs.toString,
+        "tasks" -> st.tasks.toString)).mkString("[", ",", "]"),
+      "batches" -> s.toSeq.flatMap(_.batches).map(b => obj("query" -> jsonValue(b.query),
+        "batchId" -> b.batchId.toString,
+        "durationMs" -> obj(b.durationMs.toSeq.sorted.map { case (k, v) => k -> v.toString }: _*)))
+        .mkString("[", ",", "]")): _*)
+  }
+
+  /** The artifact: one JSON object, the summary then one record per line. */
+  def artifact(summaryLine: String, records: Seq[Record]): String =
+    records.map(record).mkString(s"""{"summary":$summaryLine,"rows":[\n""", ",\n", "\n]}\n")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -19,72 +116,19 @@ object Bench {
     val names =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // Per-query warmup run (untimed), then the timed run. Whole-stage
-    // codegen compilation dominates cold first-runs (~9s on the heaviest
-    // queries vs ~1s steady-state); the reference's baseline numbers are
-    // likewise warm-fleet measurements (BASELINE.md: "0 cold / 256 warm"),
-    // so steady-state is the comparable figure.
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      // Isolate from previous queries' persisted blocks, then warm up: the
-      // timed run may legitimately reuse caches its own warmup populated
-      // (same as any repeated production query).
-      spark.catalog.clearCache()
-      // Force a collection between queries: in a ~150-execution JVM, one
-      // query's garbage otherwise lands as a multi-second GC pause inside a
-      // later query's timed run (measured 0.6s isolated vs 4s in-battery).
-      System.gc()
-      try { fn(spark, sfDir).count() }
-      catch { case scala.util.control.NonFatal(_) => () } // warmup failures don't mark the query
-      // Min of three timed runs: single-run times swing +-seconds from GC
-      // in a ~150-execution JVM; the min is the stable steady-state figure.
-      // Only timed-run failures mark the query as err — a transient warmup
-      // failure must not exclude a query whose timed runs all succeed.
-      var err: Option[String] = None
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case scala.util.control.NonFatal(e) => err = Some(e.getClass.getSimpleName) }
-        (System.nanoTime() - t0) / 1e9
-      }
-      // Release operator-retained caches (LSH bucket tables etc.) so one
-      // query's persisted blocks don't occupy memory during the next.
-      graft.util.Caches.drain()
-      // A failed query must not masquerade as a fast run: report it as an
-      // explicit "err" entry and exclude it from the total.
-      (name, times.min, err)
+    val records = names.map { n =>
+      val q = SparkEntry.queries(n)
+      runRow(spark, n, () => q(spark, sfDir))
     }
-    def fmt(v: Double, decimals: Int): String = {
-      // Locale-pinned: the driver parses this as JSON, so the decimal
-      // separator must be '.' regardless of the JVM default locale.
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
-    }
-    def qsJson(decimals: Int): String = results.map {
-      case (k, _, Some(e)) => "\"" + k + "\":\"err:" + e + "\""
-      case (k, v, None)    => "\"" + k + "\":" + fmt(v, decimals)
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, v, None) => v }.sum
-    val nErr = results.count(_._3.isDefined)
-    def lineAt(decimals: Int): String =
-      s"""{"metric":"total","value":${fmt(total, decimals)},"unit":"sec","errors":$nErr,"queries":${qsJson(decimals)},"sf":"$sfDir"}"""
-    // The driver captures only a bounded tail of stdout, and full-precision
-    // seconds (~17 digits each) pushed the one-line JSON past that window two
-    // rounds running (PERF_r18/r19: prev/now_bench_ok false, per_query empty).
-    // Print the driver-visible line with 3-decimal seconds — 1 ms precision,
-    // far below the measured +-15% run-to-run noise floor — which roughly
-    // halves the line. The file artifact below (BENCH_rNN_full.json) is not
-    // full precision either: it writes 9-decimal seconds, the nanosecond
-    // resolution the times are taken at, so rounding loses nothing there.
-    println(lineAt(3))
-    // The driver's captured artifact truncates long stdout tails (BENCH_r09
-    // lost half the per-query map), so also persist the full line to a file
-    // that gets committed per round as BENCH_rNN_full.json.
-    val line = lineAt(9)
+    // A reader of stdout may keep only its last 2000 characters, so the
+    // per-row records go to a file (committed per round as
+    // BENCH_rNN_full.json) and stdout gets the bounded summary.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_full.json")
+    val line = summary(records, sfDir, outFile)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not write $outFile: $e") }
+      artifact(line, records).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case NonFatal(e) => System.err.println(s"[bench] could not write $outFile: $e") }
+    println(line)
     // Stop state-store maintenance BEFORE the session: a streaming query's
     // maintenance thread racing spark.stop() logs a harmless-but-noisy
     // "SparkEnv not active" WARN stack into the driver's captured tail.

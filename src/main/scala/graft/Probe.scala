@@ -76,7 +76,7 @@ object Probe {
 
   val all: Seq[Body] = Seq(BloomScale, ComponentsScale, DedupScale, ExportScale,
     IncrementalScale, JaccardScale, JoinScale, LayoutScale, MixScale, PipelineScale,
-    PqScale, ProfileJobs, ProfileScale, RecallScale, RelJoinScale, SelectionScale,
+    PqScale, ProfileScale, RecallScale, RelJoinScale, SelectionScale,
     SemanticScale, ServingScale, ShardScale, SkewScale, StreamScale, Throughput,
     TopkScale)
 

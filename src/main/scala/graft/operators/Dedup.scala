@@ -227,7 +227,7 @@ object Dedup {
     // and the pair lineage here contains the corpus and batch bucket
     // pipelines several times over — the final dd_incremental plan
     // measured ~1.1 MB of text with ~1100 Exchange nodes, costing ~1.7 s
-    // of driver-side Catalyst time across the query's 12 jobs (ProfileJobs:
+    // of driver-side Catalyst time across the query's 12 jobs (r20 job split:
     // jobs sum 0.53 s, gap 1.73 s). The checkpoint truncates all of it to
     // one RDD leaf: downstream plans collapse (~979 → ~122 Exchange
     // mentions in the committed plan files) while execution is unchanged —

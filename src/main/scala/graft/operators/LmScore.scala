@@ -89,6 +89,14 @@ object LmScore {
     scored.unionByName(oov)
   }
 
+  /** Matches exactly the texts whose [[canonical]] form is at least one
+    * trigram long. Canonicalization strips every character outside
+    * `[A-Za-z ]`, collapses space runs and trims, so the canonical length
+    * is the letter count plus one per space-holding gap between two
+    * letters: it reaches 3 with three letters, or with two that have a
+    * space and no letter between them. */
+  private val HasTrigram = "[A-Za-z][^A-Za-z]*[A-Za-z ][^A-Za-z]*[A-Za-z]"
+
   /** Score every document in `docs` against a materialized `model` (read
     * back from the fixture the training job wrote — the scores used are
     * the exact integers on disk): (doc_id, n_tri, avg_logp_micro) where
@@ -108,8 +116,12 @@ object LmScore {
             idCol: String, textCol: String): DataFrame =
     LmFunctions.withRowScore(docs.sparkSession, LmFunctions.denseScores(model),
       col(textCol)) { s =>
-      docs.select(col(idCol).as("doc_id"), s.as("__s"))
-        .where(col("__s").isNotNull)
+      // Filter on the text, not on the fold's alias: the optimizer pushes a
+      // filter on an alias below the projection, inlining the fold and
+      // running it twice per row. `HasTrigram` keeps exactly the rows the
+      // fold scores (non-null).
+      docs.where(col(textCol).rlike(HasTrigram))
+        .select(col(idCol).as("doc_id"), s.as("__s"))
         .select(col("doc_id"), col("__s.n_tri").as("n_tri"),
           (col("__s.sum_micro").cast("double") / col("__s.n_tri").cast("double"))
             .as("avg_logp_micro"))

@@ -61,12 +61,6 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // Dev-only visibility (ProfileJobs cannot see a child session's
-    // StreamingQueryManager): per-batch driver duration split.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p =>
-        println(s"  [stream $sink batch=${p.batchId} durationMs=${p.durationMs} " +
-          s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")}]"))
     s.table(sink)
   }
 
@@ -81,17 +75,10 @@ object StreamingQueries {
     * concurrently keeps its own conf. */
   private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
-    // Env-overridable (r20) so deployments size state partitioning to their
-    // state volume without a rebuild; the default stays the measured local
-    // value so the driver's bench is comparable across rounds. An 8 → 2
-    // probe (r20, ProfileJobs) moved st_attribution's addBatch 1499 → 1433
-    // ms — per-partition store overhead is NOT the cost at battery scale,
-    // consistent with the r17 8 → 4 probe.
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    // (8 → 4 was probed r17 on top of the no-data change below:
-    // 10.1/9.2s vs 8.8/10.1s paired — indistinguishable once the extra
-    // batch is gone, so the measured state-volume sizing above stands.)
+    // Neither 8 → 4 (r17, 10.1/9.2 s vs 8.8/10.1 s paired) nor 8 → 2 (r20:
+    // st_attribution's addBatch 1499 → 1433 ms) could be told apart from
+    // 8: per-partition store overhead is not the cost at battery scale.
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     // Skip the trailing no-data micro-batch (r17): on a FINITE
     // availableNow run every stateful row otherwise pays one extra full
     // batch — open + commit a state store on every shuffle partition —

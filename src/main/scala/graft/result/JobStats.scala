@@ -5,9 +5,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 /**
  * Execution stats via SparkListener — the Spark-native stand-in for the
@@ -27,6 +28,12 @@ object JobStats {
   /** One completed stage of a measurement; `name` is its call site. */
   final case class Stage(id: Int, name: String, wallMs: Long, tasks: Int)
 
+  /** One micro-batch of a streaming query that ran inside a measurement:
+    * the query's name (its id if unnamed) and the batch's
+    * `StreamingQueryProgress.durationMs` phases (`addBatch`, `getBatch`,
+    * `queryPlanning`, `walCommit`, `triggerExecution`, …). */
+  final case class Batch(query: String, batchId: Long, durationMs: Map[String, Long])
+
   /** `rowsScanned` and `bytesScanned` are the tasks' input records and
     * bytes: Parquet rows and bytes read, or, for a resident copy
     * (`Catalog.load`), the rows read from its persisted blocks and those
@@ -42,7 +49,8 @@ object JobStats {
       peakExecutionMemory: Long,
       executorRunMs: Long,
       jobs: Seq[Job] = Nil,
-      stages: Seq[Stage] = Nil) {
+      stages: Seq[Stage] = Nil,
+      batches: Seq[Batch] = Nil) {
     /** Engine-appropriate analog of the reference's per-query cost estimate
       * (invoker/stats_builder.py:42+, api.md "cost"): the reference prices
       * Lambda GB-seconds; on Spark the billable unit is executor-core time,
@@ -54,7 +62,8 @@ object JobStats {
     def driverGapMs: Long = wallTimeMs - jobs.map(_.wallMs).sum
     /** Key → rendered-JSON-value pairs — callers composing a larger object
       * (ApiServer's stats block) append their own pairs instead of slicing
-      * the serialized string. The job and stage records are not rendered. */
+      * the serialized string. The job, stage and batch records are not
+      * rendered. */
     def fields: Seq[(String, String)] = Seq(
       "wallTimeMs" -> wallTimeMs.toString,
       "tasks" -> tasks.toString,
@@ -90,6 +99,9 @@ object JobStats {
     * the tag. */
   private val MeasureIdKey = "graft.stats.measureId"
   private val measureSeq = new AtomicLong()
+  /** The local property a stream's jobs carry its query id in
+    * (`StreamExecution.QUERY_ID_KEY`). */
+  private val StreamQueryIdKey = "sql.streaming.queryId"
 
   /** Run `body` with a listener attached; returns its result plus the
     * aggregated task metrics of everything executed inside. Attribution is
@@ -99,7 +111,12 @@ object JobStats {
     * concurrent queries (ApiServer's async/stream paths) no longer
     * cross-attribute rowsScanned/coreSecs, the cost basis (reference
     * parity: invoker/stats_builder.py prices each job's own tasks). The
-    * same attribution yields the measurement's job and stage records. */
+    * same attribution yields the measurement's job and stage records, and
+    * its streaming micro-batches: a stream started inside `body` runs on a
+    * thread that inherits the tag, so its jobs carry it beside their
+    * `sql.streaming.queryId`, and every `QueryProgressEvent` of such a
+    * query id (posted to the same bus, after the batch's jobs) becomes a
+    * [[Batch]]. `wallTimeMs` is the wall time of `body` alone. */
   def measure[T](spark: SparkSession)(body: => T): (T, Snapshot) = {
     val tasks = new AtomicInteger
     val rows = new AtomicLong
@@ -115,11 +132,14 @@ object JobStats {
     val jobStarts = new ConcurrentHashMap[Int, SparkListenerJobStart]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
     val stages = new ConcurrentHashMap[Int, Stage]()
+    val streamIds = ConcurrentHashMap.newKeySet[String]()
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Batch]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(MeasureIdKey) == measureId) {
           e.stageIds.foreach(id => stageJob.putIfAbsent(id, e.jobId))
           jobStarts.put(e.jobId, e)
+          Option(e.properties.getProperty(StreamQueryIdKey)).foreach(streamIds.add)
         }
       // Stage completions are posted before their job's end, so the job's
       // stages are all recorded by the time it ends.
@@ -151,6 +171,13 @@ object JobStats {
           runMs.addAndGet(m.executorRunTime)
         }
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent if streamIds.contains(p.progress.id.toString) =>
+          val q = p.progress
+          batches.add(Batch(Option(q.name).getOrElse(q.id.toString), q.batchId,
+            q.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap))
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     // Save/restore rather than set/clear: measure() nests (a probe
@@ -161,6 +188,8 @@ object JobStats {
     val t0 = System.nanoTime()
     try {
       val result = body
+      // The clock stops before the drain: the wall is the body's alone.
+      val wallMs = (System.nanoTime() - t0) / 1000000
       // Listener events post asynchronously. Every job inside `body`
       // completed before body returned, so its events are already POSTED;
       // one bounded bus drain makes them DELIVERED — exact, and ~ms where
@@ -169,9 +198,10 @@ object JobStats {
       // queries). On timeout (5s — a flooded bus) proceed with what
       // arrived, the same contract the bounded polling loop had.
       org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 5000)
-      (result, Snapshot((System.nanoTime() - t0) / 1000000, tasks.get(),
+      (result, Snapshot(wallMs, tasks.get(),
         rows.get(), bytes.get(), shuffle.get(), peak.get(), runMs.get(),
-        jobs.asScala.toSeq.sortBy(_.id), stages.values.asScala.toSeq.sortBy(_.id)))
+        jobs.asScala.toSeq.sortBy(_.id), stages.values.asScala.toSeq.sortBy(_.id),
+        batches.asScala.toSeq.sortBy(b => (b.query, b.batchId))))
     } finally {
       spark.sparkContext.setLocalProperty(MeasureIdKey, outerId)
       spark.sparkContext.removeSparkListener(listener)

@@ -637,6 +637,53 @@ class LibrarySpec extends SparkSpec {
     }
   }
 
+  test("LM scorer rows evaluate lm_row_score once per row, batch and stream") {
+    // The score filter must not inline a second fold. The stream rows'
+    // micro-batch plans are their own executions: read them from the SQL
+    // status store.
+    val dir = "/root/testdata/sf0.001"
+    def folds(plan: String) = "lm_row_score\\(".r.findAllIn(plan).size
+    for (name <- Seq("tx_lm_score", "tx_lm_score_serve", "tx_lm_score_native")) {
+      val plan = graft.ops.PipelineQueries.queries(name)(spark, dir)
+        .queryExecution.executedPlan.toString
+      assert(folds(plan) == 1, s"$name must evaluate the fold once per row:\n$plan")
+    }
+    val store = spark.sharedState.statusStore
+    for (name <- Seq("st_lm", "st_lm_serve")) {
+      val before = store.executionsList().map(_.executionId).maxOption.getOrElse(-1L)
+      graft.ops.StreamingQueries.queries(name)(spark, dir)
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 5000)
+      val plans = store.executionsList().filter(_.executionId > before)
+        .map(_.physicalPlanDescription).filter(folds(_) > 0)
+      assert(plans.nonEmpty, s"$name ran no plan holding lm_row_score")
+      plans.foreach(p => assert(folds(p) == 1, s"$name must evaluate the fold once per row:\n$p"))
+    }
+  }
+
+  test("LM scorer's text filter keeps exactly the rows the fold scores") {
+    // LmScore.score filters on the text (HasTrigram), not on the fold: the
+    // kept rows must be exactly those whose fold is non-null.
+    import org.apache.spark.unsafe.types.UTF8String
+    val fold = graft.functions.LmRowScore(
+      org.apache.spark.sql.catalyst.expressions.Literal(""), Array.fill(27 * 27 * 27)(0L))
+    val rnd = new scala.util.Random(7)
+    val edge = Seq("", "ab", "a b", "a-b", "a -b", "a\t b", " a  b ", "abc", "\u00e9 a",
+      "Ab1", "x y z", "ab  ", "1a2b3c", "a\nb", "a\n b", "  ", "-a- -b-", null)
+    val texts = edge ++ Seq.fill(400)(
+      Seq.fill(rnd.nextInt(7))("aB -.\t\u00e9"(rnd.nextInt(7))).mkString)
+    val d = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("doc_id", "text")
+    val model = graft.operators.LmScore.trainModel(
+      spark.createDataFrame(Seq((0L, "the quick brown fox"))).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val got = graft.operators.LmScore.score(d, model, "doc_id", "text")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val want = texts.zipWithIndex.collect {
+      case (t, i) if t != null && fold.compute(UTF8String.fromString(t)) != null => i.toLong
+    }.toSet
+    assert(got == want, texts.zipWithIndex.filter(x => got(x._2) != want(x._2)))
+  }
+
   test("boilerplate strip fast path: document side rebuilds without a shuffle") {
     // stripBoilerplateFast's 100 TB contract (BENCH.md §PipelineScale:
     // 28 GB → 4 GB stage shuffle at 10M docs): the only shuffles are the

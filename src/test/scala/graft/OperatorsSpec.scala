@@ -213,6 +213,46 @@ class OperatorsSpec extends SparkSpec {
     assert(m2 == m)
   }
 
+  test("xxhash64 family equals an independent XXH64: minhash, LSH bucket, simhash") {
+    // The fast family has no cross-engine oracle, so pin its values against
+    // lz4-java's XXH64 with Spark's conventions: seed 42, each further
+    // column hashed with the previous hash as its seed, ints and longs as
+    // little-endian bytes, strings as UTF-8.
+    val xx = net.jpountz.xxhash.XXHashFactory.safeInstance().hash64()
+    def h(b: Array[Byte], seed: Long) = xx.hash(b, 0, b.length, seed)
+    def le(n: Int) = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def hInt(v: Int, seed: Long) = h(le(4).putInt(v).array, seed)
+    def hLong(v: Long, seed: Long) = h(le(8).putLong(v).array, seed)
+    def hStr(v: String, seed: Long) = h(v.getBytes("UTF-8"), seed)
+    val seed = 42L
+    val texts = Map(1L -> "the quick brown fox jumps", 2L -> "lorem ipsum dolor sit amet",
+      3L -> "the quick brown fox jumps over")
+    val d = docs(texts.toSeq: _*)
+    val (k, r) = (8, 4)
+    val shingles = Dedup.charShingles(d, "doc_id", "text", 5)
+    val sig = Dedup.minHashSignature(shingles, k, fastHash = true)
+    val got = sig.collect().map(x => x.getLong(0) -> (1 to k).map(x.getLong)).toMap
+    val want = shingles.collect().groupBy(_.getLong(0)).map { case (id, rows) =>
+      id -> (0 until k).map(i => rows.map(x => hStr(x.getString(1), hInt(i, seed))).min)
+    }
+    assert(got == want)
+    val buckets = Dedup.lshBuckets(sig, k, r, fastHash = true).collect()
+      .map(x => (x.getLong(0), x.getInt(1), x.getString(2))).toSet
+    val wantBuckets = want.toSeq.flatMap { case (id, hs) => (0 until k / r).map(b =>
+      (id, b, hs.slice(b * r, b * r + r).foldLeft(seed)((s, v) => hLong(v, s)).toString))
+    }.toSet
+    assert(buckets == wantBuckets)
+    val fp = Dedup.simHash(d, "doc_id", "text", nBits = 64, fastHash = true).collect()
+      .map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val wantFp = texts.map { case (id, t) =>
+      val hs = t.split(" ", -1).toSeq.map(hStr(_, seed))
+      id -> (0 until 64).map { p =>
+        if (2 * hs.count(x => (x >>> p & 1L) == 1L) > hs.size) 1L << p else 0L
+      }.sum
+    }
+    assert(fp == wantFp)
+  }
+
   test("incremental dedup: corpus precedence, batch-only min-id, transitivity") {
     def buckets(df: org.apache.spark.sql.DataFrame) = Dedup.lshBuckets(
       Dedup.minHashSignature(Dedup.charShingles(df, "doc_id", "text", 5), 8), 8, 4)

@@ -52,7 +52,6 @@ class ProbeSpec extends SparkSpec {
     "MixScale" -> Seq("20000"),
     "PipelineScale" -> Seq("3000"),
     "PqScale" -> Seq("3000"),
-    "ProfileJobs" -> Seq(sf("sf0.001"), "fr_funnel"),
     "ProfileScale" -> Seq("20000"),
     "RecallScale" -> Seq("2000"),
     "RelJoinScale" -> Seq("5000"),
