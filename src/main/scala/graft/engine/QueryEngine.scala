@@ -307,44 +307,9 @@ final class QueryEngine(spec: DatasetSpec,
         q.conditions.zipWithIndex.collect {
           case (s: Condition.Sequence, i) if routedSeqIdx(i) => s
         }.foldLeft(base) { (cur, s) =>
-          // Stage boundary ON the aggregated gid set (measured at 250M
-          // rows, r13): Catalyst's static size estimate for the
-          // aggregation inherits the candidate shuffle's bytes, so
-          // without a materialized stage here the semi-join plans as a
-          // sort-merge join — a 250M-row sort of the fact side landing
-          // in the same stage as the aggregator's group-buffer merge:
-          // intermittent UNABLE_TO_ACQUIRE_MEMORY at the 8g default
-          // heap, 23-28s when it survives. With the boundary, AQE reads
-          // the stage's RUNTIME stats (group-sized, usually tiny) and
-          // converts the join to broadcast: the fact-side SORT
-          // disappears (the initial plan's single-join-column shuffle
-          // write still runs — AQE reads it back locally — which is the
-          // remaining gap to the bucketed layout): 16.6-17.7s, 4/4
-          // clean at the default heap. The repartition must be ROUND-ROBIN —
-          // a hash-repartition on the gid is elided as redundant (the
-          // aggregation's output already carries that partitioning), so
-          // no stage would form. It moves only the gid set — group-sized
-          // by construction — and a genuinely huge matching set just
-          // keeps the SMJ, whose gid-hash exchange AQE stacks on top.
-          val shuffleN = cur.sparkSession.conf
-            .get("spark.sql.shuffle.partitions").toInt
           val matchedGids = graft.operators.SequenceMatch
             .matchingGroups(cur, gid, ts, s.steps, s.maxDuration)
             .withColumnRenamed(gid, "__seq_gid")
-          val groups = matchedGids.repartition(shuffleN)
-          // PLAIN equality, deliberately (measured at 250M rows, r13): a
-          // null-safe <=> join keys the probe on (coalesce(gid), isnull
-          // (gid)), which costs ~2× wall on the 250M probe side (41s vs
-          // 17s) and misaligns the join's output partitioning with the
-          // summary's count_distinct. Null-gid semantics: a null gid
-          // never joins back, i.e. the routed plan DROPS null-gid groups
-          // — exactly the REFERENCE's own behavior (pandas groupby
-          // dropna=True, query_engine.py:143,237 — null-gid groups never
-          // satisfy any condition there), while the window plan is
-          // GENEROUS vs the reference (partitionBy keeps a null group).
-          // The catalog's registration validation rejects null gids
-          // outright, so the difference is unreachable through the
-          // serving surface either way.
           // Multi-frame queries (aggregations and/or a funnel) — r15:
           // every output frame consumes this semi-joined SURVIVOR frame
           // as its own action, so each would re-scan the corpus and
@@ -366,9 +331,9 @@ final class QueryEngine(spec: DatasetSpec,
           // (all three adaptive alternatives were measured failing at 1B
           // before this shape was chosen): a persisted plan never gets
           // AQE's runtime broadcast conversion — plain persist ran the
-          // full-corpus sort-merge join the repartition boundary above
-          // exists to avoid (73.2s vs 28.8s hinted), a lazy
-          // localCheckpoint froze the same SMJ (73.0s), and persist
+          // full-corpus sort-merge join the stage boundary of
+          // [[semiJoinGids]] exists to avoid (73.2s vs 28.8s hinted), a
+          // lazy localCheckpoint froze the same SMJ (73.0s), and persist
           // under spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
           // =true still did (75.2s). So sharing survivors REQUIRES the
           // static hint — and an unbounded hint would fail hard (8 GB
@@ -408,16 +373,14 @@ final class QueryEngine(spec: DatasetSpec,
             }
           }
           if (multiFrame && broadcastable)
-            // The hint makes the repartition boundary unnecessary — join
-            // the gid set directly (one fewer tiny shuffle).
+            // The hint makes the stage boundary unnecessary — join the
+            // gid set directly (one fewer tiny shuffle).
             graft.util.Caches.retain(
               cur.join(broadcast(matchedGids),
                 cur(gid) === matchedGids("__seq_gid"), "left_semi"))
-          else if (multiFrame) {
-            val shared = graft.util.Caches.retain(matchedGids).repartition(shuffleN)
-            cur.join(shared, cur(gid) === shared("__seq_gid"), "left_semi")
-          } else
-            cur.join(groups, cur(gid) === groups("__seq_gid"), "left_semi")
+          else semiJoinGids(cur,
+            if (multiFrame) graft.util.Caches.retain(matchedGids) else matchedGids,
+            "__seq_gid", "left_semi")
         }
       }
 
@@ -465,8 +428,9 @@ final class QueryEngine(spec: DatasetSpec,
         case f: Condition.Filters =>
           cur = cur.withColumn(name, filterConditionCol(f))
         case s: Condition.Sequence =>
-          val (df2, passed) = sequenceCols(cur, s.steps, s"__c${i}", s.maxDuration)
-          cur = df2.withColumn(name, passed)
+          // A sequence condition's flag is its last step's.
+          val (df2, passed) = anchorChain(cur, s.steps, s"__c${i}", s.maxDuration)
+          cur = df2.withColumn(name, passed.last)
       }
       name
     }
@@ -475,6 +439,45 @@ final class QueryEngine(spec: DatasetSpec,
       case None      => condCols.map(col).reduce(_ && _) // default: AND over all
     }
     cur.filter(relCol).select(outCols.map(col): _*)
+  }
+
+  /** Rows of `rows` whose group id is (`left_semi`) or is not
+    * (`left_anti`) in column `key` of the group-sized set `gids` — the
+    * routed plans' way back from a matched-gid set to the corpus rows.
+    *
+    * Stage boundary ON the gid set (measured at 250M rows, r13):
+    * Catalyst's static size estimate for the aggregation inherits the
+    * candidate shuffle's bytes, so without a materialized stage here the
+    * join plans as a sort-merge join — a 250M-row sort of the fact side
+    * landing in the same stage as the aggregator's group-buffer merge:
+    * intermittent UNABLE_TO_ACQUIRE_MEMORY at the 8g default heap, 23-28s
+    * when it survives. With the boundary, AQE reads the stage's RUNTIME
+    * stats (group-sized, usually tiny) and converts the join to
+    * broadcast: the fact-side SORT disappears (the initial plan's
+    * single-join-column shuffle write still runs — AQE reads it back
+    * locally — which is the remaining gap to the bucketed layout):
+    * 16.6-17.7s, 4/4 clean at the default heap. The repartition must be
+    * ROUND-ROBIN — a hash-repartition on the gid is elided as redundant
+    * (the aggregation's output already carries that partitioning), so no
+    * stage would form. It moves only the gid set, and a genuinely huge
+    * set just keeps the SMJ, whose gid-hash exchange AQE stacks on top.
+    *
+    * PLAIN equality, deliberately (measured at 250M rows, r13): a
+    * null-safe <=> join keys the probe on (coalesce(gid), isnull(gid)),
+    * which costs ~2× wall on the 250M probe side (41s vs 17s) and
+    * misaligns the join's output partitioning with the summary's
+    * count_distinct. Null-gid semantics: a null gid never joins back, so
+    * a semi-join DROPS null-gid groups — exactly the REFERENCE's own
+    * behavior (pandas groupby dropna=True, query_engine.py:143,237) —
+    * and an anti-join KEEPS them (class doc's divergence note). The
+    * catalog's registration validation rejects null gids outright, so
+    * neither edge is reachable through the serving surface. */
+  private def semiJoinGids(rows: DataFrame, gids: DataFrame, key: String,
+                           how: String): DataFrame = {
+    val shuffleN = rows.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toInt
+    val g = gids.repartition(shuffleN)
+    rows.join(g, rows(gid) === g(key), how)
   }
 
   /** Size gate for routing (measured crossover, BENCH.md §"Sequence at
@@ -607,31 +610,34 @@ final class QueryEngine(spec: DatasetSpec,
   }
 
   /**
-   * Chained-min-timestamp sequence matching (reference C5,
-   * engine/query_engine.py:217-249): step 0 anchor = min ts of rows matching
-   * step-0 filters; step i anchor = min ts of rows matching step-i filters
-   * with ts STRICTLY greater than the previous anchor (same-timestamp events
-   * do not advance the funnel — reference query_engine.py:233). A group
-   * passes when the last anchor exists.
+   * Chained-min-timestamp anchors (reference C5,
+   * engine/query_engine.py:217-249), shared by sequence conditions and
+   * funnels: step 0 anchor = min ts of rows matching step-0 filters; step
+   * i anchor = min ts of rows matching step-i filters with ts STRICTLY
+   * greater than the previous anchor (same-timestamp events do not
+   * advance the funnel — reference query_engine.py:233). Returns the
+   * frame with one anchor column per step (`<prefix>_m<j>`, or
+   * `<prefix>_x<j>` for a negated step) and, per step, the flag "every
+   * step up to here passed": step j's flag holds when its anchor exists.
    *
    * Extensions beyond reference behavior (schema'd there but unimplemented —
    * SURVEY.md §2.5): `rowFound:false` steps require NO matching row after the
    * previous anchor (anchor carries over); `maxDuration` requires
-   * lastAnchor − firstAnchor <= d.
+   * anchor − firstAnchor <= d, cut per step on the chain so far.
    *
    * Emits one window aggregate per step over the same `partitionBy(gid)`
    * spec — Catalyst plans a single exchange for the whole stack.
    */
-  private def sequenceCols(
+  private def anchorChain(
       df0: DataFrame,
       steps: Seq[SequenceStep],
       prefix: String,
-      maxDuration: Option[Long]): (DataFrame, Column) = {
+      maxDuration: Option[Long]): (DataFrame, IndexedSeq[Column]) = {
     var cur = df0
     var anchor: Option[String] = None     // column holding previous step's min ts
     var firstAnchor: Option[String] = None
-    var passed: Column = lit(true)
-    steps.zipWithIndex.foreach { case (step, j) =>
+    var passedSoFar: Column = lit(true)
+    val flags = steps.zipWithIndex.map { case (step, j) =>
       val pred = conj(step.filters)
       val afterPrev = anchor match {
         case Some(a) => pred && col(ts) > col(a)
@@ -640,19 +646,22 @@ final class QueryEngine(spec: DatasetSpec,
       if (step.rowFound) {
         val mcol = s"${prefix}_m$j"
         cur = cur.withColumn(mcol, min(when(afterPrev, col(ts))).over(w))
-        passed = passed && col(mcol).isNotNull
+        passedSoFar = passedSoFar && col(mcol).isNotNull
         anchor = Some(mcol)
         if (firstAnchor.isEmpty) firstAnchor = Some(mcol)
       } else {
         val xcol = s"${prefix}_x$j"
         cur = cur.withColumn(xcol, max(when(afterPrev, lit(1))).over(w))
-        passed = passed && col(xcol).isNull
+        passedSoFar = passedSoFar && col(xcol).isNull
         // anchor unchanged: a negated step does not advance the clock
       }
+      (maxDuration, anchor, firstAnchor) match {
+        case (Some(d), Some(last), Some(first)) if last != first =>
+          passedSoFar && (col(last) - col(first) <= lit(d))
+        case _ => passedSoFar
+      }
     }
-    for (d <- maxDuration; last <- anchor; first <- firstAnchor if last != first)
-      passed = passed && (col(last) - col(first) <= lit(d))
-    (cur, passed)
+    (cur, flags.toIndexedSeq)
   }
 
   private def compileRelation(rel: Relation): Column = rel match {
@@ -716,36 +725,7 @@ final class QueryEngine(spec: DatasetSpec,
    * rows.
    */
   private def planFunnel(rows: DataFrame, f: Funnel): (Option[DataFrame], Seq[(String, DataFrame)]) = {
-    var cur = rows
-    var anchor: Option[String] = None
-    var firstAnchor: Option[String] = None
-    val stepPassed = scala.collection.mutable.ArrayBuffer.empty[Column]
-    var passedSoFar: Column = lit(true)
-    f.steps.zipWithIndex.foreach { case (step, j) =>
-      val pred = conj(step.filters)
-      val afterPrev = anchor match {
-        case Some(a) => pred && col(ts) > col(a)
-        case None    => pred
-      }
-      if (step.rowFound) {
-        val mcol = s"__f_m$j"
-        cur = cur.withColumn(mcol, min(when(afterPrev, col(ts))).over(w))
-        passedSoFar = passedSoFar && col(mcol).isNotNull
-        anchor = Some(mcol)
-        if (firstAnchor.isEmpty) firstAnchor = Some(mcol)
-      } else {
-        val xcol = s"__f_x$j"
-        cur = cur.withColumn(xcol, max(when(afterPrev, lit(1))).over(w))
-        passedSoFar = passedSoFar && col(xcol).isNull
-      }
-      val withDuration = (f.maxDuration, anchor, firstAnchor) match {
-        case (Some(d), Some(last), Some(first)) if last != first =>
-          passedSoFar && (col(last) - col(first) <= lit(d))
-        case _ => passedSoFar
-      }
-      stepPassed += withDuration
-    }
-
+    val (cur, stepPassed) = anchorChain(rows, f.steps, "__f", f.maxDuration)
     val n = f.steps.size
     val flagged = stepPassed.zipWithIndex.foldLeft(cur) { case (d, (p, j)) =>
       d.withColumn(s"__f_p$j", p)
@@ -758,22 +738,13 @@ final class QueryEngine(spec: DatasetSpec,
     // rows count, but not as a group, as count_distinct skips it.
     val perGroup = flagged.groupBy(col(gid)).agg(count(lit(1)).as("__n"),
       (0 until n).map(j => max(col(s"__f_p$j")).as(s"__p$j")): _*)
-    val aggExprs = (0 until n).flatMap { j =>
-      Seq(
-        count(when(col(s"__p$j") && col(gid).isNotNull, lit(1))).as(s"__g$j"),
-        // coalesce: sum over an EMPTY matched set is NULL, but a funnel
-        // over zero rows counts zero (reference: per-part ints, empty
-        // part → 0) — and the serving JSON reads these as longs
-        // (r16 fuzz-caught: ResultJson crashed on the NULL).
-        coalesce(sum(when(col(s"__p$j"), col("__n"))), lit(0L)).as(s"__r$j"))
-    }
-    val one = perGroup.agg(aggExprs.head, aggExprs.tail: _*)
-    val stepStructs = (0 until n).map { j =>
-      struct(lit(j).as("step"), col(s"__g$j").as("step_groups"), col(s"__r$j").as("step_rows"))
-    }
-    val funnelDf = one
-      .select(explode(array(stepStructs: _*)).as("s"))
-      .select(col("s.step"), col("s.step_groups"), col("s.step_rows"))
+    val funnelDf = graft.operators.SequenceMatch.stepCounts(perGroup, n)(
+      j => count(when(col(s"__p$j") && col(gid).isNotNull, lit(1))),
+      // coalesce: sum over an EMPTY matched set is NULL, but a funnel
+      // over zero rows counts zero (reference: per-part ints, empty
+      // part → 0) — and the serving JSON reads these as longs
+      // (r16 fuzz-caught: ResultJson crashed on the NULL).
+      j => coalesce(sum(when(col(s"__p$j"), col("__n"))), lit(0L)))
 
     val origCols: IndexedSeq[Column] = rows.columns.map(col).toIndexedSeq
     val stepAggs: Seq[(String, DataFrame)] = for {
@@ -798,10 +769,8 @@ final class QueryEngine(spec: DatasetSpec,
    * Step flags are GROUP-constant in the window plan (every flag is an
    * aggregate over partitionBy(gid)), so "rows where step j passed" is
    * exactly "all rows of groups whose greedy chain reaches step j" — a
-   * group-sized left-semi join of the corpus against `maxStep >= j`,
-   * with the r13 round-robin repartition stage boundary so AQE reads the
-   * set's RUNTIME size and broadcasts it (a hash repartition would be
-   * elided as redundant and no stage would form — the 9063275 lesson).
+   * group-sized left-semi join of the corpus against `maxStep >= j`
+   * ([[semiJoinGids]], whose stage boundary lets AQE broadcast the set).
    * k aggregations cost k group-sized joins + ONE shared candidate pass
    * (the max-step table is Caches-retained when aggregations exist — see
    * the body comment) instead of k full window stacks; the window plan
@@ -831,10 +800,10 @@ final class QueryEngine(spec: DatasetSpec,
     // ~13s each where the shared pass is ~6s once). With aggregations
     // present, persist the GROUP-SIZED table via Caches.retain — the
     // serving surfaces (ApiServer per request, Bench/Verify per query)
-    // drain it; the cache sits BELOW each frame's round-robin repartition
-    // so the r13 AQE stats boundary (broadcast from runtime stats) is
-    // unchanged per frame. A counts-only funnel keeps the exact r13 plan:
-    // one frame, nothing to share, no cache side-effect.
+    // drain it; the cache sits BELOW each frame's semiJoinGids stage
+    // boundary, so AQE still broadcasts from runtime stats per frame. A
+    // counts-only funnel keeps the exact r13 plan: one frame, nothing to
+    // share, no cache side-effect.
     val hasAggs = f.stepAggregations.nonEmpty || f.endAggregations.nonEmpty
     val msBase = graft.operators.SequenceMatch.maxStepTable(
       rows, gid, ts, f.steps, f.maxDuration)
@@ -842,19 +811,13 @@ final class QueryEngine(spec: DatasetSpec,
     val funnelDf = graft.operators.SequenceMatch.funnelCounts(
       rows, gid, ts, f.steps, f.maxDuration,
       precomputedMaxStep = if (hasAggs) Some(ms) else None)
-    lazy val shuffleN = rows.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    def survivors(j: Int): DataFrame = {
-      if (j <= absentMs) {
-        val failed = ms.where(col("__max_step") < j)
-          .select(col("g").as("__fn_gid")).repartition(shuffleN)
-        rows.join(failed, rows(gid) === failed("__fn_gid"), "left_anti")
-      } else {
-        val passed = ms.where(col("__max_step") >= j)
-          .select(col("g").as("__fn_gid")).repartition(shuffleN)
-        rows.join(passed, rows(gid) === passed("__fn_gid"), "left_semi")
-      }
-    }
+    def survivors(j: Int): DataFrame =
+      if (j <= absentMs)
+        semiJoinGids(rows, ms.where(col("__max_step") < j)
+          .select(col("g").as("__fn_gid")), "__fn_gid", "left_anti")
+      else
+        semiJoinGids(rows, ms.where(col("__max_step") >= j)
+          .select(col("g").as("__fn_gid")), "__fn_gid", "left_semi")
     val stepAggs: Seq[(String, DataFrame)] = for {
       j <- 0 until n
       a <- f.stepAggregations

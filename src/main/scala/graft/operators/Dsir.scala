@@ -71,19 +71,17 @@ object Dsir {
       .cast("long"), lit(nBuckets.toLong))
 
   /** One row per gram occurrence: (doc_id, gram) — word unigrams plus
-    * adjacent "a b" bigrams over the literal space split. The CASE guards
-    * `sequence` from descending through 0 on one-token docs under
+    * adjacent "a b" bigrams over the literal space split, as ONE explode
+    * of their concatenation, so the input is read once (a union of a
+    * unigram and a bigram explode read it once per branch). The CASE
+    * guards `sequence` from descending through 0 on one-token docs under
     * InferFiltersFromGenerate (same guard as [[LmScore]]'s trigrams). */
-  private def grams(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("doc_id"),
-      split(col(textCol), " ").as("__ts"))
-    val uni = toks.select(col("doc_id"), explode(col("__ts")).as("gram"))
-    val bi = toks.select(col("doc_id"), explode(expr(
-      "CASE WHEN size(__ts) >= 2 THEN transform(" +
-      "sequence(1, size(__ts) - 1), i -> concat(__ts[i-1], ' ', __ts[i])) " +
-      "ELSE array() END")).as("gram"))
-    uni.unionByName(bi)
-  }
+  private def grams(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__ts"))
+      .select(col("doc_id"), explode(expr(
+        "concat(__ts, CASE WHEN size(__ts) >= 2 THEN transform(" +
+        "sequence(1, size(__ts) - 1), i -> concat(__ts[i-1], ' ', __ts[i])) " +
+        "ELSE array() END)")).as("gram"))
 
   /** One row per gram occurrence, already bucketed: (doc_id, bucket). The
     * md5 family runs through the native codegen'd

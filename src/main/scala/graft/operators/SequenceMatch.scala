@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -9,7 +9,7 @@ import graft.query.QueryAst.SequenceStep
 /**
  * Single-pass sequence matching via a typed [[Aggregator]] — the SURVEY
  * §2.8 alternative to the engine's chained-window plan (QueryEngine
- * sequenceCols). Identical semantics: step 0 anchor = min ts of step-0
+ * anchorChain). Identical semantics: step 0 anchor = min ts of step-0
  * rows; step i anchor = min ts of step-i rows STRICTLY after anchor i-1;
  * a group matches when the last anchor exists.
  *
@@ -111,7 +111,7 @@ object SequenceMatch {
     * and vice versa. Funnel callers read the whole value: step j's
     * population is every group with maxStep >= j (reference F1 prefix
     * semantics — a failed step stops the group). Negated steps follow
-    * sequenceCols/planFunnel exactly: no matching row strictly after the
+    * QueryEngine.anchorChain exactly: no matching row strictly after the
     * previous ROWFOUND anchor (any matching row at all when no rowFound
     * step precedes), anchor unchanged, duration clock untouched. */
   private final class SeqAgg(rowFound: Array[Boolean], maxDuration: Option[Long])
@@ -199,8 +199,8 @@ object SequenceMatch {
           }
           if (!found) return reached
           anchor = best
-          // Per-step duration cut on the greedy chain (planFunnel's
-          // withDuration, applied from the second rowFound anchor on);
+          // Per-step duration cut on the greedy chain (anchorChain's
+          // per-step cut, applied from the second rowFound anchor on);
           // anchors are monotone, so the first failure is final for
           // every later step too.
           if (firstSet && maxDuration.exists(d => anchor - first > d)) return reached
@@ -227,7 +227,7 @@ object SequenceMatch {
     * handles float timestamps natively). Both must be non-null — the
     * catalog's registration validation enforces exactly that dataset
     * contract. */
-  def matchingGroups(df: DataFrame, gidCol: String, tsCol: String,
+  private[graft] def matchingGroups(df: DataFrame, gidCol: String, tsCol: String,
                      steps: Seq[SequenceStep],
                      maxDuration: Option[Long] = None): DataFrame = {
     val last = steps.size - 1
@@ -260,8 +260,8 @@ object SequenceMatch {
     * a group's implied max-step is `steps.indexWhere(_.rowFound) - 1`:
     * it passes every LEADING negated step (nothing to witness against)
     * and fails at the first rowFound one. `g` is the gidKey form of the
-    * gid (long for integral gids, native for strings). PUBLIC since r14:
-    * the engine's routed step/end-aggregation funnel consumes this table
+    * gid (long for integral gids, native for strings). The engine's
+    * routed step/end-aggregation funnel consumes this table
     * directly — step j's survivors are the groups with max-step >= j,
     * recovered by a group-sized join instead of per-row window flags.
     * Requires non-null group ids and timestamps — the catalog's
@@ -269,7 +269,7 @@ object SequenceMatch {
     * Gid must be integral (keyed as long) or string (keyed natively);
     * ts must be integral — both checked up front so misuse errors
     * instead of silently collapsing groups / truncating timestamps. */
-  def maxStepTable(df: DataFrame, gidCol: String, tsCol: String,
+  private[graft] def maxStepTable(df: DataFrame, gidCol: String, tsCol: String,
                    steps: Seq[SequenceStep],
                    maxDuration: Option[Long]): DataFrame = {
     require(steps.exists(_.rowFound),
@@ -324,10 +324,10 @@ object SequenceMatch {
     *
     * Scale shape vs the window plan: no per-group sort of the full
     * corpus — one partial-aggregated count of all rows + the candidate
-    * pass over step-matching rows only. Use for funnels WITHOUT step/end
-    * aggregations (those need per-row flags, which only the window plan
-    * materializes); negated steps are supported so long as at least one
-    * step is rowFound (absent groups default to passing the leading
+    * pass over step-matching rows only. A routed funnel's counts come
+    * from here, and its step/end aggregations read the same max-step
+    * table (QueryEngine.routedFunnel). Negated steps are supported so
+    * long as at least one step is rowFound (absent groups default to passing the leading
     * negated prefix, matching the window plan). Measured at 250M rows
     * (BENCH.md §"Counts-only funnel twin"): 2.3× on the bucketed
     * layout, parity on plain parquet — and FLAT under a 30%-hot bot
@@ -340,7 +340,7 @@ object SequenceMatch {
     * [[matchingGroups]]): gid integral or string, ts integral, both
     * non-null. A float/decimal gid or ts throws up front rather than
     * silently collapsing groups under a lossy long cast. */
-  def funnelCounts(df: DataFrame, gidCol: String, tsCol: String,
+  private[graft] def funnelCounts(df: DataFrame, gidCol: String, tsCol: String,
                    steps: Seq[SequenceStep],
                    maxDuration: Option[Long] = None,
                    /** A caller-precomputed [[maxStepTable]] for the SAME
@@ -367,12 +367,21 @@ object SequenceMatch {
     // the row sum to 0 on an empty matched set — a funnel over zero rows
     // counts zero (the serving JSON reads step_rows as a long; the r15
     // NULL crashed ResultJson, ServingFuzzSpec seed=35260868).
-    val aggExprs = (0 until n).flatMap { j =>
-      Seq(count(when(col("__ms") >= j, lit(1))).as(s"__g$j"),
-        coalesce(sum(when(col("__ms") >= j, col("__cnt")).otherwise(0L)), lit(0L))
-          .as(s"__r$j"))
-    }
-    val one = joined.agg(aggExprs.head, aggExprs.tail: _*)
+    stepCounts(joined, n)(
+      j => count(when(col("__ms") >= j, lit(1))),
+      j => coalesce(sum(when(col("__ms") >= j, col("__cnt")).otherwise(0L)), lit(0L)))
+  }
+
+  /** The funnel result frame, (step, step_groups, step_rows) one row per
+    * step: one aggregate over `df` computes every step's `groups(j)` and
+    * `rows(j)` expressions, then the row is unpivoted. Both funnel plans
+    * (QueryEngine.planFunnel and [[funnelCounts]]) pass their own per-step
+    * expressions. */
+  private[graft] def stepCounts(df: DataFrame, n: Int)(
+      groups: Int => Column, rows: Int => Column): DataFrame = {
+    val aggExprs = (0 until n).flatMap(j =>
+      Seq(groups(j).as(s"__g$j"), rows(j).as(s"__r$j")))
+    val one = df.agg(aggExprs.head, aggExprs.tail: _*)
     val stepStructs = (0 until n).map { j =>
       struct(lit(j).as("step"), col(s"__g$j").as("step_groups"),
         col(s"__r$j").as("step_rows"))

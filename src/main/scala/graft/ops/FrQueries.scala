@@ -32,6 +32,9 @@ object FrQueries {
     * pin the ROUTED plan's semantics (QueryEngine class doc §"Fast-path
     * routing"). */
   private val routedEngine = new QueryEngine(spec).withRoutingThreshold(0)
+  /** The routed engine over the derived string gid `uid_s`. */
+  private val stringGidRouted =
+    new QueryEngine(DatasetSpec("uid_s", "ts")).withRoutingThreshold(0)
   /** For day-partitioned fixtures: declares dt as ts's day partition. */
   private val prunedEngine =
     new QueryEngine(spec.copy(dayPartitionColumn = Some("dt")))
@@ -39,6 +42,10 @@ object FrQueries {
   /** events with the measure column cast for exact distributed sums. */
   private def ev(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).withColumn("value", col("value").cast("decimal(20,4)"))
+
+  /** events with a non-numeric string group id `uid_s` = "u<user_id>". */
+  private def evStringGid(s: SparkSession, dir: String): DataFrame =
+    ev(s, dir).withColumn("uid_s", concat(lit("u"), col("user_id").cast("string")))
 
   private def filters(fs: RowFilter*): Seq[RowFilter] = fs
 
@@ -61,6 +68,35 @@ object FrQueries {
   private val SUMMARY =
     """SELECT count(DISTINCT e.user_id) AS matching_groups, count(*) AS matching_group_rows
       |FROM events e JOIN m ON e.user_id = m.user_id""".stripMargin
+
+  private val sequenceQ =
+    GraftQuery(None, Seq(Condition.Sequence(None, valueSteps, None)), None, Nil, None)
+  private val seqMaxDurationQ = GraftQuery(None,
+    Seq(Condition.Sequence(None, Seq(
+      SequenceStep(filters(eq("event_type", "view"))),
+      SequenceStep(filters(eq("event_type", "click"))),
+      SequenceStep(filters(eq("event_type", "purchase")))),
+      maxDuration = Some(86400000000000L))), // 1 day in nanos
+    None, Nil, None)
+  private val seqNegatedQ = GraftQuery(None,
+    Seq(Condition.Sequence(None, Seq(
+      SequenceStep(filters(eq("event_type", "view"))),
+      SequenceStep(filters(eq("event_type", "error"), gt("value", 150)), rowFound = false),
+      SequenceStep(filters(eq("event_type", "purchase")))), None)),
+    None, Nil, None)
+  private val funnelQ =
+    GraftQuery(None, Nil, None, Nil, Some(Funnel(valueSteps, None, Nil, Nil)))
+  private val conditionedFunnelQ = GraftQuery(None,
+    Seq(cond(filters(eq("event_type", "purchase")), Target.Count(CmpOp.Gte, 14))),
+    None, Nil, Some(Funnel(valueSteps, None, Nil, Nil)))
+
+  /** The routed twins' rows: each serves two battery names. */
+  private val sequenceRouted: QFn = (s, dir) =>
+    routedEngine.run(ev(s, dir), sequenceQ).summary
+  private val funnelRouted: QFn = (s, dir) =>
+    routedEngine.run(ev(s, dir), funnelQ).funnel.get
+  private val funnelConditionedRouted: QFn = (s, dir) =>
+    routedEngine.run(ev(s, dir), conditionedFunnelQ).funnel.get
 
   // -------------------------------------------------------------- queries
 
@@ -182,38 +218,17 @@ object FrQueries {
           None, Nil, None)).summary
     }),
 
-    "fr_sequence" -> ((s, dir) => engine.run(ev(s, dir), GraftQuery(None,
-      Seq(Condition.Sequence(None, valueSteps, None)),
-      None, Nil, None)).summary),
+    "fr_sequence" -> ((s, dir) => engine.run(ev(s, dir), sequenceQ).summary),
 
     // The same query through the DEFAULT engine: Auto routing resolves the
     // sequence via SequenceMatch + semi-join inside run() — the r13
     // planner-level routing, pinned at battery level against fr_sequence's
     // oracle (LibrarySpec pins WHICH plan fires; this pins that the routed
-    // plan is semantically the window plan).
-    "fr_sequence_routed" -> ((s, dir) => routedEngine.run(ev(s, dir), GraftQuery(None,
-      Seq(Condition.Sequence(None, valueSteps, None)),
-      None, Nil, None)).summary),
-
-    // Same semantics as fr_sequence via the single-pass Aggregator
-    // (operators/SequenceMatch) instead of the chained-window plan;
-    // shares fr_sequence's oracle. Summary via left-semi join back into
-    // the events; the repartition on the matched-gid side is a stage
-    // boundary so AQE sees the set's RUNTIME size and broadcasts it —
-    // without it Catalyst's static estimate (inherited from the candidate
-    // shuffle) planned a 250M-row sort-merge join whose sort competed
-    // with the aggregation buffers for execution memory (r13, BENCH.md
-    // §Sequence at reference scale). Still beats pre-aggregating
-    // per-group counts, whose partial aggregates barely compress when
-    // millions of groups scatter across every input split.
-    "fr_sequence_fast" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val groups = graft.operators.SequenceMatch.matchingGroups(e, "user_id", "ts", valueSteps)
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-      e.join(groups, Seq("user_id"), "left_semi").agg(
-        count_distinct(col("user_id")).as("matching_groups"),
-        count(lit(1)).as("matching_group_rows"))
-    }),
+    // plan is semantically the window plan). fr_sequence_fast, the
+    // single-pass Aggregator's row, runs the very same function: every
+    // SequenceMatch plan is built by the engine.
+    "fr_sequence_routed" -> sequenceRouted,
+    "fr_sequence_fast" -> sequenceRouted,
 
     // The reference's gid contract includes STRING group ids
     // (registration_task_runner.py:85-92); until r12 no battery row
@@ -221,26 +236,15 @@ object FrQueries {
     // "u<id>" gids — a surviving lossy long cast anywhere would null
     // every gid and collapse the counts. Counts are gid-representation-
     // invariant, so this shares fr_sequence's oracle verbatim.
-    "fr_sequence_stringgid" -> ((s, dir) => {
-      val e = ev(s, dir)
-        .withColumn("uid_s", concat(lit("u"), col("user_id").cast("string")))
-      new QueryEngine(DatasetSpec("uid_s", "ts")).withWindowPlan.run(e, GraftQuery(None,
-        Seq(Condition.Sequence(None, valueSteps, None)), None, Nil, None)).summary
-    }),
+    "fr_sequence_stringgid" -> ((s, dir) =>
+      new QueryEngine(DatasetSpec("uid_s", "ts")).withWindowPlan
+        .run(evStringGid(s, dir), sequenceQ).summary),
 
-    // The Aggregator path on the same string gids (r12: native string
+    // The routed plan on the same string gids (r12: native string
     // keying — previously a silent long-cast hazard, now either keyed
-    // natively or rejected loudly). Shares fr_sequence's oracle; summary
-    // shape as fr_sequence_fast.
-    "fr_sequence_fast_stringgid" -> ((s, dir) => {
-      val e = ev(s, dir)
-        .withColumn("uid_s", concat(lit("u"), col("user_id").cast("string")))
-      val groups = graft.operators.SequenceMatch.matchingGroups(e, "uid_s", "ts", valueSteps)
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt) // AQE stats boundary — see fr_sequence_fast
-      e.join(groups, Seq("uid_s"), "left_semi").agg(
-        count_distinct(col("uid_s")).as("matching_groups"),
-        count(lit(1)).as("matching_group_rows"))
-    }),
+    // natively or rejected loudly). Shares fr_sequence's oracle.
+    "fr_sequence_fast_stringgid" -> ((s, dir) =>
+      stringGidRouted.run(evStringGid(s, dir), sequenceQ).summary),
 
     // Float timestamps (the reference allows float epoch ts; SURVEY
     // §1.2): the window plan compares ts natively with no cast. ts as
@@ -265,115 +269,56 @@ object FrQueries {
         .withColumn("ts_f",
           expr("(ts - pmod(ts, 1000000)) div 1000000").cast("double"))
       new QueryEngine(DatasetSpec("user_id", "ts_f")).withRoutingThreshold(0)
-        .run(e, GraftQuery(None,
-          Seq(Condition.Sequence(None, valueSteps, None)), None, Nil, None)).summary
+        .run(e, sequenceQ).summary
     }),
 
-    "fr_seq_maxduration" -> ((s, dir) => engine.run(ev(s, dir), GraftQuery(None,
-      Seq(Condition.Sequence(None, Seq(
-        SequenceStep(filters(eq("event_type", "view"))),
-        SequenceStep(filters(eq("event_type", "click"))),
-        SequenceStep(filters(eq("event_type", "purchase")))),
-        maxDuration = Some(86400000000000L))), // 1 day in nanos
-      None, Nil, None)).summary),
+    "fr_seq_maxduration" -> ((s, dir) => engine.run(ev(s, dir), seqMaxDurationQ).summary),
 
-    // The Aggregator path under maxDuration (SequenceMatch resolves the
-    // duration bound at finish time) — previously only unit-tested;
-    // shares fr_seq_maxduration's oracle, same summary shape as
-    // fr_sequence_fast.
-    "fr_seq_maxduration_fast" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val groups = graft.operators.SequenceMatch.matchingGroups(e, "user_id", "ts",
-        Seq(SequenceStep(filters(eq("event_type", "view"))),
-          SequenceStep(filters(eq("event_type", "click"))),
-          SequenceStep(filters(eq("event_type", "purchase")))),
-        maxDuration = Some(86400000000000L))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt) // AQE stats boundary — see fr_sequence_fast
-      e.join(groups, Seq("user_id"), "left_semi").agg(
-        count_distinct(col("user_id")).as("matching_groups"),
-        count(lit(1)).as("matching_group_rows"))
-    }),
+    // The routed plan under maxDuration (SequenceMatch resolves the
+    // duration bound at finish time). Shares fr_seq_maxduration's oracle.
+    "fr_seq_maxduration_fast" -> ((s, dir) =>
+      routedEngine.run(ev(s, dir), seqMaxDurationQ).summary),
 
-    "fr_seq_negated" -> ((s, dir) => engine.run(ev(s, dir), GraftQuery(None,
-      Seq(Condition.Sequence(None, Seq(
-        SequenceStep(filters(eq("event_type", "view"))),
-        SequenceStep(filters(eq("event_type", "error"), gt("value", 150)), rowFound = false),
-        SequenceStep(filters(eq("event_type", "purchase")))), None)),
-      None, Nil, None)).summary),
+    "fr_seq_negated" -> ((s, dir) => engine.run(ev(s, dir), seqNegatedQ).summary),
 
-    // The Aggregator path with a negated step (r11: one scalar max per
+    // The routed plan with a negated step (r11: one scalar max per
     // negated step — rows matching it are evidence, never array entries).
-    // Shares fr_seq_negated's oracle, same summary shape as
-    // fr_sequence_fast.
-    "fr_seq_negated_fast" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val groups = graft.operators.SequenceMatch.matchingGroups(e, "user_id", "ts",
-        Seq(SequenceStep(filters(eq("event_type", "view"))),
-          SequenceStep(filters(eq("event_type", "error"), gt("value", 150)), rowFound = false),
-          SequenceStep(filters(eq("event_type", "purchase")))))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt) // AQE stats boundary — see fr_sequence_fast
-      e.join(groups, Seq("user_id"), "left_semi").agg(
-        count_distinct(col("user_id")).as("matching_groups"),
-        count(lit(1)).as("matching_group_rows"))
-    }),
+    // Shares fr_seq_negated's oracle.
+    "fr_seq_negated_fast" -> ((s, dir) =>
+      routedEngine.run(ev(s, dir), seqNegatedQ).summary),
 
-    "fr_funnel" -> ((s, dir) => engine.run(ev(s, dir), GraftQuery(None, Nil, None, Nil,
-      Some(Funnel(valueSteps, None, Nil, Nil)))).funnel.get),
+    "fr_funnel" -> ((s, dir) => engine.run(ev(s, dir), funnelQ).funnel.get),
 
-    // Counts-only funnel twin (SequenceMatch.funnelCounts): candidate pass
-    // + per-group count aggregate joined group-sized — no per-group sort
-    // of the corpus, the namesake query's scale path for funnels without
-    // step/end aggregations. Shares fr_funnel's oracle verbatim.
-    "fr_funnel_fast" -> ((s, dir) =>
-      graft.operators.SequenceMatch.funnelCounts(ev(s, dir), "user_id", "ts", valueSteps)),
+    // The same funnel through the DEFAULT engine: Auto routing picks the
+    // counts-only candidate-pass funnel (SequenceMatch.funnelCounts) for
+    // an aggregation-free funnel inside run() (r13) — no per-group sort
+    // of the corpus. fr_funnel_fast runs the same function. Both share
+    // fr_funnel's oracle verbatim.
+    "fr_funnel_routed" -> funnelRouted,
+    "fr_funnel_fast" -> funnelRouted,
 
-    // The same funnel through the DEFAULT engine: Auto routing picks
-    // funnelCounts for an aggregation-free funnel inside run() (r13).
-    // Shares fr_funnel's oracle verbatim.
-    "fr_funnel_routed" -> ((s, dir) => routedEngine.run(ev(s, dir),
-      GraftQuery(None, Nil, None, Nil,
-        Some(Funnel(valueSteps, None, Nil, Nil)))).funnel.get),
-
-    // funnelCounts over STRING gids (r13, the r12 verdict's missing pin):
-    // fr_sequence_fast_stringgid pins matchingGroups' native string
-    // keying; this pins the funnelCounts band — the per-group count
-    // aggregate, the group-sized left join, and the absent-group default
-    // all keyed by a non-numeric string. Counts are gid-representation-
-    // invariant, so this shares fr_funnel's oracle verbatim.
+    // The routed funnel over STRING gids (r13, the r12 verdict's missing
+    // pin): the per-group count aggregate, the group-sized left join, and
+    // the absent-group default all keyed by a non-numeric string. Counts
+    // are gid-representation-invariant, so this shares fr_funnel's oracle
+    // verbatim.
     "fr_funnel_fast_stringgid" -> ((s, dir) =>
-      graft.operators.SequenceMatch.funnelCounts(
-        ev(s, dir).withColumn("uid_s", concat(lit("u"), col("user_id").cast("string"))),
-        "uid_s", "ts", valueSteps)),
+      stringGidRouted.run(evStringGid(s, dir), funnelQ).funnel.get),
 
     // F4: conditions + funnel combined — the funnel consumes only the rows
     // of groups passing the condition (>= 14 purchases: keeps roughly half
     // the groups at every SF, so the condition genuinely restricts).
-    "fr_funnel_conditioned" -> ((s, dir) => engine.run(ev(s, dir), GraftQuery(None,
-      Seq(cond(filters(eq("event_type", "purchase")), Target.Count(CmpOp.Gte, 14))),
-      None, Nil,
-      Some(Funnel(valueSteps, None, Nil, Nil)))).funnel.get),
-
-    // The twin composed with a condition: the engine's condition pass
-    // yields matchedRows (the funnel's contractual input), funnelCounts
-    // consumes it — pinning deterministically what FuzzSpec's twin
-    // dimension checks on random condition × funnel draws. Shares
-    // fr_funnel_conditioned's oracle verbatim.
-    "fr_funnel_conditioned_fast" -> ((s, dir) =>
-      graft.operators.SequenceMatch.funnelCounts(
-        engine.run(ev(s, dir), GraftQuery(None,
-          Seq(cond(filters(eq("event_type", "purchase")), Target.Count(CmpOp.Gte, 14))),
-          None, Nil, None)).matchedRows,
-        "user_id", "ts", valueSteps)),
+    "fr_funnel_conditioned" -> ((s, dir) =>
+      engine.run(ev(s, dir), conditionedFunnelQ).funnel.get),
 
     // Condition + funnel through the ROUTED engine end-to-end (r14): the
     // Filters condition stays on window flags (only sequences route), the
     // funnel routes over the condition-restricted matchedRows — the
     // composed shape the fuzzer draws randomly, pinned deterministically
-    // at battery level. Shares fr_funnel_conditioned's oracle verbatim.
-    "fr_funnel_conditioned_routed" -> ((s, dir) => routedEngine.run(ev(s, dir), GraftQuery(None,
-      Seq(cond(filters(eq("event_type", "purchase")), Target.Count(CmpOp.Gte, 14))),
-      None, Nil,
-      Some(Funnel(valueSteps, None, Nil, Nil)))).funnel.get),
+    // at battery level. fr_funnel_conditioned_fast runs the same function.
+    // Both share fr_funnel_conditioned's oracle verbatim.
+    "fr_funnel_conditioned_routed" -> funnelConditionedRouted,
+    "fr_funnel_conditioned_fast" -> funnelConditionedRouted,
 
     "fr_funnel_end_agg" -> ((s, dir) => engine.run(ev(s, dir), GraftQuery(None, Nil, None, Nil,
       Some(Funnel(valueSteps, None, Nil,

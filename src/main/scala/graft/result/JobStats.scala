@@ -145,8 +145,13 @@ object JobStats {
       // stages are all recorded by the time it ends.
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         Option(jobStarts.remove(e.jobId)).foreach { s =>
+          // Most jobs set neither property: name them by their result
+          // stage, the action's call site — the job's newest stage, as
+          // Spark creates a job's parent stages before its result stage.
           val desc = Option(s.properties.getProperty("spark.job.description"))
-            .orElse(Option(s.properties.getProperty("callSite.short"))).getOrElse("?")
+            .orElse(Option(s.properties.getProperty("callSite.short")))
+            .orElse(s.stageInfos.maxByOption(_.stageId).map(_.name.takeWhile(_ != '\n')))
+            .getOrElse("?")
           val ran = s.stageIds.filter(id => stageJob.get(id) == e.jobId)
           jobs.add(Job(e.jobId, desc, e.time - s.time,
             ran.flatMap(id => Option(stages.get(id))).map(_.tasks).sum))

@@ -65,5 +65,12 @@ class BenchSpec extends SparkSpec {
     assert(batches.nonEmpty && batches.forall(b =>
       (b \ "durationMs" \ "triggerExecution").isInstanceOf[JInt]), recs(1))
     assert(recs(0) \ "batches" == JArray(Nil))
+    // Every job of the batch row is named: by its description, else by
+    // its result stage's call site.
+    val JArray(funnelJobs) = recs(0) \ "jobs"
+    assert(funnelJobs.forall(j => (j \ "description") match {
+      case JString(d) => d.nonEmpty && d != "?"
+      case _          => false
+    }), recs(0))
   }
 }

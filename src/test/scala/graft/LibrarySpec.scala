@@ -721,16 +721,30 @@ class LibrarySpec extends SparkSpec {
   }
 
   test("funnel twin plans without sorting the corpus") {
-    // funnelCounts' contract vs the window funnel (BENCH.md §Counts-only
-    // funnel twin): no Window, no Sort over event rows — two hash
-    // aggregates plus a group-sized join. The window plan necessarily
-    // sorts every partition for Window.partitionBy; a Sort appearing here
-    // means the twin regressed into that shape.
+    // Every `_fast` battery row runs the routed plan (BENCH.md §Counts-only
+    // funnel twin, §Sequence at reference scale): no Window, no Sort over
+    // event rows — hash aggregates plus group-sized joins. The window plan
+    // necessarily sorts every partition for Window.partitionBy; a Window or
+    // a Sort here means the row fell back to it through one of the
+    // engine's type, shape or size gates. The conditioned funnel's Filters
+    // condition is a window flag by design (only sequences and funnels
+    // route), so that row is held to having no step-anchor window.
     val dir = "/root/testdata/sf0.001"
-    val out = graft.ops.FrQueries.queries("fr_funnel_fast")(spark, dir)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Sort ") && !plan.contains("Window"),
-      s"funnelCounts must not sort or window the corpus:\n$plan")
+    val fast = Seq("fr_sequence_fast", "fr_sequence_fast_stringgid",
+      "fr_seq_maxduration_fast", "fr_seq_negated_fast", "fr_funnel_fast",
+      "fr_funnel_fast_stringgid", "fr_funnel_conditioned_fast")
+    assert(fast.toSet == graft.ops.FrQueries.queries.keySet.filter(_.contains("_fast")))
+    val anchorWindow = "(?m)^.*Window \\[.*AS __(f|c\\d+)_[mx]\\d+".r
+    for (name <- fast) {
+      val plan = graft.ops.FrQueries.queries(name)(spark, dir)
+        .queryExecution.executedPlan.toString
+      if (name == "fr_funnel_conditioned_fast")
+        assert(anchorWindow.findFirstIn(plan).isEmpty,
+          s"$name must not window its funnel steps:\n$plan")
+      else
+        assert(!plan.contains("Sort ") && !plan.contains("Window"),
+          s"$name must not sort or window the corpus:\n$plan")
+    }
   }
 
   test("Auto routing picks the fast paths and falls back exactly at the contract edges") {

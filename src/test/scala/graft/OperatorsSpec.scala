@@ -2217,6 +2217,22 @@ class OperatorsSpec extends SparkSpec {
     assert(fGot.view.mapValues(_._1).toMap == got.view.mapValues(_._1).toMap)
   }
 
+  test("DSIR training reads a cached corpus once in both hash families") {
+    import graft.operators.Dsir
+    val corpus = docs((1L to 40L).map(i => i -> s"doc $i has words w$i and w${i % 7}"): _*)
+      .cache()
+    try {
+      corpus.count()
+      def scanned(fast: Boolean): Long = graft.result.JobStats.measure(spark) {
+        Dsir.trainLogRatios(corpus.where(col("doc_id") % 2 === 1), corpus,
+          "doc_id", "text", 64, "rs", fastHash = fast).collect()
+      }._2.rowsScanned
+      val md5 = scanned(fast = false)
+      assert(md5 > 0L)
+      assert(scanned(fast = true) == md5, "xxhash64 training must scan what md5 does")
+    } finally corpus.unpersist(blocking = true)
+  }
+
   test("LM score equals the driver mirror fold on Unicode, OOV and sub-trigram docs") {
     import graft.operators.LmScore
     // Mixed charsets (canonicalization edge), sub-trigram docs (dropped),

@@ -65,7 +65,7 @@ class ProbeSpec extends SparkSpec {
     "Throughput" -> Seq("1"),
     "Throughput" -> Seq("1", "bucketed"),
     "Throughput" -> Seq("1", "funnel-agg-routed"),
-    "Throughput" -> Seq("1", "sequence-agg-shared"))
+    "Throughput" -> Seq("1", "sequence-agg-routed-stringgid"))
 
   test("the runs cover every registered probe") {
     assert(runs.map(_._1).toSet == Probe.all.map(_.name).toSet)
@@ -86,6 +86,17 @@ class ProbeSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Probe.run(spark, "DedupScale", Seq("--narow", "1000"), "/nonexistent"))
     assert(e.getMessage.contains("--narow") && e.getMessage.contains("--narrow"))
+  }
+
+  test("Throughput modes: the shape grid parses, unknown and mixed-layout modes fail") {
+    import Throughput.{Mode, parseMode}
+    assert(parseMode("bucketed") == Mode("plain", false, false, true))
+    assert(parseMode("funnel-agg-routed-bucketed") == Mode("funnel-agg", true, false, true))
+    assert(parseMode("sequence-agg-routed-stringgid") == Mode("sequence-agg", true, true, false))
+    assert(parseMode("sequence-stringgid") == Mode("sequence", false, true, false))
+    for (bad <- Seq("seqence", "funnel-fast", "sequence-agg-shared", "sequence-bucketed-routed",
+        "sequence-stringgid-bucketed", "plain-routed", "skew-stringgid"))
+      intercept[IllegalArgumentException](parseMode(bad))
   }
 
   override def afterAll(): Unit = {
