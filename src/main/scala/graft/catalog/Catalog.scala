@@ -2,9 +2,12 @@ package graft.catalog
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, GraftCollect, GraftResidentRows,
+  SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,12 +18,14 @@ import org.apache.spark.sql.types._
  *
  * The reference samples files, infers per-file Pandas schemas, merges them,
  * and validates a physical invariant (each group's rows in exactly one
- * file). Here a single Spark job does the honest version of all of it:
- * schema comes from the parquet footer (no sampling risk), column
- * classification mirrors the reference's 4-type system
- * (frocket/common/dataset.py:102-107), unsupported types are recorded
- * rather than rejected wholesale (dataset.py:153-159), and the stats pass
- * (min/max timestamp, group count) is one distributed aggregate. The
+ * file). Here two Spark jobs do the honest version of all of it: the
+ * schema comes from the parquet footer of the first part file, read on
+ * the driver (no job, no sampling of rows), column classification mirrors
+ * the reference's 4-type system (frocket/common/dataset.py:102-107),
+ * unsupported types are recorded rather than rejected wholesale
+ * (dataset.py:153-159), the stats pass (min/max timestamp, group count) is
+ * one distributed aggregate and the categorical top values are one more.
+ * Every read a registration makes is given that schema. The
  * one-group-one-file invariant is NOT required — Spark shuffles — so
  * registration validates only what still matters: group id non-null and of
  * int/string type, timestamp numeric and non-null
@@ -103,7 +108,7 @@ object Catalog {
   }
 
   /** One listed part file: its qualified path and length in bytes. */
-  final case class PartFile(path: org.apache.hadoop.fs.Path, length: Long)
+  final case class PartFile(path: Path, length: Long)
 
   final case class RegistrationException(msg: String) extends RuntimeException(msg)
 
@@ -171,27 +176,20 @@ object Catalog {
   private def layout(scan: DataFrame, parts: Int, gid: String): DataFrame =
     if (parts == 1) scan.coalesce(1) else scan.repartition(parts, col(gid))
 
-  /** The rows of `scan`, laid out in `parts` partitions by `gid`,
-    * persisted memory-and-disk, lazily: the first action that reads them
-    * fills the blocks. `persist`, not `localCheckpoint`: lost blocks
-    * recompute from lineage.
+  /** The rows of `laid`, a [[layout]] of a scan, persisted
+    * memory-and-disk, lazily: the first action that reads them fills the
+    * blocks. `persist`, not `localCheckpoint`: lost blocks recompute from
+    * lineage. [[GraftResidentRows.frame]] over the rows and the same `laid`
+    * frame serves them, so the layout is planned once.
     *
     * The copy holds rows, scanned interpreted, rather than a CacheManager
     * entry (`Dataset.persist`): Spark's default cached-batch serializer
     * decodes string columns through `GenerateColumnAccessor`, generated
     * code the interpreted profile exists to avoid (two compiles on the
     * first query of a string-column dataset, measured). */
-  private def residentRows(scan: DataFrame, parts: Int, gid: String, name: String,
-                           basepath: String): RDD[InternalRow] =
-    org.apache.spark.sql.GraftResidentRows.persist(layout(scan, parts, gid),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+  private def residentRows(laid: DataFrame, name: String, basepath: String): RDD[InternalRow] =
+    GraftResidentRows.persist(laid, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       s"resident copy of '$name' ($basepath)")
-
-  /** A handle over resident `rows` in `scan`'s session, reporting the
-    * partitioning of the layout they were built with. */
-  private def residentFrame(rows: RDD[InternalRow], scan: DataFrame, parts: Int,
-                            gid: String): DataFrame =
-    org.apache.spark.sql.GraftResidentRows.frame(rows, layout(scan, parts, gid))
 
   /** Release what was loaded for `name`, if anything. Call holding
     * `loaded`. */
@@ -230,19 +228,32 @@ object Catalog {
     * lexicographically — the ordering the reference's SINGLE/FIRST_LAST
     * choices are defined over (registration_job.py:104-107). Hadoop FS, so
     * local paths and s3a list the same way. Names starting with `_` or `.`
-    * (`_SUCCESS`, checksum files) are not parts. */
+    * (`_SUCCESS`, checksum files) are not parts; files under directories
+    * so named are, as `FileSystem.listFiles(path, true)` lists them.
+    *
+    * The walk is `listStatus`, one call per directory, and reads no
+    * file's permissions: `listFiles` builds a `LocatedFileStatus` per file,
+    * which on a local file system without native Hadoop forks `ls -ld`
+    * for each (BENCH.md §"Registration in two jobs"). */
   def partFiles(spark: SparkSession, basepath: String): Seq[PartFile] = {
-    val path = new org.apache.hadoop.fs.Path(basepath)
+    val path = new Path(basepath)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = scala.collection.mutable.ArrayBuffer.empty[PartFile]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val base = f.getPath.getName
-      if (!base.startsWith("_") && !base.startsWith(".")) files += PartFile(f.getPath, f.getLen)
-    }
-    files.toSeq.sortBy(_.path.toString)
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    leaves(path).collect {
+      case f if !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".") =>
+        PartFile(f.getPath, f.getLen)
+    }.sortBy(_.path.toString)
   }
+
+  /** The schema of `part`, read from its footer on the driver under
+    * `session`'s SQLConf ([[GraftFooterSchema]]). It is the schema a read
+    * of the part files infers when given none: Spark's inference reads the
+    * footer of the first part file in path order too, but in a Spark job
+    * of its own. */
+  private def footerSchema(session: SparkSession, part: PartFile): StructType =
+    GraftFooterSchema.read(session, new FileStatus(part.length, false, 0, 0, 0, part.path))
+      .getOrElse(throw RegistrationException(s"No schema in the footer of ${part.path}"))
 
   /** The part files the stats/validation scan reads under `mode`: all of
     * them (Full), the first (Single), first+last (FirstLast), or
@@ -275,9 +286,9 @@ object Catalog {
                validateGroupLocality: Boolean = false,
                dayPartitionColumn: Option[String] = None): RegisteredDataset = {
     prepare(spark)
-    // Schema always comes from the full basepath (parquet footers — no data
-    // scan); only the stats/validation pass below is restricted to the
-    // sampled files.
+    // Schema always comes from the full basepath (the first part file's
+    // footer, read on the driver — no data scan); only the stats/validation
+    // pass below is restricted to the sampled files.
     val listed = partFiles(spark, basepath)
     if (listed.isEmpty)
       throw RegistrationException(s"No part files found under $basepath")
@@ -287,13 +298,18 @@ object Catalog {
     val profile = ExecutionProfile.forInput(Some(totalBytes))
     val session = prepare(ExecutionProfile.session(spark, profile))
     val sampled = chooseParts(allParts, mode)
+    // Every read below is given the footer's schema, so none runs a
+    // schema-inference job; Spark still appends partition columns (`dt=`)
+    // found in the paths.
+    val footer = footerSchema(session, listed.head)
+    def reader: DataFrameReader = session.read.schema(footer)
     // A Full-mode interpreted registration builds its copy once the group
     // id is known to exist; the stats and top-K passes read (and so fill)
     // it: one read of the part files serves registration and queries.
     var copy: Option[(SparkSession, Int, DataFrame, RDD[InternalRow])] = None
     val ds = try {
       val scan =
-        if (mode == ValidationMode.Full) read(session, basepath)
+        if (mode == ValidationMode.Full) read(session, basepath, footer)
         else graft.ops.Tables.tsToNanos {
           // basePath keeps hive-style partition columns visible when reading
           // leaf part files directly — without it a partitioned dataset's
@@ -302,15 +318,14 @@ object Catalog {
           // requires basePath to be a directory, so skip it when the
           // registered basepath is a single parquet file (no partition
           // columns possible there anyway).
-          val fs = new org.apache.hadoop.fs.Path(basepath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val rd = if (fs.getFileStatus(new org.apache.hadoop.fs.Path(basepath)).isDirectory)
-            session.read.option("basePath", basepath) else session.read
+          val fs = new Path(basepath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val rd = if (fs.getFileStatus(new Path(basepath)).isDirectory)
+            reader.option("basePath", basepath) else reader
           rd.parquet(sampled: _*)
         }
       // Schema AFTER ts normalization: registration classifies the columns the
       // engine will actually see (a TIMESTAMP-typed ts registers as Int).
-      val schema = (if (mode == ValidationMode.Full) scan else read(session, basepath)).schema
+      val schema = (if (mode == ValidationMode.Full) scan else read(session, basepath, footer)).schema
 
       def field(c: String): StructField =
         schema.find(_.name == c).getOrElse(
@@ -331,8 +346,9 @@ object Catalog {
 
       if (mode == ValidationMode.Full)
         copy = copyPartitions(spark, Some(totalBytes)).map { parts =>
-          val rows = residentRows(scan, parts, groupIdColumn, name, basepath)
-          (spark, parts, residentFrame(rows, scan, parts, groupIdColumn), rows)
+          val laid = layout(scan, parts, groupIdColumn)
+          val rows = residentRows(laid, name, basepath)
+          (spark, parts, GraftResidentRows.frame(rows, laid), rows)
         }
       val df = copy.fold(scan)(_._3)
 
@@ -400,9 +416,9 @@ object Catalog {
         // exists: input_file_name() is empty over a cached relation, so the
         // check would pass vacuously on the copy.
         val checkDf =
-          if (sampled.size <= 1) session.read.option("basePath", basepath)
+          if (sampled.size <= 1) reader.option("basePath", basepath)
             .parquet(Seq(allParts.head, allParts.last): _*)
-          else if (copy.nonEmpty) session.read.parquet(basepath)
+          else if (copy.nonEmpty) reader.parquet(basepath)
           else df
         // input_file_name() is nondeterministic, so project it before the
         // aggregate (it may not appear inside an aggregate function).
@@ -419,7 +435,7 @@ object Catalog {
             s"part files (e.g. ${split.map(_.get(0)).mkString(", ")}) — " +
             "regroup with GroupedWriter or register with validateGroupLocality=false")
       }
-      val stats = df.agg(allAggs.head, allAggs.tail: _*).collect()(0)
+      val stats = GraftCollect.collect(df.agg(allAggs.head, allAggs.tail: _*))(0)
       if (stats.getAs[Long]("null_gids") > 0)
         throw RegistrationException(s"Group id column '$groupIdColumn' contains nulls")
       if (stats.getAs[Long]("bad_ts") > 0)
@@ -454,9 +470,8 @@ object Catalog {
             .select(col("kv.__col").as("__col"), col("kv.__val").as("__val"))
             .where(col("__val").isNotNull)
             .groupBy(col("__col"), col("__val")).agg(count(lit(1)).as("__c"))
-          graft.operators.Skew.topNPerKey(counts, "__col", "__val",
-              Seq(desc("__c"), asc("__val")), categoricalTopCount)
-            .collect()
+          GraftCollect.collect(graft.operators.Skew.topNPerKey(counts, "__col", "__val",
+              Seq(desc("__c"), asc("__val")), categoricalTopCount))
             .toSeq
             .groupBy(_.getString(0))
             .map { case (c, rows) =>
@@ -482,7 +497,7 @@ object Catalog {
       // derivation is the same GroupedWriter.dayOfTsNanos the engine's
       // bounds use. The free schema-type gate already ran before any scan.
       dayPartitionColumn.foreach { dtCol =>
-        val mismatches = session.read.option("basePath", basepath).parquet(basepath)
+        val mismatches = reader.option("basePath", basepath).parquet(basepath)
           .select(col(dtCol), col(timestampColumn))
           .where(col(dtCol).isNull || col(dtCol) =!=
             graft.sources.GroupedWriter.dayOfTsNanos(col(timestampColumn)))
@@ -564,8 +579,10 @@ object Catalog {
     * (name, registeredAt)-keyed cache above.
     *
     * The handle is memoised per (name, registeredAt, host session,
-    * layout) for the current registration, checked before any footer is
-    * read: the part files never change under a registration (updates
+    * layout) for the current registration, checked before the part files
+    * are listed and the first one's footer read (the schema the load's
+    * scan is given, so it runs no inference job): the part files never
+    * change under a registration (updates
     * re-register, reference dataset.py:36-53), so a handle is the plan
     * over the listing captured at its first load. A replaced snapshot
     * gets an unmemoised scan of its part files in its profile's session.
@@ -603,9 +620,13 @@ object Catalog {
     }
     memo.getOrElse {
       prepare(spark)
-      val scan = read(prepare(ExecutionProfile.session(spark, ds.profile)), ds.basepath)
-      def build(k: Int) = residentRows(scan, k, ds.groupIdColumn, ds.name, ds.basepath)
-      val built = if (copied) None else parts.map(build)
+      val session = prepare(ExecutionProfile.session(spark, ds.profile))
+      val first = partFiles(spark, ds.basepath).headOption.getOrElse(
+        throw RegistrationException(s"No part files found under ${ds.basepath}"))
+      val scan = read(session, ds.basepath, footerSchema(session, first))
+      val laid = parts.map(k => k -> layout(scan, k, ds.groupIdColumn))
+      def build(f: DataFrame) = residentRows(f, ds.name, ds.basepath)
+      val built = if (copied) None else laid.map(p => build(p._2))
       loaded.synchronized {
         if (!get(ds.name).exists(_.registeredAt == ds.registeredAt)) {
           built.foreach(_.unpersist(blocking = false))
@@ -616,12 +637,12 @@ object Catalog {
             loaded.put(ds.name, fresh)
             fresh
           }
-          parts.foreach { k =>
-            if (!l.copies.containsKey(k)) l.copies.put(k, built.getOrElse(build(k)))
+          laid.foreach { case (k, f) =>
+            if (!l.copies.containsKey(k)) l.copies.put(k, built.getOrElse(build(f)))
             else built.foreach(_.unpersist(blocking = false)) // another load won
           }
           Option(l.handles.get(key)).getOrElse {
-            val df = parts.fold(scan)(k => residentFrame(l.copies.get(k), scan, k, ds.groupIdColumn))
+            val df = laid.fold(scan) { case (k, f) => GraftResidentRows.frame(l.copies.get(k), f) }
             l.handles.put(key, df)
             df
           }
@@ -638,9 +659,10 @@ object Catalog {
     n
   }
 
-  /** The normalized scan of every part file under `basepath`. */
-  private def read(session: SparkSession, basepath: String): DataFrame =
-    graft.ops.Tables.tsToNanos(session.read.parquet(basepath))
+  /** The normalized scan of every part file under `basepath`, given
+    * their `schema` (see [[footerSchema]]). */
+  private def read(session: SparkSession, basepath: String, schema: StructType): DataFrame =
+    graft.ops.Tables.tsToNanos(session.read.schema(schema).parquet(basepath))
 
   /** The runtime confs every registration read needs: TIMESTAMP(NANOS)
     * columns arrive as longs, and UTC pins tsToNanos' NTZ reading. */

@@ -107,8 +107,9 @@ object Dsir {
   /** Fit the hashed importance model: per-bucket integer log ratio
     * `lr_micro` over ALL `nBuckets` buckets (zero-count buckets get the
     * smoothed default via the range left-joins, so scoring never misses).
-    * Totals enter via one-row frames joined in — no driver collection;
-    * `ln` runs distributed exactly once per bucket. */
+    * Totals are sums over all `nBuckets` rows of the joined counts, taken
+    * by a window with no partition key, so target and raw are each read
+    * once; no driver collection, and `ln` runs exactly once per bucket. */
   def trainLogRatios(target: DataFrame, raw: DataFrame, idCol: String,
                      textCol: String, nBuckets: Int, salt: String,
                      fastHash: Boolean = false): DataFrame = {
@@ -125,13 +126,15 @@ object Dsir {
       .select(col("bucket"),
         coalesce(col("ct"), lit(0L)).as("ct"),
         coalesce(col("cr"), lit(0L)).as("cr"))
-    val totals = joined.agg(sum(col("ct")).as("__tt"), sum(col("cr")).as("__tr"))
+    val every = org.apache.spark.sql.expressions.Window.partitionBy()
     // Factors cast to double BEFORE the multiply: at the operator's target
     // scale (raw pools of ~1e13 gram occurrences) the long product
     // (ct+1)·(Tr+B) exceeds 2^63 and would wrap silently under non-ANSI
     // semantics; double·double only rounds. At battery scale the products
     // are < 2^53, so both forms are bit-identical there.
-    joined.crossJoin(broadcast(totals))
+    joined
+      .select(col("bucket"), col("ct"), col("cr"),
+        sum(col("ct")).over(every).as("__tt"), sum(col("cr")).over(every).as("__tr"))
       .select(col("bucket"),
         floor(lit(1e6) * log(
           ((col("ct") + lit(1)).cast("double") *

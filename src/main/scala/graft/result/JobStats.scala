@@ -134,6 +134,8 @@ object JobStats {
     val stages = new ConcurrentHashMap[Int, Stage]()
     val streamIds = ConcurrentHashMap.newKeySet[String]()
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[Batch]()
+    val marker = new org.apache.spark.GraftListenerBus.Marker
+    val settled = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(MeasureIdKey) == measureId) {
@@ -181,6 +183,7 @@ object JobStats {
           val q = p.progress
           batches.add(Batch(Option(q.name).getOrElse(q.id.toString), q.batchId,
             q.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap))
+        case m if m eq marker => settled.countDown()
         case _ =>
       }
     }
@@ -193,16 +196,19 @@ object JobStats {
     val t0 = System.nanoTime()
     try {
       val result = body
-      // The clock stops before the drain: the wall is the body's alone.
+      // The clock stops before the wait: the wall is the body's alone.
       val wallMs = (System.nanoTime() - t0) / 1000000
       // Listener events post asynchronously. Every job inside `body`
       // completed before body returned, so its events are already POSTED;
-      // one bounded bus drain makes them DELIVERED — exact, and ~ms where
-      // the r1-r14 quiet-polling loop paid a fixed ~150ms of sleeps per
-      // measured query (the dominant serving-path floor for small
-      // queries). On timeout (5s — a flooded bus) proceed with what
-      // arrived, the same contract the bounded polling loop had.
-      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 5000)
+      // a marker posted now reaches this listener after all of them, as
+      // its queue delivers in order. Waiting for the marker, not for the
+      // whole bus to drain, leaves out the other queues, whose drain
+      // polls with 10 ms sleeps (BENCH.md §"Registration in two jobs").
+      // On timeout (5s — a flooded bus) proceed with what arrived.
+      if (!spark.sparkContext.isStopped) {
+        org.apache.spark.GraftListenerBus.post(spark.sparkContext, marker)
+        settled.await(5000, java.util.concurrent.TimeUnit.MILLISECONDS)
+      }
       (result, Snapshot(wallMs, tasks.get(),
         rows.get(), bytes.get(), shuffle.get(), peak.get(), runMs.get(),
         jobs.asScala.toSeq.sortBy(_.id), stages.values.asScala.toSeq.sortBy(_.id),

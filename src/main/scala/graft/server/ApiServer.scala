@@ -664,6 +664,18 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
     // (ds fetched once at request entry): registeredAt versions the entry.
     val cacheKey = QueryKey(ds.name, ds.registeredAt, parsed)
 
+    // "plan" names WHICH plan answered (r14): routing is deliberately
+    // invisible in the results — the operability surface is the stats
+    // block, where "plan" rides as a trailing key, beside the number of
+    // Spark jobs and the wall time outside them.
+    def withStats(body: String, firedPlan: String, stats: JobStats.Snapshot,
+                  cached: Boolean): String =
+      ResultJson.addTopLevelField(body, "stats",
+        stats.toJsonWith("jobs" -> stats.jobs.size.toString,
+          "driverGapMs" -> stats.driverGapMs.toString,
+          "plan" -> q(firedPlan), "profile" -> q(ds.profile.name),
+          "cached" -> cached.toString))
+
     // Answer from a (body, plan) already paid for by someone else — a
     // cache hit or a coalesced wait. Zero-cost stats block,
     // schema-identical to a real run's (clients read
@@ -674,10 +686,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       mCacheHits.incrementAndGet()
       // A cached query is still a use for the unregister safety interval.
       Catalog.touch(name)
-      ResultJson.addTopLevelField(body, "stats",
-        JobStats.Snapshot(0, 0, 0, 0, 0, 0, 0)
-          .toJsonWith("plan" -> q(firedPlan), "profile" -> q(ds.profile.name),
-            "cached" -> "true"))
+      withStats(body, firedPlan, JobStats.Snapshot(0, 0, 0, 0, 0, 0, 0), cached = true)
     }
 
     def runQuery(): ((String, String), JobStats.Snapshot) = {
@@ -718,14 +727,6 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
       mCoreMs.addAndGet(stats.executorRunMs)
       result
     }
-
-    // "plan" names WHICH plan answered (r14): routing is deliberately
-    // invisible in the results — the operability surface is the stats
-    // block, where "plan" rides as a trailing key.
-    def freshResponse(body: String, firedPlan: String, stats: JobStats.Snapshot): String =
-      ResultJson.addTopLevelField(body, "stats",
-        stats.toJsonWith("plan" -> q(firedPlan), "profile" -> q(ds.profile.name),
-          "cached" -> "false"))
 
     def execute(): String = {
       val hit = if (resultCacheSize > 0) resultCache.get(cacheKey) else null
@@ -774,7 +775,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
                 // would re-execute serially instead of hitting the cache.
                 if (pair._1.getBytes(StandardCharsets.UTF_8).length <= resultCacheMaxEntryBytes)
                   resultCache.put(cacheKey, pair)
-                freshResponse(pair._1, pair._2, stats)
+                withStats(pair._1, pair._2, stats, cached = false)
               }
           }
         } else {
@@ -795,7 +796,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
               if (pair._1.getBytes(StandardCharsets.UTF_8).length <= resultCacheMaxEntryBytes)
                 resultCache.put(cacheKey, pair)
               fresh.complete(pair)
-              freshResponse(pair._1, pair._2, stats)
+              withStats(pair._1, pair._2, stats, cached = false)
             }
           } finally {
             // Belt-and-braces liveness: if anything above exited without
@@ -811,7 +812,7 @@ final class ApiServer(spark: SparkSession, port: Int, unregisterSafetySec: Int =
         }
       } else {
         val (pair, stats) = runQuery()
-        freshResponse(pair._1, pair._2, stats)
+        withStats(pair._1, pair._2, stats, cached = false)
       }
     }
 

@@ -1,21 +1,24 @@
 package org.apache.spark
 
+import org.apache.spark.scheduler.SparkListenerEvent
+
 /**
- * Scala-visibility shim: `SparkContext.listenerBus` is `private[spark]`,
- * so the one call graft needs — "block until every event posted so far has
- * been delivered to every listener" — is re-exported here from inside the
- * spark package. Used by [[graft.result.JobStats.measure]] to settle task
- * metrics exactly: every job inside a measured body has COMPLETED before
- * the body returns, so its task-end events are already posted; one bus
- * drain makes them delivered. This replaces a quiet-polling loop whose
- * 3×50ms sleeps put a ~150ms fixed floor on every measured query — the
- * dominant per-request overhead for small serving-path queries.
+ * Scala-visibility shim: `SparkContext.listenerBus` and
+ * `SparkListenerEvent.logEvent` are `private[spark]`, so the calls graft
+ * needs are re-exported here from inside the spark package.
+ * [[graft.result.JobStats.measure]] posts a [[Marker]] after its body and
+ * waits for its own listener to receive it: every job inside the body has
+ * COMPLETED before the body returns, so its events are already posted, and
+ * a listener queue delivers in post order. Draining the whole bus instead
+ * would also wait for Spark's UI queues, which poll with 10 ms sleeps.
  */
 object GraftListenerBus {
-  /** Wait up to `timeoutMs` for the listener bus to drain; returns false
-    * on timeout (caller proceeds with possibly-incomplete metrics, same
-    * contract as the bounded polling loop this replaced). */
-  def waitUntilEmpty(sc: SparkContext, timeoutMs: Long): Boolean =
-    try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
-    catch { case _: java.util.concurrent.TimeoutException => false }
+  /** An event that marks a point in the bus's order. No event log records
+    * it, and Spark's own listeners ignore it. */
+  final class Marker extends SparkListenerEvent {
+    override protected[spark] def logEvent: Boolean = false
+  }
+
+  /** Post `event` to every listener queue of `sc`. */
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit = sc.listenerBus.post(event)
 }

@@ -298,12 +298,23 @@ class ApiServerSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(counter)
       try {
         val second = JsonMethods.parse(post5("/datasets/evcache/query", q2).body())
-        org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000)
+        org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext, 10000)
         assert((second \ "stats" \ "cached") == JBool(true), JsonMethods.compact(second))
         assert((second \ "stats" \ "plan") == (first \ "stats" \ "plan"))
         // bit-identical result, zero reported cost, zero jobs run
         assert(resultPart(second) == resultPart(first), "cached result diverged")
         assert((second \ "stats" \ "rowsScanned") == JInt(0))
+        // Hits and misses carry one key set; a hit ran no job and no driver work.
+        def keys(j: JValue) = (j \ "stats") match {
+          case JObject(fs) => fs.map(_._1)
+          case other => fail(s"no stats block: $other")
+        }
+        assert(keys(first) == Seq("wallTimeMs", "tasks", "rowsScanned", "bytesScanned",
+          "shuffleBytesWritten", "peakExecutionMemory", "coreSecs", "jobs", "driverGapMs",
+          "plan", "profile", "cached"), keys(first))
+        assert(keys(second) == keys(first))
+        assert((second \ "stats" \ "jobs") == JInt(0) &&
+          (second \ "stats" \ "driverGapMs") == JInt(0), JsonMethods.compact(second))
         assert(jobCount.get() == 0, s"cache hit ran ${jobCount.get()} Spark jobs")
       } finally spark.sparkContext.removeSparkListener(counter)
 
@@ -402,7 +413,7 @@ class ApiServerSpec extends SparkSpec {
         spark.sparkContext.addSparkListener(l)
         try {
           val r = work
-          org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000)
+          org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext, 10000)
           r
         } finally spark.sparkContext.removeSparkListener(l)
       }
@@ -1386,7 +1397,7 @@ class ApiServerSpec extends SparkSpec {
     session.listenerManager.register(listener)
     try {
       body
-      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000)
+      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext, 10000)
     } finally session.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq
@@ -1500,7 +1511,7 @@ class ApiServerSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         body
-        org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000)
+        org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext, 10000)
       } finally spark.sparkContext.removeSparkListener(listener)
       (jobs.get, resultStages.size)
     }
@@ -1518,6 +1529,7 @@ class ApiServerSpec extends SparkSpec {
       }
       assert((served \ "stats" \ "profile") == JString("interpreted"), JsonMethods.compact(served))
       assert(plans.size == 1 && jobs == (1, 1), s"${plans.size} SQL executions, $jobs jobs")
+      assert((served \ "stats" \ "jobs") == JInt(1), JsonMethods.compact(served))
       // The funnel counts its steps per group: no Expand, and so no
       // exchange, over the one resident partition.
       plans.foreach { p =>

@@ -194,6 +194,122 @@ class LibrarySpec extends SparkSpec {
     Seq("vm_full", "vm_single", "vm_fl", "vm_sm").foreach(Catalog.unregister)
   }
 
+  /** One fixture directory per registration layout, under one root:
+    * TIMESTAMP(NANOS) and micros timestamps, a string gid, `dt=` day
+    * directories, four part files by uid range (Spark's `_SUCCESS` and
+    * `.crc` siblings beside them) and a lone part file. */
+  private lazy val shapeRoot: String = {
+    val root = tmpDir("regshapes")
+    // Spark cannot write TIMESTAMP(NANOS); parquet's example writer can.
+    val nanos = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message ev { required int64 uid; required int64 ts (TIMESTAMP(NANOS,true));
+        |  required binary etype (STRING); }""".stripMargin)
+    for (part <- 0 until 2) {
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"$root/nanos/part-0000$part.parquet"))
+        .withType(nanos).withConf(spark.sessionState.newHadoopConf()).build()
+      val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(nanos)
+      (part * 30 until part * 30 + 30).foreach(n => w.write(g.newGroup()
+        .append("uid", (n % 7).toLong).append("ts", 1704067200000000000L + n * 1000000007L)
+        .append("etype", Seq("view", "click", "buy")(n % 3))))
+      w.close()
+    }
+    frame(StructType(Seq(StructField("uid", LongType), StructField("ts", TimestampType),
+        StructField("local", TimestampNTZType), StructField("etype", StringType))),
+      (0 until 40).map(i => Map[String, Any]("uid" -> (i % 5).toLong,
+        "ts" -> java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1704067200L + i * 61)),
+        "local" -> java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(i),
+        "etype" -> Seq("view", "click")(i % 2))))
+      .write.parquet(s"$root/micros")
+    val schema = StructType(Seq(StructField("uid", LongType), StructField("ts", LongType),
+      StructField("etype", StringType), StructField("price", DoubleType)))
+    val ev = frame(schema, (0 until 120).map(i => Map[String, Any]("uid" -> (i % 12).toLong,
+      "ts" -> (1704067200000000000L + i * 3600000000000L),
+      "etype" -> Seq("view", "click", "buy")(i % 3), "price" -> i * 0.25)))
+    ev.withColumn("uid", concat(lit("u"), col("uid"))).write.parquet(s"$root/stringgid")
+    GroupedWriter.partitionByDay(ev, "ts", "uid", nParts = 2, s"$root/days")
+    ev.repartitionByRange(4, col("uid")).write.parquet(s"$root/parts4")
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/file"))
+    Files.copy(java.nio.file.Paths.get(Catalog.partFiles(spark, s"$root/parts4").head.path.toUri),
+      java.nio.file.Paths.get(s"$root/file/events.parquet"))
+    root
+  }
+
+  /** Every registration shape over [[shapeRoot]]: its name and how to
+    * register it (under that name). */
+  private val registrationShapes: Seq[(String, String => Catalog.RegisteredDataset)] = {
+    import Catalog.ValidationMode._
+    def reg(dir: String, gid: String = "uid", mode: Catalog.ValidationMode = Full,
+            locality: Boolean = false, dt: Option[String] = None)(name: String) =
+      Catalog.register(spark, name, s"$shapeRoot/$dir", gid, "ts", mode = mode,
+        validateGroupLocality = locality, dayPartitionColumn = dt)
+    Seq(
+      "nanos" -> reg("nanos"),
+      "micros" -> reg("micros"),
+      "stringgid" -> reg("stringgid"),
+      "days" -> reg("days", dt = Some("dt")),
+      "days_single" -> reg("days", mode = Single, dt = Some("dt")),
+      "full" -> reg("parts4"),
+      "single" -> reg("parts4", mode = Single),
+      "first_last" -> reg("parts4", mode = FirstLast),
+      "sample" -> reg("parts4", mode = Sample(ratio = 0.5, maxSamples = 1)),
+      "locality" -> reg("parts4", locality = true),
+      "locality_single" -> reg("parts4", mode = Single, locality = true),
+      "locality_first_last" -> reg("parts4", mode = FirstLast, locality = true),
+      "file" -> reg("file/events.parquet"))
+  }
+
+  /** `d` as one line, maps sorted by key and the basepath relative to
+    * [[shapeRoot]]; `registeredAt` is left out. */
+  private def render(d: Catalog.RegisteredDataset): String = {
+    def sorted[V](m: Map[String, V]) = m.toSeq.sortBy(_._1).mkString("[", ", ", "]")
+    Seq(d.name, d.basepath.stripPrefix(shapeRoot), d.groupIdColumn, d.timestampColumn,
+      sorted(d.columns), d.unsupportedColumns, d.minTimestamp, d.maxTimestamp,
+      d.numGroups, d.numRows, sorted(d.columnAttrs), sorted(d.dtypeNames), d.statsExact,
+      d.sampledParts, d.totalParts, d.dayPartitionColumn, d.gidMaxBytes, d.totalBytes)
+      .mkString(" | ")
+  }
+
+  test("catalog: every registration shape records the golden table's dataset") {
+    // registration-shapes.txt holds each shape's registration as recorded
+    // when the schema was still inferred by a Spark read of the basepath.
+    val golden = scala.io.Source.fromResource("registration-shapes.txt").getLines()
+      .map(_.split("\t", 2)).map { case Array(k, v) => k -> v }.toMap
+    assert(golden.keySet == registrationShapes.map(_._1).toSet)
+    for ((shape, register) <- registrationShapes) {
+      val got = render(register(shape))
+      Catalog.unregister(shape)
+      assert(got == golden(shape), s"$shape:\n$got\n${golden(shape)}")
+    }
+  }
+
+  test("catalog: registration runs two Spark jobs, none a schema-inference read") {
+    val dir = s"$shapeRoot/parts4"
+    val (_, stats) = graft.result.JobStats.measure(spark) {
+      Catalog.register(spark, "twojobs", dir, "uid", "ts")
+    }
+    Catalog.unregister("twojobs")
+    val names = stats.jobs.map(_.description)
+    assert(stats.jobs.size == 2 && !names.exists(_.startsWith("parquet at")), names)
+  }
+
+  test("catalog: partFiles lists what listFiles(path, true) lists, on every fixture") {
+    val siblings = new java.io.File(s"$shapeRoot/parts4").list().toSeq
+    assert(siblings.contains("_SUCCESS") && siblings.exists(_.endsWith(".crc")), siblings)
+    for (dir <- Seq("nanos", "micros", "stringgid", "days", "parts4", "file/events.parquet")) {
+      val path = new org.apache.hadoop.fs.Path(s"$shapeRoot/$dir")
+      val it = path.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(path, true)
+      var listed = Seq.empty[Catalog.PartFile]
+      while (it.hasNext) {
+        val f = it.next()
+        if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+          listed :+= Catalog.PartFile(f.getPath, f.getLen)
+      }
+      assert(listed.nonEmpty)
+      assert(Catalog.partFiles(spark, path.toString) == listed.sortBy(_.path.toString), dir)
+    }
+  }
+
   test("catalog: group-locality validation flags groups split across parts") {
     val schema = StructType(Seq(
       StructField("uid", LongType), StructField("ts", LongType)))
@@ -652,7 +768,7 @@ class LibrarySpec extends SparkSpec {
     for (name <- Seq("st_lm", "st_lm_serve")) {
       val before = store.executionsList().map(_.executionId).maxOption.getOrElse(-1L)
       graft.ops.StreamingQueries.queries(name)(spark, dir)
-      org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 5000)
+      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext, 5000)
       val plans = store.executionsList().filter(_.executionId > before)
         .map(_.physicalPlanDescription).filter(folds(_) > 0)
       assert(plans.nonEmpty, s"$name ran no plan holding lm_row_score")
@@ -885,6 +1001,46 @@ class LibrarySpec extends SparkSpec {
       spark.range(0, 2400, 1, 1200).count()
     }
     assert(stats.tasks >= 1200, s"expected all 1200 tasks counted, got ${stats.tasks}")
+  }
+
+  test("job stats settle on their own listener, not on a slow listener's queue") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    // A listener on a queue of its own that takes 500 ms per job end, and
+    // one on the shared queue that counts what a full drain delivers.
+    val slow = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(500)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        rows.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }
+    }
+    val dir = tmpDir("settle")
+    spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k").write.mode("overwrite").parquet(dir)
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBus.addToQueue(sc, slow, "graftSlowSpecQueue")
+    sc.addSparkListener(counter)
+    try {
+      val t0 = System.nanoTime()
+      val (_, s) = graft.result.JobStats.measure(spark) {
+        spark.read.parquet(dir).groupBy("k").count().collect()
+      }
+      val settleMs = (System.nanoTime() - t0) / 1000000 - s.wallTimeMs
+      assert(settleMs < 250, s"measure returned ${settleMs} ms after its body")
+      assert(org.apache.spark.GraftTestBus.waitUntilEmpty(sc, 30000))
+      assert(s.jobs.size == jobs.get && s.jobs.nonEmpty, s.jobs)
+      assert(s.jobs.map(_.tasks).sum == tasks.get && s.tasks == tasks.get, s)
+      assert(s.rowsScanned == rows.get && s.rowsScanned == 1000L, s)
+    } finally {
+      sc.removeSparkListener(counter)
+      org.apache.spark.GraftTestBus.remove(sc, slow)
+    }
   }
 
   test("job stats record each job and stage of the measured body, not in the stats keys") {

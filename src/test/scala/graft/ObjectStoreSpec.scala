@@ -100,13 +100,25 @@ class ObjectStoreSpec extends SparkSpec {
     val fs = new HPath(bucket).getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.isInstanceOf[MockObjectStoreFileSystem])
     val it = fs.listFiles(new HPath(s"$bucket/events"), true)
-    var parts = List.empty[String]
-    while (it.hasNext) { val f = it.next(); if (!f.getPath.getName.startsWith("_")) parts ::= f.getPath.toString }
+    var located = List.empty[Catalog.PartFile]
+    while (it.hasNext) {
+      val f = it.next()
+      if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        located ::= Catalog.PartFile(f.getPath, f.getLen)
+    }
+    val parts = located.map(_.path.toString)
     assert(parts.nonEmpty && parts.forall(_.startsWith("mock3://bucket/")), parts)
+    // The registration's listStatus walk lists the same files.
+    assert(Catalog.partFiles(spark, s"$bucket/events") == located.sortBy(_.path.toString))
 
-    // Registration: part listing, schema from footers, full stats scan.
+    // Registration: part listing, schema from one footer, full stats scan,
+    // each through the scheme.
+    val (listReg, openReg) =
+      (MockObjectStoreFileSystem.listCalls.get(), MockObjectStoreFileSystem.openCalls.get())
     val ds = Catalog.register(spark, "mock3_events", s"$bucket/events", "uid", "ts")
     assert(ds.numRows == 600 && ds.numGroups == 25 && ds.totalParts == parts.size)
+    assert(MockObjectStoreFileSystem.listCalls.get() > listReg, "registration listed elsewhere")
+    assert(MockObjectStoreFileSystem.openCalls.get() > openReg, "registration read elsewhere")
 
     // Same files registered via the plain local path — stats must agree
     // exactly (same bytes, different scheme).
